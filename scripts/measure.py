@@ -1,14 +1,14 @@
 #!/usr/bin/env python
-"""Round-14 optimization measurement helper (guide §1).
+"""Per-query timer and plan dump.
 
-Times individual registry queries with the exact bench methodology
-(noop sink, warmup absorbed, best-of-N) and optionally dumps
-`.explain("formatted")` to plans/r14/<query>_<tag>.txt so before/after
-plan claims are committed evidence.
+Times individual registry queries with the bench methodology (noop
+sink, warmup absorbed, best-of-N) and optionally writes each query's
+`.explain("formatted")` to <DIR>/<query>.txt so before/after plan
+claims can be committed as evidence.
 
 Usage:
-    python scripts/r14_measure.py [--reps 3] [--explain TAG] [--sf DIR] q1 q2 ...
-    python scripts/r14_measure.py --explain before dedup_prefix_jaccard
+    python scripts/measure.py [--reps 3] [--explain DIR] [--sf DIR] q1 q2 ...
+    python scripts/measure.py --no-time --explain plans/before dedup_prefix_jaccard
 """
 
 from __future__ import annotations
@@ -23,6 +23,8 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from __spark_entry__ import SMOKE_SF_DIR  # noqa: E402
+from sp500_stock_etl_spark.io.readers import DEFAULT_SF_DIR  # noqa: E402
 from sp500_stock_etl_spark.plans.registry import all_queries  # noqa: E402
 from sp500_stock_etl_spark.session import get_spark  # noqa: E402
 from sp500_stock_etl_spark.hostinfo import host_mt_ms, host_st_ms  # noqa: E402
@@ -32,29 +34,27 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--explain", default=None, metavar="TAG",
-                    help="dump explain('formatted') to plans/r14/<q>_<TAG>.txt")
-    ap.add_argument("--sf", default=os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--explain", default=None, metavar="DIR",
+                    help="dump explain('formatted') to DIR/<q>.txt")
+    ap.add_argument("--sf", default=DEFAULT_SF_DIR)
     ap.add_argument("--no-time", action="store_true",
                     help="explain only, skip timed runs")
     args = ap.parse_args()
 
-    spark = get_spark("r14-measure")
+    spark = get_spark("measure")
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
 
     # Same warmups as bench.py: JVM/codegen + Python worker pool.
     registry["flagship_window_metrics"].spark_fn(
-        spark, "/root/testdata/sf0.001"
+        spark, SMOKE_SF_DIR
     ).write.format("noop").mode("overwrite").save()
     from sp500_stock_etl_spark.operators.multimodal import synthetic_png_corpus
 
     synthetic_png_corpus(spark, 2).write.format("noop").mode("overwrite").save()
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    plans_dir = os.path.join(root, "plans", "r14")
-    os.makedirs(plans_dir, exist_ok=True)
+    if args.explain:
+        os.makedirs(args.explain, exist_ok=True)
 
     out: dict[str, dict] = {}
     for name in args.queries:
@@ -64,13 +64,13 @@ def main() -> None:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            with open(os.path.join(plans_dir, f"{name}_{args.explain}.txt"), "w") as f:
+            with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
                 f.write(buf.getvalue())
         if args.no_time:
             continue
         walls = []
         for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"r14:{name}")
+            spark.sparkContext.setJobDescription(f"measure:{name}")
             t0 = time.perf_counter()
             q.spark_fn(spark, args.sf).write.format("noop").mode(
                 "overwrite"

@@ -139,19 +139,6 @@ def lsh_candidate_pairs(
     integer arithmetic) and self-join buckets → distinct candidate
     (doc_a < doc_b) pairs. The exchange is (band, band_sig): `bands`
     rows per doc."""
-    rows = num_hashes // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                sum(
-                    (F.element_at("sig", b * rows + r + 1) for r in range(1, rows)),
-                    F.element_at("sig", b * rows + 1),
-                ).alias("band_sig"),
-            )
-            for b in range(bands)
-        ]
-    )
     # Persist (tracked — caching.release_caches() frees it after the
     # query's action): the self-join reads the bucket frame twice;
     # without the cache the whole shingle+signature subtree executes
@@ -160,11 +147,7 @@ def lsh_candidate_pairs(
     # band_sig) before the persist does NOT let the self-join elide
     # its exchanges under AQE — the re-planned join does not adopt the
     # InMemoryRelation's partitioning — and adds a shuffle of its own.)
-    buckets = track_persist(
-        signed.select("doc_id", F.explode(band_structs).alias("bb")).select(
-            "doc_id", "bb.band", "bb.band_sig"
-        )
-    )
+    buckets = track_persist(_band_buckets(signed, num_hashes, bands))
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (
@@ -181,8 +164,15 @@ def lsh_candidate_pairs(
 
 # Per-process observability trail for probes/tests: one record per
 # gate evaluation — {n_pairs, est_row, est_total, budget, fast}.
-# (Forced decisions via SPARK_GRAFT_VERIFY_SHAPE record only `fast`.)
 LAST_GATE_DECISIONS: list[dict] = []
+
+
+def _verify_budget_bytes(spark) -> float:
+    """Byte budget of ``_verify_size_gate`` (derivation there)."""
+    jvm_rt = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
+    heap = int(jvm_rt.maxMemory())
+    cores = max(spark.sparkContext.defaultParallelism, 1)
+    return heap * 0.6 / cores / 4
 
 
 def _verify_size_gate(pairs: DataFrame, shingled: DataFrame) -> bool:
@@ -207,16 +197,6 @@ def _verify_size_gate(pairs: DataFrame, shingled: DataFrame) -> bool:
     same number bounds the broadcast-collect side — the stricter of
     the two constraints for a broadcast plan.
     """
-    import os
-
-    forced = os.environ.get("SPARK_GRAFT_VERIFY_SHAPE", "")
-    if forced == "broadcast":
-        LAST_GATE_DECISIONS.append({"fast": True, "forced": True})
-        return True
-    if forced == "agg":
-        LAST_GATE_DECISIONS.append({"fast": False, "forced": True})
-        return False
-    spark = pairs.sparkSession
     n_pairs = pairs.count()  # pairs is persisted by the caller
     if n_pairs == 0:
         return True
@@ -235,14 +215,7 @@ def _verify_size_gate(pairs: DataFrame, shingled: DataFrame) -> bool:
         return False
     est_row = max(2.0 * float(sample["avg"]), float(sample["mx"]))
     est_total = n_pairs * est_row
-    budget_env = os.environ.get("SPARK_GRAFT_VERIFY_BUDGET_BYTES")
-    if budget_env:
-        budget = float(budget_env)
-    else:
-        jvm_rt = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
-        heap = int(jvm_rt.maxMemory())
-        cores = max(spark.sparkContext.defaultParallelism, 1)
-        budget = heap * 0.6 / cores / 4
+    budget = _verify_budget_bytes(pairs.sparkSession)
     fast = est_total <= budget
     LAST_GATE_DECISIONS.append(
         {
@@ -419,7 +392,7 @@ def minhash_lsh_dedup(
     already yields >= cores splits, i.e. at any real scale): the
     tokenize + shingle + per-shingle md5 pass is the pipeline's CPU
     stage and otherwise inherits a single-row-group test file's
-    1-task partitioning (r15 A/B, scripts/r15_parallelism_ab.py)."""
+    1-task partitioning (r15 A/B, plans/r15/parallelism_ab.txt)."""
     shingled = track_persist(
         with_shingles(ensure_parallelism(df), id_col, text_col, ngram)
     )
@@ -603,7 +576,7 @@ def minhash_similarity_join(
 
     Both sides are round-robined up to core count before the CPU-heavy
     shingle+hash pass (``ensure_parallelism`` — no-op at real scale;
-    r15 A/B, scripts/r15_parallelism_ab.py)."""
+    r15 A/B, plans/r15/parallelism_ab.txt)."""
     sq = track_persist(
         with_shingles(ensure_parallelism(query_df), id_col, text_col, ngram)
     )

@@ -630,7 +630,7 @@ def pq_codebooks_encode(
         every Lloyd round produces the same tiny plan and Catalyst
         re-analyzes/re-optimizes a ~40-node tree instead of a fresh
         ~3000-node one (measured 1.6 s -> 0.65 s per round at sf0.1,
-        scripts/r15_pq_proto.py). Bit-exact: per element the fold is
+        plans/r15/pq_and_udtf_ab.txt). Bit-exact: per element the fold is
         the same zip_with(a-b) + aggregate(acc + x*x) as
         clustering.sq_dist over the same doubles in the same order,
         and argmin ties still resolve to the lowest code via

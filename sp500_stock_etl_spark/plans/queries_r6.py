@@ -546,6 +546,34 @@ FROM ranked WHERE rnk <= 3
 """
 
 
+def _bigrams(tokd: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, w1, w2): one row per adjacent pair of each ``toks``
+    array, expanded map-side; arrays under two tokens drop out."""
+    return (
+        tokd.where(F.size("toks") >= 2)
+        .select(
+            *keep,
+            F.explode(
+                F.expr(
+                    "transform(sequence(0, size(toks) - 2), "
+                    "i -> struct(toks[i] AS w1, toks[i + 1] AS w2))"
+                )
+            ).alias("s"),
+        )
+        .select(*keep, "s.w1", "s.w2")
+    )
+
+
+def _bigram_model(bg: DataFrame) -> DataFrame:
+    """(w1, w2, c, total, ppm): count per bigram, count per w1, and
+    the integer-ppm conditional probability c * 1e6 div total."""
+    pairs = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
+    tot = pairs.groupBy("w1").agg(F.sum("c").alias("total"))
+    return pairs.join(tot, "w1").withColumn(
+        "ppm", F.expr("c * 1000000 div total").cast("bigint")
+    )
+
+
 @register(
     "corpus_bigram_lm",
     _BIGRAM_ORACLE,
@@ -555,25 +583,10 @@ FROM ranked WHERE rnk <= 3
 )
 def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("text")
-    toks = tokens(F.col("text"))
-    bg = (
-        docs.select(toks.alias("toks"))
-        .where(F.size("toks") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(toks) - 2), "
-                    "i -> struct(toks[i] AS w1, toks[i + 1] AS w2))"
-                )
-            ).alias("s")
-        )
-        .select("s.w1", "s.w2")
-    )
-    pairs = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
-    tot = pairs.groupBy("w1").agg(F.sum("c").alias("total"))
+    bg = _bigrams(docs.select(tokens(F.col("text")).alias("toks")))
     w = Window.partitionBy("w1").orderBy(F.col("c").desc(), F.col("w2"))
     return (
-        pairs.join(tot, "w1")
+        _bigram_model(bg)
         .where(F.col("total") >= _LM_MIN_TOTAL)
         .withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= 3)
@@ -582,7 +595,7 @@ def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w2",
             F.col("c").cast("bigint").alias("c"),
             F.col("total").cast("bigint").alias("w1_total"),
-            F.expr("c * 1000000 div total").cast("bigint").alias("prob_ppm"),
+            F.col("ppm").alias("prob_ppm"),
             F.col("rnk").cast("bigint").alias("rnk"),
         )
     )
@@ -1045,29 +1058,11 @@ FROM tokd t LEFT JOIN scored s USING (doc_id)
 )
 def q_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = tokens(F.col("text"))
-    tokd = docs.select("doc_id", toks.alias("toks"))
-    docbg = (
-        tokd.where(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(toks) - 2), "
-                    "i -> struct(toks[i] AS w1, toks[i + 1] AS w2))"
-                )
-            ).alias("s"),
-        )
-        .select("doc_id", "s.w1", "s.w2")
-    )
-    docbg = track_persist(docbg)  # read twice: model build + scoring
-    pairs = docbg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
-    tot = pairs.groupBy("w1").agg(F.sum("c").alias("total"))
-    model = pairs.join(tot, "w1").select(
-        "w1", "w2", F.expr("c * 1000000 div total").cast("bigint").alias("ppm")
-    )
+    tokd = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
+    # Read twice: model build + scoring.
+    docbg = track_persist(_bigrams(tokd, "doc_id"))
     scored = (
-        docbg.join(model, ["w1", "w2"])
+        docbg.join(_bigram_model(docbg), ["w1", "w2"])
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
@@ -1225,27 +1220,9 @@ def q_corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     toks = tokens(F.col("text"))
     tokd = survivors.select("doc_id", "lang", "source", toks.alias("toks"))
-    docbg = track_persist(
-        tokd.where(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(toks) - 2), "
-                    "i -> struct(toks[i] AS w1, toks[i + 1] AS w2))"
-                )
-            ).alias("s"),
-        )
-        .select("doc_id", "s.w1", "s.w2")
-    )
-    pairs = docbg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
-    tot = pairs.groupBy("w1").agg(F.sum("c").alias("total"))
-    model = pairs.join(tot, "w1").select(
-        "w1", "w2",
-        F.expr("c * 1000000 div total").cast("bigint").alias("ppm"),
-    )
+    docbg = track_persist(_bigrams(tokd, "doc_id"))
     scored = (
-        docbg.join(model, ["w1", "w2"])
+        docbg.join(_bigram_model(docbg), ["w1", "w2"])
         .groupBy("doc_id")
         .agg(F.expr("sum(ppm) div count(1)").cast("bigint").alias("score_ppm"))
     )

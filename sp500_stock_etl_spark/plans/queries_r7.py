@@ -728,7 +728,7 @@ def winnowed_fingerprints(tokd: DataFrame) -> DataFrame:
     stride-1 md5 pass over every 16-token span is by far this plan's
     CPU stage and otherwise runs in the test file's single scan task
     (r15 A/B: 2.47 -> 1.31 s at sf0.1,
-    scripts/r15_parallelism_ab.py)."""
+    plans/r15/parallelism_ab.txt)."""
     from ..io.readers import ensure_parallelism
 
     tokd = ensure_parallelism(tokd)

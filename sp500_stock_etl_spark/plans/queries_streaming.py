@@ -89,8 +89,7 @@ def _stream_shuffle_partitions(
     ``defaultParallelism``. At cluster scale the source is orders of
     magnitude past the cap, so the cap dominates and behavior equals
     the session default; at test scale the state machinery tracks the
-    data. Override with SPARK_GRAFT_STREAM_SHUFFLE (int) for
-    deployments that want an explicit value.
+    data.
 
     ``python_stateful=True`` (r15; r14 verdict item 7): for plans
     whose hot path is a Python stateful operator
@@ -100,7 +99,7 @@ def _stream_shuffle_partitions(
     Python side. Cores-derived floor instead:
     max(4, defaultParallelism // 2). Interleaved A/B on
     streaming_running_totals_final at sf0.1
-    (scripts/r15_stateful_floor_ab.py): 4 partitions best 3.00 s /
+    (plans/r15/stateful_floor_ab.txt): 4 partitions best 3.00 s /
     med 3.33; 8 -> 2.21/2.78; 16 -> 2.24/2.30. The cores/2 rule
     tracks the driver's low-core bench run and still caps at
     defaultParallelism, so cluster behavior is unchanged.
@@ -108,9 +107,9 @@ def _stream_shuffle_partitions(
     ``heavy_state=True`` (r15): same cores-derived floor for plans
     whose STATE cardinality far exceeds what the source-bytes rule
     sees — streaming_vwap_daily holds ~596k state rows (one per
-    symbol-day, profiled via r14_stream_profile: updTimeMs 1.9 s,
-    131 MB store) behind a ~15 MB staged source that sizes to 1
-    split. A/B at sf0.1: 4 partitions best 4.71 s / med 5.62;
+    symbol-day, profiled in plans/r14/stream_profile_{before,after}.txt:
+    updTimeMs 1.9 s, 131 MB store) behind a ~15 MB staged source that
+    sizes to 1 split. A/B at sf0.1: 4 partitions best 4.71 s / med 5.62;
     8 -> 3.61/4.40; 16 -> 3.36/4.02. Small-state plans keep floor 4
     (streaming_ohlc_bars_append measured BEST at 4: 1.43 vs 1.65 at
     16 — per-instance machinery dominates when state is small).
@@ -121,9 +120,6 @@ def _stream_shuffle_partitions(
     the applyInPandasWithState totals are associative — re-certified
     by the full oracle-parity suite after this change.
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        return max(1, int(env))
     total = 0
     for root, _dirs, files in os.walk(src_dir, followlinks=True):
         for fn in files:

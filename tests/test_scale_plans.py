@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from sp500_stock_etl_spark.io.readers import load_table
 from sp500_stock_etl_spark.io.writers import write_bucketed_table
+from sp500_stock_etl_spark.operators import dedup as D
 from sp500_stock_etl_spark.operators.skew import salted_join
 from sp500_stock_etl_spark.plans.registry import all_queries
 
@@ -259,7 +260,7 @@ def test_verify_joins_hash_build_never_sort(spark, sf_dir, monkeypatch):
     - dedup_minhash_lsh's verify is SIZE-GATED (r11): a provably
       bounded candidate set broadcasts (zero corpus shuffle), an
       unbounded one takes the spill-safe aggregate shape — forced
-      here via the env knobs to pin BOTH plans.
+      here by patching the gate to pin BOTH plans.
     The only SMJ allowed anywhere is the banded bucket self-join,
     whose sides are skinny (id, band, sig) rows."""
 
@@ -275,7 +276,7 @@ def test_verify_joins_hash_build_never_sort(spark, sf_dir, monkeypatch):
     assert_no_fat_smj(plan, "dedup_embedding_cosine")
 
     q = all_queries()["dedup_minhash_lsh"].spark_fn
-    monkeypatch.setenv("SPARK_GRAFT_VERIFY_SHAPE", "broadcast")
+    monkeypatch.setattr(D, "_verify_size_gate", lambda p, s: True)
     plan = _plan(q(spark, sf_dir))
     assert "BroadcastHashJoin" in plan, "gated fast path must broadcast"
     assert "ShuffledHashJoin" not in plan, (
@@ -283,7 +284,7 @@ def test_verify_joins_hash_build_never_sort(spark, sf_dir, monkeypatch):
     )
     assert_no_fat_smj(plan, "dedup_minhash_lsh[broadcast]")
 
-    monkeypatch.setenv("SPARK_GRAFT_VERIFY_SHAPE", "agg")
+    monkeypatch.setattr(D, "_verify_size_gate", lambda p, s: False)
     plan = _plan(q(spark, sf_dir))
     assert "ShuffledHashJoin" in plan, "agg shape must keep SHJ fetches"
     assert_no_fat_smj(plan, "dedup_minhash_lsh[agg]")

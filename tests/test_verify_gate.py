@@ -4,9 +4,8 @@ anything the gate cannot bound takes the spill-safe aggregate shape
 (shape 3, the r10 OOM fix). Pins:
 
 1. the two shapes are BIT-IDENTICAL on the same input;
-2. the gate routes by the byte budget (env-overridable), so the
-   prefix_jaccard-style unbounded candidate volume can never reach a
-   broadcast build;
+2. the gate routes by the byte budget, so the prefix_jaccard-style
+   unbounded candidate volume can never reach a broadcast build;
 3. empty candidate sets are handled by both shapes.
 """
 
@@ -15,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sp500_stock_etl_spark.operators import dedup as D
+
+SHAPES = {"broadcast": True, "agg": False}
 
 
 def _corpus(spark):
@@ -30,8 +31,8 @@ def _corpus(spark):
 def test_shapes_bit_identical(spark, monkeypatch):
     docs = _corpus(spark)
     results = {}
-    for shape in ("broadcast", "agg"):
-        monkeypatch.setenv("SPARK_GRAFT_VERIFY_SHAPE", shape)
+    for shape, fast in SHAPES.items():
+        monkeypatch.setattr(D, "_verify_size_gate", lambda p, s: fast)
         out = D.minhash_lsh_dedup(docs, "doc_id", "text")
         results[shape] = sorted(map(tuple, out.collect()))
     assert results["broadcast"] == results["agg"]
@@ -44,12 +45,11 @@ def test_gate_routes_by_budget(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(0, 1000), (5, 1005)], "doc_a long, doc_b long"
     )
-    monkeypatch.delenv("SPARK_GRAFT_VERIFY_SHAPE", raising=False)
     # A 1-byte budget can never admit a broadcast build.
-    monkeypatch.setenv("SPARK_GRAFT_VERIFY_BUDGET_BYTES", "1")
+    monkeypatch.setattr(D, "_verify_budget_bytes", lambda spark: 1.0)
     assert D._verify_size_gate(pairs, sh) is False
     # A huge budget admits this tiny candidate set.
-    monkeypatch.setenv("SPARK_GRAFT_VERIFY_BUDGET_BYTES", str(10**12))
+    monkeypatch.setattr(D, "_verify_budget_bytes", lambda spark: 1e12)
     assert D._verify_size_gate(pairs, sh) is True
 
 
@@ -57,17 +57,15 @@ def test_empty_candidates_both_shapes(spark, monkeypatch):
     docs = _corpus(spark)
     sh = D.with_shingles(docs, "doc_id", "text", 3)
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    for shape in ("broadcast", "agg"):
-        monkeypatch.setenv("SPARK_GRAFT_VERIFY_SHAPE", shape)
+    for fast in SHAPES.values():
+        monkeypatch.setattr(D, "_verify_size_gate", lambda p, s: fast)
         out = D.jaccard_verify(empty, sh, 0.6)
         assert out.count() == 0
         assert out.columns == ["doc_a", "doc_b", "jaccard"]
 
 
-def test_gate_decision_trail(spark, monkeypatch):
+def test_gate_decision_trail(spark):
     docs = _corpus(spark)
-    monkeypatch.delenv("SPARK_GRAFT_VERIFY_SHAPE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_VERIFY_BUDGET_BYTES", raising=False)
     D.LAST_GATE_DECISIONS.clear()
     D.minhash_lsh_dedup(docs, "doc_id", "text").count()
     assert len(D.LAST_GATE_DECISIONS) == 1
