@@ -6,6 +6,13 @@ sink, warmup absorbed, best-of-N) and optionally writes each query's
 `.explain("formatted")` to <DIR>/<query>.txt so before/after plan
 claims can be committed as evidence.
 
+For each query it also prints the number of generated classes Spark
+compiled during the timed reps (CodegenMetrics; near 0 once the plan
+is warm, so a codegen-cache miss shows up here) and a hash of the
+sorted output rows, from one extra untimed collect, in the canonical
+form of tests/parity.py: equal hashes before and after a change are
+its output-identity proof.
+
 Usage:
     python scripts/measure.py [--reps 3] [--explain DIR] [--sf DIR] q1 q2 ...
     python scripts/measure.py --no-time --explain plans/before dedup_prefix_jaccard
@@ -14,6 +21,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import hashlib
 import io
 import json
 import os
@@ -28,6 +36,14 @@ from sp500_stock_etl_spark.io.readers import DEFAULT_SF_DIR  # noqa: E402
 from sp500_stock_etl_spark.plans.registry import all_queries  # noqa: E402
 from sp500_stock_etl_spark.session import get_spark  # noqa: E402
 from sp500_stock_etl_spark.hostinfo import host_mt_ms, host_st_ms  # noqa: E402
+from tests.parity import _pdf_canon  # noqa: E402
+
+
+def output_hash(df) -> str:
+    """Order-insensitive hash of a DataFrame's columns and rows."""
+    pdf = df.toPandas()
+    canon = (sorted(pdf.columns), _pdf_canon(pdf))
+    return hashlib.sha256(repr(canon).encode()).hexdigest()[:16]
 
 
 def main() -> None:
@@ -44,6 +60,10 @@ def main() -> None:
     spark = get_spark("measure")
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
 
     # Same warmups as bench.py: JVM/codegen + Python worker pool.
     registry["flagship_window_metrics"].spark_fn(
@@ -69,6 +89,7 @@ def main() -> None:
         if args.no_time:
             continue
         walls = []
+        compiles0 = compiles()
         for _ in range(args.reps):
             spark.sparkContext.setJobDescription(f"measure:{name}")
             t0 = time.perf_counter()
@@ -77,8 +98,17 @@ def main() -> None:
             ).save()
             walls.append(round(time.perf_counter() - t0, 3))
             spark.sparkContext.setJobDescription(None)
-        out[name] = {"best": min(walls), "walls": walls}
-        print(f"{name}: best={min(walls)} walls={walls}", flush=True)
+        out[name] = {
+            "best": min(walls),
+            "walls": walls,
+            "compiles": compiles() - compiles0,
+            "hash": output_hash(q.spark_fn(spark, args.sf)),
+        }
+        print(
+            f"{name}: best={min(walls)} walls={walls} "
+            f"compiles={out[name]['compiles']} hash={out[name]['hash']}",
+            flush=True,
+        )
 
     print(json.dumps({
         "host_st_ms": host_st_ms(),

@@ -14,12 +14,23 @@ At 100 TB the parquet scans are partition-pruned (fact tables
 partitioned by date at write time, io/writers.py) and never read
 columns the plan doesn't need — verify with
 ``df.explain('formatted')`` → ``ReadSchema`` / ``PushedFilters``.
+
+Inferring a parquet schema runs a footer-reading Spark job, so
+``load_table`` memoizes the schema Spark inferred for a table file for
+the life of the process and hands it back through
+``spark.read.schema(...)`` on later scans. The key is the file's Hadoop
+``FileStatus`` (qualified path, modification time, length) plus the
+confs that change parquet inference, so a rewritten file or a flipped
+conf is inferred again. Only regular files are memoized: a directory's
+status does not change when a file inside it is rewritten, so a
+directory dataset is inferred on every scan.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -30,15 +41,70 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Snowflake NULL_IF token list (dags/sp500_dag.py.py:373).
 NULL_IF_TOKENS = ("NULL", "null", "", "\\N")
 
+# Confs whose values change the schema Spark infers from a parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# (qualified path, mtime, length, *inference conf values) -> inferred schema.
+# Two threads that miss on the same key both infer and store equal values.
+_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one testdata table. Lazy; filters/pruning push into the scan."""
+    """Scan one testdata table. Lazy; filters/pruning push into the scan.
+
+    The first scan of a table file infers its schema (one Spark job);
+    later scans of the same unchanged file, under the same inference
+    confs, reuse that schema and start no job. See the module docstring
+    for the memo key and why directories are not memoized.
+    """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TESTDATA_TABLES}")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = _schema_key(spark, path)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if key is not None:
+            _SCHEMA_MEMO[key] = _check_columns(name, path, schema)
     if name == "events":
-        df = df.withColumn("ts", _normalize_event_ts(df.schema["ts"].dataType))
+        df = df.withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
     return df
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """Memo key for a regular file at ``path``, or None for a directory
+    or a path whose status cannot be read (the reader then infers, or
+    raises its usual error). The status comes through the session's
+    Hadoop FileSystem, so any scheme Spark can read works."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        status = fs.getFileStatus(hpath)
+    except Py4JJavaError:
+        return None
+    if not status.isFile():
+        return None
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return (status.getPath().toString(), status.getModificationTime(), status.getLen(), *confs)
+
+
+def _check_columns(name: str, path: str, schema: T.StructType) -> T.StructType:
+    expected = SCHEMAS[name].fieldNames()
+    if schema.fieldNames() != expected:
+        raise ValueError(
+            f"{path}: columns {schema.fieldNames()} do not match the "
+            f"{name!r} table schema {expected}"
+        )
+    return schema
 
 
 def _normalize_event_ts(dtype: T.DataType) -> F.Column:
