@@ -84,19 +84,13 @@ coverage or comparability. From r10 the headline splits in two:
   Round-11 fold: the one r10 birth (streaming_cdc_upsert_bucketed)
   joins the tail; pre-registered anchor from BENCH_r10.json:
   200.828 + 7.407 (value_new) = **208.235 s for the 165-plan union**.
-- When the full suite exceeds 600 s wall, set
-  ``SPARK_GRAFT_BENCH_TAIL=rotate``: the non-core tail then runs in
-  deterministic halves (sorted-name index parity vs the round count
-  gleaned from BENCH_r*.json files), so each tail plan is still
-  measured every other round while the core stays every-round.
-  ``tail_mode`` in the output records which mode ran.
 
 Round-12 re-anchor (round-11 verdict item 1 — the host migrated
 mid-r11, killing every old-host anchor). The two r11 births fold into
 the 167-plan union AFTER their swing was bounded (filestats folds at
 11.1-12.9 s across four runs; the r11 artifact's 36.4 s was store-
-tempdir I/O contention, localized by scripts/
-filestats_variance_probe.py). NEW-HOST anchors, pre-registered as the
+tempdir I/O contention, localized per merge phase in BASELINE.md
+§14). NEW-HOST anchors, pre-registered as the
 median of three consecutive driver-protocol runs within +/-20%
 (109.546/105.389/80.271 core; 339.639/350.971/272.815 full):
 **core 105.389 s, full-suite 339.639 s**. The +/-35% band across four
@@ -328,7 +322,7 @@ BENCH_QUERIES = [
     # value was re-measured quiet-box first per the r11 verdict —
     # steady ~15 s total / ~3 s per merge; the 36.4 s in the r11
     # artifact was store-tempdir I/O contention mid-suite, localized
-    # by scripts/filestats_variance_probe.py's per-merge phases) ---
+    # per merge phase in BASELINE.md §14) ---
     "streaming_cdc_upsert_filestats",
     "streaming_cdc_upsert_tenant",
     # --- round-12 addition (folded in round 13 at the driver
@@ -643,34 +637,7 @@ def main() -> None:
                 stream = s
         return wall, stream
 
-    # Tail policy (module docstring): core always runs; the non-core
-    # tail runs whole by default, or in deterministic halves when
-    # SPARK_GRAFT_BENCH_TAIL=rotate (sorted-name parity vs the round
-    # count read off the committed BENCH_r*.json files).
     core_set = set(CORE_QUERIES)
-    tail_mode = os.environ.get("SPARK_GRAFT_BENCH_TAIL", "all")
-    tail_names = sorted(
-        n
-        for n in BENCH_QUERIES
-        if n not in core_set and n not in EXHIBIT_QUERIES
-    )
-    if tail_mode == "rotate":
-        import glob as _glob
-
-        rnd = len(
-            _glob.glob(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "BENCH_r*.json",
-                )
-            )
-        )
-        tail_names = [n for i, n in enumerate(tail_names) if i % 2 == rnd % 2]
-    to_run = [
-        n
-        for n in BENCH_QUERIES
-        if n in core_set or n in EXHIBIT_QUERIES or n in set(tail_names)
-    ]
 
     # Recommended plans are timed best-of-2 (the host carries background
     # load; min-of-N is the standard steady-state estimator). Exhibits
@@ -678,7 +645,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     exhibit_timings: dict[str, float] = {}
     stream_split: dict[str, dict] = {}
-    for name in to_run:
+    for name in BENCH_QUERIES:
         wall, s = run_once(name)
         if name in EXHIBIT_QUERIES:
             exhibit_timings[name] = wall
@@ -733,7 +700,7 @@ def main() -> None:
     # single-thread-bound), but the core line carried no term to show
     # it. Stamp the core's scheduler share and its data wall so a
     # band breach is attributable from the compact line alone; band
-    # judgment is data-wall-based (BASELINE.md §7).
+    # judgment is data-wall-based (BASELINE.md §15).
     core_sched_wall_s = round(
         sum(s["sched_wall_s"] for n, s in in_suite.items() if n in core_set),
         3,
@@ -760,7 +727,6 @@ def main() -> None:
         "value_full_suite": full_suite,
         "value_new": value_new,
         "full_value": full,
-        "tail_mode": tail_mode,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     detail_path = os.path.join(
@@ -777,13 +743,13 @@ def main() -> None:
     # timings instead of comparing counts to counts. The anchor
     # history that used to live in the metric string (r12 new-host
     # anchors: core 105.389s band 80.3-109.5, full suite 353.368s over
-    # the 168-plan union) moved to BASELINE.md §7 + this docstring to
-    # make room; methodology, timed set and scale are UNCHANGED.
+    # the 168-plan union) moved to BASELINE.md §14/§15 + this docstring
+    # to make room; methodology, timed set and scale are UNCHANGED.
     print(
         _compact_line(
             {
                 "metric": "55-plan core wall-clock (noop sink; "
-                "anchors BASELINE.md §7; data-wall judging via "
+                "anchors BASELINE.md §14/§15; data-wall judging via "
                 "*_sched_wall_s; core_key_map in detail)",
                 "value": core_value,
                 "unit": "sec",
@@ -803,7 +769,6 @@ def main() -> None:
                 "stream_exec_s": stream_exec_s,
                 "core_sched_wall_s": core_sched_wall_s,
                 "core_data_wall_s": core_data_wall_s,
-                "tail_mode": tail_mode,
                 "detail": "BENCH_DETAIL.json",
                 "host_st_ms": host_st_ms,
                 "host_mt_ms": host_mt_ms,

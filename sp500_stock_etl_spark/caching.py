@@ -8,9 +8,9 @@ A long-lived session serving many registry queries would otherwise
 accumulate cached partitions in executor storage memory indefinitely.
 
 Tracking is PER-THREAD: a multi-tenant server running queries on
-driver threads (scripts/concurrency_probe.py shape) must not have one
-thread's registry build release a cache another thread's in-flight
-query is still reading.
+driver threads (the concurrent-serving shape of BASELINE.md §3) must
+not have one thread's registry build release a cache another thread's
+in-flight query is still reading.
 
 Release points:
 

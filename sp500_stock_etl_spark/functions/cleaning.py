@@ -35,7 +35,3 @@ def sql_valid_symbol(expr: str) -> str:
         f"AND regexp_matches({stripped}, '{ASCII_ALNUM}'))"
     )
 
-
-def null_if_tokens(col: Column, tokens=("NULL", "null", "", "\\N")) -> Column:
-    """S3: Snowflake multi-token NULL_IF (dags/sp500_dag.py.py:373)."""
-    return F.when(col.isin(*tokens), F.lit(None)).otherwise(col)

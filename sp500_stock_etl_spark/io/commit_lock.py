@@ -34,8 +34,9 @@ adapters ship:
   deliberately different acquire primitive — write-temp +
   ``os.link`` into the namespace (the NFS-safe lock pattern; link
   fails iff the name exists, exactly the conditional-PUT contract) —
-  so the OCC probe exercises the protocol through a second adapter
-  end-to-end (``scripts/occ_probe.py``, SPARK_GRAFT_LOCK_BACKEND).
+  so the protocol is exercised through a second adapter: every test
+  in ``tests/test_commit_lock.py`` runs against both, and the
+  multi-writer OCC numbers for both are in BASELINE.md §14.
 
 Real object stores don't need the flock trick at all: their
 ``DELETE If-Match`` is atomic server-side, so the adapter is a direct
@@ -140,25 +141,6 @@ class ObjectStoreSimBackend(PosixLockBackend):
             os.unlink(tmp)
 
 
-_BACKENDS = {
-    "posix": PosixLockBackend,
-    "objectstore": ObjectStoreSimBackend,
-}
-
-
-def default_lock_backend():
-    """Backend selected by SPARK_GRAFT_LOCK_BACKEND (posix |
-    objectstore); POSIX O_EXCL by default."""
-    name = os.environ.get("SPARK_GRAFT_LOCK_BACKEND", "posix").lower()
-    try:
-        return _BACKENDS[name]()
-    except KeyError:
-        raise ValueError(
-            f"unknown SPARK_GRAFT_LOCK_BACKEND {name!r}; "
-            f"expected one of {sorted(_BACKENDS)}"
-        ) from None
-
-
 class CommitLock:
     """Token-holding exclusive lock over a backend's conditional-write
     triple. Only metadata work (validate, renames, one JSON write, GC)
@@ -188,7 +170,7 @@ class CommitLock:
         self.timeout = timeout
         self.poll = poll
         self.stale_seconds = stale_seconds
-        self.backend = backend if backend is not None else default_lock_backend()
+        self.backend = backend if backend is not None else PosixLockBackend()
         self.token = f"{os.getpid()}:{uuid.uuid4().hex}".encode()
 
     def __enter__(self) -> "CommitLock":

@@ -1,12 +1,15 @@
-"""Manifest generations for the file-level CDC store (r11; closes the
-concurrent-reader gap documented on ``merge_touched_files``).
+"""File-level CDC store published through manifest generations.
 
-``merge_touched_files`` publishes by appending new files and deleting
-the replaced ones — a reader listing the directory between those two
-steps sees duplicate keys, and one holding handles to replaced files
-can lose them. The standard fix (every production table format —
-Iceberg/Delta-style, realized here with stdlib JSON + POSIX rename)
-is a MANIFEST generation:
+The store is an upsert table (one row per key), Hive-partitioned by
+bucket, with several key-clustered parquet files per bucket, so each
+file's key [min, max] is narrow. A merge rewrites only the FILES whose
+key range the batch touches, so merge I/O is O(batch + intersecting
+files) at any store size. Appending new files and deleting replaced
+ones in place would let a reader listing the directory between those
+two steps see duplicate keys, and a reader holding handles to
+replaced files lose them. The standard fix (every production table
+format — Iceberg/Delta-style, realized here with stdlib JSON + POSIX
+rename) is a MANIFEST generation:
 
 - ``_manifest.json`` at the store root lists the LIVE files of the
   current generation, each with its key min/max (so merges stop
@@ -17,9 +20,9 @@ is a MANIFEST generation:
 - replaced files are retained on disk for ONE generation (listed in
   the manifest's ``dead``) and physically deleted by the NEXT merge,
   so a reader that loaded generation g can finish scanning g's files
-  while g+1 publishes. Production tunes this retention by time; the
-  single-generation lag is the test-scale realization and the
-  concurrency probe hammers it.
+  while g+1 publishes. Production tunes this retention by time
+  (``retention_seconds``); the single-generation lag is the default,
+  pinned under concurrent readers in tests/test_manifest_store.py.
 
 Readers are unrestricted. Writers use OPTIMISTIC concurrency (the
 Iceberg/Delta commit shape; the commit lock's storage primitives are
@@ -40,18 +43,19 @@ regardless of commit order). The CDC apply remains one foreachBatch
 loop in practice, but concurrent appliers are now safe by
 construction (pinned in tests/test_manifest_store.py).
 
-Metadata scale (measured, scripts/manifest_scale_probe.py): the flat
-single-JSON manifest costs ~1.7 s of metadata work per commit at 200k
-live files (~100 TB at 512 MB/file), ~1.1 s of it under the commit
-lock — fine for minute-cadence CDC appliers. For sub-second commit
-rates or multi-million-file stores, opt into MANIFEST SHARDING
-(``manifest_shards=K`` at creation, or convert via
-``compact_manifest_store``): the root becomes an Iceberg-style
-manifest list of per-shard descriptors, buckets hash to shards, and a
-merge loads/rewrites only the shards covering its touched buckets —
-measured 1.7 → 0.46 s at 200k files and 4.5 → 1.1 s at 500k (64
-shards, 1%-of-buckets batch), proportional to touched shards, same
-OCC semantics (identical retry distributions in the 4-writer probe).
+Metadata scale (measured, BASELINE.md §14 "How far does the flat
+manifest carry?"): the flat single-JSON manifest costs ~1.7 s of
+metadata work per commit at 200k live files (~100 TB at 512 MB/file),
+~1.1 s of it under the commit lock — fine for minute-cadence CDC
+appliers. For sub-second commit rates or multi-million-file stores,
+opt into MANIFEST SHARDING (``manifest_shards=K`` at creation, or
+convert via ``compact_manifest_store``): the root becomes an
+Iceberg-style manifest list of per-shard descriptors, buckets hash to
+shards, and a merge loads/rewrites only the shards covering its
+touched buckets — measured 1.7 → 0.46 s at 200k files and 4.5 → 1.1 s
+at 500k (64 shards, 1%-of-buckets batch; BASELINE.md §14),
+proportional to touched shards, same OCC semantics (identical retry
+distributions in the 4-writer run).
 """
 
 from __future__ import annotations
@@ -68,7 +72,6 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .commit_lock import CommitLock
-from .writers import _parquet_key_range
 
 _MANIFEST = "_manifest.json"
 
@@ -105,8 +108,8 @@ def read_store(
     filtered to the exact range, so callers get precise results even
     from files that merely overlap. At a multi-tenant store keyed on
     the composite (tenant, key) this is how a one-tenant scan reads
-    one tenant's files (scripts/tenant_probe.py measures the write
-    side of the same property).
+    one tenant's files (BASELINE.md §13 measures the write side of
+    the same property).
 
     ``buckets={...}`` (partition values, as strings) prunes by the
     Hive bucket instead: on a SHARDED manifest only the covering
@@ -223,6 +226,34 @@ def _safe_size(path: str) -> int:
         return 0
 
 
+def _parquet_key_range(path: str, key_col: str) -> tuple | None:
+    """(min, max) of ``key_col`` across a parquet file's row groups,
+    read from the FOOTER ONLY (pyarrow metadata — no data pages).
+    None when stats are absent (never written, or a type without
+    min/max). Read once per file, at the generation that stages it;
+    merges then select files from the manifest's stored ranges."""
+    import pyarrow.parquet as pq
+
+    try:
+        meta = pq.read_metadata(path)
+    except Exception:
+        return None
+    schema = meta.schema.to_arrow_schema()
+    try:
+        idx = schema.names.index(key_col)
+    except ValueError:
+        return None
+    lo = hi = None
+    for rg in range(meta.num_row_groups):
+        col = meta.row_group(rg).column(idx)
+        st = col.statistics
+        if st is None or not st.has_min_max:
+            return None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return None if lo is None else (lo, hi)
+
+
 # --- Manifest sharding (r12; turns the measured flat-manifest
 # boundary into a feature). A SHARDED manifest keeps the root JSON as
 # an Iceberg-style manifest LIST: per-shard descriptors {path,
@@ -232,7 +263,7 @@ def _safe_size(path: str) -> int:
 # touched buckets — per-commit metadata work tracks touched buckets,
 # not total file count (the flat design costs ~1.4 s/commit at the
 # 200k-file 100 TB point, ~0.9 s of it under the lock;
-# scripts/manifest_scale_probe.py). Replaced shard JSONs retire
+# BASELINE.md §14 "Manifest sharding"). Replaced shard JSONs retire
 # through the same time-based retention as replaced parquet (root
 # keys dead_meta/dead_meta_since), so lagging readers of generation g
 # can still resolve g's shards while g+1 publishes. Flat stays the
@@ -405,7 +436,7 @@ def _stage_clustered(
                 # descriptors then read it from the manifest instead
                 # of stat()ing every live file per commit — the flat
                 # path's bytes_total alone was ~100k stat() calls per
-                # commit at the 100 TB point (advisor_e2e_probe).
+                # commit at the 100 TB point (BASELINE.md §15).
                 "bytes": _safe_size(os.path.join(stage, rel)),
             }
         )
@@ -455,8 +486,7 @@ def _warn_zero_retention(store_dir: str) -> None:
         f"merge_manifest_store({store_dir!r}): commit conflict observed "
         "with retention_seconds=0 — concurrent writers need a retention "
         "window at least as long as the slowest merge, or a redo "
-        "loser's input files may be GC'd mid-read "
-        "(scripts/occ_probe.py runs with retention_seconds=3600)",
+        "loser's input files may be GC'd mid-read",
         RuntimeWarning,
         stacklevel=3,
     )
@@ -498,7 +528,8 @@ def merge_manifest_store(
     lock_stale_seconds: float = 600.0,
     manifest_shards: int | None = None,
 ) -> dict:
-    """``merge_touched_files`` semantics behind a manifest generation:
+    """CDC merge that rewrites only the store files whose key range
+    the batch touches, published as one manifest generation:
 
     1. select replaced files from the MANIFEST's stored key ranges
        (zero parquet I/O; footers are read once per file, at the
@@ -512,7 +543,7 @@ def merge_manifest_store(
        full generation AND for at least ``retention_seconds`` —
        production table formats retain by time so lagging readers can
        finish arbitrarily old scans; the default (0) keeps the
-       single-generation lag the concurrency probe hammers.
+       single-generation lag.
 
     Driver-memory bound: the batch's distinct (bucket, key) pairs are
     collected through a ``limit(max_collected_keys + 1)`` probe — ONE
@@ -554,11 +585,13 @@ def merge_manifest_store(
     covering its touched buckets — the per-commit metadata cost the
     flat format pays in full at high file counts.
 
-    Returns the same observability dict as merge_touched_files plus
-    ``generation``, ``pruning`` ("keys" | "intervals"),
-    ``commit_retries`` and ``wall_s`` (this merge's wall-clock — the
-    r11 bench artifact caught a 3x run-to-run swing on the filestats
-    query and the per-batch wall is what localizes such swings).
+    Returns {"touched_buckets", "files_read", "files_total",
+    "bytes_read", "bytes_total"} (read-back must track touched keys,
+    not touched buckets) plus ``generation``, ``pruning`` ("keys" |
+    "intervals"), ``commit_retries`` and ``wall_s`` (this merge's
+    wall-clock — the r11 bench artifact caught a 3x run-to-run swing
+    on the filestats query and the per-batch wall is what localizes
+    such swings).
     """
     import bisect
 

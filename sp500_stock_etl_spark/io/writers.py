@@ -363,270 +363,3 @@ def merge_touched_partitions(
         else:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return touched
-
-
-def _parquet_key_range(path: str, key_col: str) -> tuple | None:
-    """(min, max) of ``key_col`` across a parquet file's row groups,
-    read from the FOOTER ONLY (pyarrow metadata — no data pages).
-    None when stats are absent (never written, or a type without
-    min/max). Driver-side here because the caller bounds the file
-    count (touched buckets x files-per-bucket); the 10^9-key cluster
-    realization runs the same footer reads in a mapPartitions over
-    file paths."""
-    import pyarrow.parquet as pq
-
-    try:
-        meta = pq.read_metadata(path)
-    except Exception:
-        return None
-    schema = meta.schema.to_arrow_schema()
-    try:
-        idx = schema.names.index(key_col)
-    except ValueError:
-        return None
-    lo = hi = None
-    for rg in range(meta.num_row_groups):
-        col = meta.row_group(rg).column(idx)
-        st = col.statistics
-        if st is None or not st.has_min_max:
-            return None
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    return None if lo is None else (lo, hi)
-
-
-def merge_touched_files(
-    store_dir: str,
-    batch_latest: DataFrame,
-    key_col: str,
-    partition_col: str,
-    resolve,
-    files_per_bucket: int = 4,
-    max_collected_keys: int = 1_000_000,
-    batch_keys_hint: int | None = None,
-) -> dict:
-    """CDC merge that rewrites ONLY the FILES whose key range the
-    batch touches — the next granularity down from
-    ``merge_touched_partitions`` (r10 verdict item 2: at a 10^8-10^9
-    key store the touched buckets themselves get large, and a
-    partition-overwrite merge must read AND rewrite every row of a
-    touched bucket; read-back should track touched KEYS instead).
-
-    Store invariants this maintains:
-    - one row per key (an upsert store — ``resolve`` keeps one);
-    - Hive-partitioned by ``partition_col`` (bucket), multiple
-      parquet files per bucket, each file key-CLUSTERED (the initial
-      write and every merge write via repartitionByRange on the key),
-      so footer min/max ranges are narrow and file-level pruning has
-      teeth. Ranges may overlap after many merges (pruning degrades
-      gracefully, correctness never depends on disjointness — see
-      below); ``compact_store_files`` is the periodic repair.
-
-    Per batch:
-    1. collect the batch's distinct keys per bucket through a
-       ``limit(max_collected_keys + 1)`` probe — one bounded job,
-       never an unbounded collect (r11 verdict item 3); on overflow
-       (or ``batch_keys_hint > max_collected_keys``) prune by
-       per-bucket [min, max] intervals instead, bounded by the bucket
-       count at any batch size;
-    2. for each touched bucket, read each store file's FOOTER min/max
-       and select the files whose range contains any batch key
-       (sorted-keys binary search). A file whose range excludes a key
-       cannot contain it, and every store copy of a batch key is in
-       SOME selected file — so reading exactly the selected files is
-       sufficient for last-write-wins resolution;
-    3. resolve(selected-file rows ∪ batch) → write as NEW files
-       (append mode: untouched files are never rewritten — at any
-       scale the merge I/O is O(batch + intersecting files));
-    4. remove the replaced files.
-
-    Single-writer semantics like every CDC store here. Crash window:
-    a failure between steps 3 and 4 leaves the replaced files behind
-    — duplicate keys whose rows are bit-identical up to resolution
-    order; the next merge (or a compaction) that selects them
-    re-resolves and removes them. A concurrent READER between 3 and 4
-    can see both copies; production pairs this layout with a manifest
-    (the staged-rename publish of write_bucketed_table_atomic) or a
-    table format.
-
-    Returns {"touched_buckets", "files_read", "files_total",
-    "bytes_read", "bytes_total"} — the observability the scale probe
-    charts (read-back must track touched keys, not touched buckets).
-    """
-    import bisect
-    import glob
-    import os
-
-    spark = batch_latest.sparkSession
-    n_out = max(int(files_per_bucket), 1)
-
-    def write_clustered(df: DataFrame, mode: str) -> None:
-        # repartitionByRange on the key -> each task holds a
-        # contiguous key range -> within every bucket dir the task's
-        # file covers a narrow range (footer min/max stays tight).
-        df.repartitionByRange(n_out, F.col(key_col)).write.partitionBy(
-            partition_col
-        ).mode(mode).parquet(store_dir)
-
-    if not os.path.exists(store_dir):
-        write_clustered(batch_latest, "overwrite")
-        touched = sorted(
-            r[0]
-            for r in batch_latest.select(partition_col).distinct().collect()
-        )
-        return {
-            "touched_buckets": touched,
-            "files_read": 0,
-            "files_total": 0,
-            "bytes_read": 0,
-            "bytes_total": 0,
-        }
-
-    from ..caching import track_local_checkpoint
-
-    # Batch keys per bucket, DRIVER-MEMORY BOUNDED (same bound as the
-    # manifest path, manifest_store.py): the distinct (bucket, key)
-    # pairs are collected through a limit(max_collected_keys + 1)
-    # probe — one job whose driver footprint is bounded by
-    # construction. On overflow (or an upstream hint that the batch is
-    # huge), prune by per-bucket [min, max] INTERVALS instead — 2
-    # values per bucket, bounded by the bucket count at ANY batch
-    # size. Interval pruning is a superset of key pruning (it can only
-    # select MORE files, never miss a key's file), so correctness is
-    # unchanged; at 100 TB this keeps the driver out of the data path.
-    batch_keys: dict = {}
-    batch_ranges: dict = {}
-    pairs = None
-    if batch_keys_hint is None or batch_keys_hint <= max_collected_keys:
-        pairs = (
-            batch_latest.select(partition_col, key_col)
-            .distinct()
-            .limit(max_collected_keys + 1)
-            .collect()
-        )
-        if len(pairs) > max_collected_keys:
-            pairs = None  # overflow -> interval fallback
-    if pairs is not None:
-        for part, key in pairs:
-            batch_keys.setdefault(part, []).append(key)
-        for ks in batch_keys.values():
-            ks.sort()
-        touched_parts = batch_keys
-    else:
-        for part, lo, hi in (
-            batch_latest.groupBy(partition_col)
-            .agg(F.min(key_col).alias("lo"), F.max(key_col).alias("hi"))
-            .collect()
-        ):
-            batch_ranges[part] = (lo, hi)
-        touched_parts = batch_ranges
-    if not touched_parts:
-        return {
-            "touched_buckets": [],
-            "files_read": 0,
-            "files_total": 0,
-            "bytes_read": 0,
-            "bytes_total": 0,
-        }
-
-    all_files = glob.glob(
-        os.path.join(store_dir, f"{partition_col}=*", "*.parquet")
-    )
-    bytes_total = sum(os.path.getsize(p) for p in all_files)
-
-    def bucket_of(path: str):
-        raw = os.path.basename(os.path.dirname(path)).split("=", 1)[1]
-        sample = next(iter(touched_parts))
-        return type(sample)(raw) if not isinstance(sample, str) else raw
-
-    def file_touched(path: str) -> bool:
-        b = bucket_of(path)
-        if b not in touched_parts:
-            return False  # untouched bucket — never opened
-        rng = _parquet_key_range(path, key_col)
-        if rng is None:
-            return True  # no stats -> cannot prune, must read
-        lo, hi = rng
-        if batch_ranges:
-            blo, bhi = batch_ranges[b]
-            return not (hi < blo or bhi < lo)
-        keys = batch_keys[b]
-        i = bisect.bisect_left(keys, lo)
-        return i < len(keys) and keys[i] <= hi
-
-    replaced = [p for p in all_files if file_touched(p)]
-    bytes_read = sum(os.path.getsize(p) for p in replaced)
-
-    if replaced:
-        # basePath keeps partition discovery on even though we point
-        # at leaf FILES — the partition column comes back from the
-        # directory names exactly as a full-store read would see it.
-        old = (
-            spark.read.option("basePath", store_dir).parquet(*replaced)
-        )
-        merged_in = old.unionByName(batch_latest)
-    else:
-        merged_in = batch_latest
-    merged = track_local_checkpoint(
-        resolve(merged_in).localCheckpoint()
-    )
-    write_clustered(merged, "append")
-    for p in replaced:
-        os.remove(p)
-    return {
-        "touched_buckets": sorted(touched_parts),
-        "files_read": len(replaced),
-        "files_total": len(all_files),
-        "bytes_read": bytes_read,
-        "bytes_total": bytes_total,
-    }
-
-
-def compact_store_files(
-    spark,
-    store_dir: str,
-    key_col: str,
-    partition_col: str,
-    files_per_bucket: int = 4,
-) -> dict:
-    """Periodic repair for a ``merge_touched_files`` store: rewrite it
-    as ONE freshly key-range-clustered generation.
-
-    Many merges degrade the layout two ways — file count grows (each
-    merge appends up to files_per_bucket x touched buckets), and file
-    key ranges start overlapping (a merge's output spans the ranges of
-    everything it replaced), which widens footer min/max and weakens
-    future pruning. Compaction restores both invariants: read the
-    whole store, repartitionByRange on the key, stage the rewrite in a
-    sibling directory, and publish with the same atomic rename-aside
-    protocol as ``write_bucketed_table_atomic`` (readers see the old
-    generation or the new one, never a mix). Content is untouched —
-    pinned byte-for-value in tests/test_compaction.py.
-
-    Returns {"files_before", "files_after"}.
-    """
-    import glob
-    import os
-    import shutil
-    import uuid
-
-    pattern = os.path.join(store_dir, f"{partition_col}=*", "*.parquet")
-    files_before = len(glob.glob(pattern))
-    df = spark.read.parquet(store_dir)
-    stage = f"{store_dir}.__compactstage__{uuid.uuid4().hex}"
-    df.repartitionByRange(
-        max(int(files_per_bucket), 1), F.col(key_col)
-    ).write.partitionBy(partition_col).mode("overwrite").parquet(stage)
-    old = f"{store_dir}.__compactold__{uuid.uuid4().hex}"
-    os.rename(store_dir, old)
-    try:
-        os.rename(stage, store_dir)
-    except OSError:
-        os.rename(old, store_dir)  # restore; never leave the store gone
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    shutil.rmtree(old, ignore_errors=True)
-    return {
-        "files_before": files_before,
-        "files_after": len(glob.glob(pattern)),
-    }

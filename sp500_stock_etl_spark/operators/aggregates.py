@@ -48,17 +48,6 @@ def qa_summary(
     return df.agg(*aggs)
 
 
-def qa_summary_approx(df: DataFrame, distinct_col: str, date_col: str) -> DataFrame:
-    """Monitoring variant for 100 TB paths: HLL count-distinct instead
-    of an exact shuffle (SURVEY.md §2.8 A2)."""
-    return df.agg(
-        F.count(F.lit(1)).alias("row_count"),
-        F.approx_count_distinct(distinct_col).alias("approx_distinct_keys"),
-        F.min(F.to_date(date_col)).alias("min_date"),
-        F.max(F.to_date(date_col)).alias("max_date"),
-    )
-
-
 def attach_qa_observation(
     df: DataFrame,
     distinct_col: str,

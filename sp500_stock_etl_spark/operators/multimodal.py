@@ -45,15 +45,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("source_uri", T.StringType()),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -693,15 +684,6 @@ def decode_png(payload: bytes):
         prev = _unfilter_scanline(line[0], line[1:], prev, 3)
         rows.append(prev)
     return width, height, b"".join(rows)
-
-
-# The pixel formula the synthetic PNG corpus writes and every oracle
-# recomputes: channel(x, y) for image ``media_id``. Kept as module
-# constants so the Spark generator, the DuckDB SQL template, and the
-# tests can never drift apart.
-_PX_R = "({id} + 3 * {x} + 7 * {y}) % 256"
-_PX_G = "(2 * {id} + 5 * {x} + {y}) % 256"
-_PX_B = "({id} + {x} + 11 * {y}) % 256"
 
 
 def _formula_pixels(media_id: int, width: int, height: int) -> bytes:
@@ -1368,10 +1350,6 @@ def _jpeg_seed_block(seed: int, bx: int, by: int) -> list[int]:
     nat[_JPEG_POS_V4] = (seed + by) % 5 - 2
     nat[_JPEG_POS_44] = (seed + bx + by) % 3 - 1
     return nat
-
-
-def _jpeg_corpus_block(media_id: int, bx: int, by: int) -> list[int]:
-    return _jpeg_seed_block(media_id, bx, by)
 
 
 def jpeg_seed_pixel(seed: int, x: int, y: int) -> int:

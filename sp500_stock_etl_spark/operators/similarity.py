@@ -147,8 +147,9 @@ def srp_band_rows(
     """Explode a vector frame into one row per (band, band signature),
     CARRYING the vector. Band b uses global planes [b*planes,
     (b+1)*planes) — b independent hash tables computed in a single
-    map-side pass. Kept for the scale probe; the query paths below use
-    srp_id_band_rows (no vector payload) + a score-once join-back."""
+    map-side pass. The reference layout tests/test_similarity_lsh.py
+    checks the query paths against; those use srp_id_band_rows (no
+    vector payload) + a score-once join-back."""
     entries = F.array(
         *[
             F.struct(

@@ -1368,8 +1368,8 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # insert/delete → the shorter string itself; identity → the name).
 # Exact recall with NEAR-UNIQUE key cardinality: bucket sizes track
 # true-duplicate multiplicity, not corpus size, so candidate pairs
-# grow ~linearly with the corpus (measured 10×: scripts/scale_probe.py
-# probe `entity_resolution`). Cost is a length+1 key fan-out on the
+# grow ~linearly with the corpus (measured 10×: BASELINE.md §8
+# "Entity resolution"). Cost is a length+1 key fan-out on the
 # name column only — at 100 TB the plan is explode → one shuffle on
 # the variant key → bounded bucket join → distinct pairs → exact
 # Levenshtein verify; never a per-block all-pairs.
@@ -1415,8 +1415,8 @@ def er_candidate_pairs(base: DataFrame) -> DataFrame:
     """Candidate stage of deletion-neighborhood blocking: explode each
     record into {name} ∪ del1(name) variant keys, bucket-join on the
     variant, apply the cheap semantic equality filters, dedup pairs.
-    Split out so scripts/scale_probe.py can count candidates at 1x vs
-    Nx corpus — the ~linear growth of THIS stage is the scale claim.
+    The ~linear growth of THIS stage's candidate count with the corpus
+    is the scale claim (exactly 10.0x pairs at 10x, BASELINE.md §8).
 
     The input is round-robined up to core count first
     (``readers.ensure_parallelism`` — no-op whenever the scan already

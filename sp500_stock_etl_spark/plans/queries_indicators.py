@@ -1667,9 +1667,9 @@ CROSS JOIN var95 v
 
 def risk_report_frame(st: DataFrame) -> DataFrame:
     """The composed risk pipeline on an arbitrary stock frame — split
-    from the registered query so scale probes can feed a replicated
-    input through the IDENTICAL plan (scripts/hundredx_probe.py drives
-    this at 1x/10x/100x symbols and records spill/peak-memory)."""
+    from the registered query so a replicated input runs through the
+    IDENTICAL plan (1x/10x/100x symbols with spill/peak-memory, and the
+    1000x spill cliff: BASELINE.md §11-§13)."""
     from pyspark.sql import Window
 
     from ..caching import track_persist
@@ -1708,7 +1708,7 @@ def risk_report_frame(st: DataFrame) -> DataFrame:
     # and ``daily`` is ~1 group per input row (596k groups / 600k rows
     # at sf0.1) so aggregating it a second time re-does full-width hash
     # work for zero combine benefit — measured at 100x symbols this
-    # was one of the two big spill producers (scripts/hundredx_probe).
+    # was one of the two big spill producers (BASELINE.md §11).
     # The direct sum map-side-combines to a calendar-bounded group
     # count instead.
     tot = st.groupBy("trade_date").agg(F.sum("cents").alias("total"))

@@ -814,8 +814,8 @@ def q_corpus_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pagerank_scores(docs: DataFrame) -> DataFrame:
     """PageRank core over a node frame (doc_id assumed 0..N-1 for the
     hash-target graph construction — testdata scaffolding; a real
-    edge table slots in at `edges`). Split out so
-    scripts/scale_probe.py can replicate the node set."""
+    edge table slots in at `edges`). Any node set runs the same plan;
+    the 10x node-set wall is in BASELINE.md §8 "PageRank at 10×"."""
     nn = docs.agg(F.count(F.lit(1)).alias("n"))
     hashed = docs.crossJoin(F.broadcast(nn)).select(
         F.col("doc_id").alias("u"),

@@ -224,12 +224,10 @@ def _inc_build_store(
 
 def _inc_refresh(store: DataFrame, new: DataFrame, corpus: DataFrame):
     """The REFRESH pipeline — the part a production run repeats per
-    batch (and the part the scale probe times): new-batch signatures,
-    bucket join against the store, intra-batch self-join, candidate-
-    pruned Jaccard verify. Returns (verified_pairs, new_bands).
-    Shared verbatim by both registered queries and
-    scripts/scale_probe.py::incremental_refresh_probe so the probe
-    can never desynchronize from the shipped plan."""
+    batch (timed at a 10x corpus in BASELINE.md §9): new-batch
+    signatures, bucket join against the store, intra-batch self-join,
+    candidate-pruned Jaccard verify. Returns (verified_pairs,
+    new_bands). Shared by both registered queries."""
     from ..caching import track_persist
     from ..operators.dedup import jaccard_verify, with_shingles
 

@@ -233,7 +233,8 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 # RocksDB instead of the JVM-heap HDFS-backed map. At the 1e8-key
 # projection (BASELINE.md §4) the heap map's GC pressure is the
 # limiter; RocksDB keeps state off-heap with changelog checkpointing.
-# scripts/state_probe.py records commit/update latencies for both.
+# BASELINE.md §6 and §9 record the provider comparison and RocksDB at
+# 10M keys.
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -1797,12 +1798,12 @@ def q_streaming_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
 #    ::test_cdc_carry_present_at_driver_scale.
 
 
-def _cdc_device_expr(xor, idiv, id_expr: str = "event_id") -> str:
-    """The shared device-key derivation, rendered per engine (DuckDB
-    spells bitwise xor ``xor(a,b)`` and int-div ``//``; Spark ``^``
-    and ``div``) from ONE structure so the pair cannot diverge.
-    ``id_expr`` lets the scale probe key on a per-replica base id."""
-    x1 = f"(({xor(id_expr, idiv(id_expr, 65536))}) % 4294967296)"
+def _cdc_device_expr(xor, idiv) -> str:
+    """The shared device-key derivation from ``event_id``, rendered per
+    engine (DuckDB spells bitwise xor ``xor(a,b)`` and int-div ``//``;
+    Spark ``^`` and ``div``) from ONE structure so the pair cannot
+    diverge."""
+    x1 = f"(({xor('event_id', idiv('event_id', 65536))}) % 4294967296)"
     x2 = f"((({x1}) * 2146121005) % 4294967296)"
     x3 = xor(x2, idiv(x2, 32768))
     x4 = f"((({x3}) * 1935202711) % 4294967296)"
@@ -2131,7 +2132,7 @@ _LAST_CDC_TENANT_STORE: list[str] = []
     "store's generic key_col range-clusters tenant-FIRST — and the "
     "store is bucketed by tenant. When hot keys cluster per tenant, "
     "a batch's read-back prunes to the touched tenants' files "
-    "(scripts/tenant_probe.py: 3.1%% of store bytes vs 50%% for the "
+    "(BASELINE.md §13: 3.1%% of store bytes vs 50%% for the "
     "bare-key layout at 12.8M rows); a bare per-tenant key, which "
     "every tenant shares, cannot prune below its bucket set. Also "
     "runs the store with time-based dead-file retention "
@@ -2227,7 +2228,7 @@ _LAST_CDC_SHARDED_STORE: list[str] = []
     "the shards covering its touched buckets — per-commit metadata "
     "work tracks touched buckets instead of total file count "
     "(measured 1.7 -> 0.46 s per commit at the 200k-file 100 TB "
-    "point; scripts/manifest_scale_probe.py). Same last-write-wins "
+    "point; BASELINE.md §14). Same last-write-wins "
     "contract and oracle as the flat filestats twin, so a sharding "
     "bug in selection, validation, or shard GC breaks the hash",
 )

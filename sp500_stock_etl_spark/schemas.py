@@ -144,10 +144,6 @@ STOCK_DATA = T.StructType(
     ]
 )
 
-# JSON schema of events.props for the typed from_json path
-# (observed shape in testdata: {"k": <int>}).
-EVENT_PROPS = T.StructType([T.StructField("k", T.LongType())])
-
 SCHEMAS = {
     "region": REGION,
     "nation": NATION,

@@ -72,7 +72,7 @@ def test_pure_batch_plan_untouched():
 def _payload(core_timings):
     return {
         "metric": "55-plan core wall-clock (noop sink; anchors "
-        "BASELINE.md §7; data-wall judging via *_sched_wall_s; "
+        "BASELINE.md §14/§15; data-wall judging via *_sched_wall_s; "
         "core_key_map in detail)",
         "value": 102.862,
         "unit": "sec",
@@ -90,7 +90,6 @@ def _payload(core_timings):
         "stream_exec_s": 73.759,
         "core_sched_wall_s": 5.095,
         "core_data_wall_s": 97.767,
-        "tail_mode": "all",
         "detail": "BENCH_DETAIL.json",
         "host_st_ms": 161.9,
         "host_mt_ms": 288.8,

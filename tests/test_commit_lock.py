@@ -11,8 +11,7 @@ Both are closed by routing takeover and release through the backend's
 conditional delete on an observed/owned token. The backend itself is
 pluggable (verdict item 4): every test here runs against BOTH the
 POSIX O_EXCL adapter and the simulated object-store put-if-absent
-adapter, and scripts/occ_probe.py exercises the full merge protocol
-under either via SPARK_GRAFT_LOCK_BACKEND.
+adapter.
 """
 
 from __future__ import annotations
@@ -27,7 +26,6 @@ from sp500_stock_etl_spark.io.commit_lock import (
     CommitLock,
     ObjectStoreSimBackend,
     PosixLockBackend,
-    default_lock_backend,
 )
 
 BACKENDS = [PosixLockBackend, ObjectStoreSimBackend]
@@ -148,13 +146,3 @@ def test_timeout_on_fresh_lock(backend, tmp_path):
             backend=backend,
         ).__enter__()
     holder.__exit__(None, None, None)
-
-
-def test_default_backend_env_selection(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_LOCK_BACKEND", raising=False)
-    assert type(default_lock_backend()) is PosixLockBackend
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_BACKEND", "objectstore")
-    assert type(default_lock_backend()) is ObjectStoreSimBackend
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_BACKEND", "nope")
-    with pytest.raises(ValueError):
-        default_lock_backend()

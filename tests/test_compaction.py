@@ -304,192 +304,3 @@ def test_atomic_publish_restores_old_store_on_persistent_failure(
     assert len(stage_dirs) == 1, stage_dirs
     spark.sql("DROP TABLE IF EXISTS b_restore_v1")
     spark.sql("DROP TABLE IF EXISTS b_restore_v2")
-
-
-def test_merge_touched_files(spark, tmp_path):
-    """File-level CDC merge (r10 verdict item 2): read-back tracks
-    touched KEYS, not touched buckets — files whose footer key range
-    the batch misses are neither read nor rewritten, and the final
-    store equals the whole-store resolve."""
-    import glob
-    import hashlib
-    import os
-
-    from sp500_stock_etl_spark.io.writers import merge_touched_files
-
-    def keep_newest(df):
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy("k").orderBy(F.col("ver").desc())
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .where("__rn = 1")
-            .drop("__rn")
-        )
-
-    store = str(tmp_path / "fstore")
-    # 4 buckets x 4 range files; keys 0..4095, ver 0.
-    base = spark.range(4096).selectExpr(
-        "id AS k", "CAST(0 AS INT) AS ver", "CAST(id % 4 AS INT) AS bucket"
-    )
-    stats0 = merge_touched_files(store, base, "k", "bucket", keep_newest)
-    assert stats0["files_read"] == 0
-
-    def snap():
-        return {
-            p: hashlib.md5(open(p, "rb").read()).hexdigest()
-            for p in glob.glob(os.path.join(store, "bucket=*", "*.parquet"))
-        }
-
-    before = snap()
-    # Batch: keys 0..63 (one narrow range) in buckets 0..3, ver 1,
-    # plus a brand-new key 9999.
-    batch = spark.range(64).selectExpr(
-        "id AS k", "CAST(1 AS INT) AS ver", "CAST(id % 4 AS INT) AS bucket"
-    ).unionByName(
-        spark.createDataFrame([(9999, 1, 3)], "k long, ver int, bucket int")
-    )
-    stats = merge_touched_files(store, batch, "k", "bucket", keep_newest)
-
-    # Pruning has teeth: the store is key-range-clustered, so the
-    # 0..63 batch intersects only the low-range file of each bucket.
-    assert 0 < stats["files_read"] < stats["files_total"], stats
-    assert stats["bytes_read"] < stats["bytes_total"] / 2, stats
-
-    # Untouched files byte-identical on disk.
-    after = snap()
-    replaced_or_new = set(after) ^ set(before)
-    for p in set(after) & set(before):
-        assert after[p] == before[p], f"untouched file rewritten: {p}"
-    assert replaced_or_new, "merge must have written something"
-
-    # Contents equal the whole-store resolve.
-    final = spark.read.parquet(store)
-    assert final.count() == 4097
-    assert final.where("k < 64").agg(F.min("ver")).first()[0] == 1
-    assert final.where("k >= 64 and k < 4096").agg(F.max("ver")).first()[0] == 0
-    assert final.where("k = 9999").count() == 1
-    # One row per key (upsert invariant).
-    assert final.select("k").distinct().count() == 4097
-
-
-def test_merge_touched_files_untouched_bucket_never_opened(spark, tmp_path):
-    """A batch confined to one bucket leaves every other bucket's
-    files out of both the read set and the write set."""
-    from sp500_stock_etl_spark.io.writers import merge_touched_files
-
-    def keep_max(df):
-        return df.groupBy("k", "bucket").agg(F.max("ver").alias("ver")).select(
-            "k", "ver", "bucket"
-        )
-
-    store = str(tmp_path / "fstore2")
-    base = spark.range(1000).selectExpr(
-        "id AS k", "CAST(0 AS INT) AS ver", "CAST(id % 8 AS INT) AS bucket"
-    )
-    merge_touched_files(store, base, "k", "bucket", keep_max)
-    batch = spark.createDataFrame([(8, 1, 0)], "k long, ver int, bucket int")
-    stats = merge_touched_files(store, batch, "k", "bucket", keep_max)
-    assert stats["touched_buckets"] == [0]
-    assert stats["files_read"] >= 1
-    # All non-bucket-0 data intact and single-sourced.
-    final = spark.read.parquet(store)
-    assert final.count() == 1000
-    assert final.where("k = 8").first()["ver"] == 1
-
-
-def test_compact_store_files_restores_clustering(spark, tmp_path):
-    """After merges degrade the file-level store (more files,
-    overlapping ranges), compact_store_files rewrites one clustered
-    generation: fewer files, identical content, and a subsequent
-    clustered merge prunes again."""
-    from sp500_stock_etl_spark.io.writers import (
-        compact_store_files,
-        merge_touched_files,
-    )
-
-    def keep_max(df):
-        return df.groupBy("k", "bucket").agg(F.max("ver").alias("ver")).select(
-            "k", "ver", "bucket"
-        )
-
-    store = str(tmp_path / "cstore")
-    base = spark.range(4096).selectExpr(
-        "id AS k", "CAST(0 AS INT) AS ver", "CAST(id % 4 AS INT) AS bucket"
-    )
-    merge_touched_files(store, base, "k", "bucket", keep_max)
-    # Several scattered merges -> appended files with wide ranges.
-    for ver in (1, 2, 3):
-        batch = spark.range(64).selectExpr(
-            f"id * 64 AS k", f"CAST({ver} AS INT) AS ver",
-            "CAST((id * 64) % 4 AS INT) AS bucket",
-        )
-        merge_touched_files(store, batch, "k", "bucket", keep_max)
-
-    before = sorted(map(tuple, spark.read.parquet(store).collect()))
-    stats = compact_store_files(spark, store, "k", "bucket")
-    assert stats["files_after"] <= stats["files_before"]
-    after = sorted(map(tuple, spark.read.parquet(store).collect()))
-    assert after == before, "compaction must not change content"
-
-    # Clustered pruning works again post-compaction.
-    batch = spark.range(64).selectExpr(
-        "id AS k", "CAST(9 AS INT) AS ver", "CAST(id % 4 AS INT) AS bucket"
-    )
-    st = merge_touched_files(store, batch, "k", "bucket", keep_max)
-    assert st["files_read"] < st["files_total"], st
-
-
-def test_merge_touched_files_interval_fallback(spark, tmp_path):
-    """r11 verdict item 3: the probe-path merge no longer collects an
-    unbounded key set. Forcing the limit-probe to overflow (tiny
-    max_collected_keys) or skipping it via batch_keys_hint must flip
-    pruning to per-bucket [min, max] intervals and leave the final
-    store CONTENT identical to the keys-mode merge (interval pruning
-    is a superset — it may read more files, never fewer)."""
-    from sp500_stock_etl_spark.io.writers import merge_touched_files
-
-    def keep_newest(df):
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy("k").orderBy(F.col("ver").desc())
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .where("__rn = 1")
-            .drop("__rn")
-        )
-
-    base = spark.range(4096).selectExpr(
-        "id AS k", "CAST(0 AS INT) AS ver", "CAST(id % 4 AS INT) AS bucket"
-    )
-    batch = spark.range(64).selectExpr(
-        "id AS k", "CAST(1 AS INT) AS ver", "CAST(id % 4 AS INT) AS bucket"
-    )
-
-    def run(store, **kw):
-        merge_touched_files(store, base, "k", "bucket", keep_newest)
-        return merge_touched_files(
-            store, batch, "k", "bucket", keep_newest, **kw
-        )
-
-    s_keys = run(str(tmp_path / "keys"))
-    s_over = run(str(tmp_path / "overflow"), max_collected_keys=8)
-    s_hint = run(str(tmp_path / "hint"), batch_keys_hint=10**9)
-
-    # Overflow and hint paths both prune by intervals; keys mode was
-    # the r10 behavior. Interval selection is a superset of the key
-    # selection and still strictly smaller than the store.
-    for st in (s_over, s_hint):
-        assert s_keys["files_read"] <= st["files_read"], (s_keys, st)
-        assert 0 < st["files_read"] < st["files_total"], st
-
-    rows = {
-        name: sorted(
-            tuple(r)
-            for r in spark.read.parquet(str(tmp_path / name))
-            .select("k", "ver")
-            .collect()
-        )
-        for name in ("keys", "overflow", "hint")
-    }
-    assert rows["keys"] == rows["overflow"] == rows["hint"]

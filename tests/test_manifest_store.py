@@ -338,8 +338,8 @@ def test_composite_tenant_key_pruning(spark, tmp_path):
     one-tenant batch prunes to that tenant's files; the same logical
     batch against a store range-keyed on the bare per-tenant k (which
     every tenant shares) cannot prune below its bucket set. No engine
-    change — key_col is generic; scripts/tenant_probe.py measures the
-    same at 12.8M rows."""
+    change — key_col is generic; BASELINE.md §13 measures the same at
+    12.8M rows."""
     from pyspark.sql import Window as W
 
     def keep_newest_ck(df):

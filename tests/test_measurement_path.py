@@ -1,8 +1,9 @@
 """Guards for the single measurement path.
 
-1. Every ``scripts/<name>.py`` that product code, tests or README.md
-   names exists: a docstring cites a tool a reader can run, or the
-   committed evidence file the tool produced.
+1. Every ``scripts/<name>`` (with or without ``.py``) that product
+   code, tests, bench.py or README.md names exists: a docstring cites
+   a tool a reader can run, or the committed evidence (a BASELINE.md
+   section) the tool produced.
 2. Product code reads only the deployment env vars. A switch that
    flips an operator's code path from the environment is a second
    configuration that tests and the benchmark do not cover; tests
@@ -20,8 +21,10 @@ DEPLOYMENT_ENV = {
     "SPARK_GRAFT_SF_DIR",
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
-    "SPARK_GRAFT_LOCK_BACKEND",
 }
+# ``scripts/<name>`` not preceded by another path segment, so
+# ``perfbench/scripts/x`` style paths elsewhere never count.
+SCRIPT_REF = re.compile(r"(?<![\w/])scripts/(\w+)")
 
 
 def _py_files(root: Path) -> list[Path]:
@@ -30,12 +33,12 @@ def _py_files(root: Path) -> list[Path]:
 
 def test_cited_scripts_exist():
     cited_from = [*_py_files(PKG), *_py_files(ROOT / "tests")]
-    cited_from.append(ROOT / "README.md")
+    cited_from += [ROOT / "bench.py", ROOT / "README.md"]
     missing = {
-        f"{path.relative_to(ROOT)}: {rel}"
+        f"{path.relative_to(ROOT)}: scripts/{name}"
         for path in cited_from
-        for rel in re.findall(r"scripts/\w+\.py", path.read_text())
-        if not (ROOT / rel).is_file()
+        for name in SCRIPT_REF.findall(path.read_text())
+        if not (ROOT / "scripts" / f"{name}.py").is_file()
     }
     assert not missing, sorted(missing)
 

@@ -6,6 +6,8 @@ the exchange, payload columns get pruned, salting preserves results.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -233,6 +235,43 @@ def test_ensure_parallelism_is_guarded(spark, sf_dir):
     # Already at/above target -> returns the SAME plan, no shuffle.
     wide = docs.repartition(8)
     assert ensure_parallelism(wide, min_partitions=4) is wide
+
+
+def test_ensure_parallelism_noop_at_scale_shape(spark, sf_dir):
+    """At real scale the scan already yields at least one split per
+    core, so the guard must return the plan untouched: no round-robin
+    exchange. The shape is faked by shrinking the split size until the
+    small test file scans as many splits, whatever the host's size."""
+    from sp500_stock_etl_spark.io.readers import ensure_parallelism
+
+    def scan():
+        # A fresh frame per conf: a Dataset fixes its physical plan,
+        # scan splits included, the first time it is planned.
+        return load_table(spark, sf_dir, "documents").select("doc_id", "text")
+
+    par = spark.sparkContext.defaultParallelism
+    if par > 1:
+        # Contrast at test scale: one split, so the guard fires.
+        assert "RoundRobinPartitioning" in _plan(ensure_parallelism(scan()))
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    file_bytes = sum(
+        os.path.getsize(u.removeprefix("file:")) for u in scan().inputFiles()
+    )
+    try:
+        spark.conf.set(keys[0], str(max(1, file_bytes // (2 * par))))
+        spark.conf.set(keys[1], "1")
+        docs = scan()
+        assert docs.rdd.getNumPartitions() >= par
+        out = ensure_parallelism(docs)
+        assert out is docs
+        assert "RoundRobinPartitioning" not in _plan(out)
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_global_sort_topk_is_take_ordered(spark, sf_dir):

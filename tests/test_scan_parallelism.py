@@ -9,12 +9,15 @@ Two properties are load-bearing:
    patched to identity (the exact pre-change plan) and comparing full
    outputs.
 2. The mechanism stays guarded (no-op at real scale) — covered by
-   tests/test_scale_plans.py::test_ensure_parallelism_is_guarded; here
-   we pin that the shingle frame actually comes out parallel at test
-   scale, so a regression that drops the call is caught.
+   tests/test_scale_plans.py::test_ensure_parallelism_is_guarded and
+   ::test_ensure_parallelism_noop_at_scale_shape; here we pin that
+   the shingle frame actually comes out parallel at test scale, so a
+   regression that drops the call is caught.
 """
 
 from __future__ import annotations
+
+import pytest
 
 from sp500_stock_etl_spark.caching import release_caches
 from sp500_stock_etl_spark.io import readers as RD
@@ -53,6 +56,8 @@ def test_parallelized_sites_output_identical(spark, sf_dir, monkeypatch):
 
 
 def test_shingle_stage_parallel_at_test_scale(spark, sf_dir):
+    if spark.sparkContext.defaultParallelism <= 1:
+        pytest.skip("one core: a single scan task is already full parallelism")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # Precondition that motivates the change: a single-row-group test
     # file scans as one task.

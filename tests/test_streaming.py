@@ -465,3 +465,21 @@ def test_stream_shuffle_partitions_python_stateful_floor(spark, tmp_path):
     assert jvm_floor == min(par, 4)
     assert py_floor == min(par, max(4, par // 2))
     assert py_floor <= par and jvm_floor <= par
+
+    # Faked large source: with a 1-byte split size the 1 KiB file is
+    # 1024 splits, more than the cores of any local session, so both
+    # floors hit the cap.
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "1")
+        assert _stream_shuffle_partitions(spark, str(src)) == par
+        assert (
+            _stream_shuffle_partitions(spark, str(src), python_stateful=True)
+            == par
+        )
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
