@@ -6,21 +6,6 @@ local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {...small...}, "sf": <sf>, "detail": "BENCH_DETAIL.json"}
 
-Round-6 changes (round-5 verdict items 5-6):
-- BENCH_r05.json was unparseable because the full per-query map
-  outgrew the driver's 2000-char tail capture. The final stdout line
-  is now COMPACT (headline values + per-section sums + counts,
-  guaranteed < 1.5 KB); the full per-query timing map is written to
-  ``BENCH_DETAIL.json`` at the repo root (committed per round).
-- the round-5 additions are FOLDED INTO the recommended set — one
-  fixed 70-plan headline from here on (the 47-plan r5 set + the 23
-  ``queries_r5`` entries). Round-over-round anchor (BASELINE.md §7):
-  r5 measured 47 plans = 42.25-46.0 s and the r5 section = 39.9-45.3 s
-  across the day's clean runs; pre-registered folded anchor **82.1 s**
-  over the 66-plan union at fold time (the last 4 r5 stragglers
-  landed after that anchor was cut and add ~8 s — the detail file
-  keeps every per-query number so the union is diffable exactly).
-
 Execution is measured with the noop sink (full plan runs, no
 driver-side result transfer). A small warmup query absorbs JVM/codegen
 startup; recommended plans are timed best-of-2 to damp background-load
@@ -40,83 +25,21 @@ variants have something to be measured against:
 They are timed once and reported in the detail file under
 ``exhibits``; excluded from the headline number.
 
-Round-7 fold (round-6 verdict item 1): the 21 ``queries_r6``
-entries are folded into ONE fixed 91-plan recommended suite.
-Pre-registered anchor from BENCH_r06.json: 81.157 s (70 plans) +
-28.818 s (r6 section) = **109.975 s for the same 91-plan union**;
-BENCH_r07 measured 100.438 s on it (9% better, zero per-query
-regressions).
+The headline is split in two. ``value`` is the 55-plan HEADLINE CORE
+(``CORE_QUERIES``): the reference surface plus exactly one
+representative per operator family, fixed so it stays comparable
+across rounds. ``value_full_suite`` is the full folded union
+(``BENCH_QUERIES``); new plans fold in there. Every artifact stamps
+``host_st_ms`` and ``host_mt_ms`` (single-thread and all-cores host
+fingerprints), and per streaming plan a StreamingQueryListener splits
+the wall into the data wall (summed ``triggerExecution``) and
+``sched_wall_s`` (plan wall minus that), carried per plan in
+BENCH_DETAIL.json under ``streaming_split`` and summed on the compact
+line as ``stream_sched_wall_s``/``stream_exec_s``.
 
-Round-8 fold (round-7 verdict item 1): the 15 ``queries_r7``
-entries are folded into ONE fixed 106-plan recommended suite.
-Pre-registered anchor from BENCH_r07.json (the driver artifact's
-15-plan section, not SURVEY prose): 100.438 s (91 plans) +
-26.174 s (r7 section) = **126.612 s for the same 106-plan union** —
-BENCH_r08 measured 159.233 s on the driver box (1.26x); the judge's
-like-for-like per-query diff attributed the gap to measurement
-protocol + box load (common-plan sums 1.00x quiet / 1.09x driver).
-
-Round-9 fold (round-8 verdict item 3): the 57 ``queries_r8`` entries
-are folded into ONE fixed 163-plan recommended suite. Pre-registered
-anchor from BENCH_r08.json (the driver artifact): 159.233 s
-(106 plans) + 86.167 s (r8 section) = **245.400 s for the same
-163-plan union** on the DRIVER box, with the quiet continuation-close
-pair 145.8 + 72.9 = **218.7 s** recorded alongside — BENCH_r09's
-``value`` compares against the driver anchor like-for-like. This
-round's new queries report under ``queries_r9`` until the r10 fold.
-
-Round-10 growth policy (round-9 verdict item 6 — pinned BEFORE the
-suite hits 10 min). The suite grew 70→91→106→163→164 plans across
-five folds (~208 s at r9); unbounded folding eventually caps either
-coverage or comparability. From r10 the headline splits in two:
-
-- ``value`` = the **55-plan HEADLINE CORE** (``CORE_QUERIES``): the
-  reference surface plus exactly one representative per operator
-  family (joins/aggs/windows/dedup/similarity/text/streaming/
-  multimodal/indicators/arrow/incremental/graph/recursive/TPC).
-  FIXED FOREVER — this is the like-for-like anchor across all future
-  rounds. Pre-registered core anchor from the BENCH_r09 driver
-  detail: **64.601 s** (sum of the same 55 plans in that artifact).
-- ``value_full_suite`` = the full folded union (164 plans at r10:
-  163 + the r9 section folded in). Pre-registered anchor from
-  BENCH_r09.json: 207.968 + 1.924 = **209.892 s like-for-like**.
-  New rounds' births keep folding in here (coverage is never capped).
-  Round-11 fold: the one r10 birth (streaming_cdc_upsert_bucketed)
-  joins the tail; pre-registered anchor from BENCH_r10.json:
-  200.828 + 7.407 (value_new) = **208.235 s for the 165-plan union**.
-
-Round-12 re-anchor (round-11 verdict item 1 — the host migrated
-mid-r11, killing every old-host anchor). The two r11 births fold into
-the 167-plan union AFTER their swing was bounded (filestats folds at
-11.1-12.9 s across four runs; the r11 artifact's 36.4 s was store-
-tempdir I/O contention, localized per merge phase in BASELINE.md
-§14). NEW-HOST anchors, pre-registered as the
-median of three consecutive driver-protocol runs within +/-20%
-(109.546/105.389/80.271 core; 339.639/350.971/272.815 full):
-**core 105.389 s, full-suite 339.639 s**. The +/-35% band across four
-runs is the microVM's PARALLEL-capacity swing (run 1 read 158.2 core
-with a QUICK single-thread fingerprint of 144.9 ms — 30%+ system
-time, 40k interrupts/s, idle cores mid-suite), which is why every
-artifact now also stamps ``host_mt_ms`` (all-cores fingerprint;
-healthy ~= host_st_ms x scaling loss, reads far above it when the
-box is contended). Like-for-like code delta vs the r11 committed
-detail: median per-query ratio 1.011 (runs 2/3 best) and 0.864
-(run 4) — round-12 code is at or better than r11 parity.
-
-Round-13 fold + streaming split (round-12 verdict items 2 and 4):
-``streaming_cdc_upsert_sharded`` folds into the full suite at its
-r12 driver-artifact measurement 13.729 s (inside/below its
-pre-registered 20.0-29.6 s band) — full-suite anchor becomes
-**353.368 s for the 168-plan union**; core unchanged. And because
-the r12 artifact's entire 1.09x full-suite overshoot sat in
-micro-batch SCHEDULING (stream-stream joins 2x their quiet numbers
-while batch plans held ~1.1x), a StreamingQueryListener now
-attributes, per streaming plan, ``batches`` + summed
-``triggerExecution`` (the data wall) vs ``sched_wall_s`` (= plan
-wall − exec; scheduler/startup share). BENCH_DETAIL.json carries the
-per-plan split under ``streaming_split`` and the compact line carries
-the suite-level ``stream_sched_wall_s``/``stream_exec_s`` — judge the
-full-suite ratio net of the scheduling term.
+The round-by-round history of the suite (folds, pre-registered
+anchors, the host migration and the parallel-capacity swing) is in
+BASELINE.md §18.
 """
 
 from __future__ import annotations
@@ -337,7 +260,7 @@ BENCH_QUERIES = [
 # yet registered are skipped so the harness runs mid-build.
 NEW_QUERIES: list[str] = []
 
-# The 55-plan HEADLINE CORE (r10 growth policy, module docstring):
+# The 55-plan HEADLINE CORE (r10 growth policy, BASELINE.md §18):
 # reference surface + one per operator family, fixed forever; `value`
 # is the sum over exactly these. Pre-registered anchor 64.601 s
 # (same 55 plans in the BENCH_r09 driver detail). Every name must be
@@ -403,7 +326,7 @@ CORE_QUERIES = [
 
 # Host fingerprints (single-thread + all-cores) live in
 # sp500_stock_etl_spark/hostinfo.py — every probe stamps the same
-# pair; the module docstring carries the two incidents (r11 host
+# pair; BASELINE.md §18 carries the two incidents (r11 host
 # migration, r12 parallel-capacity swing) that make BOTH necessary.
 from sp500_stock_etl_spark.hostinfo import (  # noqa: E402
     host_mt_ms as _host_parallel_fingerprint_ms,
@@ -743,7 +666,7 @@ def main() -> None:
     # timings instead of comparing counts to counts. The anchor
     # history that used to live in the metric string (r12 new-host
     # anchors: core 105.389s band 80.3-109.5, full suite 353.368s over
-    # the 168-plan union) moved to BASELINE.md §14/§15 + this docstring
+    # the 168-plan union) moved to BASELINE.md §14/§15/§18
     # to make room; methodology, timed set and scale are UNCHANGED.
     print(
         _compact_line(

@@ -46,20 +46,16 @@ def write_partitioned_table(df: DataFrame, path: str, partition_col: str = "trad
     Replaces the reference's COPY INTO (dags/sp500_dag.py.py:353-378).
     Idempotent re-load (the reference's replace=True + PURGE=TRUE) is
     overwrite-by-partition: dynamic partitionOverwriteMode replaces
-    only the partitions present in ``df``.
+    only the partitions present in ``df``. The mode is a per-write
+    option, so the session conf (and any query running concurrently
+    on the session) never sees it.
     """
-    spark = df.sparkSession
-    # The write is an eager action, so save/restore around it is sound
-    # (no other query in this session observes the changed conf).
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def write_bucketed_table(
@@ -316,7 +312,8 @@ def merge_touched_partitions(
        those partitions are read back (directory-level partition
        pruning — untouched buckets are never opened), merged with the
        batch through ``resolve`` (e.g. last-write-wins keep-newest),
-       and written with dynamic partitionOverwriteMode: Spark replaces
+       and written with dynamic partitionOverwriteMode (a per-write
+       option, the session conf is untouched): Spark replaces
        exactly the partitions present in the written frame, leaving
        every untouched bucket's files byte-identical on disk (pinned
        by tests/test_compaction.py::test_merge_touched_partitions).
@@ -351,15 +348,7 @@ def merge_touched_partitions(
     merged = track_local_checkpoint(
         resolve(old.unionByName(batch_latest)).localCheckpoint()
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.partitionBy(partition_col).mode("overwrite").parquet(
-            store_dir
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    merged.write.partitionBy(partition_col).mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(store_dir)
     return touched

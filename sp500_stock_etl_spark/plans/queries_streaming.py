@@ -66,8 +66,7 @@ def _stage_events_dir(sf_dir: str) -> str:
 def _stream_shuffle_partitions(
     spark: SparkSession,
     src_dir: str,
-    python_stateful: bool = False,
-    heavy_state: bool = False,
+    cores_floor: bool = False,
 ) -> int:
     """Scale-adaptive shuffle-partition count for a stateful streaming
     plan (r14 optimization; guide §2.2/§2.4 applied to state stores).
@@ -91,28 +90,30 @@ def _stream_shuffle_partitions(
     the session default; at test scale the state machinery tracks the
     data.
 
-    ``python_stateful=True`` (r15; r14 verdict item 7): for plans
-    whose hot path is a Python stateful operator
-    (applyInPandasWithState / transformWithStateInPandas) the
-    partition count is ALSO the Python-worker parallelism — the floor
-    of 4 that is right for JVM state-store machinery starves the
-    Python side. Cores-derived floor instead:
-    max(4, defaultParallelism // 2). Interleaved A/B on
-    streaming_running_totals_final at sf0.1
-    (plans/r15/stateful_floor_ab.txt): 4 partitions best 3.00 s /
-    med 3.33; 8 -> 2.21/2.78; 16 -> 2.24/2.30. The cores/2 rule
-    tracks the driver's low-core bench run and still caps at
-    defaultParallelism, so cluster behavior is unchanged.
+    ``cores_floor=True`` raises the floor to the cores-derived
+    max(4, defaultParallelism // 2), still capped at
+    defaultParallelism, so cluster behavior is unchanged. Two kinds
+    of plan take it:
 
-    ``heavy_state=True`` (r15): same cores-derived floor for plans
-    whose STATE cardinality far exceeds what the source-bytes rule
-    sees — streaming_vwap_daily holds ~596k state rows (one per
-    symbol-day, profiled in plans/r14/stream_profile_{before,after}.txt:
-    updTimeMs 1.9 s, 131 MB store) behind a ~15 MB staged source that
-    sizes to 1 split. A/B at sf0.1: 4 partitions best 4.71 s / med 5.62;
-    8 -> 3.61/4.40; 16 -> 3.36/4.02. Small-state plans keep floor 4
-    (streaming_ohlc_bars_append measured BEST at 4: 1.43 vs 1.65 at
-    16 — per-instance machinery dominates when state is small).
+    - plans whose hot path is a Python stateful operator
+      (applyInPandasWithState / transformWithStateInPandas): the
+      partition count is ALSO the Python-worker parallelism, and the
+      floor of 4 that is right for JVM state-store machinery starves
+      the Python side. Interleaved A/B on
+      streaming_running_totals_final at sf0.1
+      (plans/r15/stateful_floor_ab.txt): 4 partitions best 3.00 s /
+      med 3.33; 8 -> 2.21/2.78; 16 -> 2.24/2.30.
+    - plans whose STATE cardinality far exceeds what the source-bytes
+      rule sees — streaming_vwap_daily holds ~596k state rows (one
+      per symbol-day, profiled in
+      plans/r14/stream_profile_{before,after}.txt: updTimeMs 1.9 s,
+      131 MB store) behind a ~15 MB staged source that sizes to 1
+      split. A/B at sf0.1: 4 partitions best 4.71 s / med 5.62;
+      8 -> 3.61/4.40; 16 -> 3.36/4.02.
+
+    Small-state plans keep floor 4 (streaming_ohlc_bars_append
+    measured BEST at 4: 1.43 vs 1.65 at 16 — per-instance machinery
+    dominates when state is small).
 
     Result-safety: partition count never changes WHAT a streaming
     query computes — aggregations/joins/session merges are
@@ -127,16 +128,14 @@ def _stream_shuffle_partitions(
                 total += os.path.getsize(os.path.join(root, fn))
             except OSError:
                 pass
-    try:
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        split = int("".join(ch for ch in raw if ch.isdigit()) or 0) or (
-            128 * 1024 * 1024
-        )
-    except Exception:
-        split = 128 * 1024 * 1024
+    # The typed getter parses unit suffixes ("128m", "1g") as Spark
+    # itself does when it plans the scan splits.
+    split = (
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
     splits = -(-total // split) if total else 1
     par = spark.sparkContext.defaultParallelism
-    floor = max(4, par // 2) if (python_stateful or heavy_state) else 4
+    floor = max(4, par // 2) if cores_floor else 4
     return min(par, max(floor, int(splits)))
 
 
@@ -166,8 +165,7 @@ def _run_to_table(
     stream_df: DataFrame,
     mode: str,
     src_dir: str | None = None,
-    python_stateful: bool = False,
-    heavy_state: bool = False,
+    cores_floor: bool = False,
 ) -> DataFrame:
     name = f"sg_stream_{next(_SEQ)}_{os.getpid()}"
     if src_dir is None:
@@ -182,10 +180,7 @@ def _run_to_table(
             key,
             str(
                 _stream_shuffle_partitions(
-                    spark,
-                    src_dir,
-                    python_stateful=python_stateful,
-                    heavy_state=heavy_state,
+                    spark, src_dir, cores_floor=cores_floor
                 )
             ),
         )
@@ -382,7 +377,7 @@ def q_streaming_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         SE.running_user_totals(stream),
         "update",
         src_dir=staged,
-        python_stateful=True,
+        cores_floor=True,
     )
 
 
@@ -406,7 +401,7 @@ def q_streaming_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         SE.running_user_totals_ttl(stream, ttl_ms=3_600_000),
         "update",
         src_dir=staged,
-        python_stateful=True,
+        cores_floor=True,
     )
 
 
@@ -1312,7 +1307,7 @@ def q_streaming_running_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         SE.running_user_totals_cents(stream),
         "update",
         src_dir=staged,
-        python_stateful=True,
+        cores_floor=True,
     )
     return out.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
@@ -1745,9 +1740,11 @@ def q_streaming_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("cents") * F.col("qty")).alias("num"),
         F.sum("qty").alias("den"),
     )
-    # heavy_state: ~596k state rows (symbol x day) behind a ~15 MB
+    # cores_floor: ~596k state rows (symbol x day) behind a ~15 MB
     # staged source — see _stream_shuffle_partitions (r15 A/B).
-    out = _run_to_table(spark, agg, "complete", src_dir=path, heavy_state=True)
+    out = _run_to_table(
+        spark, agg, "complete", src_dir=path, cores_floor=True
+    )
     return out.select(
         F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
         "symbol",
@@ -1868,6 +1865,115 @@ def _keep_newest(df: DataFrame, key: str = "device_id") -> DataFrame:
     )
 
 
+def _cdc_upsert(
+    spark: SparkSession,
+    sf_dir: str,
+    store_prefix: str,
+    apply,
+    read_final,
+    tenant: bool = False,
+) -> DataFrame:
+    """Shared body of the five CDC plans: stage events as four
+    ts-ordered chunks, stream them one microbatch per chunk into
+    ``apply(store_dir, batch_df, batch_id)`` (foreachBatch) over a
+    per-invocation store root (no cross-query sharing — the r7
+    _STORE_DIR concurrency lesson), reaped at exit, then project
+    ``read_final(store_dir, query)`` to the oracle's columns.
+    ``tenant`` adds the tenant column and the packed key
+    ck = tenant * 2^32 + device_id."""
+    from ..io.readers import _normalize_event_ts
+
+    staged = _stage_events_multibatch(spark, sf_dir)
+    schema = spark.read.parquet(staged).schema
+    tenant_col = (
+        [F.pmod("user_id", F.lit(_CDC_N_TENANTS)).alias("tenant")]
+        if tenant
+        else []
+    )
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(staged)
+        .withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
+        .select(
+            *tenant_col,
+            F.expr(_CDC_DEVICE_SPARK).alias("device_id"),
+            "ts",
+            "event_id",
+            "value",
+        )
+    )
+    if tenant:
+        stream = stream.withColumn(
+            "ck", F.col("tenant") * F.lit(1 << 32) + F.col("device_id")
+        )
+
+    store_dir = tempfile.mkdtemp(prefix=store_prefix) + "/store"
+    atexit.register(
+        shutil.rmtree, os.path.dirname(store_dir), ignore_errors=True
+    )
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda batch_df, batch_id: apply(store_dir, batch_df, batch_id)
+        )
+        .option("checkpointLocation", _tmp_ckpt())
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    return read_final(store_dir, q).select(
+        *(["tenant"] if tenant else []),
+        "device_id",
+        F.unix_millis("ts").alias("last_ms"),
+        F.floor(F.col("value") * 100).cast("bigint").alias("last_cents"),
+    )
+
+
+def _manifest_cdc(
+    spark: SparkSession,
+    sf_dir: str,
+    store_prefix: str,
+    stats_log: list,
+    store_log: list | None = None,
+    tenant: bool = False,
+    **merge_kw,
+) -> DataFrame:
+    """CDC plan over the manifest store (io/manifest_store.py): each
+    microbatch is resolved last-write-wins and merged with
+    ``merge_manifest_store(**merge_kw)``, keyed on device_id bucketed
+    by device_id % 64, or with ``tenant`` on the packed ck bucketed
+    by tenant. Appends each merge's stats to ``stats_log`` and records
+    the store dir in ``store_log``."""
+    from ..io.manifest_store import merge_manifest_store, read_store
+
+    key = "ck" if tenant else "device_id"
+
+    def resolve(df: DataFrame) -> DataFrame:
+        return _keep_newest(df, key=key)
+
+    def _apply(store_dir: str, batch_df: DataFrame, batch_id: int) -> None:
+        bucket = (
+            F.col("tenant")
+            if tenant
+            else F.pmod("device_id", F.lit(_CDC_N_BUCKETS))
+        )
+        latest = resolve(batch_df).withColumn("bucket", bucket.cast("int"))
+        stats_log.append(
+            merge_manifest_store(
+                store_dir, latest, key, "bucket", resolve, **merge_kw
+            )
+        )
+
+    def _final(store_dir: str, q) -> DataFrame:
+        if store_log is not None:
+            store_log[:] = [store_dir]
+        return read_store(spark, store_dir)
+
+    stats_log.clear()
+    return _cdc_upsert(spark, sf_dir, store_prefix, _apply, _final, tenant)
+
+
 @register(
     "streaming_cdc_upsert_multibatch",
     _CDC_ORACLE,
@@ -1879,64 +1985,32 @@ def _keep_newest(df: DataFrame, key: str = "device_id") -> DataFrame:
     "merge bug breaks the hash (late r8; SURVEY §2.11)",
 )
 def q_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-
-    from ..io.readers import _normalize_event_ts
-
-    staged = _stage_events_multibatch(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
-        .select(
-            F.expr(_CDC_DEVICE_SPARK).alias("device_id"),
-            "ts",
-            "event_id",
-            "value",
-        )
-    )
-
-    # Per-invocation store root (no cross-query sharing — the r7
-    # _STORE_DIR concurrency lesson), reaped at exit.
-    base = tempfile.mkdtemp(prefix="sg_cdc_store_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    # Whole-store rewrite per batch: each version is a fresh dir under
+    # the per-invocation store root.
     state: dict[str, str | None] = {"dir": None}
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(store_dir: str, batch_df: DataFrame, batch_id: int) -> None:
         latest = _keep_newest(batch_df)
         if state["dir"] is not None:
             old = batch_df.sparkSession.read.parquet(state["dir"])
             latest = _keep_newest(old.unionByName(latest))
-        new_dir = f"{base}/v{batch_id}"
+        new_dir = f"{store_dir}/v{batch_id}"
         latest.write.mode("overwrite").parquet(new_dir)
         state["dir"] = new_dir
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", _tmp_ckpt())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # Observable for the mechanism test: how many DATA microbatches the
-    # merge actually applied — if staging or maxFilesPerTrigger ever
-    # collapses the feed into one batch, last-write-wins within it
-    # would still hash green while the cross-batch carry path silently
-    # stops being exercised.
-    global _LAST_CDC_DATA_BATCHES
-    _LAST_CDC_DATA_BATCHES = sum(
-        1 for p in q.recentProgress if p["numInputRows"] > 0
-    )
+    def _final(store_dir: str, q) -> DataFrame:
+        # Observable for the mechanism test: how many DATA microbatches
+        # the merge actually applied — if staging or maxFilesPerTrigger
+        # ever collapses the feed into one batch, last-write-wins within
+        # it would still hash green while the cross-batch carry path
+        # silently stops being exercised.
+        global _LAST_CDC_DATA_BATCHES
+        _LAST_CDC_DATA_BATCHES = sum(
+            1 for p in q.recentProgress if p["numInputRows"] > 0
+        )
+        return spark.read.parquet(state["dir"])
 
-    final = spark.read.parquet(state["dir"])
-    return final.select(
-        "device_id",
-        F.unix_millis("ts").alias("last_ms"),
-        F.floor(F.col("value") * 100).cast("bigint").alias("last_cents"),
-    )
+    return _cdc_upsert(spark, sf_dir, "sg_cdc_store_", _apply, _final)
 
 
 # Per-run observable for the bucketed variant's mechanism test: the
@@ -1963,55 +2037,24 @@ _CDC_N_BUCKETS = 64
 def q_streaming_cdc_upsert_bucketed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import atexit
-    import shutil
-
-    from ..io.readers import _normalize_event_ts
     from ..io.writers import merge_touched_partitions
 
-    staged = _stage_events_multibatch(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
-        .select(
-            F.expr(_CDC_DEVICE_SPARK).alias("device_id"),
-            "ts",
-            "event_id",
-            "value",
-        )
-    )
-
-    store_dir = tempfile.mkdtemp(prefix="sg_cdc_bstore_") + "/store"
-    atexit.register(
-        shutil.rmtree, os.path.dirname(store_dir), ignore_errors=True
-    )
     _LAST_CDC_TOUCHED.clear()
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(store_dir: str, batch_df: DataFrame, batch_id: int) -> None:
         latest = _keep_newest(batch_df).withColumn(
             "bucket", F.pmod("device_id", F.lit(_CDC_N_BUCKETS)).cast("int")
         )
-        touched = merge_touched_partitions(
-            store_dir, latest, "bucket", _keep_newest
+        _LAST_CDC_TOUCHED.append(
+            merge_touched_partitions(store_dir, latest, "bucket", _keep_newest)
         )
-        _LAST_CDC_TOUCHED.append(touched)
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", _tmp_ckpt())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    final = spark.read.parquet(store_dir)
-    return final.select(
-        "device_id",
-        F.unix_millis("ts").alias("last_ms"),
-        F.floor(F.col("value") * 100).cast("bigint").alias("last_cents"),
+    return _cdc_upsert(
+        spark,
+        sf_dir,
+        "sg_cdc_bstore_",
+        _apply,
+        lambda store_dir, q: spark.read.parquet(store_dir),
     )
 
 
@@ -2040,53 +2083,7 @@ _LAST_CDC_FILE_STATS: list[dict] = []
 def q_streaming_cdc_upsert_filestats(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..io.manifest_store import merge_manifest_store, read_store
-    from ..io.readers import _normalize_event_ts
-
-    staged = _stage_events_multibatch(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
-        .select(
-            F.expr(_CDC_DEVICE_SPARK).alias("device_id"),
-            "ts",
-            "event_id",
-            "value",
-        )
-    )
-
-    store_dir = tempfile.mkdtemp(prefix="sg_cdc_fstore_") + "/store"
-    atexit.register(
-        shutil.rmtree, os.path.dirname(store_dir), ignore_errors=True
-    )
-    _LAST_CDC_FILE_STATS.clear()
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _keep_newest(batch_df).withColumn(
-            "bucket", F.pmod("device_id", F.lit(_CDC_N_BUCKETS)).cast("int")
-        )
-        stats = merge_manifest_store(
-            store_dir, latest, "device_id", "bucket", _keep_newest
-        )
-        _LAST_CDC_FILE_STATS.append(stats)
-
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", _tmp_ckpt())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    final = read_store(spark, store_dir)
-    return final.select(
-        "device_id",
-        F.unix_millis("ts").alias("last_ms"),
-        F.floor(F.col("value") * 100).cast("bigint").alias("last_cents"),
-    )
+    return _manifest_cdc(spark, sf_dir, "sg_cdc_fstore_", _LAST_CDC_FILE_STATS)
 
 
 _CDC_N_TENANTS = 8
@@ -2145,70 +2142,14 @@ _LAST_CDC_TENANT_STORE: list[str] = []
 def q_streaming_cdc_upsert_tenant(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..io.manifest_store import merge_manifest_store, read_store
-    from ..io.readers import _normalize_event_ts
-
-    staged = _stage_events_multibatch(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
-        .select(
-            F.pmod("user_id", F.lit(_CDC_N_TENANTS)).alias("tenant"),
-            F.expr(_CDC_DEVICE_SPARK).alias("device_id"),
-            "ts",
-            "event_id",
-            "value",
-        )
-        .withColumn(
-            "ck",
-            F.col("tenant") * F.lit(1 << 32) + F.col("device_id"),
-        )
-    )
-
-    def _keep_newest_ck(df: DataFrame) -> DataFrame:
-        # Same grouped-max_by resolve as _keep_newest, keyed on the
-        # packed (tenant, device) key.
-        return _keep_newest(df, key="ck")
-
-    store_dir = tempfile.mkdtemp(prefix="sg_cdc_tstore_") + "/store"
-    atexit.register(
-        shutil.rmtree, os.path.dirname(store_dir), ignore_errors=True
-    )
-    _LAST_CDC_TENANT_STATS.clear()
-    _LAST_CDC_TENANT_STORE.clear()
-    _LAST_CDC_TENANT_STORE.append(store_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _keep_newest_ck(batch_df).withColumn(
-            "bucket", F.col("tenant").cast("int")
-        )
-        stats = merge_manifest_store(
-            store_dir,
-            latest,
-            "ck",
-            "bucket",
-            _keep_newest_ck,
-            retention_seconds=3600.0,
-        )
-        _LAST_CDC_TENANT_STATS.append(stats)
-
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", _tmp_ckpt())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    final = read_store(spark, store_dir)
-    return final.select(
-        "tenant",
-        "device_id",
-        F.unix_millis("ts").alias("last_ms"),
-        F.floor(F.col("value") * 100).cast("bigint").alias("last_cents"),
+    return _manifest_cdc(
+        spark,
+        sf_dir,
+        "sg_cdc_tstore_",
+        _LAST_CDC_TENANT_STATS,
+        _LAST_CDC_TENANT_STORE,
+        tenant=True,
+        retention_seconds=3600.0,
     )
 
 
@@ -2235,57 +2176,11 @@ _LAST_CDC_SHARDED_STORE: list[str] = []
 def q_streaming_cdc_upsert_sharded(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..io.manifest_store import merge_manifest_store, read_store
-    from ..io.readers import _normalize_event_ts
-
-    staged = _stage_events_multibatch(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
-        .select(
-            F.expr(_CDC_DEVICE_SPARK).alias("device_id"),
-            "ts",
-            "event_id",
-            "value",
-        )
-    )
-
-    store_dir = tempfile.mkdtemp(prefix="sg_cdc_shstore_") + "/store"
-    atexit.register(
-        shutil.rmtree, os.path.dirname(store_dir), ignore_errors=True
-    )
-    _LAST_CDC_SHARDED_STATS.clear()
-    _LAST_CDC_SHARDED_STORE.clear()
-    _LAST_CDC_SHARDED_STORE.append(store_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _keep_newest(batch_df).withColumn(
-            "bucket", F.pmod("device_id", F.lit(_CDC_N_BUCKETS)).cast("int")
-        )
-        stats = merge_manifest_store(
-            store_dir,
-            latest,
-            "device_id",
-            "bucket",
-            _keep_newest,
-            manifest_shards=8,
-        )
-        _LAST_CDC_SHARDED_STATS.append(stats)
-
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", _tmp_ckpt())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    final = read_store(spark, store_dir)
-    return final.select(
-        "device_id",
-        F.unix_millis("ts").alias("last_ms"),
-        F.floor(F.col("value") * 100).cast("bigint").alias("last_cents"),
+    return _manifest_cdc(
+        spark,
+        sf_dir,
+        "sg_cdc_shstore_",
+        _LAST_CDC_SHARDED_STATS,
+        _LAST_CDC_SHARDED_STORE,
+        manifest_shards=8,
     )

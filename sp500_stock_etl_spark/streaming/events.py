@@ -300,24 +300,16 @@ def upsert_partition_sink(
     whole history re-run) rewrites the same partitions to the same
     content instead of appending duplicates. The guarantee needs the
     batch->partition mapping to be deterministic, which file-stream
-    sources + event-time partitions give. Conf is save/restored around
-    each batch write."""
+    sources + event-time partitions give. The dynamic mode is a
+    per-write option, so the session conf is never changed."""
 
     def _write(df: DataFrame, _batch_id: int) -> None:
-        spark = df.sparkSession
-        key = "spark.sql.sources.partitionOverwriteMode"
-        try:
-            prev = spark.conf.get(key)
-        except Exception:
-            prev = None
-        spark.conf.set(key, "dynamic")
-        try:
-            df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(path)
+        )
 
     q = (
         stream_df.writeStream.foreachBatch(_write)

@@ -59,7 +59,7 @@ def test_generations_prune_and_retain(spark, tmp_path):
 
     # Replaced files RETAINED on disk (dead, not deleted)...
     m = MS.read_manifest(store)
-    live = {f["path"] for f in m["files"]}
+    live = {f["path"] for f in MS._live_entries(store, m)}
     on_disk = {
         os.path.relpath(p, store)
         for p in glob.glob(os.path.join(store, "bucket=*", "*.parquet"))
@@ -144,45 +144,6 @@ def test_reader_consistency_under_merges(spark, tmp_path):
     assert MS.read_store(spark, store).count() == n
 
 
-def test_compact_manifest_store(spark, tmp_path):
-    """Compaction resets the file count to one clustered generation,
-    preserves content exactly, retains the old generation for lagging
-    readers, and restores pruning effectiveness."""
-    from sp500_stock_etl_spark.io.manifest_store import (
-        compact_manifest_store,
-    )
-
-    store = str(tmp_path / "mstore4")
-    MS.merge_manifest_store(store, _base(spark), "k", "bucket", _keep_newest)
-    for ver in (1, 2, 3):
-        MS.merge_manifest_store(
-            store, _batch(spark, ver, 256), "k", "bucket", _keep_newest
-        )
-    m_before = MS.read_manifest(store)
-    before_rows = sorted(map(tuple, MS.read_store(spark, store).collect()))
-
-    stats = compact_manifest_store(spark, store, "k", "bucket")
-    assert stats["files_after"] <= stats["files_before"]
-    assert sorted(map(tuple, MS.read_store(spark, store).collect())) == (
-        before_rows
-    ), "compaction must not change content"
-
-    # Old generation retained (dead) until the next swap GCs it.
-    m = MS.read_manifest(store)
-    assert set(m["dead"]) == {f["path"] for f in m_before["files"]}
-    on_disk = {
-        os.path.relpath(p, store)
-        for p in glob.glob(os.path.join(store, "bucket=*", "*.parquet"))
-    }
-    assert set(m["dead"]) <= on_disk
-
-    # Post-compaction, a narrow batch prunes again.
-    st = MS.merge_manifest_store(
-        store, _batch(spark, 9, 64), "k", "bucket", _keep_newest
-    )
-    assert st["files_read"] < st["files_total"], st
-
-
 def test_interval_fallback_for_huge_batches(spark, tmp_path):
     """Past max_collected_keys the merge never collects the key set —
     the limit(max+1) probe overflows and it prunes by per-bucket
@@ -201,26 +162,6 @@ def test_interval_fallback_for_huge_batches(spark, tmp_path):
     assert final.count() == 4096
     assert final.where("k < 64").agg(F.min("ver")).first()[0] == 1
     assert final.select("k").distinct().count() == 4096
-
-
-def test_batch_keys_hint_skips_probe(spark, tmp_path):
-    """A huge batch_keys_hint skips the bounded probe entirely and
-    goes straight to interval pruning; a small/absent hint keeps the
-    exact key path."""
-    store = str(tmp_path / "mstore6")
-    MS.merge_manifest_store(store, _base(spark), "k", "bucket", _keep_newest)
-    st_hint = MS.merge_manifest_store(
-        store, _batch(spark, 1, 64), "k", "bucket", _keep_newest,
-        batch_keys_hint=10**9,
-    )
-    assert st_hint["pruning"] == "intervals"
-    st_keys = MS.merge_manifest_store(
-        store, _batch(spark, 2, 64), "k", "bucket", _keep_newest
-    )
-    assert st_keys["pruning"] == "keys"
-    final = MS.read_store(spark, store)
-    assert final.count() == 4096
-    assert final.where("k < 64").agg(F.min("ver")).first()[0] == 2
 
 
 def test_concurrent_writers_disjoint_keys(spark, tmp_path):
@@ -391,50 +332,11 @@ def test_composite_tenant_key_pruning(spark, tmp_path):
     assert results["composite"] < results["global_key"] / 2, results
 
 
-def test_read_store_key_range_pruning(spark, tmp_path):
-    """read_store(key_range=...) selects files from the MANIFEST's
-    stored ranges — non-overlapping files never reach Spark (checked
-    via inputFiles) — and filters the overlap precisely. An empty
-    selection keeps the store schema."""
-    store = str(tmp_path / "rstore")
-    base = spark.range(8 * 512).selectExpr(
-        "id DIV 512 AS tenant",
-        "id % 512 AS k",
-        "CAST(0 AS INT) AS ver",
-        "(id DIV 512) * 1048576 + id % 512 AS ck",
-        "CAST(id DIV 512 % 4 AS INT) AS bucket",
-    )
-
-    def keep_newest_ck(df):
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy("ck").orderBy(F.col("ver").desc())
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .where("__rn = 1")
-            .drop("__rn")
-        )
-
-    MS.merge_manifest_store(store, base, "ck", "bucket", keep_newest_ck)
-
-    lo, hi = 3 * 1048576, 3 * 1048576 + 511  # tenant 3's ck range
-    df = MS.read_store(spark, store, key_range=(lo, hi))
-    assert df.count() == 512
-    assert [r[0] for r in df.select("tenant").distinct().collect()] == [3]
-    n_live = len(MS.read_manifest(store)["files"])
-    assert 0 < len(df.inputFiles()) < n_live, (len(df.inputFiles()), n_live)
-
-    empty = MS.read_store(spark, store, key_range=(10**12, 10**12 + 1))
-    assert empty.count() == 0
-    assert empty.schema == MS.read_store(spark, store).schema
-
-
 def test_time_based_retention(spark, tmp_path):
     """With retention_seconds > 0, a dead file survives subsequent
     swaps (carried in the manifest's dead list with its dead_since
     timestamp) until its retention lapses; retention 0 reproduces the
-    one-generation lag. Old manifests without dead_since GC on the
-    next swap as before."""
+    one-generation lag."""
     store = str(tmp_path / "mstore7")
     MS.merge_manifest_store(store, _base(spark), "k", "bucket", _keep_newest)
     MS.merge_manifest_store(
@@ -533,7 +435,7 @@ def _rows(spark, store):
 
 
 def test_sharded_manifest_content_parity(spark, tmp_path):
-    """A sharded store must be CONTENT-identical to its flat twin
+    """A 4-shard store must be CONTENT-identical to its 1-shard twin
     across creation + two merges, and a merge must load/rewrite only
     the shards covering its touched buckets (root descriptors account
     for everything without loading shards)."""
@@ -547,9 +449,9 @@ def test_sharded_manifest_content_parity(spark, tmp_path):
             f"CAST(id % {n_buckets} AS INT) AS bucket",
         )
 
-    flat = str(tmp_path / "flat")
+    one = str(tmp_path / "one_shard")
     shd = str(tmp_path / "sharded")
-    for store, kw in ((flat, {}), (shd, {"manifest_shards": 4})):
+    for store, kw in ((one, {}), (shd, {"manifest_shards": 4})):
         MS.merge_manifest_store(
             store, batch(0, 4096), "k", "bucket", _keep_newest, **kw
         )
@@ -564,7 +466,7 @@ def test_sharded_manifest_content_parity(spark, tmp_path):
         st = MS.merge_manifest_store(
             store, nb, "k", "bucket", _keep_newest
         )
-    assert _rows(spark, flat) == _rows(spark, shd)
+    assert _rows(spark, one) == _rows(spark, shd)
 
     m = MS.read_manifest(shd)
     assert m["n_shards"] == 4 and "files" not in m
@@ -590,186 +492,11 @@ def test_sharded_manifest_content_parity(spark, tmp_path):
     assert 0 < len(replaced_meta) <= len(touched_sids) + 1
 
 
-def test_sharded_read_store_key_range(spark, tmp_path):
-    """Key-range reads on a sharded store prune at the SHARD level
-    first (root lo/hi), and an out-of-range ask returns an empty frame
-    with the store schema instead of raising."""
-    store = str(tmp_path / "s")
-    base = spark.range(4096).selectExpr(
-        "id AS k", "CAST(0 AS INT) AS ver", "CAST(id % 8 AS INT) AS bucket"
-    )
-    MS.merge_manifest_store(
-        store, base, "k", "bucket", _keep_newest, manifest_shards=4
-    )
-    mid = MS.read_store(spark, store, key_range=(100, 200))
-    assert mid.count() == 101
-    empty = MS.read_store(spark, store, key_range=(10**9, 2 * 10**9))
-    assert empty.count() == 0
-    assert set(empty.columns) == {"k", "ver", "bucket"}
-
-
-def test_compact_converts_formats_both_ways(spark, tmp_path):
-    """compact_manifest_store migrates flat -> sharded -> flat with
-    identical content, and retired shard JSONs are GC'd (retention 0:
-    one-generation lag, like parquet)."""
-    import glob
-    import os
-
-    store = str(tmp_path / "s")
-    base = spark.range(2048).selectExpr(
-        "id AS k", "CAST(0 AS INT) AS ver", "CAST(id % 8 AS INT) AS bucket"
-    )
-    MS.merge_manifest_store(store, base, "k", "bucket", _keep_newest)
-    before = _rows(spark, store)
-
-    st = MS.compact_manifest_store(
-        spark, store, "k", "bucket", manifest_shards=4
-    )
-    assert st["manifest_format"] == "sharded:4"
-    assert MS.read_manifest(store)["n_shards"] == 4
-    assert _rows(spark, store) == before
-
-    # A merge on the converted store keeps working.
-    b1 = spark.range(32).selectExpr(
-        "id AS k", "CAST(1 AS INT) AS ver", "CAST(id % 8 AS INT) AS bucket"
-    )
-    MS.merge_manifest_store(store, b1, "k", "bucket", _keep_newest)
-
-    st2 = MS.compact_manifest_store(
-        spark, store, "k", "bucket", manifest_shards=0
-    )
-    assert st2["manifest_format"] == "flat"
-    m = MS.read_manifest(store)
-    assert "shards" not in m and "files" in m
-    got = dict(_rows(spark, store))
-    assert all(got[k] == 1 for k in range(32))
-
-    # One more generation retires the conversion's dead shard JSONs.
-    b2 = spark.range(8).selectExpr(
-        "id AS k", "CAST(2 AS INT) AS ver", "CAST(id % 8 AS INT) AS bucket"
-    )
-    MS.merge_manifest_store(store, b2, "k", "bucket", _keep_newest)
-    MS.merge_manifest_store(
-        store,
-        spark.range(8).selectExpr(
-            "id AS k", "CAST(3 AS INT) AS ver",
-            "CAST(id % 8 AS INT) AS bucket",
-        ),
-        "k",
-        "bucket",
-        _keep_newest,
-    )
-    leftover = glob.glob(os.path.join(store, "_shard-*.json"))
-    assert leftover == [], leftover
-
-
-def test_read_store_bucket_pruning(spark, tmp_path):
-    """read_store(buckets=...) returns exactly the named buckets' rows
-    on BOTH formats; on a sharded store only the covering shards are
-    opened (same metadata economy as the merge), and an unknown
-    bucket yields an empty frame with the store schema."""
-    base = spark.range(4096).selectExpr(
-        "id AS k", "CAST(0 AS INT) AS ver", "CAST(id % 8 AS INT) AS bucket"
-    )
-    expect = sorted(
-        tuple(r)
-        for r in base.where("bucket IN (2, 5)")
-        .select("k", "ver")
-        .collect()
-    )
-    for name, kw in (("flat", {}), ("sharded", {"manifest_shards": 4})):
-        store = str(tmp_path / name)
-        MS.merge_manifest_store(
-            store, base, "k", "bucket", _keep_newest, **kw
-        )
-        got = sorted(
-            tuple(r)
-            for r in MS.read_store(spark, store, buckets={2, 5})
-            .select("k", "ver")
-            .collect()
-        )
-        assert got == expect, name
-        none = MS.read_store(spark, store, buckets={"99"})
-        assert none.count() == 0
-        assert set(none.columns) == {"k", "ver", "bucket"}
-        # Composable with key_range.
-        both = MS.read_store(
-            spark, store, key_range=(0, 100), buckets={2}
-        )
-        assert both.count() == base.where(
-            "bucket = 2 AND k <= 100"
-        ).count(), name
-
-
-def test_shard_descriptor_unbounded_on_no_stats_entry(spark, tmp_path):
-    """ADVICE r12 (medium): a shard holding ANY no-stats entry must
-    publish an UNBOUNDED descriptor, or read_store's shard-level
-    key_range prune drops a file the flat path treats as must-read —
-    silently missing rows. Buckets 0 and 2 hash to the same shard at
-    n_shards=4; bucket 0's stats are erased, bucket 2 carries keys
-    far outside the ask, so the pre-fix descriptor would prune the
-    shard and return 0 of the 11 expected rows."""
-    import json as _json
-
-    store = str(tmp_path / "s")
-    base = spark.range(100).selectExpr(
-        "id AS k", "CAST(0 AS INT) AS ver", "CAST(0 AS INT) AS bucket"
-    ).union(
-        spark.range(1000, 1100).selectExpr(
-            "id AS k", "CAST(0 AS INT) AS ver", "CAST(2 AS INT) AS bucket"
-        )
-    )
-    MS.merge_manifest_store(
-        store, base, "k", "bucket", _keep_newest, manifest_shards=4
-    )
-    m = MS.read_manifest(store)
-    entries = MS._live_entries(store, m)
-    for e in entries:
-        if e["path"].startswith("bucket=0"):
-            e["lo"] = e["hi"] = None
-    m["shards"] = MS._write_all_shards(store, entries, m["n_shards"])
-    MS._write_manifest_atomic(store, m)
-
-    m2 = MS.read_manifest(store)
-    sid = MS._shard_id("0", 4)
-    assert MS._shard_id("2", 4) == sid  # the collision the test needs
-    assert m2["shards"][sid]["lo"] is None  # unbounded descriptor
-    got = sorted(
-        r.k
-        for r in MS.read_store(spark, store, key_range=(50, 60)).collect()
-    )
-    assert got == list(range(50, 61))
-
-
-def test_read_store_buckets_all_covering_shards_empty(spark, tmp_path):
-    """ADVICE r12 (low): buckets= on a sharded store whose covering
-    shards are ALL empty (n_shards > populated buckets) must return
-    the documented empty frame with the store schema — flat-format
-    parity — not raise 'empty manifest generation'."""
-    store = str(tmp_path / "s")
-    # One populated bucket out of 16 shards: most shards are empty.
-    base = spark.range(64).selectExpr(
-        "id AS k", "CAST(0 AS INT) AS ver", "CAST(0 AS INT) AS bucket"
-    )
-    MS.merge_manifest_store(
-        store, base, "k", "bucket", _keep_newest, manifest_shards=16
-    )
-    sid0 = MS._shard_id("0", 16)
-    empty_bucket = next(
-        str(b)
-        for b in range(1, 64)
-        if MS._shard_id(str(b), 16) != sid0
-    )
-    out = MS.read_store(spark, store, buckets={empty_bucket})
-    assert out.count() == 0
-    assert set(out.columns) == {"k", "ver", "bucket"}
-
-
 def test_crashed_commit_leaves_no_orphan_shards(spark, tmp_path, monkeypatch):
     """ADVICE r12 (low): a commit that dies between _write_shard and
     the root swap must unlink its freshly written shard JSONs (no GC
-    path reclaims unreferenced shards); and compaction sweeps any
-    that a hard kill left behind."""
+    path reclaims unreferenced shards); and the next commit sweeps
+    any that a hard kill left behind."""
     store = str(tmp_path / "s")
     MS.merge_manifest_store(
         store,
@@ -809,7 +536,7 @@ def test_crashed_commit_leaves_no_orphan_shards(spark, tmp_path, monkeypatch):
     assert on_disk == live_before  # crash attempt's shards unlinked
 
     # Hard kill (no in-process cleanup): plant an orphan + tmp, then
-    # compact — the sweep reclaims both, referenced shards survive.
+    # merge — the sweep reclaims both, referenced shards survive.
     # Backdated past lock_stale_seconds: the sweep is age-gated
     # (ADVICE r13) so only provable hard-kill leftovers are removed.
     orphan = os.path.join(store, "_shard-deadbeef.json")
@@ -819,7 +546,10 @@ def test_crashed_commit_leaves_no_orphan_shards(spark, tmp_path, monkeypatch):
         with open(p, "w") as fh:
             fh.write('{"files": []}')
         os.utime(p, (stale, stale))
-    MS.compact_manifest_store(spark, store, "k", "bucket")
+    # Re-applies version 0 to keys 0..63: content stays unchanged.
+    MS.merge_manifest_store(
+        store, _batch(spark, 0, 64), "k", "bucket", _keep_newest
+    )
     assert not os.path.exists(orphan)
     assert not os.path.exists(tmp_orphan)
     m = MS.read_manifest(store)
@@ -834,7 +564,7 @@ def test_orphan_sweep_spares_young_shards(spark, tmp_path):
     """ADVICE r13 (low): the orphan-shard sweep is age-gated. Under
     the documented stale-lock takeover, a slow-but-alive writer whose
     lock was stolen can sit between _write_shard and its root swap
-    while a compaction sweeps; unlinking its fresh (unreferenced)
+    while another commit sweeps; unlinking its fresh (unreferenced)
     shard files would make its subsequent root swap publish dangling
     references and every read of the store would fail. By the
     takeover rule no legitimate in-flight commit spans
@@ -853,7 +583,9 @@ def test_orphan_sweep_spares_young_shards(spark, tmp_path):
             fh.write('{"files": []}')
     stale = time.time() - 700.0
     os.utime(old, (stale, stale))
-    MS.compact_manifest_store(spark, store, "k", "bucket")
+    MS.merge_manifest_store(
+        store, _batch(spark, 1, 64), "k", "bucket", _keep_newest
+    )
     assert os.path.exists(young)      # mid-takeover writer's: spared
     assert os.path.exists(young_tmp)
     assert not os.path.exists(old)    # provable hard-kill leftover
@@ -864,175 +596,20 @@ def test_orphan_sweep_spares_young_shards(spark, tmp_path):
 def test_manifest_entries_record_bytes(spark, tmp_path):
     """r13: entries carry their file size from the generation that
     created them, so bytes_total/bytes_read are manifest lookups —
-    the flat path previously stat()ed every live file per commit
-    (~100k calls at the 100 TB point). Entries from older
-    generations (no 'bytes' key) fall back to stat()."""
+    totals previously stat()ed every live file per commit (~100k
+    calls at the 100 TB point)."""
     store = str(tmp_path / "s")
     st = MS.merge_manifest_store(
         store, _base(spark, 512), "k", "bucket", _keep_newest
     )
-    m = MS.read_manifest(store)
-    for e in m["files"]:
+    entries = MS._live_entries(store, MS.read_manifest(store))
+    for e in entries:
         assert e["bytes"] == os.path.getsize(
             os.path.join(store, e["path"])
         )
-    assert st["bytes_total"] == sum(e["bytes"] for e in m["files"])
+    assert st["bytes_total"] == sum(e["bytes"] for e in entries)
 
-    # Back-compat: an r12-era manifest without recorded sizes still
-    # resolves totals through the stat() fallback.
-    for e in m["files"]:
-        del e["bytes"]
-    MS._write_manifest_atomic(store, m)
-    real = sum(
-        os.path.getsize(os.path.join(store, e["path"]))
-        for e in m["files"]
-    )
-    assert MS._bytes_total(store, MS.read_manifest(store)) == real
     st2 = MS.merge_manifest_store(
         store, _batch(spark, 1, 64), "k", "bucket", _keep_newest
     )
     assert st2["bytes_read"] > 0 and st2["bytes_total"] > 0
-
-
-def _inflate_bucket(spark, store, bucket, ver, n=32, n_buckets=4):
-    """Merge a NARROW key band concentrated in ONE bucket (keys ≡
-    bucket mod n_buckets, band offset = ver*1024): replaces ~1 file
-    and stages files_per_bucket new ones, so repeated merges grow
-    that bucket's file count — the growth pattern partial compaction
-    exists to repair."""
-    base = ver * 1024
-    return MS.merge_manifest_store(
-        store,
-        spark.range(n).selectExpr(
-            f"{base} + id * {n_buckets} + {bucket} AS k",
-            f"CAST({ver} AS INT) AS ver",
-            f"CAST({bucket} AS INT) AS bucket",
-        ),
-        "k",
-        "bucket",
-        _keep_newest,
-    )
-
-
-def test_partial_compaction_scope_and_content(spark, tmp_path):
-    """r13: buckets= compaction rewrites ONLY the named buckets —
-    content identical, file counts reduced in the target buckets,
-    every non-target file carried over untouched (same paths). Both
-    formats; candidates selection picks the inflated buckets."""
-    for name, kw in (("flat", {}), ("sharded", {"manifest_shards": 4})):
-        store = str(tmp_path / name)
-        MS.merge_manifest_store(
-            store, _base(spark), "k", "bucket", _keep_newest, **kw
-        )
-        for ver in (1, 2, 3):
-            _inflate_bucket(spark, store, 1, ver)
-        before = sorted(map(tuple, MS.read_store(spark, store).collect()))
-        m = MS.read_manifest(store)
-        by_bucket: dict[str, set] = {}
-        for e in MS._live_entries(store, m):
-            by_bucket.setdefault(MS._entry_bucket(e), set()).add(e["path"])
-
-        cands = MS.compaction_candidates(store, files_per_bucket=4)
-        assert cands and cands[0] == "1", (name, cands)
-
-        st = MS.compact_manifest_store(
-            spark, store, "k", "bucket", buckets=set(cands)
-        )
-        assert st["buckets"] == sorted(cands)
-        assert st["files_after"] < st["files_before"], (name, st)
-
-        after = sorted(map(tuple, MS.read_store(spark, store).collect()))
-        assert after == before, name
-        m2 = MS.read_manifest(store)
-        by_bucket2: dict[str, set] = {}
-        for e in MS._live_entries(store, m2):
-            by_bucket2.setdefault(MS._entry_bucket(e), set()).add(e["path"])
-        for b in by_bucket:
-            if b in cands:
-                assert len(by_bucket2[b]) < len(by_bucket[b]), (name, b)
-            else:
-                assert by_bucket2[b] == by_bucket[b], (name, b)
-
-
-def test_partial_compaction_commutes_with_foreign_merges(
-    spark, tmp_path, monkeypatch
-):
-    """The commutation property that makes partial compaction viable
-    at scale: a merge into a NON-target bucket landing between the
-    compaction's stage and its commit does NOT force a redo (the
-    validation scope is the target buckets only); the same merge into
-    a TARGET bucket does."""
-    store = str(tmp_path / "s")
-    MS.merge_manifest_store(
-        store, _base(spark), "k", "bucket", _keep_newest,
-        manifest_shards=4, retention_seconds=3600.0,
-    )
-    for ver in (1, 2):
-        _inflate_bucket(spark, store, 1, ver)
-    before = sorted(
-        tuple(r)
-        for r in MS.read_store(spark, store).select("k", "ver").collect()
-    )
-
-    orig_stage = MS._stage_clustered
-    state = {"merge_bucket": None, "fired": False}
-
-    def hook(df, key_col, partition_col, n_out, store_dir, phases=None):
-        res = orig_stage(
-            df, key_col, partition_col, n_out, store_dir, phases
-        )
-        if state["merge_bucket"] is not None and not state["fired"]:
-            state["fired"] = True  # before merging: the merge re-enters
-            _inflate_bucket(spark, store, state["merge_bucket"], 9, n=32)
-        return res
-
-    monkeypatch.setattr(MS, "_stage_clustered", hook)
-
-    # Foreign-bucket merge: commutes, zero redo.
-    state.update(merge_bucket=2, fired=False)
-    st = MS.compact_manifest_store(
-        spark, store, "k", "bucket", buckets={"1"},
-        retention_seconds=3600.0,
-    )
-    assert st["commit_retries"] == 0, st
-
-    # Target-bucket merge: conflicts, exactly one redo, and the redo
-    # folds the merge's rows in (content = merge applied).
-    state.update(merge_bucket=1, fired=False)
-    st = MS.compact_manifest_store(
-        spark, store, "k", "bucket", buckets={"1"},
-        retention_seconds=3600.0,
-    )
-    assert st["commit_retries"] == 1, st
-    monkeypatch.undo()
-
-    expect = {}
-    for k, v in before:
-        expect[k] = v
-    for b, ver, n in ((2, 9, 32), (1, 9, 32)):
-        for i in range(n):
-            expect[ver * 1024 + i * 4 + b] = ver
-    got = dict(
-        (r.k, r.ver) for r in MS.read_store(spark, store).collect()
-    )
-    assert got == expect
-
-
-def test_partial_compaction_guards(spark, tmp_path):
-    """Partial scope can't migrate formats; an empty target is a
-    typed no-op."""
-    import pytest as _pytest
-
-    store = str(tmp_path / "s")
-    MS.merge_manifest_store(
-        store, _base(spark), "k", "bucket", _keep_newest
-    )
-    with _pytest.raises(ValueError, match="FULL"):
-        MS.compact_manifest_store(
-            spark, store, "k", "bucket", buckets={"0"}, manifest_shards=4
-        )
-    st = MS.compact_manifest_store(
-        spark, store, "k", "bucket", buckets={"99"}
-    )
-    assert st["files_before"] == 0 and st["files_after"] == 0
-    assert st["generation"] == MS.read_manifest(store)["generation"]

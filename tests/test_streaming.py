@@ -459,9 +459,7 @@ def test_stream_shuffle_partitions_python_stateful_floor(spark, tmp_path):
 
     par = spark.sparkContext.defaultParallelism
     jvm_floor = _stream_shuffle_partitions(spark, str(src))
-    py_floor = _stream_shuffle_partitions(
-        spark, str(src), python_stateful=True
-    )
+    py_floor = _stream_shuffle_partitions(spark, str(src), cores_floor=True)
     assert jvm_floor == min(par, 4)
     assert py_floor == min(par, max(4, par // 2))
     assert py_floor <= par and jvm_floor <= par
@@ -475,9 +473,22 @@ def test_stream_shuffle_partitions_python_stateful_floor(spark, tmp_path):
         spark.conf.set(key, "1")
         assert _stream_shuffle_partitions(spark, str(src)) == par
         assert (
-            _stream_shuffle_partitions(spark, str(src), python_stateful=True)
+            _stream_shuffle_partitions(spark, str(src), cores_floor=True)
             == par
         )
+        # Unit-suffixed split sizes are read as Spark reads them: a
+        # 1 KiB split holds the 1 KiB file in one split (floor 4, not
+        # 1024 one-byte splits), and the default size spelled with any
+        # unit sizes exactly like its byte spelling.
+        spark.conf.set(key, "1k")
+        assert _stream_shuffle_partitions(spark, str(src)) == jvm_floor
+        for spelled in ("134217728b", "128m", "128MB", "1g"):
+            spark.conf.set(key, spelled)
+            assert _stream_shuffle_partitions(spark, str(src)) == jvm_floor
+            assert (
+                _stream_shuffle_partitions(spark, str(src), cores_floor=True)
+                == py_floor
+            )
     finally:
         if prev is None:
             spark.conf.unset(key)

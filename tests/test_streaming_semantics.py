@@ -154,7 +154,7 @@ def test_cdc_tenant_store_mechanism(spark):
 
     from pyspark.sql import functions as F
 
-    from sp500_stock_etl_spark.io.manifest_store import read_manifest
+    from sp500_stock_etl_spark.io import manifest_store as MS
     from sp500_stock_etl_spark.io.readers import load_table
     from sp500_stock_etl_spark.plans import queries_streaming as QS
     from sp500_stock_etl_spark.plans.queries_streaming import (
@@ -166,10 +166,10 @@ def test_cdc_tenant_store_mechanism(spark):
     assert len(QS._LAST_CDC_TENANT_STATS) >= 4, QS._LAST_CDC_TENANT_STATS
     store = QS._LAST_CDC_TENANT_STORE[0]
 
-    m = read_manifest(store)
+    m = MS.read_manifest(store)
     assert m["dead"], "retention must have carried replaced files"
     assert set(m["dead_since"]) == set(m["dead"])
-    live = {f["path"] for f in m["files"]}
+    live = {f["path"] for f in MS._live_entries(store, m)}
     on_disk = {
         os.path.relpath(p, store)
         for p in glob.glob(os.path.join(store, "bucket=*", "*.parquet"))
@@ -229,7 +229,7 @@ def test_cdc_sharded_store_mechanism(spark):
     aggregates equal to the loaded truth after all merges, (c) retire
     every replaced shard JSON (retention 0: nothing but the live
     shards may remain on disk), and (d) agree bit-for-bit with the
-    flat filestats twin's contract on carried devices."""
+    1-shard filestats twin's contract on carried devices."""
     import glob
     import os
 
@@ -246,7 +246,7 @@ def test_cdc_sharded_store_mechanism(spark):
     final = q_streaming_cdc_upsert_sharded(spark, sf).cache()
     stats = QS._LAST_CDC_SHARDED_STATS
     assert len(stats) >= 4, stats
-    assert all(s["manifest_format"] == "sharded:8" for s in stats), stats
+    assert all(s["n_shards"] == 8 for s in stats), stats
     store = QS._LAST_CDC_SHARDED_STORE[0]
 
     m = MS.read_manifest(store)
