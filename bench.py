@@ -62,9 +62,8 @@ EXHIBIT_QUERIES = {
     "dedup_ngram_jaccard",
 }
 
-# One per operator family (BASELINE.md bench set). Fixed 163-plan
-# recommended suite since round 9: the 106-plan r8 set plus the 57
-# round-8 additions, folded per round-8 verdict item 3.
+# The full bench suite (BASELINE.md bench set): every operator family;
+# BASELINE.md §19 records which round added which plans.
 BENCH_QUERIES = [
     "flagship_window_metrics",
     "filtered_scan_projection",
@@ -97,7 +96,6 @@ BENCH_QUERIES = [
     "similarity_join_corpus",
     "gap_fill_forward",
     "dedup_ngram_jaccard",
-    # --- round-4 additions (folded in round 5) ---
     "corpus_chunking",
     "corpus_boilerplate_segments",
     "corpus_sequence_packing",
@@ -117,7 +115,6 @@ BENCH_QUERIES = [
     "corpus_training_build",
     "ohlc_hourly_resample",
     "vwap_per_symbol_day",
-    # --- round-5 additions (folded in round 6) ---
     "tpch_q9_profit",
     "tpch_q12_shipmode",
     "streaming_ohlc_bars_append",
@@ -141,7 +138,6 @@ BENCH_QUERIES = [
     "corpus_bpe_merges",
     "asof_join_tolerance",
     "asof_join_forward",
-    # --- round-6 additions (folded in round 7) ---
     "asof_join_nearest",
     "window_deduped_latest_snapshot",
     "merge_upsert_customers",
@@ -163,7 +159,6 @@ BENCH_QUERIES = [
     "gap_fill_interpolate",
     "corpus_decontamination_overlap",
     "feature_equidepth_histogram",
-    # --- round-7 additions (folded in round 8) ---
     "embedding_pq_encode_init",
     "dedup_incremental_refresh",
     "dedup_signature_store_roundtrip",
@@ -179,7 +174,6 @@ BENCH_QUERIES = [
     "tpcds_q88_multiband_counts",
     "tpcds_q73_basket_counts",
     "tpcds_q93_returns_adjusted",
-    # --- round-8 additions (folded in round 9) ---
     "multimodal_resize_execute",
     "multimodal_pcm_chunk_execute",
     "streaming_stream_stream_right_join",
@@ -237,34 +231,23 @@ BENCH_QUERIES = [
     "indicator_portfolio_hhi",
     "indicator_risk_report",
     "tpcds_q80_channel_netting",
-    # --- round-9 additions (folded in round 10) ---
     "arrow_udtf_installments",
-    # --- round-10 addition (folded in round 11) ---
     "streaming_cdc_upsert_bucketed",
-    # --- round-11 additions (folded in round 12; the filestats fold
-    # value was re-measured quiet-box first per the r11 verdict —
-    # steady ~15 s total / ~3 s per merge; the 36.4 s in the r11
-    # artifact was store-tempdir I/O contention mid-suite, localized
-    # per merge phase in BASELINE.md §14) ---
     "streaming_cdc_upsert_filestats",
     "streaming_cdc_upsert_tenant",
-    # --- round-12 addition (folded in round 13 at the driver
-    # artifact's measured 13.729 s — inside/below its pre-registered
-    # 20.0-29.6 s band; new full-suite anchor = 339.639 + 13.729 =
-    # **353.368 s for the 168-plan union**, r12 verdict item 4) ---
     "streaming_cdc_upsert_sharded",
 ]
 
-# Round-13 additions, reported under a SEPARATE key so the full-suite
-# number stays comparable round-over-round; folded at r14. Names not
-# yet registered are skipped so the harness runs mid-build.
+# Plans reported under a SEPARATE key so the full-suite number stays
+# comparable across runs. Names not yet registered are skipped so the
+# harness runs mid-build.
 NEW_QUERIES: list[str] = []
 
-# The 55-plan HEADLINE CORE (r10 growth policy, BASELINE.md §18):
-# reference surface + one per operator family, fixed forever; `value`
-# is the sum over exactly these. Pre-registered anchor 64.601 s
-# (same 55 plans in the BENCH_r09 driver detail). Every name must be
-# in BENCH_QUERIES and not an exhibit.
+# The 55-plan HEADLINE CORE (growth policy in BASELINE.md §18):
+# reference surface + one per operator family, fixed; `value` is the
+# sum over exactly these. Anchor 64.601 s (same 55 plans in the
+# BENCH_r09 driver detail). Every name must be in BENCH_QUERIES and
+# not an exhibit.
 CORE_QUERIES = [
     "flagship_window_metrics",
     "filtered_scan_projection",

@@ -1,14 +1,17 @@
 #!/usr/bin/env python
-"""Full-registry DuckDB parity sweep at an arbitrary sf, sliceable by
-index range so long sweeps can run in bounded chunks:
+"""Registry DuckDB parity sweep, driven through ``__spark_entry__.py``
+the way the external driver drives it:
 
     python scripts/full_sweep.py <sf_dir> [start] [end]
+    python scripts/full_sweep.py <sf_dir> --names q1 q2 ...
 
-Sweeps sorted(queries())[start:end] (default: all). Prints one PROG
-line per query and a final SWEEP summary; FAIL lines list any
-mismatches. Used for the round-7 tri-scale parity results
-(BASELINE.md §9): the rotating sf0.1 sample is the per-round
-maintenance tool, this is the occasional full certification pass.
+First runs the ``entry(spark)`` smoke once and checks that every
+oracle names a query. Then sweeps sorted(queries())[start:end]
+(default: all), or the named queries, against their oracles in a
+hostile session (ANSI on, ``America/New_York``). Prints one PROG line
+per query and a final SWEEP summary; FAIL lines list any mismatches.
+Index slices let a long sweep run in bounded chunks (the tri-scale
+certification in BASELINE.md §9).
 """
 
 from __future__ import annotations
@@ -23,9 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Oracles that are PATHOLOGICAL for DuckDB above sf0.01 — not the
 # engine's plans, the ground-truth constructs: all-pairs quadratics
-# and single-threaded recursive-CTE replays. r10 (r9 verdict item 7):
-# the outright skip is RETIRED — above sf0.01 these now run a SLICED
-# certification instead: the sweep materializes a deterministic
+# and single-threaded recursive-CTE replays. Above sf0.01 these run a
+# SLICED certification: the sweep materializes a deterministic
 # id-band slice of `documents` (doc_id % 8 = 0; 625 of sf0.1's 5000)
 # into a temp sf-dir with every other table symlinked, then runs the
 # UNCHANGED registered query and oracle on it. Both engines see
@@ -65,9 +67,11 @@ def _make_sliced_dir(sf_dir: str) -> str:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    start = int(sys.argv[2]) if len(sys.argv) > 2 else 0
-    end = int(sys.argv[3]) if len(sys.argv) > 3 else 10**9
+    args = sys.argv[1:]
+    sf_dir = args[0] if args else "/root/testdata/sf0.1"
+    named = args[2:] if args[1:2] == ["--names"] else None
+    start = int(args[1]) if len(args) > 1 and named is None else 0
+    end = int(args[2]) if len(args) > 2 and named is None else 10**9
 
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__",
@@ -86,8 +90,8 @@ def main() -> None:
         SparkSession.builder.master("local[16]")
         # Explicit heap: Spark's 1g default gives 16 concurrent tasks
         # ~27 MB of execution memory each — below what any
-        # shuffle-heavy operator can run in (the r10 sweep caught
-        # dedup_prefix_jaccard heap-OOMing there; the same plan passes
+        # shuffle-heavy operator can run in (dedup_prefix_jaccard
+        # heap-OOMs there; the same plan passes
         # at local[4]/1g and local[16]/2g). 512 MB+/core is the
         # realistic provisioning floor; certify under it, not under a
         # toy default.
@@ -98,9 +102,11 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    print("ENTRY rows:", mod.entry(spark).count(), flush=True)
     con = duckdb_connect(sf_dir)
     qs, oracles = mod.queries(), mod.oracle_sql()
-    names = sorted(qs)[start:end]
+    assert set(oracles) <= set(qs), sorted(set(oracles) - set(qs))
+    names = named if named is not None else sorted(qs)[start:end]
     t0 = time.time()
     fails = []
     sliced_dir = None

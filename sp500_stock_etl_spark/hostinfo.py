@@ -51,7 +51,3 @@ def host_mt_ms() -> float:
             best = min(best, (time.perf_counter() - t0) * 1000)
     return round(best, 1)
 
-
-def host_stamp() -> dict:
-    """{"host_st_ms": ..., "host_mt_ms": ...} for artifact stamping."""
-    return {"host_st_ms": host_st_ms(), "host_mt_ms": host_mt_ms()}

@@ -207,11 +207,12 @@ def _write_shard(store_dir: str, entries: list[dict], written: list) -> dict:
 
 @contextlib.contextmanager
 def _shard_cleanup_on_error(store_dir: str, written: list):
-    """Unlink shard JSONs written by THIS commit attempt if it dies
-    before the root swap — they are referenced by no generation, so
-    neither dead_meta retention nor any reader would ever see them.
-    ``_commit`` clears ``written`` right after a successful swap so a
-    late failure (GC) can't unlink now-referenced shards."""
+    """Unlink the data files published and the shard JSONs written by
+    THIS commit attempt if it dies before the root swap — they are
+    referenced by no generation, so neither retention nor any reader
+    would ever see them. ``_commit`` clears ``written`` right after a
+    successful swap so a late failure (GC) can't unlink now-referenced
+    files."""
     try:
         yield
     except BaseException:
@@ -427,6 +428,9 @@ def _commit(
             shutil.rmtree(stage, ignore_errors=True)
             return None
 
+        # Published files are referenced by no generation until the
+        # swap: register them for the same in-process cleanup.
+        written.extend(e["path"] for e in new_entries)
         _publish_staged(stage, store_dir, new_entries)
 
         now = time.time()

@@ -206,7 +206,8 @@ def _verify_size_gate(pairs: DataFrame, shingled: DataFrame) -> bool:
         + 80
     ).alias("b")
     sample = (
-        shingled.select(row_bytes)
+        shingled.orderBy(F.xxhash64("shingles"))
+        .select(row_bytes)
         .limit(2048)
         .agg(F.avg("b").alias("avg"), F.max("b").alias("mx"))
         .first()

@@ -1,22 +1,21 @@
-"""North-star LLM-data-pipeline queries (BASELINE.json): dedup (exact,
-MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine), similarity
-search (brute-force + SRP-LSH), text analysis (quality stats, lang-ID,
-fingerprinting).
+"""Text-corpus curation for LLM pretraining data: quality statistics,
+language ID, fingerprints, PII redaction, decontamination, chunking,
+sequence packing, token budgets, sampling and mixtures, boilerplate
+removal, unigram/bigram/TF-IDF statistics, BPE merges and encoding,
+the quality classifier and the composed curation pipelines.
 
-Each query plants known duplicates/near-duplicates inside the plan
-(documents ∪ deterministic corrupted variants) so the dedup operators
-have real positives to find, and the DuckDB oracle reconstructs the
-identical input — no fixtures, no RNG.
-
-All oracle SQL is generated from the same parameters as the Spark
-plans; hashing is the shared md5-derived 32-bit hash so signatures
-are exact-integer-equal across engines.
+Same contract as every plans module: each query is registered with a
+DuckDB oracle built from the SAME parameters, all terminal columns
+aliased identically on both sides, arithmetic either integer or
+pinned-order double so hashes match bit-for-bit.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.window import Window
 
+from ..caching import track_persist
 from ..functions.text import (
     BPE_PATTERN,
     STOPWORDS,
@@ -29,447 +28,9 @@ from ..functions.text import (
     tokens,
 )
 from ..io.readers import ensure_parallelism, load_table
-from ..operators import dedup as D
-from ..operators import similarity as S
-from ..operators import text_analysis as TA
+from ..operators import dedup as D, text_analysis as TA
+from .queries_dedup import SQL_EXACT_BASE, URL_SQL, docs_with_exact_dups
 from .registry import register
-
-# ---------------------------------------------------------------------------
-# Shared input builders: documents with planted duplicates.
-# ---------------------------------------------------------------------------
-
-_NEARDUP_OFFSET = 10_000_000
-_EXACT_OFFSET = 20_000_000
-
-
-def _docs_with_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ corrupted variants (first 80% of tokens, doc_id%5==0,
-    id offset +10M) — deterministic near-duplicates."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tk = tokens(F.col("text"))
-    keep_n = F.greatest(F.lit(3), F.floor(F.size(tk) * 0.8).cast("int"))
-    corrupted = docs.where(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + _NEARDUP_OFFSET).alias("doc_id"),
-        F.array_join(F.slice(tk, F.lit(1), keep_n), " ").alias("text"),
-    )
-    return docs.unionByName(corrupted)
-
-
-_SQL_NEARDUP_BASE = f"""
-tokd AS (
-    SELECT doc_id, {sql_tokens('text')} AS toks FROM documents
-),
-base AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + {_NEARDUP_OFFSET} AS doc_id,
-           array_to_string(
-               list_slice(toks, 1,
-                   greatest(3, CAST(floor(len(toks) * CAST(0.8 AS DOUBLE)) AS INT))),
-               ' ') AS text
-    FROM tokd WHERE doc_id % 5 = 0
-)
-"""
-
-
-def _docs_with_exact_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ verbatim copies (doc_id%3==0, id offset +20M)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    copies = docs.where(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + _EXACT_OFFSET).alias("doc_id"), "text"
-    )
-    return docs.unionByName(copies)
-
-
-_SQL_EXACT_BASE = f"""
-base AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + {_EXACT_OFFSET} AS doc_id, text
-    FROM documents WHERE doc_id % 3 = 0
-)
-"""
-
-
-# ---------------------------------------------------------------------------
-# Exact dedup: hash-groupBy on normalized text.
-# ---------------------------------------------------------------------------
-
-_EXACT_DEDUP_ORACLE = f"""
-WITH {_SQL_EXACT_BASE}
-SELECT md5({sql_norm_text('text')}) AS text_hash,
-       min(doc_id) AS kept_id,
-       count(*) AS n_copies
-FROM base
-GROUP BY 1
-"""
-
-
-@register(
-    "dedup_exact",
-    _EXACT_DEDUP_ORACLE,
-    doc="exact dedup via md5-hash groupBy; planted verbatim copies (north star)",
-)
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _docs_with_exact_dups(spark, sf_dir)
-    return D.exact_dedup(base, "doc_id", "text")
-
-
-# ---------------------------------------------------------------------------
-# MinHash + LSH near-dup (the hero dedup pipeline).
-# ---------------------------------------------------------------------------
-
-_NUM_HASHES, _BANDS, _NGRAM, _JT = 12, 4, 3, 0.6
-_ROWS = _NUM_HASHES // _BANDS
-
-
-def _sql_minhash_oracle() -> str:
-    from ..operators.dedup import MINHASH_A, MINHASH_B, MINHASH_P
-
-    mins = ",\n           ".join(
-        f"list_aggregate(list_transform(hh, h -> (h * {MINHASH_A[i]} + {MINHASH_B[i]}) % {MINHASH_P}), 'min') AS m{i}"
-        for i in range(_NUM_HASHES)
-    )
-    band_rows = "\n    UNION ALL\n".join(
-        f"    SELECT doc_id, {b} AS band, "
-        + " + ".join(f"m{b * _ROWS + r}" for r in range(_ROWS))
-        + " AS band_sig FROM signed"
-        for b in range(_BANDS)
-    )
-    return f"""
-WITH {_SQL_NEARDUP_BASE},
-shingled AS (
-    SELECT doc_id, {sql_word_shingles('toks', _NGRAM)} AS sh
-    FROM (SELECT doc_id, {sql_tokens('text')} AS toks FROM base) t
-),
-hashed AS (
-    SELECT doc_id, sh, list_transform(sh, s -> {sql_hash32('s')}) AS hh
-    FROM shingled WHERE len(sh) > 0
-),
-signed AS (
-    SELECT doc_id, sh,
-           {mins}
-    FROM hashed
-),
-bands AS (
-{band_rows}
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-)
-SELECT c.doc_a, c.doc_b,
-       CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-           / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE) AS jaccard
-FROM cand c
-JOIN shingled sa ON sa.doc_id = c.doc_a
-JOIN shingled sb ON sb.doc_id = c.doc_b
-WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-          / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE) >= {_JT}
-"""
-
-
-@register(
-    "dedup_minhash_lsh",
-    _sql_minhash_oracle(),
-    doc="MinHash+LSH near-dup: map-side signatures, banded buckets, Jaccard verify (north star)",
-)
-def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _docs_with_neardups(spark, sf_dir)
-    return D.minhash_lsh_dedup(
-        base, "doc_id", "text",
-        ngram=_NGRAM, num_hashes=_NUM_HASHES, bands=_BANDS, threshold=_JT,
-    )
-
-
-# ---------------------------------------------------------------------------
-# SimHash near-dup: 32-bit signature, 8-bit chunk candidates,
-# Hamming ≤ 3 verify.
-# ---------------------------------------------------------------------------
-
-_SIM_BITS, _SIM_CHUNKS, _MAX_HAMMING = 32, 4, 3
-
-
-def _sql_simhash_oracle() -> str:
-    votes = ",\n           ".join(
-        f"sum(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS v{j}"
-        for j in range(_SIM_BITS)
-    )
-    simhash = " + ".join(
-        f"(CASE WHEN v{j} > 0 THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"
-        for j in range(_SIM_BITS)
-    )
-    width = _SIM_BITS // _SIM_CHUNKS
-    mask = (1 << width) - 1
-    chunk_rows = "\n    UNION ALL\n".join(
-        f"    SELECT doc_id, simhash, {c} AS chunk, (simhash >> {c * width}) & {mask} AS val FROM sig"
-        for c in range(_SIM_CHUNKS)
-    )
-    return f"""
-WITH {_SQL_NEARDUP_BASE},
-tok_exploded AS (
-    SELECT doc_id, unnest({sql_tokens('text')}) AS tok FROM base
-),
-hashes AS (
-    SELECT doc_id, {sql_hash32('tok')} AS h FROM tok_exploded
-),
-votes AS (
-    SELECT doc_id,
-           {votes}
-    FROM hashes GROUP BY doc_id
-),
-sig AS (
-    SELECT doc_id, {simhash} AS simhash FROM votes
-),
-chunks AS (
-{chunk_rows}
-)
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-FROM chunks a JOIN chunks b
-  ON a.chunk = b.chunk AND a.val = b.val AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {_MAX_HAMMING}
-"""
-
-
-@register(
-    "dedup_simhash",
-    _sql_simhash_oracle(),
-    doc="SimHash near-dup: 32-bit signature + chunk-banded Hamming pairs (north star)",
-)
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _docs_with_neardups(spark, sf_dir)
-    signed = D.simhash_signature(base, "doc_id", "text", bits=_SIM_BITS)
-    return D.simhash_neardup_pairs(
-        signed, max_hamming=_MAX_HAMMING, chunks=_SIM_CHUNKS, bits=_SIM_BITS
-    )
-
-
-# ---------------------------------------------------------------------------
-# n-gram Jaccard: exact inverted-index baseline with max-df cap.
-# ---------------------------------------------------------------------------
-
-_NJ_THRESHOLD, _NJ_MAXDF = 0.5, 50
-
-_NGRAM_JACCARD_ORACLE = f"""
-WITH {_SQL_NEARDUP_BASE},
-shingled AS (
-    SELECT doc_id, {sql_word_shingles('toks', _NGRAM)} AS sh
-    FROM (SELECT doc_id, {sql_tokens('text')} AS toks FROM base) t
-),
-sizes AS (SELECT doc_id, len(sh) AS n_sh FROM shingled),
-exploded AS (SELECT doc_id, unnest(sh) AS shingle FROM shingled),
-rare AS (
-    SELECT shingle FROM exploded GROUP BY shingle HAVING count(*) <= {_NJ_MAXDF}
-),
-filtered AS (SELECT e.doc_id, e.shingle FROM exploded e JOIN rare r USING (shingle)),
-shared AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-    FROM filtered a JOIN filtered b
-      ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-)
-SELECT s.doc_a, s.doc_b,
-       CAST(s.shared AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - s.shared AS DOUBLE) AS jaccard
-FROM shared s
-JOIN sizes sa ON sa.doc_id = s.doc_a
-JOIN sizes sb ON sb.doc_id = s.doc_b
-WHERE CAST(s.shared AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - s.shared AS DOUBLE) >= {_NJ_THRESHOLD}
-"""
-
-
-@register(
-    "dedup_ngram_jaccard",
-    _NGRAM_JACCARD_ORACLE,
-    doc="exact n-gram Jaccard near-dup via capped inverted index (north star)",
-)
-def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _docs_with_neardups(spark, sf_dir)
-    return D.ngram_jaccard_pairs(
-        base, "doc_id", "text",
-        ngram=_NGRAM, threshold=_NJ_THRESHOLD, max_df=_NJ_MAXDF,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Similarity search: brute-force cosine top-k (baseline).
-# ---------------------------------------------------------------------------
-
-_SQL_DOT = (
-    "list_sum(list_transform(generate_series(1, len({a})), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-)
-
-
-def _sql_cosine(a: str, b: str) -> str:
-    return (
-        f"({_SQL_DOT.format(a=a, b=b)} / "
-        f"(sqrt({_SQL_DOT.format(a=a, b=a)}) * sqrt({_SQL_DOT.format(a=b, b=b)})))"
-    )
-
-
-_BRUTE_TOPK_ORACLE = f"""
-WITH q AS (
-    SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id % 100 = 0
-),
-c AS (SELECT vec_id, embedding AS ce FROM embeddings),
-scored AS (
-    SELECT q.query_id, c.vec_id AS neighbor_id,
-           {_sql_cosine('qe', 'ce')} AS cosine
-    FROM q CROSS JOIN c
-    WHERE q.query_id <> c.vec_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id, cosine,
-           row_number() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cosine
-FROM ranked WHERE rank <= 10
-"""
-
-
-@register(
-    "similarity_bruteforce_topk",
-    _BRUTE_TOPK_ORACLE,
-    doc="exact cosine top-10 per query vector, broadcast x corpus (north star)",
-)
-def q_sim_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return S.brute_force_topk(queries, emb, k=10)
-
-
-# ---------------------------------------------------------------------------
-# Embedding-cosine near-dup with SRP-LSH bucketing — the scale path.
-# Planted exact vector copies guarantee positives.
-# ---------------------------------------------------------------------------
-
-# Banded SRP layout (round-2 verdict item 2): _BANDS independent hash
-# tables of _PLANES sign bits each; band b uses global planes
-# [b*_PLANES, (b+1)*_PLANES). The oracle reproduces every band
-# signature from the same md5-derived hyperplane literals, and a pair
-# is a candidate when ANY band matches — OR-join in SQL (fine for
-# DuckDB at oracle scale), exploded (band, sig) equi-join in Spark
-# (the scale shape). At 100 TB _PLANES comes from
-# operators/similarity.srp_params_for(corpus size); here it is pinned
-# so the oracle text is static.
-_PLANES = 8
-_BANDS = 4
-_VEC_OFFSET = 1_000_000
-
-
-def _sql_proj(p: int, vec: str) -> str:
-    from ..operators.similarity import hyperplane_weights
-
-    lit = "[" + ", ".join(repr(w) for w in hyperplane_weights(p, 64)) + "]"
-    return (
-        f"list_sum(list_transform(generate_series(1, len({vec})), "
-        f"i -> CAST({vec}[i] AS DOUBLE) * ({lit})[i]))"
-    )
-
-
-def _sql_srp_sig(vec: str, band: int = 0) -> str:
-    return " + ".join(
-        f"(CASE WHEN {_sql_proj(band * _PLANES + i, vec)} > 0 "
-        f"THEN CAST({1 << i} AS BIGINT) ELSE 0 END)"
-        for i in range(_PLANES)
-    )
-
-
-def _sql_band_cols(vec: str) -> str:
-    return ", ".join(
-        f"{_sql_srp_sig(vec, b)} AS s{b}" for b in range(_BANDS)
-    )
-
-
-def _sql_any_band(a: str, b: str) -> str:
-    return " OR ".join(f"{a}.s{i} = {b}.s{i}" for i in range(_BANDS))
-
-
-_COSINE_NEARDUP_ORACLE = f"""
-WITH base AS (
-    SELECT vec_id, embedding FROM embeddings
-    UNION ALL
-    SELECT vec_id + {_VEC_OFFSET} AS vec_id, embedding
-    FROM embeddings WHERE vec_id % 10 = 0
-),
-sig AS (
-    SELECT vec_id, embedding, {_sql_band_cols('embedding')} FROM base
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       {_sql_cosine('a.embedding', 'b.embedding')} AS cosine
-FROM sig a JOIN sig b ON ({_sql_any_band('a', 'b')}) AND a.vec_id < b.vec_id
-WHERE {_sql_cosine('a.embedding', 'b.embedding')} >= 0.999
-"""
-
-
-@register(
-    "dedup_embedding_cosine",
-    _COSINE_NEARDUP_ORACLE,
-    doc="embedding near-dup: SRP-LSH buckets + cosine>=0.999 verify (north star)",
-)
-def q_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    copies = emb.where(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + _VEC_OFFSET).alias("vec_id"), "embedding"
-    )
-    base = emb.select("vec_id", "embedding").unionByName(copies)
-    return S.cosine_neardup_pairs(
-        base, threshold=0.999, planes=_PLANES, bands=_BANDS
-    )
-
-
-# ---------------------------------------------------------------------------
-# Similarity search, scale path: SRP-LSH bucketed top-k. Candidates are
-# restricted to the query's signature bucket (cost ∝ collisions, not
-# corpus size); exact cosine rank within the bucket. The oracle
-# reproduces the md5-derived hyperplanes as SQL literals, so this
-# APPROXIMATE operator still gets an exact oracle.
-# ---------------------------------------------------------------------------
-
-_LSH_TOPK_ORACLE = f"""
-WITH q AS (
-    SELECT vec_id AS query_id, embedding AS qe, {_sql_band_cols('embedding')}
-    FROM embeddings WHERE vec_id % 100 = 0
-),
-c AS (
-    SELECT vec_id, embedding AS ce, {_sql_band_cols('embedding')}
-    FROM embeddings
-),
-scored AS (
-    SELECT q.query_id, c.vec_id AS neighbor_id,
-           {_sql_cosine('qe', 'ce')} AS cosine
-    FROM q JOIN c ON ({_sql_any_band('q', 'c')})
-    WHERE q.query_id <> c.vec_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id, cosine,
-           row_number() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cosine
-FROM ranked WHERE rank <= 10
-"""
-
-
-@register(
-    "similarity_lsh_topk",
-    _LSH_TOPK_ORACLE,
-    doc="approximate cosine top-10 via SRP-LSH buckets — the 100 TB ANN path "
-    "(north star)",
-)
-def q_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return S.lsh_topk(queries, emb, k=10, planes=_PLANES, bands=_BANDS)
 
 
 # ---------------------------------------------------------------------------
@@ -592,7 +153,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _FINGERPRINT_ORACLE = f"""
-WITH {_SQL_EXACT_BASE}
+WITH {SQL_EXACT_BASE}
 SELECT md5({sql_norm_text('text')}) AS fingerprint,
        md5(substr({sql_norm_text('text')}, 1, 64)) AS prefix_fingerprint,
        count(*) AS n_docs,
@@ -608,7 +169,7 @@ GROUP BY 1, 2
     doc="content fingerprint (full + 64-char prefix) collision groups (north star)",
 )
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _docs_with_exact_dups(spark, sf_dir)
+    base = docs_with_exact_dups(spark, sf_dir)
     return (
         base.select(
             "doc_id",
@@ -624,141 +185,6 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF-style top-k: coarse quantizer = the label column; probe scans
-# only the query's cell. At scale the corpus is partitioned by label
-# on disk → partition-pruned probes.
-# ---------------------------------------------------------------------------
-
-_IVF_TOPK_ORACLE = f"""
-WITH q AS (
-    SELECT vec_id AS query_id, embedding AS qe, label
-    FROM embeddings WHERE vec_id % 100 = 0
-),
-c AS (SELECT vec_id, embedding AS ce, label FROM embeddings),
-scored AS (
-    SELECT q.query_id, c.vec_id AS neighbor_id,
-           {_sql_cosine('qe', 'ce')} AS cosine
-    FROM q JOIN c ON q.label = c.label
-    WHERE q.query_id <> c.vec_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id, cosine,
-           row_number() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cosine
-FROM ranked WHERE rank <= 10
-"""
-
-
-@register(
-    "similarity_ivf_topk",
-    _IVF_TOPK_ORACLE,
-    doc="IVF-style ANN: label column as coarse quantizer, partition-prunable "
-    "probe (north star)",
-)
-def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding", "label"
-    )
-    return S.ivf_topk(queries, emb, k=10)
-
-
-# nprobe>1 recall knob (round-3 verdict item 7): rank cells by cosine
-# affinity to integer-quantized centroid DIRECTIONS (floor(x·2^20)
-# elementwise sums — exact power-of-two quantize + exact BIGINT sums,
-# so the centroid is bit-reproducible in DuckDB; cosine's scale
-# invariance makes sum ≡ mean for ranking), probe the top-2 cells per
-# query. An approximate operator with an exact oracle, like the SRP
-# path above.
-_IVF_NPROBE = 2
-
-_IVF_NPROBE_ORACLE = f"""
-WITH q AS (
-    SELECT vec_id AS query_id, embedding AS qe
-    FROM embeddings WHERE vec_id % 100 = 0
-),
-cent AS (
-    SELECT label, list(CAST(s AS DOUBLE) ORDER BY pos) AS cvec
-    FROM (
-        SELECT label, g.i AS pos,
-               CAST(sum(CAST(floor(CAST(embedding[g.i] AS DOUBLE)
-                                   * 1048576.0) AS BIGINT)) AS BIGINT) AS s
-        FROM embeddings, generate_series(1, 64) AS g(i)
-        GROUP BY label, g.i
-    )
-    GROUP BY label
-),
-affinity AS (
-    SELECT q.query_id, cent.label,
-           {_sql_cosine('qe', 'cvec')} AS aff
-    FROM q CROSS JOIN cent
-),
-probed AS (
-    SELECT query_id, label FROM (
-        SELECT query_id, label,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY aff DESC, label) AS rn
-        FROM affinity
-    ) WHERE rn <= {_IVF_NPROBE}
-),
-scored AS (
-    SELECT q.query_id, c.vec_id AS neighbor_id,
-           {_sql_cosine('qe', 'c.embedding')} AS cosine
-    FROM q
-    JOIN probed p ON q.query_id = p.query_id
-    JOIN embeddings c ON c.label = p.label
-    WHERE q.query_id <> c.vec_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id, cosine,
-           row_number() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cosine
-FROM ranked WHERE rank <= 10
-"""
-
-
-@register(
-    "similarity_ivf_topk_nprobe2",
-    _IVF_NPROBE_ORACLE,
-    doc="IVF ANN with nprobe=2: top-2 cells by centroid-direction cosine "
-    "affinity per query — the recall/cost dial (north star, round-3 "
-    "verdict item 7)",
-)
-def q_sim_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return S.ivf_topk_nprobe(queries, emb, k=10, nprobe=_IVF_NPROBE)
-
-
-# Iterative algorithm class (driver contract: non-SQL-expressible →
-# rows-only check): Lloyd's k-means over the embedding column. Each
-# iteration's input is the previous iteration's global state, which no
-# single SQL statement expresses; invariants (inertia monotone,
-# assignment self-consistency, determinism) are asserted in
-# tests/test_clustering.py instead.
-@register(
-    "kmeans_embedding_clusters",
-    None,
-    doc="Lloyd's k-means (k=8, 3 iters, deterministic init/ties) over "
-    "embeddings — the iterative-algorithm class; map-side assign + "
-    "skinny-agg update (north star; invariants in tests/test_clustering.py)",
-)
-def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.clustering import kmeans_lloyd
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_lloyd(emb, id_col="vec_id", k=8, iters=3)
-
-
-# ---------------------------------------------------------------------------
 # Corpus curation capstone: the full training-data pipeline in ONE
 # lazy plan — quality scoring + language ID (both map-side) → policy
 # filter → exact dedup (hash-groupBy on the md5 fingerprint). The
@@ -770,7 +196,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sql_corpus_curation() -> str:
+def sql_corpus_curation() -> str:
     stop_en = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
     hit_cols = ",\n           ".join(
         f"len(list_filter(toks, x -> x IN ({', '.join(chr(39) + w + chr(39) for w in words)}))) AS hits_{lang}"
@@ -820,7 +246,7 @@ GROUP BY md5(t)
 
 @register(
     "corpus_curation_pipeline",
-    _sql_corpus_curation(),
+    sql_corpus_curation(),
     doc="end-to-end training-data curation: quality score + lang-ID "
     "(map-side) -> policy filter -> exact dedup; ONE shuffle total, "
     "keyed on the md5 fingerprint (north star capstone)",
@@ -848,119 +274,6 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("n_tokens").alias("n_tokens"),
             F.min("quality_score").alias("quality_score"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Approximate set-similarity JOIN (cross-corpus): corrupted probe docs
-# (70% token prefixes of doc_id%7 originals, id +30M) matched back
-# against the full corpus via LSH bucket intersection + exact-Jaccard
-# verify. The "dedup the new crawl against the training corpus" op —
-# candidates cost bucket collisions, never |Q|x|C|.
-# ---------------------------------------------------------------------------
-
-_SIMJOIN_OFFSET = 30_000_000
-_SJ_THRESHOLD = 0.5
-
-
-def _sql_simjoin_oracle() -> str:
-    from ..operators.dedup import MINHASH_A, MINHASH_B, MINHASH_P
-
-    mins = ",\n           ".join(
-        f"list_aggregate(list_transform(hh, h -> (h * {MINHASH_A[i]} + {MINHASH_B[i]}) % {MINHASH_P}), 'min') AS m{i}"
-        for i in range(_NUM_HASHES)
-    )
-
-    def band_rows(src: str) -> str:
-        return "\n    UNION ALL\n".join(
-            f"    SELECT doc_id, {b} AS band, "
-            + " + ".join(f"m{b * _ROWS + r}" for r in range(_ROWS))
-            + f" AS band_sig FROM {src}"
-            for b in range(_BANDS)
-        )
-
-    shingle_sign = """
-{name}_shingled AS (
-    SELECT doc_id, {sh} AS sh
-    FROM (SELECT doc_id, {toks} AS toks FROM {base}) t
-),
-{name}_signed AS (
-    SELECT doc_id, sh, {mins}
-    FROM (SELECT doc_id, sh, list_transform(sh, s -> {h32}) AS hh
-          FROM {name}_shingled WHERE len(sh) > 0) x
-)"""
-
-    def block(name: str, base: str) -> str:
-        return shingle_sign.format(
-            name=name,
-            base=base,
-            sh=sql_word_shingles("toks", _NGRAM),
-            toks=sql_tokens("text"),
-            mins=mins,
-            h32=sql_hash32("s"),
-        )
-
-    return f"""
-WITH qtok AS (
-    SELECT doc_id, {sql_tokens('text')} AS toks FROM documents
-    WHERE doc_id % 7 = 0
-),
-qbase AS (
-    -- CAST the fraction to DOUBLE: DuckDB parses 0.7 as DECIMAL
-    -- (exact, 90*0.7 = 63) while Spark multiplies doubles
-    -- (62.999... -> floor 62); the cast pins IEEE semantics on
-    -- both engines.
-    SELECT doc_id + {_SIMJOIN_OFFSET} AS doc_id,
-           array_to_string(
-               list_slice(toks, 1,
-                   greatest(3, CAST(floor(len(toks) * CAST(0.7 AS DOUBLE)) AS INT))),
-               ' ') AS text
-    FROM qtok
-),
-cbase AS (SELECT doc_id, text FROM documents),
-{block('q', 'qbase')},
-{block('c', 'cbase')},
-qbands AS (
-{band_rows('q_signed')}
-),
-cbands AS (
-{band_rows('c_signed')}
-),
-cand AS (
-    SELECT DISTINCT q.doc_id AS query_id, c.doc_id AS corpus_id
-    FROM qbands q JOIN cbands c
-      ON q.band = c.band AND q.band_sig = c.band_sig
-)
-SELECT cd.query_id, cd.corpus_id,
-       CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-           / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE) AS jaccard
-FROM cand cd
-JOIN q_shingled sa ON sa.doc_id = cd.query_id
-JOIN c_shingled sb ON sb.doc_id = cd.corpus_id
-WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-          / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE) >= {_SJ_THRESHOLD}
-"""
-
-
-@register(
-    "similarity_join_corpus",
-    _sql_simjoin_oracle(),
-    doc="approximate set-similarity JOIN: corrupted probes vs full corpus "
-    "via LSH bucket intersection + Jaccard verify (north star — dedup "
-    "the new crawl against the training corpus)",
-)
-def q_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tk = tokens(F.col("text"))
-    keep_n = F.greatest(F.lit(3), F.floor(F.size(tk) * 0.7).cast("int"))
-    probes = docs.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + _SIMJOIN_OFFSET).alias("doc_id"),
-        F.array_join(F.slice(tk, F.lit(1), keep_n), " ").alias("text"),
-    )
-    return D.minhash_similarity_join(
-        probes, docs, "doc_id", "text",
-        ngram=_NGRAM, num_hashes=_NUM_HASHES, bands=_BANDS,
-        threshold=_SJ_THRESHOLD,
     )
 
 
@@ -1048,57 +361,6 @@ def q_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         < rate
     )
     return docs.where(keep).select("doc_id", "lang", "source")
-
-
-# ---------------------------------------------------------------------------
-# Prefix-filtered EXACT Jaccard join (AllPairs/PPJoin): the engineered
-# exact path that retires the quadratic baseline. The oracle is the
-# straight uncapped ground truth (full inverted-index join) — the
-# prefix filter must reproduce it exactly or the hash fails, which is
-# precisely the property that makes the filter safe to deploy.
-# ---------------------------------------------------------------------------
-
-_PJ_THRESHOLD = 0.5
-
-_PREFIX_JACCARD_ORACLE = f"""
-WITH {_SQL_NEARDUP_BASE},
-shingled AS (
-    SELECT doc_id, {sql_word_shingles('toks', _NGRAM)} AS sh
-    FROM (SELECT doc_id, {sql_tokens('text')} AS toks FROM base) t
-),
-sized AS (SELECT doc_id, sh, len(sh) AS n_sh FROM shingled WHERE len(sh) > 0),
-exploded AS (SELECT doc_id, unnest(sh) AS shingle FROM sized),
-shared AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-    FROM exploded a JOIN exploded b
-      ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-)
-SELECT s.doc_a, s.doc_b,
-       CAST(s.shared AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - s.shared AS DOUBLE) AS jaccard
-FROM shared s
-JOIN sized sa ON sa.doc_id = s.doc_a
-JOIN sized sb ON sb.doc_id = s.doc_b
-WHERE CAST(s.shared AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - s.shared AS DOUBLE)
-      >= {_PJ_THRESHOLD}
-"""
-
-
-@register(
-    "dedup_prefix_jaccard",
-    _PREFIX_JACCARD_ORACLE,
-    doc="EXACT Jaccard near-dup join via AllPairs/PPJoin prefix filtering "
-    "(rarest-first canonical order, index only |d|-ceil(t|d|)+1 shingles); "
-    "oracle is the uncapped all-pairs ground truth, so the filter's "
-    "exactness is hash-checked (north star)",
-)
-def q_dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ensure_parallelism: the shingle+index build is the CPU stage and
-    # the test corpus is a single-row-group file (no-op at real scale).
-    base = ensure_parallelism(_docs_with_neardups(spark, sf_dir))
-    return D.prefix_jaccard_pairs(
-        base, "doc_id", "text", ngram=_NGRAM, threshold=_PJ_THRESHOLD
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1231,27 +493,23 @@ SELECT doc_id, n_shared_grams FROM flagged
 """
 
 
-@register(
-    "corpus_decontamination",
-    _DECONTAMINATION_ORACLE,
-    doc="benchmark decontamination: training docs sharing any "
-    f"{_DECON_NGRAM}-gram with the (broadcast-small) eval set, counted "
-    "per doc — broadcast semi-join, zero training-corpus shuffle "
-    "(north star)",
-)
-def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _planted_contamination(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(eval_grams, train_raw) of the planted-contamination setup the
+    decontamination oracles' eval_grams / train_raw CTEs mirror: docs
+    with doc_id % 50 == 0 play the eval set, and every 9th training doc
+    gets the first 12 tokens of one eval doc appended."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    eval_docs = docs.where(F.col("doc_id") % 50 == 0).select(
+    eval_side = docs.where(F.col("doc_id") % 50 == 0)
+    eval_docs = eval_side.select(
         F.col("doc_id").alias("eval_id"), tokens(F.col("text")).alias("toks")
     )
     eval_grams = (
-        D.with_shingles(
-            docs.where(F.col("doc_id") % 50 == 0), "doc_id", "text", _DECON_NGRAM
-        )
+        D.with_shingles(eval_side, "doc_id", "text", _DECON_NGRAM)
         .select(F.explode("shingles").alias("gram"))
         .distinct()
     )
-    # Planted contamination mirroring the oracle's train_raw CTE.
     leak = F.when(
         (F.col("doc_id") % 9 == 0) & F.col("eval_id").isNotNull(),
         F.concat(F.lit(" "), F.array_join(F.slice("toks", 1, 12), " ")),
@@ -1265,6 +523,19 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", F.concat("text", leak).alias("text"))
     )
+    return eval_grams, train_raw
+
+
+@register(
+    "corpus_decontamination",
+    _DECONTAMINATION_ORACLE,
+    doc="benchmark decontamination: training docs sharing any "
+    f"{_DECON_NGRAM}-gram with the (broadcast-small) eval set, counted "
+    "per doc — broadcast semi-join, zero training-corpus shuffle "
+    "(north star)",
+)
+def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+    eval_grams, train_raw = _planted_contamination(spark, sf_dir)
     train = D.with_shingles(train_raw, "doc_id", "text", _DECON_NGRAM).select(
         "doc_id", F.explode("shingles").alias("gram")
     )
@@ -1347,7 +618,7 @@ def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Context-window chunking (round-4 extension): fixed-token-budget
+# Context-window chunking: fixed-token-budget
 # chunks with strided overlap — the training-batch preparation step.
 # One in-plan `sequence` + explode per doc; output rows ∝ corpus
 # tokens / stride, the plan is pure map-side (PLANS.md). The oracle
@@ -1391,7 +662,7 @@ FROM chunked
     "corpus_chunking",
     _CHUNKING_ORACLE,
     doc="context-window chunking: 64-token chunks, stride 48 (overlap 16) — "
-    "training-batch prep, pure map-side sequence+explode (north star, r4)",
+    "training-batch prep, pure map-side sequence+explode (north star)",
 )
 def q_corpus_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1399,7 +670,7 @@ def q_corpus_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Boilerplate segments (round-4 extension): a non-overlapping 32-token
+# Boilerplate segments: a non-overlapping 32-token
 # segment recurring in >= 3 DISTINCT documents is boilerplate (the C4
 # line-frequency rule, applied to token segments because the synthetic
 # docs are single-line; operators/text_analysis.boilerplate_line_stats
@@ -1431,7 +702,7 @@ GROUP BY s.doc_id
     "corpus_boilerplate_segments",
     _BOILER_ORACLE,
     doc="boilerplate detection: 32-token segments recurring in >=3 distinct "
-    "docs; per-doc boilerplate ratio (C4 rule on segments; north star, r4)",
+    "docs; per-doc boilerplate ratio (C4 rule on segments; north star)",
 )
 def q_corpus_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1458,7 +729,7 @@ def q_corpus_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Greedy sequence packing (round-4 extension): docs → fixed-budget
+# Greedy sequence packing: docs → fixed-budget
 # training sequences. The per-group fold is inherently sequential
 # (each placement depends on the running fill), so the Spark side is
 # the documented applyInPandas escape hatch; the oracle replays the
@@ -1501,7 +772,7 @@ FROM packed
     "corpus_sequence_packing",
     _PACKING_ORACLE,
     doc="greedy fixed-budget sequence packing per language (applyInPandas "
-    "sequential fold; recursive-CTE oracle) (north star, r4)",
+    "sequential fold; recursive-CTE oracle) (north star)",
 )
 def q_corpus_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1514,110 +785,8 @@ def q_corpus_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Dedup-cluster resolution (round-4 extension): pairs → components.
-# The pair graph links orig → first copy → second copy as a CHAIN
-# (consecutive ids within each fingerprint group), so min-label
-# propagation genuinely has to walk diameter 2 — while the oracle can
-# state the fixpoint directly (component = group-min over the
-# fingerprint partition). An exact oracle for an iterative algorithm.
-# ---------------------------------------------------------------------------
-
-_CC_OFFSET_B, _CC_OFFSET_C = 20_000_000, 30_000_000
-
-_CC_ORACLE = f"""
-WITH base AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + {_CC_OFFSET_B} AS doc_id, text
-    FROM documents WHERE doc_id % 3 = 0
-    UNION ALL
-    SELECT doc_id + {_CC_OFFSET_C} AS doc_id, text
-    FROM documents WHERE doc_id % 6 = 0
-),
-fp AS (
-    SELECT doc_id, md5({sql_norm_text('text')}) AS f FROM base
-),
-counted AS (
-    SELECT doc_id,
-           count(*) OVER (PARTITION BY f) AS c,
-           min(doc_id) OVER (PARTITION BY f) AS m
-    FROM fp
-)
-SELECT doc_id AS node, CAST(m AS BIGINT) AS component
-FROM counted WHERE c >= 2
-"""
-
-
-@register(
-    "dedup_connected_components",
-    _CC_ORACLE,
-    doc="dedup pairs -> clusters via min-label-propagation connected "
-    "components (iterative class, like kmeans, but with an exact "
-    "fixpoint oracle); chain edges force diameter-2 walks (north star, r4)",
-)
-def q_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = (
-        docs.unionByName(
-            docs.where(F.col("doc_id") % 3 == 0).select(
-                (F.col("doc_id") + _CC_OFFSET_B).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 6 == 0).select(
-                (F.col("doc_id") + _CC_OFFSET_C).alias("doc_id"), "text"
-            )
-        )
-    )
-    fp = base.select("doc_id", F.md5(norm_text(F.col("text"))).alias("f"))
-    w = W.partitionBy("f").orderBy("doc_id")
-    edges = (
-        fp.withColumn("nxt", F.lead("doc_id").over(w))
-        .where(F.col("nxt").isNotNull())
-        .select(F.col("doc_id").alias("src"), F.col("nxt").alias("dst"))
-    )
-    return D.connected_components(edges)
-
-
-@register(
-    "dedup_connected_components_star",
-    _CC_ORACLE,  # same fixpoint, different algorithm — shared oracle
-    doc="same cluster resolution via alternating large-star/small-star "
-    "contraction (O(log^2) rounds — the deep-graph variant); sharing "
-    "the propagation query's exact oracle cross-checks the two "
-    "algorithms against each other (north star, r5)",
-)
-def q_dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = (
-        docs.unionByName(
-            docs.where(F.col("doc_id") % 3 == 0).select(
-                (F.col("doc_id") + _CC_OFFSET_B).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 6 == 0).select(
-                (F.col("doc_id") + _CC_OFFSET_C).alias("doc_id"), "text"
-            )
-        )
-    )
-    fp = base.select("doc_id", F.md5(norm_text(F.col("text"))).alias("f"))
-    w = W.partitionBy("f").orderBy("doc_id")
-    edges = (
-        fp.withColumn("nxt", F.lead("doc_id").over(w))
-        .where(F.col("nxt").isNotNull())
-        .select(F.col("doc_id").alias("src"), F.col("nxt").alias("dst"))
-    )
-    return D.connected_components_star(edges)
-
-
-# ---------------------------------------------------------------------------
-# Heavy hitters via Misra-Gries (round-4 ext; r8 oracle upgrade, r7
-# verdict item 3): the mergeable-sketch twin of token_frequency_topn.
+# Heavy hitters via Misra-Gries: the mergeable-sketch twin of
+# token_frequency_topn.
 # The raw estimates depend on the physical partitioning (legitimately
 # — the sketch is defined per stream split), so they can never be
 # hash-checked. The registered output is instead the sketch's
@@ -1658,7 +827,7 @@ LIMIT {_HH_SLICE}
     "rows per partition instead of a vocabulary-wide shuffle), hash-"
     "certified in-query: output = exact counts of the deterministic "
     "top-32 slice + the sketch's partitioning-independent invariant "
-    "flags, oracle expects all-ones (north star, r4; r8 upgrade)",
+    "flags, oracle expects all-ones (north star)",
 )
 def q_token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("text")
@@ -1698,66 +867,7 @@ def q_token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# int8 embedding quantization (round-4 ext): symmetric per-vector
-# codes — the 100 TB embedding-storage transform (4× under float32).
-# Lossy, yet bitwise-oracle-checkable: every step is elementwise
-# double arithmetic in one pinned expression order.
-# ---------------------------------------------------------------------------
-
-_QUANTIZE_ORACLE = """
-WITH scaled AS (
-    SELECT vec_id, embedding,
-           CASE WHEN list_max(list_transform(embedding,
-                    x -> abs(CAST(x AS DOUBLE)))) = 0.0
-                THEN 1.0
-                ELSE list_max(list_transform(embedding,
-                    x -> abs(CAST(x AS DOUBLE)))) END AS scale
-    FROM embeddings
-),
-coded AS (
-    SELECT vec_id, embedding, scale,
-           list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 / scale + 0.5) AS INT)
-           ) AS q_embedding
-    FROM scaled
-)
-SELECT vec_id, scale,
-       array_to_string(q_embedding, ',') AS q_codes,
-       list_max(
-           list_transform(
-               generate_series(1, len(embedding)),
-               i -> abs(CAST(embedding[i] AS DOUBLE)
-                        - CAST(q_embedding[i] AS DOUBLE) * scale / 127.0)
-           )
-       ) AS max_abs_err
-FROM coded
-"""
-
-
-@register(
-    "embedding_quantize_int8",
-    _QUANTIZE_ORACLE,
-    doc="symmetric per-vector int8 quantization of embeddings with "
-    "self-reported reconstruction error — lossy transform, exact oracle "
-    "(north star, r4; r6: codes final-projected to a joined string so "
-    "the driver canonicalizer never sees a top-level array — the r4/r5 "
-    "crash class, now swept registry-wide by tests/test_schema_audit.py)",
-)
-def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = S.quantize_embeddings_int8(emb)
-    return out.select(
-        "vec_id",
-        "scale",
-        F.array_join(
-            F.transform("q_embedding", lambda c: c.cast("string")), ","
-        ).alias("q_codes"),
-        "max_abs_err",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Training-batch build capstone (round-4 ext): the full context-window
+# Training-batch build capstone: the full context-window
 # path in ONE lazy plan — chunk (map-side) → exact-dedup chunks (one
 # md5 groupBy; strided overlap makes repeated chunks common) → greedy
 # pack survivors into fixed-budget sequences per language. Composes
@@ -1813,7 +923,7 @@ FROM packed
     _TRAINING_BUILD_ORACLE,
     doc="capstone: chunk -> exact-dedup chunks -> greedy-pack survivors "
     "into fixed-budget sequences per language, one lazy plan; composed "
-    "recursive-CTE oracle (north star, r4)",
+    "recursive-CTE oracle (north star)",
 )
 def q_corpus_training_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -1850,7 +960,7 @@ def q_corpus_training_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Repetition stats (round-5 ext): the Gopher/MassiveText repetition
+# Repetition stats: the Gopher/MassiveText repetition
 # rule — the fraction of a document's token trigrams that are
 # duplicates. Boilerplate-stuffed and looped generations score high;
 # the companion keep-flag applies the published <=0.30 duplicate-
@@ -1896,7 +1006,7 @@ FROM tri
     _REPETITION_ORACLE,
     doc="Gopher-style repetition rule: duplicate-trigram fraction per doc "
     "+ <=0.30 keep flag; pure map-side array expressions, zero shuffle "
-    "(north star, r5)",
+    "(north star)",
 )
 def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1934,7 +1044,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bloom-prefiltered decontamination (round-5 ext): the same planted-
+# Bloom-prefiltered decontamination: the same planted-
 # contamination setup as corpus_decontamination, but the eval-gram
 # membership test goes through a Catalyst-built Bloom filter
 # (operators/joins.bloom_semi_prefilter) BEFORE the exact confirm
@@ -1952,35 +1062,12 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="decontamination via Catalyst-built Bloom prefilter (fixed-size "
     "bitmap broadcast, map-side membership test, no false negatives) + "
     "exact confirm join — bitwise-identical result to the broadcast "
-    "semi-join, proven by sharing its oracle (north star, r5)",
+    "semi-join, proven by sharing its oracle (north star)",
 )
 def q_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.joins import bloom_semi_prefilter
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    eval_docs = docs.where(F.col("doc_id") % 50 == 0).select(
-        F.col("doc_id").alias("eval_id"), tokens(F.col("text")).alias("toks")
-    )
-    eval_grams = (
-        D.with_shingles(
-            docs.where(F.col("doc_id") % 50 == 0), "doc_id", "text", _DECON_NGRAM
-        )
-        .select(F.explode("shingles").alias("gram"))
-        .distinct()
-    )
-    leak = F.when(
-        (F.col("doc_id") % 9 == 0) & F.col("eval_id").isNotNull(),
-        F.concat(F.lit(" "), F.array_join(F.slice("toks", 1, 12), " ")),
-    ).otherwise(F.lit(""))
-    train_raw = (
-        docs.where(F.col("doc_id") % 50 != 0)
-        .join(
-            F.broadcast(eval_docs),
-            (F.col("doc_id") % 10) * 50 == F.col("eval_id"),
-            "left",
-        )
-        .select("doc_id", F.concat("text", leak).alias("text"))
-    )
+    eval_grams, train_raw = _planted_contamination(spark, sf_dir)
     # Shingling+hashing is the CPU stage; a single-row-group test file
     # pins it to one task (readers.ensure_parallelism is a no-op
     # whenever the scan already yields >= cores splits).
@@ -1996,7 +1083,7 @@ def q_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus unigram statistics (round-5 ext): the two-pass global-
+# Corpus unigram statistics: the two-pass global-
 # statistic shape every corpus-level quality scorer needs — pass 1
 # aggregates a corpus-wide token-frequency table (shuffle on token,
 # output ~vocabulary-sized); pass 2 broadcasts it back over the
@@ -2046,7 +1133,7 @@ GROUP BY d.doc_id
     "(vocabulary-sized) broadcast back over the corpus — per-doc OOV "
     f"rate vs the top-{_VOCAB_TOP} vocabulary and mean token corpus "
     "frequency (unigram perplexity proxy); exact BIGINT arithmetic "
-    "until the terminal divisions (north star, r5)",
+    "until the terminal divisions (north star)",
 )
 def q_corpus_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -2088,7 +1175,7 @@ def q_corpus_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Boilerplate REMOVAL with ordered reassembly (round-5 ext): the step
+# Boilerplate REMOVAL with ordered reassembly: the step
 # after detection (corpus_boilerplate_segments stops at flagging) —
 # drop every 32-token segment recurring in >= 3 distinct documents and
 # rebuild each document's cleaned text in original segment order, the
@@ -2162,7 +1249,7 @@ GROUP BY s.doc_id
     doc="boilerplate REMOVAL: drop segments recurring in >=3 docs and "
     "reassemble each doc's cleaned text in segment order (C4/RefinedWeb "
     "rewrite step); recurring set broadcast, classification map-side, "
-    "one reassembly shuffle (north star, r5)",
+    "one reassembly shuffle (north star)",
 )
 def q_corpus_boilerplate_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2215,7 +1302,7 @@ def q_corpus_boilerplate_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TF-IDF top terms per document (round-5 ext): the keyword-extraction
+# TF-IDF top terms per document: the keyword-extraction
 # / topic-tagging pass of a curation pipeline. Two global statistics
 # (document count, per-token document frequency) broadcast back over
 # the per-doc term frequencies; per-doc top-3 by a rank window.
@@ -2266,7 +1353,7 @@ FROM ranked WHERE rnk <= {_TFIDF_TOPN}
     doc=f"TF-IDF top-{_TFIDF_TOPN} terms per doc: integer-scaled idf "
     "(N*1000 div df — exact BIGINT scores, no libm parity bet), "
     "vocabulary-sized df broadcast, one (doc_id,tok) shuffle "
-    "(north star, r5)",
+    "(north star)",
 )
 def q_corpus_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -2305,132 +1392,7 @@ def q_corpus_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SemDeDup — semantic dedup via cluster-then-prune (round-5 ext,
-# after Abbas et al. 2023, arXiv:2303.09540): restrict pairwise
-# cosine comparison to members of the same semantic cell and drop
-# every member with a higher id than some near-identical neighbor
-# (cos >= tau). The cell is the embeddings' coarse `label` (the same
-# deterministic cell the IVF index probes), so the quadratic work is
-# per-cell, not corpus-wide: with k ~ sqrt(N) balanced cells the
-# total comparison count is N^1.5, and each cell's pair set stays on
-# one partition (shuffle key = label). Near-identical variants are
-# planted (last 4 of 64 dims zeroed, id +40M, same cell) because the
-# synthetic embeddings have no organic near-dups (within-cell max
-# cosine 0.47); tau=0.9 catches exactly the planted ones. Verdict per
-# vector: keep + diagnostics, the SemDeDup decision surface.
-# ---------------------------------------------------------------------------
-
-_SEMDEDUP_TAU = 0.9
-_SEMDEDUP_OFFSET = 40_000_000
-
-_SEMDEDUP_BASE_SQL = f"""
-base AS (
-    SELECT vec_id, label,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
-    UNION ALL
-    SELECT vec_id + {_SEMDEDUP_OFFSET}, label,
-           list_transform(generate_series(1, len(embedding)),
-                          i -> CASE WHEN i <= len(embedding) - 4
-                                    THEN CAST(embedding[i] AS DOUBLE)
-                                    ELSE 0.0 END)
-    FROM embeddings WHERE vec_id % 10 = 0
-)"""
-
-# The quadratic stage scores each pair with ONE dot product over
-# PRE-NORMALIZED vectors (x / sqrt(dot(v,v)) once per vector), not
-# cosine per pair (dot + two norms = 3 folds/pair): ~3x less work in
-# the only stage that scales with pair count. Re-evaluating the norm
-# per element in SQL yields bitwise-identical doubles, so the two
-# engines agree despite different evaluation counts.
-_SEMDEDUP_ORACLE = f"""
-WITH {_SEMDEDUP_BASE_SQL},
-normed AS (
-    SELECT vec_id, label,
-           list_transform(v, x -> x / sqrt({_SQL_DOT.format(a='v', b='v')}))
-               AS nv
-    FROM base
-),
-pairs AS (
-    SELECT b.vec_id AS vid, {_SQL_DOT.format(a='a.nv', b='b.nv')} AS c
-    FROM normed a JOIN normed b
-      ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE {_SQL_DOT.format(a='a.nv', b='b.nv')} >= {_SEMDEDUP_TAU}
-),
-agg AS (
-    SELECT vid, CAST(count(*) AS BIGINT) AS n_dups,
-           max(c) AS max_dup_cosine
-    FROM pairs GROUP BY vid
-)
-SELECT e.vec_id, e.label,
-       coalesce(a.n_dups, 0) AS n_dups,
-       a.max_dup_cosine AS max_dup_cosine,
-       (a.vid IS NULL) AS keep
-FROM base e LEFT JOIN agg a ON a.vid = e.vec_id
-"""
-
-
-@register(
-    "dedup_semantic_clusters",
-    _SEMDEDUP_ORACLE,
-    doc="SemDeDup: within-cell pairwise cosine prune (keep lowest id "
-    "per near-dup set, tau=0.9); quadratic work confined per cell, "
-    "planted last-4-dims-zeroed variants are the positives "
-    "(north star, r5)",
-)
-def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    to_d = F.transform(F.col("embedding"), lambda v: v.cast("double"))
-    base = emb.select("vec_id", "label", to_d.alias("v"))
-    d = F.size(F.col("v"))
-    variant = F.transform(
-        F.col("v"),
-        lambda v, i: F.when(i < d - 4, v).otherwise(F.lit(0.0)),
-    )
-    var = base.where(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + _SEMDEDUP_OFFSET).alias("vec_id"),
-        "label",
-        variant.alias("v"),
-    )
-    full = base.unionByName(var)
-    # Normalize ONCE per vector (norm materialized as its own column
-    # first — referencing the fold inside the transform lambda would
-    # re-run it per element, the with_shingles expression trap), so
-    # the per-pair score in the quadratic stage is a single dot.
-    normed = full.withColumn("__n__", S.norm(F.col("v"))).select(
-        "vec_id",
-        "label",
-        F.transform(F.col("v"), lambda x: x / F.col("__n__")).alias("nv"),
-    )
-    a = normed.select(
-        F.col("vec_id").alias("a_id"), "label", F.col("nv").alias("av")
-    )
-    b = normed.select(
-        F.col("vec_id").alias("vid"), "label", F.col("nv").alias("bv")
-    )
-    pairs = (
-        a.join(b, "label")
-        .where(F.col("a_id") < F.col("vid"))
-        .select("vid", S.dot(F.col("av"), F.col("bv")).alias("c"))
-        .where(F.col("c") >= _SEMDEDUP_TAU)
-    )
-    agg = pairs.groupBy("vid").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_dups"),
-        F.max("c").alias("max_dup_cosine"),
-    )
-    return full.join(
-        agg, full.vec_id == agg.vid, "left"
-    ).select(
-        "vec_id",
-        "label",
-        F.coalesce("n_dups", F.lit(0).cast("bigint")).alias("n_dups"),
-        "max_dup_cosine",
-        F.col("vid").isNull().alias("keep"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Exact-K per-stratum sample (round-5 ext): the distributed analogue
+# Exact-K per-stratum sample: the distributed analogue
 # of reservoir sampling, made deterministic — rank every doc inside
 # its stratum by the engine-shared md5 hash of its id (a fixed random
 # permutation) and keep the first K. Same guarantees as a reservoir
@@ -2463,7 +1425,7 @@ FROM ranked WHERE rnk <= {_RESERVOIR_K}
     _RESERVOIR_ORACLE,
     doc=f"exact-{_RESERVOIR_K}-per-stratum deterministic sample "
     "(reservoir semantics via hash-rank window; uniform without "
-    "replacement, reproducible across engines) (north star, r5)",
+    "replacement, reproducible across engines) (north star)",
 )
 def q_corpus_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
@@ -2483,7 +1445,7 @@ def q_corpus_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Train/val/test split (round-5 ext): deterministic hash-mod
+# Train/val/test split: deterministic hash-mod
 # assignment (80/10/10 on the shared md5 hash — stable under corpus
 # growth: a doc's split never changes when other docs arrive, unlike
 # rank-based splits) + per-(split, lang) token accounting. Pure
@@ -2518,7 +1480,7 @@ GROUP BY split, lang
     _SPLIT_ORACLE,
     doc="deterministic 80/10/10 train/val/test hash split (assignment "
     "stable under corpus growth) + per-(split,lang) token accounting "
-    "(north star, r5)",
+    "(north star)",
 )
 def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
@@ -2543,7 +1505,7 @@ def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE merge learning (round-5 ext): tokenizer VOCABULARY TRAINING —
+# BPE merge learning: tokenizer VOCABULARY TRAINING —
 # the inherently iterative LLM-pipeline step (each merge changes what
 # the next pair count sees). Distributed shape: per round one
 # vocabulary-keyed pair-count shuffle + ONE collected row (the
@@ -2562,8 +1524,1050 @@ def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     None,  # iterative argmax+rewrite: exact-vs-reference pytest, rows-only
     doc="BPE tokenizer-vocabulary training: top-8 merges over the corpus "
     "(iterative pair-count + greedy in-plan merge; driver sees one row "
-    "per round) (north star, r5)",
+    "per round) (north star)",
 )
 def q_corpus_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return TA.bpe_learn_merges(docs, "text", k=8)
+
+
+# ---------------------------------------------------------------------------
+# Corpus domain-mix report — the curation dashboard number: per
+# (source, lang) doc counts, char/token totals, and corpus share in
+# integer ppm (total broadcast back via a 1-row cross join, never a
+# window over the whole corpus). Every figure integer-exact.
+# ---------------------------------------------------------------------------
+
+_DOMAIN_MIX_ORACLE = f"""
+WITH per AS (
+    SELECT source, lang, count(*) AS n_docs,
+           sum(n_chars) AS total_chars,
+           sum(len({sql_tokens('text')})) AS total_tokens
+    FROM documents GROUP BY 1, 2
+),
+tot AS (SELECT sum(n_docs) AS n FROM per)
+SELECT per.source, per.lang, per.n_docs,
+       CAST(per.total_chars AS BIGINT) AS total_chars,
+       CAST(per.total_tokens AS BIGINT) AS total_tokens,
+       CAST(per.n_docs * 1000000 // tot.n AS BIGINT) AS share_ppm
+FROM per, tot
+"""
+
+
+@register(
+    "corpus_domain_mix_report",
+    _DOMAIN_MIX_ORACLE,
+    doc="per-(source, lang) corpus mix report: doc counts, char/token "
+    "totals, integer-ppm share (broadcast 1-row total, no "
+    "whole-corpus window) (LLM-pipeline reporting ext)",
+)
+def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    per = docs.groupBy("source", "lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").cast("bigint").alias("total_chars"),
+        F.sum(F.size(tokens(F.col("text")))).cast("bigint").alias(
+            "total_tokens"
+        ),
+    )
+    tot = per.agg(F.sum("n_docs").alias("n"))
+    return per.crossJoin(F.broadcast(tot)).select(
+        "source",
+        "lang",
+        "n_docs",
+        "total_chars",
+        "total_tokens",
+        F.expr("(n_docs * 1000000) div n").cast("bigint").alias("share_ppm"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Bigram language-model counts — the n-gram LM building block: map-
+# side bigram expansion (transform over the token array, no
+# self-join), count per (w1, w2), integer-ppm conditional probability
+# against the w1 total, top-3 continuations per w1. At 100 TB this is
+# one shuffle on the bigram and one on w1 — the classic two-pass LM
+# count job.
+# ---------------------------------------------------------------------------
+
+_LM_MIN_TOTAL = 50
+
+_BIGRAM_ORACLE = f"""
+WITH tokd AS (
+    SELECT doc_id, {sql_tokens('text')} AS toks FROM documents
+),
+bg AS (
+    SELECT unnest(list_transform(
+               generate_series(1, len(toks) - 1),
+               i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS s
+    FROM tokd WHERE len(toks) >= 2
+),
+pairs AS (
+    SELECT s.w1 AS w1, s.w2 AS w2, count(*) AS c
+    FROM bg GROUP BY 1, 2
+),
+tot AS (
+    SELECT w1, sum(c) AS total FROM pairs GROUP BY 1
+),
+ranked AS (
+    SELECT p.w1, p.w2, p.c, t.total,
+           row_number() OVER (
+               PARTITION BY p.w1 ORDER BY p.c DESC, p.w2) AS rnk
+    FROM pairs p JOIN tot t USING (w1)
+    WHERE t.total >= {_LM_MIN_TOTAL}
+)
+SELECT w1, w2, CAST(c AS BIGINT) AS c,
+       CAST(total AS BIGINT) AS w1_total,
+       CAST(c * 1000000 // total AS BIGINT) AS prob_ppm,
+       CAST(rnk AS BIGINT) AS rnk
+FROM ranked WHERE rnk <= 3
+"""
+
+
+def _bigrams(tokd: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, w1, w2): one row per adjacent pair of each ``toks``
+    array, expanded map-side; arrays under two tokens drop out."""
+    return (
+        tokd.where(F.size("toks") >= 2)
+        .select(
+            *keep,
+            F.explode(
+                F.expr(
+                    "transform(sequence(0, size(toks) - 2), "
+                    "i -> struct(toks[i] AS w1, toks[i + 1] AS w2))"
+                )
+            ).alias("s"),
+        )
+        .select(*keep, "s.w1", "s.w2")
+    )
+
+
+def _bigram_model(bg: DataFrame) -> DataFrame:
+    """(w1, w2, c, total, ppm): count per bigram, count per w1, and
+    the integer-ppm conditional probability c * 1e6 div total."""
+    pairs = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
+    tot = pairs.groupBy("w1").agg(F.sum("c").alias("total"))
+    return pairs.join(tot, "w1").withColumn(
+        "ppm", F.expr("c * 1000000 div total").cast("bigint")
+    )
+
+
+@register(
+    "corpus_bigram_lm",
+    _BIGRAM_ORACLE,
+    doc="bigram LM counts: map-side bigram expansion, (w1,w2) count + "
+    "w1 totals, integer-ppm conditional probability, top-3 "
+    "continuations per w1 (LLM-pipeline ext)",
+)
+def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select("text")
+    bg = _bigrams(docs.select(tokens(F.col("text")).alias("toks")))
+    w = Window.partitionBy("w1").orderBy(F.col("c").desc(), F.col("w2"))
+    return (
+        _bigram_model(bg)
+        .where(F.col("total") >= _LM_MIN_TOTAL)
+        .withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= 3)
+        .select(
+            "w1",
+            "w2",
+            F.col("c").cast("bigint").alias("c"),
+            F.col("total").cast("bigint").alias("w1_total"),
+            F.col("ppm").alias("prob_ppm"),
+            F.col("rnk").cast("bigint").alias("rnk"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# BPE encode (apply) — closes the tokenizer loop opened by
+# corpus_bpe_merges (train). Encodes the corpus with a PRETRAINED
+# 8-merge table (the tokenizer-shipping pattern: train once offline,
+# apply everywhere) — learned once from the sf0.001 documents corpus
+# by bpe_learn_merges and baked as a literal. With the merge table
+# fixed, the k fold replays are deterministic SQL:
+# the oracle replays the SAME merges as k composed CTE stages, each a
+# DuckDB list_reduce implementing the identical greedy left-to-right
+# fold, so the query is fully hash-checkable. Train-then-encode
+# round-tripping stays exact vs the sequential reference in
+# tests/test_bpe_merges.py (which also pins this fixed table's
+# provenance).
+# ---------------------------------------------------------------------------
+
+# Learned from sf0.001 documents (k=8, 2026-08-14); merge 7 composes
+# merge 6's output ('p' + 'ar'), exercising multi-char symbols.
+BPE_PRETRAINED_MERGES: tuple[tuple[str, str], ...] = (
+    ("e", "r"),
+    ("o", "r"),
+    ("i", "n"),
+    ("o", "w"),
+    ("s", "t"),
+    ("l", "u"),
+    ("a", "r"),
+    ("p", "ar"),
+)
+
+
+def _sql_bpe_fold(list_expr: str, left: str, right: str) -> str:
+    """One greedy merge replay as a DuckDB list_reduce over a symbol
+    list, returning the chr(31)-joined symbol string. Same semantics
+    as the Catalyst fold in operators/text_analysis.py::bpe_encode:
+    merge when the accumulated string's LAST SYMBOL equals `left`
+    (suffix check anchored on the separator) and the next symbol
+    equals `right`."""
+    le = left.replace("'", "''")
+    ri = right.replace("'", "''")
+    return (
+        f"list_reduce({list_expr}, (acc, s) -> "
+        f"CASE WHEN (acc = '{le}' OR ends_with(acc, chr(31) || '{le}')) "
+        f"AND s = '{ri}' THEN acc || '{ri}' "
+        f"ELSE acc || chr(31) || s END)"
+    )
+
+
+def _bpe_encode_oracle() -> str:
+    stages = []
+    prev = "syms"
+    for i, (le, ri) in enumerate(BPE_PRETRAINED_MERGES):
+        src = prev if i == 0 else f"string_split({prev}, chr(31))"
+        stages.append(
+            f"e{i} AS (SELECT w, {_sql_bpe_fold(src, le, ri)} AS enc{i} "
+            f"FROM e{i - 1 if i else 'base'})"
+        )
+        prev = f"enc{i}"
+    last = len(BPE_PRETRAINED_MERGES) - 1
+    stage_sql = ",\n".join(stages)
+    return f"""
+WITH tok AS (
+    SELECT doc_id,
+           unnest(list_transform(
+               generate_series(1, len(toks)),
+               i -> struct_pack(pos := i, w := toks[i]))) AS e
+    FROM (SELECT doc_id, {sql_tokens('text')} AS toks FROM documents)
+),
+t2 AS (SELECT doc_id, e.pos AS pos, e.w AS w FROM tok WHERE length(e.w) > 0),
+ebase AS (
+    SELECT w, list_transform(generate_series(1, length(w)), i -> w[i]) AS syms
+    FROM (SELECT DISTINCT w FROM t2)
+),
+{stage_sql},
+encw AS (
+    SELECT w, enc{last} AS enc,
+           len(string_split(enc{last}, chr(31))) AS n_syms
+    FROM e{last}
+),
+agg AS (
+    SELECT t2.doc_id,
+           count(*) AS n_tokens,
+           sum(n_syms) AS n_symbols,
+           md5(string_agg(enc, chr(31) ORDER BY pos)) AS sym_fp
+    FROM t2 JOIN encw USING (w)
+    GROUP BY t2.doc_id
+)
+SELECT d.doc_id,
+       CAST(coalesce(a.n_tokens, 0) AS INT) AS n_tokens,
+       CAST(coalesce(a.n_symbols, 0) AS INT) AS n_symbols,
+       coalesce(a.sym_fp, md5('')) AS sym_fp
+FROM documents d LEFT JOIN agg a USING (doc_id)
+"""
+
+
+@register(
+    "corpus_bpe_encode",
+    _bpe_encode_oracle(),
+    doc="BPE apply with a pretrained 8-merge table (literal; learned "
+    "offline from sf0.001 docs — the train-once/apply-everywhere "
+    "tokenizer pattern): vocabulary-level fold replay, zero shuffles "
+    "in the encode path; oracle replays the same merges as 8 "
+    "composed list_reduce CTE stages (LLM-pipeline tokenizer ext)",
+)
+def q_corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return TA.bpe_encode(docs, list(BPE_PRETRAINED_MERGES), "text")
+
+
+# ---------------------------------------------------------------------------
+# LM-based quality scoring — the model-based filtering step (CCNet /
+# Gopher style: score each document under a language model, bucket,
+# keep the fluent tiers). The "model" is the corpus's own bigram
+# table (self-scoring device at test scale; in production the counts
+# come from a reference corpus and arrive as a join input — the plan
+# is identical). Scoring is log-free integer arithmetic: a doc's
+# score is the integer MEAN of its bigrams' conditional
+# probabilities in ppm — a monotone fluency proxy with none of the
+# libm (ln/exp) cross-engine parity risk perplexity would carry.
+# Tiers = ntile(4) over the deterministic (score, doc_id) order.
+# ---------------------------------------------------------------------------
+
+_LM_SCORE_ORACLE = f"""
+WITH tokd AS (
+    SELECT doc_id, {sql_tokens('text')} AS toks FROM documents
+),
+bg AS (
+    SELECT doc_id,
+           unnest(list_transform(
+               generate_series(1, len(toks) - 1),
+               i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS s
+    FROM tokd WHERE len(toks) >= 2
+),
+docbg AS (SELECT doc_id, s.w1 AS w1, s.w2 AS w2 FROM bg),
+pairs AS (
+    SELECT w1, w2, count(*) AS c FROM docbg GROUP BY 1, 2
+),
+tot AS (SELECT w1, sum(c) AS total FROM pairs GROUP BY 1),
+model AS (
+    SELECT p.w1, p.w2, CAST(p.c * 1000000 // t.total AS BIGINT) AS ppm
+    FROM pairs p JOIN tot t USING (w1)
+),
+scored AS (
+    SELECT d.doc_id, count(*) AS n_bigrams,
+           CAST(sum(m.ppm) // count(*) AS BIGINT) AS score_ppm
+    FROM docbg d JOIN model m USING (w1, w2)
+    GROUP BY d.doc_id
+)
+SELECT t.doc_id,
+       CAST(coalesce(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
+       CAST(coalesce(s.score_ppm, 0) AS BIGINT) AS score_ppm,
+       CAST(ntile(4) OVER (
+           ORDER BY coalesce(s.score_ppm, 0), t.doc_id) AS BIGINT)
+           AS quality_tier
+FROM tokd t LEFT JOIN scored s USING (doc_id)
+"""
+
+
+@register(
+    "corpus_lm_quality_score",
+    _LM_SCORE_ORACLE,
+    doc="LM-based quality filter (CCNet-style): score each doc by the "
+    "integer-ppm mean of its bigrams' conditional probabilities "
+    "(log-free fluency proxy, no libm parity risk), quartile tiers "
+    "over the deterministic order (LLM-pipeline ext)",
+)
+def q_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    tokd = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
+    # Read twice: model build + scoring.
+    docbg = track_persist(_bigrams(tokd, "doc_id"))
+    scored = (
+        docbg.join(_bigram_model(docbg), ["w1", "w2"])
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_bigrams"),
+            F.expr("sum(ppm) div count(1)").cast("bigint").alias("score_ppm"),
+        )
+    )
+    # Tiering WITHOUT the single-task global ntile window: exact
+    # global rank via range-sort + broadcast partition offsets
+    # (operators/window_metrics.with_global_rank), then the bit-exact
+    # ntile(4) bucket formula from the broadcast total count. Left
+    # side is the raw doc-id frame, NOT tokd: the final join only
+    # needs which docs exist, and joining through tokd re-tokenizes
+    # every document a second time for nothing.
+    from ..operators.window_metrics import ntile_from_rank, with_global_rank
+
+    base = docs.select("doc_id").join(scored, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("n_bigrams", F.lit(0)).cast("bigint").alias("n_bigrams"),
+        F.coalesce("score_ppm", F.lit(0)).cast("bigint").alias("score_ppm"),
+    )
+    ranked = with_global_rank(base, ["score_ppm", "doc_id"])
+    total = ranked.agg(F.count(F.lit(1)).cast("long").alias("__total__"))
+    return ranked.join(F.broadcast(total)).select(
+        "doc_id",
+        "n_bigrams",
+        "score_ppm",
+        ntile_from_rank(F.col("global_rank"), F.col("__total__"), 4)
+        .cast("bigint")
+        .alias("quality_tier"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Curation capstone v2 — composes the curation operators into one lazy
+# plan, the way a production crawl-refresh job would run them:
+# (1) canonical-URL dedup (keep the min doc per canonical key),
+# (2) LM-quality scoring over the SURVIVORS (bigram integer-ppm mean,
+#     built from the survivors themselves), drop the bottom quartile,
+# (3) deterministic exact-K per-(source, lang) rebalance (hash-rank
+#     window, same policy as corpus_reservoir_sample).
+# Every stage is a shuffle on a real key (canonical URL, bigram, w1,
+# stratum) — no all-pairs, no collects; the oracle composes the same
+# three stages as CTEs, so the integration — not just each operator —
+# is hash-checked.
+# ---------------------------------------------------------------------------
+
+_V2_KEEP_PER_STRATUM = 15
+
+_CURATION_V2_ORACLE = f"""
+WITH raw AS (
+    SELECT doc_id, lang, source, text, {URL_SQL} AS url FROM documents
+),
+canon AS (
+    SELECT doc_id, lang, source, text,
+           concat(
+               lower(regexp_extract(url, '^([A-Za-z]+)://', 1)), '://',
+               regexp_replace(regexp_replace(
+                   lower(regexp_extract(url, '^[A-Za-z]+://([^/?#]+)', 1)),
+                   '^www\\.', ''), ':443$', ''),
+               regexp_replace(regexp_replace(
+                   regexp_extract(url, '^[A-Za-z]+://[^/?#]+([^?#]*)', 1),
+                   '/index\\.html$', ''), '/+$', '')) AS ckey
+    FROM raw
+),
+survivors AS (
+    SELECT doc_id, lang, source, text FROM (
+        SELECT *, row_number() OVER (
+            PARTITION BY ckey ORDER BY doc_id) AS rn
+        FROM canon
+    ) WHERE rn = 1
+),
+tokd AS (
+    SELECT doc_id, lang, source, {sql_tokens('text')} AS toks FROM survivors
+),
+bg AS (
+    SELECT doc_id,
+           unnest(list_transform(
+               generate_series(1, len(toks) - 1),
+               i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS s
+    FROM tokd WHERE len(toks) >= 2
+),
+docbg AS (SELECT doc_id, s.w1 AS w1, s.w2 AS w2 FROM bg),
+pairs AS (SELECT w1, w2, count(*) AS c FROM docbg GROUP BY 1, 2),
+tot AS (SELECT w1, sum(c) AS total FROM pairs GROUP BY 1),
+model AS (
+    SELECT p.w1, p.w2, CAST(p.c * 1000000 // t.total AS BIGINT) AS ppm
+    FROM pairs p JOIN tot t USING (w1)
+),
+scored AS (
+    SELECT d.doc_id, CAST(sum(m.ppm) // count(*) AS BIGINT) AS score_ppm
+    FROM docbg d JOIN model m USING (w1, w2) GROUP BY d.doc_id
+),
+tiered AS (
+    SELECT t.doc_id, t.lang, t.source,
+           coalesce(s.score_ppm, 0) AS score_ppm,
+           ntile(4) OVER (ORDER BY coalesce(s.score_ppm, 0), t.doc_id)
+               AS tier
+    FROM tokd t LEFT JOIN scored s USING (doc_id)
+),
+kept AS (SELECT * FROM tiered WHERE tier >= 2),
+ranked AS (
+    SELECT doc_id, lang, source, score_ppm,
+           row_number() OVER (
+               PARTITION BY source, lang
+               ORDER BY {sql_hash32("CAST(doc_id AS VARCHAR)", "cur2")},
+                        doc_id) AS rnk
+    FROM kept
+)
+SELECT doc_id, lang, source, CAST(score_ppm AS BIGINT) AS score_ppm,
+       CAST(rnk AS BIGINT) AS rnk
+FROM ranked WHERE rnk <= {_V2_KEEP_PER_STRATUM}
+"""
+
+
+@register(
+    "corpus_curation_v2",
+    _CURATION_V2_ORACLE,
+    doc="curation capstone: canonical-URL dedup -> self-trained LM "
+    "quality tiering (drop bottom quartile) -> deterministic exact-K "
+    "per-(source, lang) rebalance, one lazy plan; composed-CTE oracle "
+    "hash-checks the integration (LLM-pipeline capstone)",
+)
+def q_corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source", "text"
+    )
+    url = F.expr(URL_SQL)
+    scheme = F.lower(F.regexp_extract(url, r"^([A-Za-z]+)://", 1))
+    host = F.regexp_replace(
+        F.regexp_replace(
+            F.lower(F.regexp_extract(url, r"^[A-Za-z]+://([^/?#]+)", 1)),
+            r"^www\.",
+            "",
+        ),
+        r":443$",
+        "",
+    )
+    path = F.regexp_replace(
+        F.regexp_replace(
+            F.regexp_extract(url, r"^[A-Za-z]+://[^/?#]+([^?#]*)", 1),
+            r"/index\.html$",
+            "",
+        ),
+        r"/+$",
+        "",
+    )
+    ckey = F.concat(scheme, F.lit("://"), host, path)
+    wdedup = Window.partitionBy("ckey").orderBy("doc_id")
+    survivors = (
+        docs.withColumn("ckey", ckey)
+        .withColumn("rn", F.row_number().over(wdedup))
+        .where(F.col("rn") == 1)
+        .select("doc_id", "lang", "source", "text")
+    )
+
+    toks = tokens(F.col("text"))
+    tokd = survivors.select("doc_id", "lang", "source", toks.alias("toks"))
+    docbg = track_persist(_bigrams(tokd, "doc_id"))
+    scored = (
+        docbg.join(_bigram_model(docbg), ["w1", "w2"])
+        .groupBy("doc_id")
+        .agg(F.expr("sum(ppm) div count(1)").cast("bigint").alias("score_ppm"))
+    )
+    # Join through the survivor id/stratum columns, not tokd — avoids
+    # re-tokenizing every survivor just to carry (lang, source); and
+    # tier via the distributed global-rank ntile, not the single-task
+    # unpartitioned window (see corpus_lm_quality_score).
+    from ..operators.window_metrics import ntile_from_rank, with_global_rank
+
+    scored_docs = survivors.select("doc_id", "lang", "source").join(
+        scored, "doc_id", "left"
+    ).select(
+        "doc_id",
+        "lang",
+        "source",
+        F.coalesce("score_ppm", F.lit(0)).cast("bigint").alias("score_ppm"),
+    )
+    ranked = with_global_rank(scored_docs, ["score_ppm", "doc_id"])
+    total = ranked.agg(F.count(F.lit(1)).cast("long").alias("__total__"))
+    tiered = ranked.join(F.broadcast(total)).select(
+        "doc_id",
+        "lang",
+        "source",
+        "score_ppm",
+        ntile_from_rank(F.col("global_rank"), F.col("__total__"), 4).alias(
+            "tier"
+        ),
+    )
+    kept = tiered.where(F.col("tier") >= 2)
+    wr = Window.partitionBy("source", "lang").orderBy(
+        hash32(F.col("doc_id").cast("string"), "cur2"), "doc_id"
+    )
+    return (
+        kept.withColumn("rnk", F.row_number().over(wr))
+        .where(F.col("rnk") <= _V2_KEEP_PER_STRATUM)
+        .select(
+            "doc_id",
+            "lang",
+            "source",
+            "score_ppm",
+            F.col("rnk").cast("bigint").alias("rnk"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Token-budget fill per stratum — the mix-building step that runs
+# AFTER quality filtering: each language gets a fixed token budget,
+# filled greedily in quality order (longest-doc-first proxy here;
+# any score column slots in) until the budget is exhausted. One
+# PARTITIONED cumulative-sum window (per-lang — never the global
+# single-task shape §12.2 closed); a doc is kept iff it STARTS within
+# budget, so exactly one doc may straddle the boundary — the
+# deterministic greedy-fill rule. Integer token counts throughout.
+# ---------------------------------------------------------------------------
+
+_BUDGET_TOKENS = 10_000
+
+_BUDGET_FILL_ORACLE = f"""
+WITH tokd AS (
+    SELECT doc_id, lang,
+           CAST(len({sql_tokens('text')}) AS BIGINT) AS n_tokens
+    FROM documents
+),
+cum AS (
+    SELECT doc_id, lang, n_tokens,
+           sum(n_tokens) OVER (
+               PARTITION BY lang
+               ORDER BY n_tokens DESC, doc_id
+               ROWS UNBOUNDED PRECEDING) - n_tokens AS cum_before
+    FROM tokd
+)
+SELECT doc_id, lang, n_tokens, CAST(cum_before AS BIGINT) AS cum_before
+FROM cum WHERE cum_before < {_BUDGET_TOKENS}
+"""
+
+
+@register(
+    "corpus_budget_fill",
+    _BUDGET_FILL_ORACLE,
+    doc="per-language token-budget fill (greedy by quality order, one "
+    "partitioned cumsum window — never the global single-task shape); "
+    "keep iff the doc STARTS within budget (LLM-pipeline mix ext)",
+)
+def q_corpus_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "text"
+    )
+    tokd = docs.select(
+        "doc_id",
+        "lang",
+        F.size(tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
+    )
+    w = (
+        Window.partitionBy("lang")
+        .orderBy(F.col("n_tokens").desc(), "doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        tokd.withColumn(
+            "cum_before", F.sum("n_tokens").over(w) - F.col("n_tokens")
+        )
+        .where(F.col("cum_before") < _BUDGET_TOKENS)
+        .select(
+            "doc_id",
+            "lang",
+            "n_tokens",
+            F.col("cum_before").cast("bigint").alias("cum_before"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Decontamination by OVERLAP FRACTION — the published
+# threshold rule (GPT-3 appendix C / common n-gram decontamination):
+# a training doc is dropped only when the FRACTION of its n-grams
+# shared with the eval set crosses a threshold, not on any single
+# hit (the binary-hit variants are corpus_decontamination and its
+# Bloom-prefiltered twin; this adds the per-doc denominator and the
+# keep/drop decision). Same planted-contamination setup; all shares in
+# integer basis points so the decision is exact in both engines. The
+# eval-gram set broadcasts; the per-doc denominator is a map-side
+# distinct inside the same shingle pass — no extra corpus shuffle.
+# ---------------------------------------------------------------------------
+
+_OVERLAP_DROP_BP = 1000  # drop if > 10% of the doc's grams are shared
+
+_OVERLAP_SHINGLES = sql_word_shingles("toks", 8)
+
+_DECON_OVERLAP_ORACLE = f"""
+WITH eval_docs AS (
+    SELECT doc_id, {sql_tokens('text')} AS toks FROM documents
+    WHERE doc_id % 50 = 0
+),
+eval_grams AS (
+    SELECT DISTINCT unnest({_OVERLAP_SHINGLES}) AS gram FROM eval_docs
+),
+train_raw AS (
+    SELECT t.doc_id,
+           t.text || CASE WHEN t.doc_id % 9 = 0 AND e.doc_id IS NOT NULL
+                          THEN ' ' || array_to_string(list_slice(e.toks, 1, 12), ' ')
+                          ELSE '' END AS text
+    FROM documents t
+    LEFT JOIN eval_docs e ON e.doc_id = (t.doc_id % 10) * 50
+    WHERE t.doc_id % 50 <> 0
+),
+train AS (
+    SELECT doc_id, unnest({_OVERLAP_SHINGLES}) AS gram
+    FROM (SELECT doc_id, {sql_tokens('text')} AS toks FROM train_raw) t
+),
+per_doc AS (
+    SELECT tr.doc_id,
+           count(DISTINCT tr.gram) AS n_grams,
+           count(DISTINCT CASE WHEN e.gram IS NOT NULL THEN tr.gram END)
+               AS n_shared
+    FROM train tr LEFT JOIN eval_grams e ON tr.gram = e.gram
+    GROUP BY tr.doc_id
+)
+SELECT doc_id,
+       CAST(n_grams AS BIGINT) AS n_grams,
+       CAST(n_shared AS BIGINT) AS n_shared,
+       CAST(n_shared * 10000 // greatest(n_grams, 1) AS BIGINT)
+           AS overlap_bp,
+       (n_shared * 10000 // greatest(n_grams, 1)) > {_OVERLAP_DROP_BP}
+           AS drop_doc
+FROM per_doc
+"""
+
+
+@register(
+    "corpus_decontamination_overlap",
+    _DECON_OVERLAP_ORACLE,
+    doc="decontamination by overlap FRACTION (GPT-3-style threshold "
+    "rule): per-doc distinct-gram denominator + shared-gram count in "
+    "one shingle pass, integer basis points, keep/drop verdict "
+    "(LLM-pipeline ext)",
+)
+def q_decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    eval_grams, train_raw = _planted_contamination(spark, sf_dir)
+    eval_grams = eval_grams.withColumn("__hit__", F.lit(1))
+    train = D.with_shingles(
+        train_raw, "doc_id", "text", _DECON_NGRAM
+    ).select("doc_id", F.explode("shingles").alias("gram"))
+    per_doc = (
+        train.join(F.broadcast(eval_grams), "gram", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.countDistinct("gram").alias("n_grams"),
+            F.countDistinct(
+                F.when(F.col("__hit__").isNotNull(), F.col("gram"))
+            ).alias("n_shared"),
+        )
+    )
+    bp = F.expr("n_shared * 10000 div greatest(n_grams, 1)")
+    return per_doc.select(
+        "doc_id",
+        F.col("n_grams").cast("bigint").alias("n_grams"),
+        F.col("n_shared").cast("bigint").alias("n_shared"),
+        bp.cast("bigint").alias("overlap_bp"),
+        (bp > _OVERLAP_DROP_BP).alias("drop_doc"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Quality-CLASSIFIER inference (the fasttext-style filter of real
+# pretraining pipelines, distinct from the heuristic composite in
+# text_quality_stats): a trained logistic-regression model applied as
+# PURE CATALYST EXPRESSIONS — the weights are literals in the plan,
+# so inference is a map-side projection with whole-stage codegen, no
+# UDF, no shuffle until nothing (per-doc output). All arithmetic is
+# integer fixed-point (ppm features x micro-logit weights), so the
+# DuckDB oracle replays it bit-for-bit with no float-order hazard;
+# the sigmoid is a clamped piecewise-linear approximation computed on
+# a shifted NON-NEGATIVE operand (Spark `div` truncates toward zero
+# while DuckDB `//` floors — they only agree on non-negatives, so the
+# clamp happens BEFORE the divide).
+#
+# Scale: per-doc map work, trivially 100 TB-safe; the model rides in
+# the plan (no broadcast, no lookup join).
+# ---------------------------------------------------------------------------
+
+_QC_BIAS = -2_500_000  # micro-logits
+_QC_W_TTR = 3          # per ppm of type-token ratio
+_QC_W_STOP = 2         # per ppm of stopword ratio
+_QC_W_PUNCT = -4       # per ppm of punct-per-char
+_QC_W_LEN = 8_000      # per token, capped at 200
+
+
+def _qc_stop_list() -> str:
+    return ", ".join(f"'{w}'" for w in STOPWORDS["en"])
+
+
+def _qc_scores_ctes(carry: str = "") -> str:
+    """The classifier oracle's CTE chain ending in a ``scores``
+    relation (doc_id{carry}, logit_micro, prob_ppm, keep) so dependent
+    oracles (per-domain calibration) replay the IDENTICAL arithmetic;
+    ``carry`` is an extra projected column list like ``, source``."""
+    return f"""tokd AS (
+    SELECT doc_id{carry}, {sql_norm_text('text')} AS t FROM documents
+),
+feats AS (
+    SELECT doc_id{carry},
+           len(string_split(t, ' ')) AS n_tokens,
+           len(list_distinct(string_split(t, ' '))) AS n_distinct,
+           len(list_filter(string_split(t, ' '),
+                           x -> x IN ({_qc_stop_list()}))) AS stop_hits,
+           length(regexp_replace(t, '[a-z0-9\\s]', '', 'g')) AS punct,
+           length(t) AS n_chars
+    FROM tokd
+),
+ppm AS (
+    SELECT doc_id{carry}, n_tokens,
+           1000000 * n_distinct // n_tokens AS ttr_ppm,
+           1000000 * stop_hits // n_tokens AS stop_ppm,
+           1000000 * punct // n_chars AS punct_ppm
+    FROM feats WHERE n_tokens > 0 AND n_chars > 0
+),
+logits AS (
+    SELECT doc_id{carry},
+           CAST({_QC_BIAS}
+                + {_QC_W_TTR} * ttr_ppm
+                + {_QC_W_STOP} * stop_ppm
+                + {_QC_W_PUNCT} * punct_ppm
+                + {_QC_W_LEN} * least(n_tokens, 200) AS BIGINT) AS logit_micro
+    FROM ppm
+),
+scores AS (
+    SELECT doc_id{carry},
+           logit_micro,
+           CAST(greatest(0, least(8000000, logit_micro + 4000000)) // 8
+                AS BIGINT) AS prob_ppm,
+           CAST(CASE WHEN logit_micro >= 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
+    FROM logits
+)"""
+
+
+QUALITY_CLASSIFIER_ORACLE = f"""
+WITH {_qc_scores_ctes()}
+SELECT doc_id, logit_micro, prob_ppm, keep FROM scores
+"""
+
+
+def classifier_scores(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """The classifier as a reusable STATELESS projection over any
+    (doc_id, text) frame — batch or stream (it contains no aggregate,
+    no window, no state), which is what lets the streaming twin reuse
+    the identical Catalyst expressions AND the identical oracle.
+
+    ``carry`` names extra input columns to pass through unchanged
+    (e.g. the domain for per-domain calibration) — carrying them in
+    the projection is free and avoids a corpus self-join later.
+    """
+    carry = tuple(carry)
+    t = norm_text(F.col("text"))
+    staged = docs.select(
+        "doc_id",
+        *carry,
+        F.split(t, " ").alias("toks"),
+        F.length(F.regexp_replace(t, r"[a-z0-9\s]", "")).cast("bigint").alias("punct"),
+        F.length(t).cast("bigint").alias("n_chars"),
+    )
+    n_tokens = F.size("toks").cast("bigint")
+    feats = staged.select(
+        "doc_id",
+        *carry,
+        n_tokens.alias("n_tokens"),
+        F.size(F.array_distinct("toks")).cast("bigint").alias("n_distinct"),
+        F.size(F.filter("toks", lambda x: x.isin(*STOPWORDS["en"])))
+        .cast("bigint")
+        .alias("stop_hits"),
+        "punct",
+        "n_chars",
+    ).where((F.col("n_tokens") > 0) & (F.col("n_chars") > 0))
+    # Integer ppm features, then the literal-weight dot product. `div`
+    # (Spark) == `//` (DuckDB) here because every numerator is
+    # non-negative; the sigmoid operand is clamped non-negative BEFORE
+    # its divide for the same reason.
+    ppm = feats.select(
+        "doc_id",
+        *carry,
+        "n_tokens",
+        F.expr("1000000 * n_distinct div n_tokens").alias("ttr_ppm"),
+        F.expr("1000000 * stop_hits div n_tokens").alias("stop_ppm"),
+        F.expr("1000000 * punct div n_chars").alias("punct_ppm"),
+    )
+    logit = (
+        F.lit(_QC_BIAS).cast("bigint")
+        + F.lit(_QC_W_TTR) * F.col("ttr_ppm")
+        + F.lit(_QC_W_STOP) * F.col("stop_ppm")
+        + F.lit(_QC_W_PUNCT) * F.col("punct_ppm")
+        + F.lit(_QC_W_LEN) * F.least(F.col("n_tokens"), F.lit(200).cast("bigint"))
+    ).cast("bigint")
+    return (
+        ppm.select("doc_id", *carry, logit.alias("logit_micro"))
+        .withColumn(
+            "_shifted",
+            F.greatest(
+                F.lit(0).cast("bigint"),
+                F.least(
+                    F.lit(8_000_000).cast("bigint"),
+                    F.col("logit_micro") + F.lit(4_000_000),
+                ),
+            ),
+        )
+        .select(
+            "doc_id",
+            *carry,
+            "logit_micro",
+            F.expr("_shifted div 8").cast("bigint").alias("prob_ppm"),
+            F.when(F.col("logit_micro") >= 0, F.lit(1))
+            .otherwise(F.lit(0))
+            .cast("bigint")
+            .alias("keep"),
+        )
+    )
+
+
+@register(
+    "quality_classifier_inference",
+    QUALITY_CLASSIFIER_ORACLE,
+    doc="logistic-regression quality classifier applied as pure Catalyst "
+    "expressions: literal trained weights x integer-ppm text features -> "
+    "micro-logit, clamped piecewise-linear sigmoid (non-negative operand "
+    "before the divide so Spark div == DuckDB //), keep decision; the "
+    "fasttext-filter role of LLM pipelines as a map-side codegen "
+    "projection, no UDF",
+)
+def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return classifier_scores(docs)
+
+
+# ---------------------------------------------------------------------------
+# Domain MIXTURE allocation with temperature flattening (the data-
+# mixing step of multilingual/multi-source pretraining: sample domains
+# proportional to count^alpha so small domains are up-weighted;
+# alpha = 0.5 here, i.e. weight = floor(sqrt(count)), which both
+# engines compute identically because IEEE sqrt is correctly rounded
+# and every count is far below 2^50). The integer budget is then
+# apportioned by the LARGEST-REMAINDER method: base = B*w // W,
+# leftover seats go to the largest remainders (ties broken by source
+# asc) — all integer arithmetic, so the allocation is exact and the
+# oracle replays it bit-for-bit.
+#
+# Scale: the only full-corpus work is the per-source count (one
+# partial-agg shuffle of #domains rows); everything after operates on
+# DOMAIN cardinality (thousands at most), so the unpartitioned
+# rank-over-remainders window is bounded by output size, not corpus
+# size — same justification as the k-bounded kmeans collect.
+# ---------------------------------------------------------------------------
+
+_MIX_BUDGET = 10_000
+
+_DOMAIN_MIXTURE_ORACLE = f"""
+WITH counts AS (
+    SELECT source, CAST(count(*) AS BIGINT) AS cnt
+    FROM documents GROUP BY source
+),
+weights AS (
+    SELECT source, cnt,
+           CAST(floor(sqrt(CAST(cnt AS DOUBLE))) AS BIGINT) AS w
+    FROM counts
+),
+tot AS (
+    SELECT source, cnt, w, sum(w) OVER () AS tot_w FROM weights
+),
+seats AS (
+    SELECT source, cnt, w,
+           {_MIX_BUDGET} * w // tot_w AS base_alloc,
+           {_MIX_BUDGET} * w % tot_w AS rem,
+           {_MIX_BUDGET} - sum({_MIX_BUDGET} * w // tot_w) OVER () AS leftover
+    FROM tot
+),
+ranked AS (
+    SELECT source, cnt, w, base_alloc, leftover,
+           row_number() OVER (ORDER BY rem DESC, source ASC) AS rnk
+    FROM seats
+)
+SELECT source, cnt, w AS weight,
+       CAST(base_alloc AS BIGINT) AS base_alloc,
+       CAST(base_alloc + CASE WHEN rnk <= leftover THEN 1 ELSE 0 END
+            AS BIGINT) AS alloc
+FROM ranked
+"""
+
+
+@register(
+    "corpus_domain_mixture",
+    _DOMAIN_MIXTURE_ORACLE,
+    doc="temperature-flattened domain mixture allocation (weight = "
+    "floor(sqrt(count)), i.e. alpha=0.5 sampling) apportioned over an "
+    "integer budget by the largest-remainder method — the data-mixing "
+    "step of a multi-source pretraining pipeline; corpus-scale work is "
+    "one count shuffle, everything else is domain-cardinality",
+)
+def q_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    docs = load_table(spark, sf_dir, "documents").select("source")
+    counts = docs.groupBy("source").agg(F.count("*").cast("bigint").alias("cnt"))
+    weights = counts.withColumn(
+        "w", F.floor(F.sqrt(F.col("cnt").cast("double"))).cast("bigint")
+    )
+    # Domain-cardinality windows from here down (bounded by #sources).
+    everything = Window.partitionBy()
+    seats = weights.withColumn("tot_w", F.sum("w").over(everything)).select(
+        "source",
+        "cnt",
+        "w",
+        F.expr(f"{_MIX_BUDGET} * w div tot_w").alias("base_alloc"),
+        (F.lit(_MIX_BUDGET) * F.col("w") % F.col("tot_w")).alias("rem"),
+    )
+    seats = seats.withColumn(
+        "leftover", F.lit(_MIX_BUDGET) - F.sum("base_alloc").over(everything)
+    )
+    ranked = seats.withColumn(
+        "rnk",
+        F.row_number().over(
+            Window.partitionBy().orderBy(F.desc("rem"), F.asc("source"))
+        ),
+    )
+    return ranked.select(
+        "source",
+        "cnt",
+        F.col("w").alias("weight"),
+        F.col("base_alloc").cast("bigint").alias("base_alloc"),
+        (
+            F.col("base_alloc")
+            + F.when(F.col("rnk") <= F.col("leftover"), F.lit(1)).otherwise(F.lit(0))
+        )
+        .cast("bigint")
+        .alias("alloc"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Per-domain quality-THRESHOLD calibration (the step after classifier
+# inference in a real pretraining pipeline: a single global cutoff
+# over-prunes domains whose score distribution sits low — news prose
+# scores differently from forum text — so the keep threshold is
+# calibrated PER DOMAIN as an exact order statistic: the k-th smallest
+# micro-logit with k = 3n/10 + 1, i.e. "drop the bottom ~30% of each
+# domain"). Everything is integer: the scores are the classifier's
+# fixed-point micro-logits and the threshold is an element of the
+# score multiset, so the oracle replays it bit-for-bit.
+#
+# Scale: exact per-group order statistics need a per-domain sort —
+# one window shuffle partitioned by domain (parallel across domains;
+# a skewed mega-domain would switch to approx/sampled calibration,
+# documented trade-off). The threshold relation is domain-cardinality,
+# broadcast back; the final aggregate is #domains rows.
+# ---------------------------------------------------------------------------
+
+_QUALITY_CALIBRATION_ORACLE = f"""
+WITH {_qc_scores_ctes(", source")},
+ranked AS (
+    SELECT source, doc_id, logit_micro, keep,
+           row_number() OVER (PARTITION BY source
+                              ORDER BY logit_micro, doc_id) AS rnk,
+           count(*) OVER (PARTITION BY source) AS n
+    FROM scores
+),
+thresholds AS (
+    SELECT source, logit_micro AS threshold_micro
+    FROM ranked WHERE rnk = 3 * n // 10 + 1
+)
+SELECT r.source AS domain,
+       CAST(max(r.n) AS BIGINT) AS n_docs,
+       CAST(max(t.threshold_micro) AS BIGINT) AS threshold_micro,
+       CAST(sum(CASE WHEN r.logit_micro >= t.threshold_micro
+                THEN 1 ELSE 0 END) AS BIGINT) AS n_kept_cal,
+       CAST(sum(r.keep) AS BIGINT) AS n_kept_model
+FROM ranked r JOIN thresholds t ON r.source = t.source
+GROUP BY r.source
+"""
+
+
+@register(
+    "quality_threshold_calibration",
+    _QUALITY_CALIBRATION_ORACLE,
+    doc="per-domain calibration of the quality classifier's keep "
+    "threshold: exact k-th-smallest micro-logit per domain (k = 3n/10 "
+    "+ 1, deterministic doc_id tie-break), domain-cardinality threshold "
+    "relation broadcast back, per-domain kept counts vs the global "
+    "model cutoff; one per-domain window sort + one tiny aggregate",
+)
+def q_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    scores = classifier_scores(docs, carry=("source",)).select(
+        "doc_id", "source", "logit_micro", "keep"
+    )
+    ranked = scores.select(
+        "source",
+        "doc_id",
+        "logit_micro",
+        "keep",
+        F.row_number()
+        .over(
+            Window.partitionBy("source").orderBy(
+                F.asc("logit_micro"), F.asc("doc_id")
+            )
+        )
+        .alias("rnk"),
+        F.count("*").over(Window.partitionBy("source")).alias("n"),
+    )
+    thresholds = ranked.where(F.col("rnk") == F.expr("3 * n div 10 + 1")).select(
+        "source", F.col("logit_micro").alias("threshold_micro")
+    )
+    joined = ranked.join(F.broadcast(thresholds), "source")
+    return joined.groupBy("source").agg(
+        F.max("n").cast("bigint").alias("n_docs"),
+        F.max("threshold_micro").cast("bigint").alias("threshold_micro"),
+        F.sum(
+            F.when(F.col("logit_micro") >= F.col("threshold_micro"), 1).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("n_kept_cal"),
+        F.sum("keep").cast("bigint").alias("n_kept_model"),
+    ).withColumnRenamed("source", "domain")

@@ -1,13 +1,13 @@
 """Technical-indicator suite over the stock view — the analytics a
 user of an S&P-500 ETL actually runs downstream of the reference DAG
 (dags/sp500_dag.py.py computes prev_close/pct_change at :161-176 and
-stops there; Bollinger bands, RSI, EWMA smoothing and drawdown are
-the canonical next layer of that pipeline).
+stops there; SMA crossovers, VWAP, Bollinger bands, RSI, EWMA
+smoothing and drawdown are the canonical next layer of that pipeline).
 
-Stock view convention (shared with rolling_avg_sma7 /
-sma_crossover_signals): symbol = l_partkey, trade_date =
-date(l_shipdate), close = l_extendedprice, deterministic row order
-(trade_date, order_key, line_number). Prices enter integer CENTS via
+Stock view convention (shared with rolling_avg_sma7): symbol =
+l_partkey, trade_date = date(l_shipdate), close = l_extendedprice,
+deterministic row order (trade_date, order_key, line_number). The
+``indicator_*`` plans take prices in integer CENTS via
 ``CAST(floor(close * 100) AS BIGINT)`` — both engines floor the same
 IEEE double, so every downstream comparison is exact integer
 arithmetic with zero float-order dependence.
@@ -27,7 +27,7 @@ Scale design (100 TB):
   ``array_sort(collect_list(struct(...)))`` — JVM codegen, no Python
   boundary — bounded by the per-symbol series length (trading days,
   ~10^4 worst case), never by corpus size. Same boundedness argument
-  as the BPE-encode fold (queries_r6) and the ADPCM state walk.
+  as the BPE-encode fold (queries_corpus) and the ADPCM state walk.
 """
 
 from __future__ import annotations
@@ -35,7 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..io.readers import load_table
+from ..operators.aggregates import dec
 from .registry import register
+
 
 # Shared stock-view SQL prefix (oracle side). Engine side builds the
 # identical frame with the DataFrame API.
@@ -108,7 +110,7 @@ GROUP BY symbol
     _BOLLINGER_ORACLE,
     doc="Bollinger 20/2 band breaks in exact BIGINT arithmetic — "
     "sqrt-free cross-multiplied band test, one symbol-keyed shuffle, "
-    "frame-local window math (r8 indicators suite)",
+    "frame-local window math",
 )
 def q_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -194,7 +196,7 @@ GROUP BY symbol
     _RSI_ORACLE,
     doc="Cutler's 14-period RSI with overbought/oversold thresholds as "
     "exact BIGINT cross-products (10G>7(G+L) / 10G<3(G+L)) — lag diff "
-    "+ one ROWS frame, single symbol-keyed shuffle (r8 indicators suite)",
+    "+ one ROWS frame, single symbol-keyed shuffle",
 )
 def q_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -275,7 +277,7 @@ WHERE rn = n
     "Catalyst aggregate() fold over array_sort(collect_list(struct)) — "
     "inherently-sequential smoothing kept JVM-side and bounded by "
     "series length, oracled by a DuckDB recursive-CTE replay of the "
-    "identical recurrence (r8 indicators suite)",
+    "identical recurrence",
 )
 def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ewma_fold_frame(_stock(spark, sf_dir))
@@ -348,7 +350,7 @@ GROUP BY symbol
     _DRAWDOWN_ORACLE,
     doc="Per-symbol maximum drawdown from the running peak, exact "
     "integer cents — one cumulative-max window + a co-partitioned "
-    "group reduction, single shuffle (r8 indicators suite)",
+    "group reduction, single shuffle",
 )
 def q_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -422,7 +424,7 @@ FROM breadth
     "for direction, date-keyed breadth counts, then the cumulative "
     "A/D line over the calendar-bounded date series — the only "
     "unpartitioned window runs over ~10^4 calendar rows regardless "
-    "of corpus size (r8 indicators wave 2)",
+    "of corpus size",
 )
 def q_advance_decline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -519,7 +521,7 @@ GROUP BY symbol
     "aligned diff series joined on date, covariance/variance "
     "cross-multiplied into exact BIGINT sign and beta>1 tests (same "
     "n^2 denominator cancels); market series is calendar-bounded, "
-    "corpus work stays symbol-partitioned (r8 indicators wave 2)",
+    "corpus work stays symbol-partitioned",
 )
 def q_market_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -596,7 +598,7 @@ GROUP BY symbol
     _VWAP_ORACLE,
     doc="daily VWAP as exact integer fractions (num = sum cents*qty, "
     "den = sum qty; floor-div only at the final projection) reduced "
-    "per symbol — one partial-agg shuffle (r8 indicators wave 2)",
+    "per symbol — one partial-agg shuffle",
 )
 def q_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -691,8 +693,7 @@ WHERE rn = n
     "(sf5*n20 > ss20*nf), long/flat position state machine with "
     "integer-cents realized/unrealized P&L walked per symbol by a "
     "Catalyst aggregate() fold over the sorted series, oracled by a "
-    "recursive-CTE replay of the identical machine (r8 indicators "
-    "wave 2)",
+    "recursive-CTE replay of the identical machine",
 )
 def q_sma_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return backtest_frame(_stock(spark, sf_dir))
@@ -804,7 +805,7 @@ GROUP BY symbol
     _STOCHASTIC_ORACLE,
     doc="stochastic %K(14) with overbought/oversold as exact BIGINT "
     "cross-products over rolling min/max frames — one symbol-keyed "
-    "shuffle (r8 indicators wave 3)",
+    "shuffle",
 )
 def q_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -883,8 +884,7 @@ GROUP BY symbol
     "indicator_obv",
     _OBV_ORACLE,
     doc="on-balance volume: cumulative sign(diff)*qty per symbol, all "
-    "BIGINT — lag + running sum in one symbol-keyed sort (r8 "
-    "indicators wave 3)",
+    "BIGINT — lag + running sum in one symbol-keyed sort",
 )
 def q_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -996,7 +996,7 @@ WHERE rn = n // 20 + 1
     doc="historical-simulation portfolio VaR95: cross-symbol daily "
     "P&L, exact k-th smallest (k = n div 20 + 1) via the distributed "
     "global-rank pattern over the calendar-bounded series — no "
-    "single-task global window (r8 indicators wave 3)",
+    "single-task global window",
 )
 def q_portfolio_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..caching import track_persist
@@ -1080,7 +1080,7 @@ GROUP BY symbol
     doc="one-sided CUSUM change-point detector via the closed form "
     "S_t = C_t - least(0, running_min(C)) — the max(0, S+y) fold made "
     "declarative: two stacked windows over one symbol-keyed sort, no "
-    "sequential fold, all BIGINT (r8 indicators wave 4)",
+    "sequential fold, all BIGINT",
 )
 def q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1151,8 +1151,7 @@ GROUP BY symbol
     _DRAWDOWN_DUR_ORACLE,
     doc="underwater-spell durations: islands of cents < running max, "
     "spell id = running count of peak rows — gaps-and-islands over a "
-    "running max, one symbol-keyed sort then symbol-local group "
-    "(r8 indicators wave 4)",
+    "running max, one symbol-keyed sort then symbol-local group",
 )
 def q_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1234,7 +1233,7 @@ GROUP BY symbol
     doc="bullish/bearish engulfing + doji detection over daily OHLC "
     "bars (min_by/max_by on a unique intra-day key == DuckDB "
     "arg_min/arg_max) — bar-build groupBy then one symbol-keyed lag, "
-    "exact BIGINT comparisons (r8 indicators wave 4)",
+    "exact BIGINT comparisons",
 )
 def q_candle_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1331,8 +1330,7 @@ FROM stats
     _RUNS_TEST_ORACLE,
     doc="Wald-Wolfowitz runs test on price-change signs: run count by "
     "IS DISTINCT FROM lag, expected-runs comparison cross-multiplied "
-    "into exact integers — one symbol-keyed sort (r8 indicators "
-    "wave 4)",
+    "into exact integers — one symbol-keyed sort",
 )
 def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1413,8 +1411,7 @@ GROUP BY event_type
     doc="time-weighted average price over irregular intervals: "
     "hold-until-next weighting in integer milliseconds "
     "(unix_millis == epoch_ms), exact BIGINT num/den fraction + "
-    "floor quotient — one event_type-keyed sort (r8 indicators "
-    "wave 5)",
+    "floor quotient — one event_type-keyed sort",
 )
 def q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1471,7 +1468,7 @@ GROUP BY symbol
     doc="OLS trend-slope sign via doubled centering: "
     "sum(c_i*(2i-n-1)) is 2x the regression numerator, division-free "
     "and exact BIGINT — row_number + per-partition count share the "
-    "symbol sort (r8 indicators wave 5)",
+    "symbol sort",
 )
 def q_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1532,7 +1529,7 @@ WHERE rn <= n // 20 + 1
     doc="expected shortfall ES95 as the exact (sum, k) fraction over "
     "the k smallest daily portfolio P&Ls (k = n div 20 + 1) — "
     "bottom-k via the distributed global-rank pattern, no "
-    "single-task window (r8 indicators wave 6)",
+    "single-task window",
 )
 def q_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..caching import track_persist
@@ -1583,7 +1580,7 @@ GROUP BY d.trade_date
     doc="daily portfolio concentration: Herfindahl index over "
     "integer-ppm notional shares (floor-division — // in DuckDB, "
     "div in Spark), exact BIGINT; per-day totals broadcast back "
-    "onto the symbol rows (r8 indicators wave 6)",
+    "onto the symbol rows",
 )
 def q_portfolio_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = _stock(spark, sf_dir)
@@ -1676,8 +1673,8 @@ def risk_report_frame(st: DataFrame) -> DataFrame:
     from ..operators.window_metrics import with_global_rank
 
     # ONE daily rollup feeds both the P&L chain and the HHI branch
-    # (before r9 each built its own — the 100x probe's top two spill
-    # producers were the twin 60M-group HashAggregates). The explicit
+    # (two separate rollups made the 100x probe's top two spill
+    # producers the twin 60M-group HashAggregates). The explicit
     # repartition("symbol") makes the aggregation shuffle on symbol
     # alone — hash(symbol) satisfies the agg's (symbol, trade_date)
     # clustering AND the lag window's partitioning, so the whole P&L
@@ -1766,7 +1763,237 @@ def risk_report_frame(st: DataFrame) -> DataFrame:
     "drawdown of the curve, HHI concentration, breadth, and VaR95 "
     "breach flags composed in ONE plan — the integration exhibit for "
     "the indicator family; all exact BIGINT, VaR threshold broadcast "
-    "as a one-row scalar (r8 indicators wave 7)",
+    "as a one-row scalar",
 )
 def q_risk_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return risk_report_frame(_stock(spark, sf_dir))
+
+
+# ---------------------------------------------------------------------------
+# SMA crossover signals: the reference's own analytics
+# domain — fast/slow moving-average golden/death crosses per symbol.
+# Pure windows over one shuffle (both SMAs + the lag share the same
+# partition/order). Determinism: each SMA is an exact decimal window
+# sum cast to double over a ROWS frame (the rolling_avg_sma7 recipe),
+# so the sign tests compare bit-identical doubles on both engines.
+# ---------------------------------------------------------------------------
+
+_SMA_FAST, _SMA_SLOW = 5, 20
+
+# The stock view with float closes, shared by the crossover and
+# drawdown plans (oracle CTE and engine frame).
+_PRICED_CTE = """priced AS (
+    SELECT l_partkey AS symbol, CAST(l_shipdate AS DATE) AS trade_date,
+           l_orderkey AS order_key, l_linenumber AS line_number,
+           l_extendedprice AS close
+    FROM lineitem
+)"""
+
+
+def _priced(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    return li.select(
+        F.col("l_partkey").alias("symbol"),
+        F.to_date("l_shipdate").alias("trade_date"),
+        F.col("l_orderkey").alias("order_key"),
+        F.col("l_linenumber").alias("line_number"),
+        F.col("l_extendedprice").alias("close"),
+    )
+
+_CROSSOVER_ORACLE = f"""
+WITH {_PRICED_CTE},
+sma AS (
+    SELECT symbol, trade_date, order_key, line_number,
+           CAST(sum(CAST(close AS DECIMAL(18,4))) OVER wf AS DOUBLE)
+               / count(*) OVER wf AS sma_fast,
+           CAST(sum(CAST(close AS DECIMAL(18,4))) OVER ws AS DOUBLE)
+               / count(*) OVER ws AS sma_slow
+    FROM priced
+    WINDOW wf AS (PARTITION BY symbol ORDER BY trade_date, order_key, line_number
+                  ROWS BETWEEN {_SMA_FAST - 1} PRECEDING AND CURRENT ROW),
+         ws AS (PARTITION BY symbol ORDER BY trade_date, order_key, line_number
+                  ROWS BETWEEN {_SMA_SLOW - 1} PRECEDING AND CURRENT ROW)
+),
+diffed AS (
+    SELECT symbol, trade_date, order_key, line_number, sma_fast, sma_slow,
+           sma_fast - sma_slow AS d,
+           lag(sma_fast - sma_slow) OVER (
+               PARTITION BY symbol ORDER BY trade_date, order_key, line_number
+           ) AS prev_d
+    FROM sma
+)
+SELECT symbol, trade_date, order_key, line_number, sma_fast, sma_slow,
+       CASE WHEN prev_d <= 0 AND d > 0 THEN 'golden_cross'
+            ELSE 'death_cross' END AS signal
+FROM diffed
+WHERE (prev_d <= 0 AND d > 0) OR (prev_d >= 0 AND d < 0)
+"""
+
+
+@register(
+    "sma_crossover_signals",
+    _CROSSOVER_ORACLE,
+    doc="fast/slow SMA golden/death crossover detection per symbol — the "
+    "reference's analytics domain, pure windows, one shuffle "
+    "(SURVEY §2.5 ext)",
+)
+def q_sma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    priced = _priced(spark, sf_dir)
+    order = ["trade_date", "order_key", "line_number"]
+    base = Window.partitionBy("symbol").orderBy(*order)
+    wf = base.rowsBetween(-(_SMA_FAST - 1), Window.currentRow)
+    ws = base.rowsBetween(-(_SMA_SLOW - 1), Window.currentRow)
+
+    def sma(w):
+        return F.sum(dec("close")).over(w).cast("double") / F.count(F.lit(1)).over(w)
+
+    diffed = (
+        priced.withColumn("sma_fast", sma(wf))
+        .withColumn("sma_slow", sma(ws))
+        .withColumn("d", F.col("sma_fast") - F.col("sma_slow"))
+        .withColumn("prev_d", F.lag("d").over(base))
+    )
+    up = (F.col("prev_d") <= 0) & (F.col("d") > 0)
+    down = (F.col("prev_d") >= 0) & (F.col("d") < 0)
+    return diffed.where(up | down).select(
+        "symbol", "trade_date", "order_key", "line_number",
+        "sma_fast", "sma_slow",
+        F.when(up, F.lit("golden_cross")).otherwise(F.lit("death_cross")).alias("signal"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Max drawdown per symbol: peak-to-trough loss off the
+# running maximum — the classic risk metric for the reference's
+# domain. Every step is order-free-exact: running max of 2-dp prices
+# is exact double comparison, each drawdown is one division of exact
+# doubles, and the final max picks among deterministic values.
+# ---------------------------------------------------------------------------
+
+_DRAWDOWN_PER_SYMBOL_ORACLE = f"""
+WITH {_PRICED_CTE},
+tracked AS (
+    SELECT symbol, close,
+           max(close) OVER (
+               PARTITION BY symbol ORDER BY trade_date, order_key, line_number
+               ROWS UNBOUNDED PRECEDING
+           ) AS run_max
+    FROM priced
+)
+SELECT symbol,
+       max((run_max - close) / run_max) AS max_drawdown,
+       max(run_max) AS peak_close,
+       CAST(count(*) AS BIGINT) AS n_bars
+FROM tracked
+GROUP BY symbol
+"""
+
+
+@register(
+    "max_drawdown_per_symbol",
+    _DRAWDOWN_PER_SYMBOL_ORACLE,
+    doc="max peak-to-trough drawdown off the running max per symbol — "
+    "order-free-exact window arithmetic (SURVEY §2.5 ext)",
+)
+def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    priced = _priced(spark, sf_dir)
+    w = (
+        Window.partitionBy("symbol")
+        .orderBy("trade_date", "order_key", "line_number")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    tracked = priced.withColumn("run_max", F.max("close").over(w))
+    dd = (F.col("run_max") - F.col("close")) / F.col("run_max")
+    return tracked.groupBy("symbol").agg(
+        F.max(dd).alias("max_drawdown"),
+        F.max("run_max").alias("peak_close"),
+        F.count(F.lit(1)).cast("bigint").alias("n_bars"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# VWAP per symbol-day: the volume-weighted price every
+# execution desk computes. Exact decimal numerator/denominator (the
+# weighted_avg_pricing recipe) — the division happens once, in double,
+# identically on both engines.
+# ---------------------------------------------------------------------------
+
+_VWAP_SYMBOL_DAY_ORACLE = """
+SELECT l_partkey AS symbol,
+       CAST(l_shipdate AS DATE) AS trade_date,
+       CAST(sum(CAST(CAST(l_quantity AS DECIMAL(18,4))
+                     * CAST(l_extendedprice AS DECIMAL(18,4)) AS DECIMAL(28,8)))
+            AS DOUBLE)
+           / CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS vwap,
+       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
+FROM lineitem
+GROUP BY 1, 2
+"""
+
+
+@register(
+    "vwap_per_symbol_day",
+    _VWAP_SYMBOL_DAY_ORACLE,
+    doc="volume-weighted average price per symbol-day; exact decimal "
+    "num/den, one double division (SURVEY §2.8 ext)",
+)
+def q_vwap_symbol_day(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    num = F.sum((dec("l_quantity") * dec("l_extendedprice")).cast("decimal(28,8)"))
+    den = F.sum(dec("l_quantity"))
+    return li.groupBy(
+        F.col("l_partkey").alias("symbol"),
+        F.to_date("l_shipdate").alias("trade_date"),
+    ).agg(
+        (num.cast("double") / den.cast("double")).alias("vwap"),
+        F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("total_qty"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# OHLC resample: tick stream → hourly candlesticks per
+# event type — the reference domain's bar-building op. Open/close are
+# deterministic via (ts, event_id) total order (Spark min_by/max_by on
+# a struct key ≡ DuckDB ordered-aggregate first/last); volume is an
+# exact decimal sum. One shuffle on the (hour, type) group key.
+# ---------------------------------------------------------------------------
+
+OHLC_ORACLE = """
+SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bar_hour,
+       event_type,
+       first(value ORDER BY ts, event_id) AS open_v,
+       max(value) AS high_v,
+       min(value) AS low_v,
+       last(value ORDER BY ts, event_id) AS close_v,
+       CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS volume,
+       CAST(count(*) AS BIGINT) AS n_ticks
+FROM events
+GROUP BY 1, 2
+"""
+
+
+@register(
+    "ohlc_hourly_resample",
+    OHLC_ORACLE,
+    doc="tick -> hourly OHLC candlesticks per event type; deterministic "
+    "open/close via (ts, event_id) total order (SURVEY §2.8 ext)",
+)
+def q_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.aggregates import dec as _dec
+
+    ev = load_table(spark, sf_dir, "events")
+    key = F.struct("ts", "event_id")
+    return ev.groupBy(
+        F.date_trunc("hour", "ts").alias("bar_hour"), "event_type"
+    ).agg(
+        F.min_by("value", key).alias("open_v"),
+        F.max("value").alias("high_v"),
+        F.min("value").alias("low_v"),
+        F.max_by("value", key).alias("close_v"),
+        F.sum(_dec("value")).cast("double").alias("volume"),
+        F.count(F.lit(1)).cast("bigint").alias("n_ticks"),
+    )

@@ -6,7 +6,7 @@ The container-header parse is real for all three modalities (PNG IHDR
 the synthetic corpus embeds genuine headers, so the decode-facing
 queries are fully oracle-checked: DuckDB recomputes the same header
 facts arithmetically. A value mismatch means the byte-level header
-construction or the parser is wrong. Since r8 the codec-level step is
+construction or the parser is wrong. The codec-level step is
 REAL for all three modalities end to end: PNG pixel decode (stdlib
 zlib inflate + per-scanline unfilter → multimodal_resize_execute),
 WAV PCM sample decode (header-located LE int16 body →
@@ -34,8 +34,7 @@ _N_MEDIA = 300
 # channels / declared duration, MP4 duration / track dims.
 
 
-# r8 oracle upgrade (r7 verdict item 3): the byte histogram was the
-# family's last rows-only artifact. The bucket counts are INTEGERS
+# The byte histogram is hash-checked. The bucket counts are INTEGERS
 # (byte >> 5), and every payload byte is arithmetically known — the
 # container headers are fixed literals plus fixed-width computed
 # words, the filler is unhex(repeat(md5(id), 4)). DuckDB rebuilds the
@@ -158,7 +157,7 @@ GROUP BY media_id, kind, bucket
     "multimodal_decode_features",
     _DECODE_FEATURES_ORACLE,
     doc="binary payload → 8-bucket byte-histogram feature via Arrow-"
-    "batched mapInPandas, hash-checked end to end (r8 upgrade): integer "
+    "batched mapInPandas, hash-checked end to end: integer "
     "bucket counts in long format vs a DuckDB arithmetic rebuild of "
     "every payload byte (header words + md5 filler) bucketed by "
     "first-hex-digit div 2 — no unhex, no decoder on the oracle side "
@@ -350,7 +349,7 @@ def q_mm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Resize planning (round-7 ext): the preprocessing pass every vision
+# Resize planning: the preprocessing pass every vision
 # pipeline runs before decode — aspect-preserving target dimensions
 # (max side 224, the standard vision-model input) computed from the
 # REAL parsed PNG headers, in pure integer arithmetic so the plan is
@@ -390,10 +389,10 @@ FROM img
     _RESIZE_ORACLE,
     doc="aspect-preserving resize planning (max side 224) from REAL "
     "parsed PNG headers — integer-exact scale/output dims + upscale "
-    "flag; header parse is pure-Catalyst substring/hex/conv (r9: no "
+    "flag; header parse is pure-Catalyst substring/hex/conv (no "
     "Arrow hop — a planner reads 8 bytes per object, so at 100 TB the "
     "payload must never leave the JVM), the codec-level resample is "
-    "multimodal_resize_execute's job (multimodal ext, r7)",
+    "multimodal_resize_execute's job (multimodal ext)",
 )
 def q_mm_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = MM.synthetic_media(spark, _N_MEDIA).where(
@@ -413,8 +412,7 @@ def q_mm_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Resize EXECUTE (round-8, r7 verdict item 2): the codec-level step
-# the multimodal family had stubbed, now real for PNG — stdlib zlib
+# Resize EXECUTE: the codec-level step, real for PNG — stdlib zlib
 # inflate + per-scanline unfilter (all five PNG filter types cycle
 # through every image) + integer nearest-neighbor resample to the
 # SAME aspect-preserving dims formula multimodal_resize_plan emits.
@@ -478,7 +476,7 @@ GROUP BY media_id, ow, oh
     "unfilter, CRC-verified, multi-IDAT) + integer nearest-neighbor "
     "resample to the resize plan's dims — per-image channel checksums "
     "recomputed arithmetically by DuckDB from the corpus pixel formula "
-    "(multimodal execute stage, r8; r7 verdict item 2)",
+    "(multimodal execute stage)",
 )
 def q_mm_resize_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = MM.synthetic_png_corpus(spark, _N_PNG)
@@ -486,7 +484,7 @@ def q_mm_resize_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Audio chunk EXECUTE (round-8): the second modality made real,
+# Audio chunk EXECUTE: the second modality made real,
 # mirroring multimodal_resize_execute — complete PCM WAV bodies
 # decoded sample-for-sample (np.frombuffer over the header-located
 # data range), 700 ms chunks (deliberately NOT dividing the 1000 ms
@@ -541,8 +539,8 @@ GROUP BY media_id, chunk_idx
     "data range, LE int16) folded into per-700ms-chunk integer "
     "count/sum/sum-of-squares — the RMS/loudness building blocks — "
     "with the partial last chunk clipped from header facts; DuckDB "
-    "replays the sample formula arithmetically (audio execute stage, "
-    "r8; mirrors multimodal_resize_execute)",
+    "replays the sample formula arithmetically (audio execute stage; "
+    "mirrors multimodal_resize_execute)",
 )
 def q_mm_pcm_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = MM.synthetic_wav_corpus(spark, _N_WAV)
@@ -550,7 +548,7 @@ def q_mm_pcm_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# JPEG decode EXECUTE (round-8 extension): the third modality's codec
+# JPEG decode EXECUTE: the third modality's codec
 # made real — full baseline JPEG entropy decode (Annex-K Huffman
 # tables, bit unstuffing, DC prediction, ZRL/EOB, restart markers)
 # + dequant + float IDCT, per operators/multimodal.py. The corpus
@@ -612,7 +610,7 @@ GROUP BY media_id
     "genuine JPEG files whose pixels are closed-form (exact-cosine "
     "DCT positions under quant 8) — per-image integer luminance "
     "checksums replayed arithmetically by DuckDB with no decoder "
-    "(multimodal execute stage, r8 extension)",
+    "(multimodal execute stage)",
 )
 def q_mm_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = MM.synthetic_jpeg_corpus(spark, _N_JPEG)
@@ -620,7 +618,7 @@ def q_mm_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MJPEG video frame decode EXECUTE (round-8 extension): the video
+# MJPEG video frame decode EXECUTE: the video
 # codec path made honestly real — Motion-JPEG in a genuine AVI/RIFF
 # container (nested LIST walk, word-aligned 00dc frame chunks, idx1),
 # every sampled frame fully decoded by the baseline-JPEG codec. Frame
@@ -689,8 +687,7 @@ GROUP BY video_id, f
     "chunks) locates per-frame byte ranges, every 3rd frame is fully "
     "decoded by the baseline-JPEG codec (Huffman + IDCT), per-frame "
     "integer luminance checksums replayed arithmetically by DuckDB "
-    "from the per-frame seed formula (video execute stage, r8 "
-    "extension)",
+    "from the per-frame seed formula (video execute stage)",
 )
 def q_mm_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = MM.synthetic_avi_corpus(spark, _N_AVI)
@@ -698,7 +695,7 @@ def q_mm_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IMA-ADPCM decode EXECUTE (late r8): the COMPRESSED-audio codec made
+# IMA-ADPCM decode EXECUTE: the COMPRESSED-audio codec made
 # real — 4-bit IMA ADPCM (WAV fmt 0x11) with the genuine
 # predictor/step-index state walk, so every decoded sample depends on
 # all prior nibbles in its block; a correct hash certifies the
@@ -783,8 +780,7 @@ FROM walk WHERE j = {_ADPCM_NIB}
     "unpacking) folded to per-block integer sums plus the FINAL "
     "predictor and step index — end-state columns make a mid-block "
     "slip uncancelable; the oracle re-implements the decoder as a "
-    "DuckDB recursive CTE over the corpus's closed-form nibbles "
-    "(late r8)",
+    "DuckDB recursive CTE over the corpus's closed-form nibbles",
 )
 def q_mm_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = MM.synthetic_adpcm_corpus(spark, _N_ADPCM)

@@ -1,6 +1,16 @@
 """Queries covering the reference's own operator surface
 (SURVEY.md §2.1-§2.8, §2.10): scans, filters/predicates, scalar
-derivations, window lag metrics, union, sort/limit, QA aggregates.
+derivations, window lag metrics, union, sort/limit, QA aggregates, and
+the data-quality expectation queries (SURVEY §5.1).
+
+Data-quality rules are evaluated over lineitem in one scan: violation
+counts for monitoring, quarantined rows for repair. The rule
+thresholds are chosen so some rules fail on real fixture rows (a
+checker that never fires proves nothing). Oracle notes: fraction
+literals are pinned with CAST(... AS DOUBLE) (DuckDB parses 0.06 as
+exact DECIMAL, Spark as IEEE double — boundary rows would flip);
+integer violation sums are CAST AS BIGINT (DuckDB sum(int) is
+HUGEINT).
 """
 
 from __future__ import annotations
@@ -10,9 +20,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.cleaning import sql_valid_symbol, valid_symbol
 from ..functions.rounding import round_half_up, sql_round
 from ..io.readers import load_table
+from ..operators import expectations as E
 from ..operators.aggregates import qa_summary
 from .flagship import flagship_metrics
 from .registry import register
+
 
 # ---------------------------------------------------------------------------
 # Flagship: the whole reference analytics kernel in one plan
@@ -271,3 +283,78 @@ def q_topk_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("day_rank") <= 3)
         .select("trade_date", "symbol", "close_pct_change", "day_rank")
     )
+
+
+# ---------------------------------------------------------------------------
+# Data-quality expectations: one rule set, as Column predicates for the
+# engine and as SQL for the oracle (see the module docstring).
+# ---------------------------------------------------------------------------
+
+
+def _rules():
+    return {
+        "discount_capped": F.col("l_discount") <= 0.09,
+        "price_capped": F.col("l_extendedprice") < 101000.0,
+        "qty_in_range": (F.col("l_quantity") > 0) & (F.col("l_quantity") <= 48),
+        "returnflag_domain": F.col("l_returnflag").isin("A", "N", "R"),
+        "shipdate_floor": F.to_date("l_shipdate")
+        >= F.lit("1992-01-01").cast("date"),
+    }
+
+
+_SQL_RULES = {
+    "discount_capped": "l_discount <= CAST(0.09 AS DOUBLE)",
+    "price_capped": "l_extendedprice < CAST(101000.0 AS DOUBLE)",
+    "qty_in_range": "l_quantity > 0 AND l_quantity <= 48",
+    "returnflag_domain": "l_returnflag IN ('A', 'N', 'R')",
+    "shipdate_floor": "CAST(l_shipdate AS DATE) >= DATE '1992-01-01'",
+}
+
+_COUNTS_ORACLE = "SELECT CAST(count(*) AS BIGINT) AS row_count, " + ", ".join(
+    f"CAST(sum(CASE WHEN COALESCE({sql}, FALSE) THEN 0 ELSE 1 END) AS BIGINT)"
+    f" AS {name}"
+    for name, sql in _SQL_RULES.items()
+) + " FROM lineitem"
+
+
+@register(
+    "dq_violation_counts",
+    _COUNTS_ORACLE,
+    doc="declarative data-quality rule set evaluated in ONE scan: per-rule "
+    "violation counts + row_count (the reference's scattered runtime "
+    "checks, dags/sp500_dag.py.py:47,64,186,223-227, as a monitoring "
+    "aggregate)",
+)
+def q_dq_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    return E.violation_counts(li, _rules())
+
+
+_QUARANTINE_ORACLE = (
+    "SELECT l_orderkey, l_linenumber, array_to_string(list_filter(["
+    + ", ".join(
+        f"CASE WHEN NOT COALESCE({_SQL_RULES[name]}, FALSE) THEN '{name}' END"
+        for name in sorted(_SQL_RULES)
+    )
+    + "], x -> x IS NOT NULL), ',') AS failed_rules "
+    "FROM lineitem "
+    "WHERE array_to_string(list_filter(["
+    + ", ".join(
+        f"CASE WHEN NOT COALESCE({_SQL_RULES[name]}, FALSE) THEN '{name}' END"
+        for name in sorted(_SQL_RULES)
+    )
+    + "], x -> x IS NOT NULL), ',') <> ''"
+)
+
+
+@register(
+    "dq_quarantine_rows",
+    _QUARANTINE_ORACLE,
+    doc="quarantine feed: rows failing any rule, annotated with the "
+    "comma-joined rule names they broke — the engine version of "
+    "ON_ERROR='CONTINUE' (dags/sp500_dag.py.py:377) that keeps the "
+    "violation information instead of discarding it",
+)
+def q_dq_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    return E.quarantine(li, _rules(), ["l_orderkey", "l_linenumber"])

@@ -309,7 +309,7 @@ def q_quote_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("symbols", str(_QF_SYMBOLS))
         .option("days", str(_QF_DAYS))
         .option("symbols_per_partition", "20")
-        # r8: source-level projection — the aggregate never reads
+        # Source-level projection — the aggregate never reads
         # `open`, so the source never generates/ships it (the Python
         # DataSource API has no pruneColumns callback; the `columns`
         # option is the source's explicit-projection contract).
@@ -330,7 +330,7 @@ def q_quote_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bucketed co-located fact-fact join (round-5 ext): both facts written
+# Bucketed co-located fact-fact join: both facts written
 # as hash-bucketed, per-bucket-sorted managed tables on the join key
 # (io/writers.write_bucketed_table), then joined bucket-to-bucket.
 # With matching bucket counts Catalyst elides BOTH exchanges — the
@@ -393,7 +393,7 @@ def q_bucketed_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# XML round-trip (round-5 ext): Spark 4's built-in XML source (the
+# XML round-trip: Spark 4's built-in XML source (the
 # spark-xml package absorbed into spark-sql) — the remaining
 # interchange format after CSV/JSONL/ORC/parquet. Write a projected
 # slice as row-tagged XML, read it back schema-first, aggregate; the
@@ -447,7 +447,7 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Schema-evolution scan (round-5 ext): a parquet dataset whose files
+# Schema-evolution scan: a parquet dataset whose files
 # were written under two schema versions — v1 (order day + price),
 # v2 adds a discount column — read with mergeSchema, so v1 rows
 # surface NULL discounts. This is the §2.1 robustness case every
@@ -517,7 +517,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Custom Python DataSource SINK round-trip (round-6 ext): the write
+# Custom Python DataSource SINK round-trip: the write
 # half of the §2.1/§2.2 extension-point pair — quote_feed shows a
 # partitioned Python source with pushdown, jsonl_sink
 # (sources/jsonl_sink.py) shows a partitioned Python WRITER with the
@@ -544,7 +544,7 @@ GROUP BY event_type
     doc="custom Python DataSource WRITER (jsonl_sink): per-task "
     "serialization + two-phase commit (tmp files -> rename + "
     "manifest-last); schema-first read-back aggregated against the "
-    "original-table oracle (SURVEY §2.2 ext, r6)",
+    "original-table oracle (SURVEY §2.2 ext)",
 )
 def q_jsonl_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.jsonl_sink import register_jsonl_sink

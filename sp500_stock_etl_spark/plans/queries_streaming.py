@@ -32,6 +32,14 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..streaming import events as SE
+from .queries_corpus import (
+    QUALITY_CLASSIFIER_ORACLE,
+    classifier_scores,
+    sql_corpus_curation,
+)
+from .queries_dedup import BANDS, NGRAM, NUM_HASHES
+from .queries_indicators import OHLC_ORACLE
+from .queries_similarity import SIMJOIN_OFFSET, SJ_THRESHOLD, sql_simjoin_oracle
 from .registry import register
 
 _SEQ = itertools.count()
@@ -43,7 +51,7 @@ _SQL_TS_FMT = "%Y-%m-%d %H:%M:%S"
 def _tmp_ckpt() -> str:
     """Checkpoint tempdir with atexit cleanup — availableNow runs are
     one-shot, so the checkpoint has no value past the process (a bare
-    mkdtemp here leaked one directory per run; ADVICE r10)."""
+    mkdtemp here leaked one directory per run)."""
     d = tempfile.mkdtemp(prefix="sg_ckpt_")
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
@@ -69,7 +77,7 @@ def _stream_shuffle_partitions(
     cores_floor: bool = False,
 ) -> int:
     """Scale-adaptive shuffle-partition count for a stateful streaming
-    plan (r14 optimization; guide §2.2/§2.4 applied to state stores).
+    plan (guide §2.2/§2.4 applied to state stores).
 
     AQE cannot coalesce stateful streaming shuffles — the state-store
     instance count is FIXED per shuffle partition at the first
@@ -223,7 +231,7 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RocksDB state-store twin (round-2 verdict item 8): identical plan
+# RocksDB state-store twin: identical plan
 # and oracle to streaming_tumbling_counts, state kept in an embedded
 # RocksDB instead of the JVM-heap HDFS-backed map. At the 1e8-key
 # projection (BASELINE.md §4) the heap map's GC pressure is the
@@ -240,8 +248,7 @@ _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
     "streaming_tumbling_counts_rocksdb",
     _TUMBLING_ORACLE,
     doc="streaming_tumbling_counts with the RocksDB state-store provider — "
-    "off-heap state for the 1e8-key 24/7 projection (SURVEY §2.11, "
-    "round-2 verdict item 8)",
+    "off-heap state for the 1e8-key 24/7 projection (SURVEY §2.11)",
 )
 def q_streaming_tumbling_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
@@ -386,7 +393,7 @@ def q_streaming_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     None,  # custom cross-batch state with TTL eviction, not SQL-expressible
     doc="bounded-state twin of streaming_running_user_totals: "
     "EventTimeTimeout evicts keys idle past the TTL, capping state at "
-    "active-key cardinality instead of all-time (round-2 verdict item 4); "
+    "active-key cardinality instead of all-time; "
     "rows-only driver check by design",
 )
 def q_streaming_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -483,7 +490,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_table(spark, deduped, "append", src_dir=staged)
 
 
-# Bounded-state dedup twin (round-2 verdict item 4, second half): the
+# Bounded-state dedup twin: the
 # dedup key carries its hour bucket and the stream is watermarked, so
 # dropDuplicatesWithinWatermark ages each key's dedup state out once
 # the watermark passes its bucket — state ∝ keys active inside the
@@ -503,7 +510,7 @@ FROM events
     _STREAM_DEDUP_TTL_ORACLE,
     doc="bounded-state streaming dedup via dropDuplicatesWithinWatermark on "
     "hour-bucketed keys; dedup state ages out at the watermark horizon "
-    "(SURVEY §2.11 ext, round-2 verdict item 4)",
+    "(SURVEY §2.11 ext)",
 )
 def q_streaming_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = _stage_events_dir(sf_dir)
@@ -612,7 +619,7 @@ def _read_document_stream(spark: SparkSession, path: str) -> DataFrame:
 
 @register(
     "streaming_corpus_dedup",
-    None,  # oracle attached below — reuses the batch simjoin oracle
+    sql_simjoin_oracle(),  # the batch similarity join: identical semantics
     doc="streaming MinHash-LSH dedup of an arriving document stream "
     "against a static corpus (stream-static bucket joins, map-side "
     "signatures, pair-dedup state only); availableNow result equals "
@@ -622,13 +629,6 @@ def _read_document_stream(spark: SparkSession, path: str) -> DataFrame:
 def q_streaming_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.readers import load_table
     from ..operators import dedup as D
-    from .queries_northstar import (
-        _BANDS,
-        _NGRAM,
-        _NUM_HASHES,
-        _SIMJOIN_OFFSET,
-        _SJ_THRESHOLD,
-    )
     from ..functions.text import tokens
 
     staged = _stage_documents_dir(sf_dir)
@@ -636,32 +636,16 @@ def q_streaming_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tk = tokens(F.col("text"))
     keep_n = F.greatest(F.lit(3), F.floor(F.size(tk) * 0.7).cast("int"))
     probes = stream.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + _SIMJOIN_OFFSET).alias("doc_id"),
+        (F.col("doc_id") + SIMJOIN_OFFSET).alias("doc_id"),
         F.array_join(F.slice(tk, F.lit(1), keep_n), " ").alias("text"),
     )
     corpus = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     joined = D.minhash_similarity_join_stream(
         probes, corpus, "doc_id", "text",
-        ngram=_NGRAM, num_hashes=_NUM_HASHES, bands=_BANDS,
-        threshold=_SJ_THRESHOLD,
+        ngram=NGRAM, num_hashes=NUM_HASHES, bands=BANDS,
+        threshold=SJ_THRESHOLD,
     )
     return _run_to_table(spark, joined, "append", src_dir=staged)
-
-
-def _attach_simjoin_oracle() -> None:
-    """The oracle is the batch similarity-join SQL (identical
-    semantics); registered after the fact to keep the build-time
-    import cheap."""
-    from .queries_northstar import _sql_simjoin_oracle
-    from .registry import _REGISTRY
-
-    q = _REGISTRY["streaming_corpus_dedup"]
-    _REGISTRY["streaming_corpus_dedup"] = type(q)(
-        q.name, q.spark_fn, _sql_simjoin_oracle(), q.doc
-    )
-
-
-_attach_simjoin_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -677,7 +661,7 @@ _attach_simjoin_oracle()
 
 @register(
     "streaming_corpus_curation",
-    None,  # oracle attached below (batch curation SQL, identical semantics)
+    sql_corpus_curation(),  # the batch curation SQL: identical semantics
     doc="streaming corpus curation: quality + lang-ID (stateless map-side) "
     "→ filter → exact dedup agg in COMPLETE mode == batch result, full "
     "oracle parity (SURVEY §2.11 × north star capstone). Test-scale "
@@ -713,19 +697,6 @@ def q_streaming_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return _run_to_table(spark, curated, "complete", src_dir=staged)
-
-
-def _attach_curation_oracle() -> None:
-    from .queries_northstar import _sql_corpus_curation
-    from .registry import _REGISTRY
-
-    q = _REGISTRY["streaming_corpus_curation"]
-    _REGISTRY["streaming_corpus_curation"] = type(q)(
-        q.name, q.spark_fn, _sql_corpus_curation(), q.doc
-    )
-
-
-_attach_curation_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -806,30 +777,19 @@ def q_streaming_quote_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _snapshot_and_drop(spark, name)
 
 
-# Streaming OHLC twin (round-4 ext): candlestick bars built from the
+# Streaming OHLC twin: candlestick bars built from the
 # event stream, COMPLETE mode == the batch resample exactly, so the
-# batch oracle checks the stream bitwise (min_by/max_by are
-# fully-declarative aggregates and run in streaming group-bys).
-_STREAM_OHLC_ORACLE = """
-SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bar_hour,
-       event_type,
-       first(value ORDER BY ts, event_id) AS open_v,
-       max(value) AS high_v,
-       min(value) AS low_v,
-       last(value ORDER BY ts, event_id) AS close_v,
-       CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS volume,
-       CAST(count(*) AS BIGINT) AS n_ticks
-FROM events
-GROUP BY 1, 2
-"""
+# batch oracle (queries_indicators.OHLC_ORACLE) checks the stream
+# bitwise (min_by/max_by are fully-declarative aggregates and run in
+# streaming group-bys).
 
 
 @register(
     "streaming_ohlc_bars",
-    _STREAM_OHLC_ORACLE,
+    OHLC_ORACLE,
     doc="hourly OHLC candlesticks from the event stream (complete mode == "
     "batch resample; min_by/max_by in a streaming group-by) "
-    "(SURVEY §2.11 ext, r4). Test-scale parity DEVICE: complete mode + "
+    "(SURVEY §2.11 ext). Test-scale parity DEVICE: complete mode + "
     "memory sink holds all bars on the driver — the 24/7 shape is "
     "streaming_ohlc_bars_append below",
 )
@@ -864,7 +824,7 @@ def q_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Production-mode OHLC twin (round-4 verdict item 6): the same bars in
+# Production-mode OHLC twin: the same bars in
 # APPEND mode — only windows the 2-hour watermark has closed are ever
 # emitted, which is the shape that runs 24/7 (state is evicted as
 # windows close; nothing accumulates on the driver, unlike the
@@ -895,7 +855,7 @@ GROUP BY 1, 2
     _STREAM_OHLC_APPEND_ORACLE,
     doc="hourly OHLC candlesticks in APPEND mode — the production shape: "
     "watermark-closed windows only, state evicted as bars close; oracle "
-    "is the batch resample restricted to closed hours (SURVEY §2.11, r5)",
+    "is the batch resample restricted to closed hours (SURVEY §2.11)",
 )
 def q_streaming_ohlc_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.aggregates import dec as _dec
@@ -929,7 +889,7 @@ def q_streaming_ohlc_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Stream-stream LEFT OUTER join (round-5 ext): the attribution shape
+# Stream-stream LEFT OUTER join: the attribution shape
 # the inner join can't express — every purchase emits, null-padded
 # when no click followed within the hour. The outer row for an
 # unmatched purchase can only be emitted once the watermark proves no
@@ -943,8 +903,8 @@ def q_streaming_ohlc_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark's global watermark is min over the watermark nodes, each
 # computed from ITS OWN stream's max event time, so when the last
 # click lags the last purchase the frontier lags with it (a latent
-# r5 bug caught by the r7 sf0.001 cross-scale sweep — at denser sfs
-# the per-type maxima coincide within the margin and it never fired).
+# bug an sf0.001 cross-scale sweep caught — at denser sfs the
+# per-type maxima coincide within the margin and it never fired).
 # State budget is the same as the inner join: both sides buffer only
 # inside the watermark horizon.
 # ---------------------------------------------------------------------------
@@ -1033,7 +993,7 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming write through the custom Python sink (round-6 ext): the
+# Streaming write through the custom Python sink: the
 # stream drains availableNow through jsonl_sink's per-MICROBATCH
 # commit protocol (epoch-tagged parts, manifest-last, replayed-epoch
 # idempotence guard — sources/jsonl_sink.py), then the files are read
@@ -1058,7 +1018,7 @@ GROUP BY event_type
     doc="streaming write through the custom Python DataSourceStream"
     "Writer (per-epoch two-phase commit, replay-idempotent), read "
     "back schema-first, aggregated vs the original-table oracle "
-    "(SURVEY §2.11 + §2.2 ext, r6)",
+    "(SURVEY §2.11 + §2.2 ext)",
 )
 def q_streaming_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.jsonl_sink import register_jsonl_sink
@@ -1099,8 +1059,8 @@ def q_streaming_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Stream-stream FULL OUTER interval join (round-7 ext) — completes the
-# stream-stream family (inner r2, left-outer r5): BOTH sides null-pad,
+# Stream-stream FULL OUTER interval join — completes the
+# stream-stream family (inner, left-outer): BOTH sides null-pad,
 # i.e. unmatched purchases AND unmatched clicks each emit once the
 # watermark proves no partner can still arrive. A click's potential
 # purchases all sit in (c_ts - 1h, c_ts), so its outer row emits once
@@ -1145,7 +1105,7 @@ WHERE (p_ts IS NULL OR p_ts <= cutoff)
     doc="watermarked stream-stream FULL OUTER interval join — both "
     "sides null-pad once the watermark proves no partner can arrive; "
     "present-timestamp cutoff 1h inside the emission frontier keeps "
-    "availableNow equal to the batch full join (SURVEY §2.11 ext, r7)",
+    "availableNow equal to the batch full join (SURVEY §2.11 ext)",
 )
 def q_stream_stream_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = _stage_events_dir(sf_dir)
@@ -1191,8 +1151,8 @@ def q_stream_stream_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Stream-stream RIGHT OUTER interval join (round-8 ext) — completes
-# the four-way stream-stream family (inner r2, left r5, full r7):
+# Stream-stream RIGHT OUTER interval join — completes
+# the four-way stream-stream family (inner, left, full):
 # every CLICK emits; the purchase side null-pads once the watermark
 # proves no partner can still arrive. A click's candidate purchases
 # sit in [c_ts - 1h, c_ts), so its outer row is provable once the
@@ -1226,7 +1186,7 @@ WHERE c.event_type = 'click'
     "click emits; null purchase once the watermark proves no match "
     "can arrive) — the mirror of the left join, closing the four-way "
     "stream-stream family; cutoff 1h inside the emission frontier "
-    "(SURVEY §2.11 ext, r8)",
+    "(SURVEY §2.11 ext)",
 )
 def q_stream_stream_right(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = _stage_events_dir(sf_dir)
@@ -1269,7 +1229,7 @@ def q_stream_stream_right(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Final-state capstone for the custom stateful family (round-8): the
+# Final-state capstone for the custom stateful family: the
 # update-mode running-totals exhibits are rows-only BY DESIGN (their
 # emission set depends on micro-batching), but the FINAL state does
 # not — with an integer-cents accumulator the running total is
@@ -1297,7 +1257,7 @@ GROUP BY user_id
     "projected to the final emission per key (max_by over the strictly "
     "increasing n_events) — batch-invariant, so the custom stateful "
     "operator is hash-checked end to end; the double-state update-mode "
-    "twins remain the emission exhibits (SURVEY §2.11/2.12 ext, r8)",
+    "twins remain the emission exhibits (SURVEY §2.11/2.12 ext)",
 )
 def q_streaming_running_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = _stage_events_dir(sf_dir)
@@ -1316,7 +1276,7 @@ def q_streaming_running_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming twin of the late-r8 quality classifier: the model is a
+# Streaming twin of the quality classifier: the model is a
 # STATELESS Catalyst projection (no aggregate, no window, no state),
 # so it rides Structured Streaming completely unchanged — same
 # expression tree, append mode, zero state store — and the BATCH
@@ -1326,33 +1286,25 @@ def q_streaming_running_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _attach_streaming_classifier() -> None:
-    from .queries_r8 import _QUALITY_CLASSIFIER_ORACLE, classifier_scores
-
-    @register(
-        "streaming_quality_classifier",
-        _QUALITY_CLASSIFIER_ORACLE,
-        doc="the quality-classifier projection applied to an arriving "
-        "document stream (append mode, stateless — no watermark or state "
-        "store needed); availableNow result equals the batch operator so "
-        "the identical integer-fixed-point oracle checks the stream end "
-        "to end (SURVEY §2.11 x late-r8 classifier)",
+@register(
+    "streaming_quality_classifier",
+    QUALITY_CLASSIFIER_ORACLE,
+    doc="the quality-classifier projection applied to an arriving "
+    "document stream (append mode, stateless — no watermark or state "
+    "store needed); availableNow result equals the batch operator so "
+    "the identical integer-fixed-point oracle checks the stream end "
+    "to end (SURVEY §2.11 x quality classifier)",
+)
+def q_streaming_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    staged = _stage_documents_dir(sf_dir)
+    stream = _read_document_stream(spark, staged).select("doc_id", "text")
+    return _run_to_table(
+        spark, classifier_scores(stream), "append", src_dir=staged
     )
-    def q_streaming_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-        staged = _stage_documents_dir(sf_dir)
-        stream = _read_document_stream(spark, staged).select(
-            "doc_id", "text"
-        )
-        return _run_to_table(
-            spark, classifier_scores(stream), "append", src_dir=staged
-        )
-
-
-_attach_streaming_classifier()
 
 
 # ---------------------------------------------------------------------------
-# DYNAMIC-GAP session windows (late r8): F.session_window accepts a
+# DYNAMIC-GAP session windows: F.session_window accepts a
 # per-EVENT gap expression (purchases hold a session open 40 min,
 # browse events only 15), which fixed-gap sessionization cannot
 # express — the session end is max(ts_i + gap_i) over its members and
@@ -1403,8 +1355,8 @@ FROM sess GROUP BY user_id, sid
     "(purchase 40 min, other events 15) via F.session_window over a "
     "gap expression; the oracle generalizes gaps-and-islands to a "
     "running max of interval ENDS — session end is max(ts+gap) over "
-    "members, events join strictly before that frontier (late r8; "
-    "SURVEY §2.11 ext)",
+    "members, events join strictly before that frontier (SURVEY "
+    "§2.11 ext)",
 )
 def q_session_windows_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.readers import load_table
@@ -1426,8 +1378,8 @@ def q_session_windows_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STREAMING session windows (late r8): session_counts has been the
-# operator since r3 but only its batch twin was registered — append
+# STREAMING session windows: session_counts is the batch twin's
+# operator — append
 # mode emits a session only once the WATERMARK passes its end, so the
 # raw emitted set depends on internal frontier mechanics (measured:
 # emitted == batch EXACTLY on the closed region {end <= max(ts)-2h},
@@ -1477,7 +1429,7 @@ WHERE session_end <= (SELECT max(ts) - INTERVAL 2 HOUR - INTERVAL 1 MINUTE
     "deterministically compared on the closed region — both engine "
     "and oracle keep sessions ending at least watermark-delay+margin "
     "before max event time, the stream-stream-join frontier device "
-    "(late r8; SURVEY §2.11)",
+    "(SURVEY §2.11)",
 )
 def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.readers import load_table
@@ -1554,7 +1506,7 @@ WHERE session_end <= (SELECT max(ts) - INTERVAL 2 HOUR - INTERVAL 1 MINUTE
     "session_window), append emission compared deterministically on "
     "the closed region behind the watermark frontier; oracle = the "
     "dynamic gaps-and-islands replay at the identical cutoff "
-    "(late r8; SURVEY §2.11)",
+    "(SURVEY §2.11)",
 )
 def q_streaming_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.readers import load_table
@@ -1585,7 +1537,7 @@ def q_streaming_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MULTI-BATCH incremental processing (late r8): every other streaming
+# MULTI-BATCH incremental processing: every other streaming
 # query stages ONE file, so availableNow runs ONE data microbatch and
 # the watermark advances once — the cross-batch machinery (watermark
 # ADVANCEMENT, incremental append emission, state carried between
@@ -1605,7 +1557,7 @@ def _stage_events_multibatch(spark: SparkSession, sf_dir: str) -> str:
     oldest mtime first so FileStreamSource processes them in order.
     Unlike the symlink staging these are REAL copies, so the dir is
     atexit-reaped — repeated bench/sweep runs must not accumulate
-    corpus-sized chunk sets in /tmp (same rule as the r7 signature
+    corpus-sized chunk sets in /tmp (same rule as the dedup signature
     stores)."""
     import atexit
     import shutil
@@ -1617,9 +1569,9 @@ def _stage_events_multibatch(spark: SparkSession, sf_dir: str) -> str:
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     ev = load_table(spark, sf_dir, "events")
     cuts = ["2024-01-08", "2024-01-15", "2024-01-22"]
-    # ONE pass over events instead of four (r14 optimization, guide
-    # §1.2 step 1 "don't compute things you throw away": the old loop
-    # ran 4 filter+coalesce+write jobs, each rescanning the table).
+    # ONE pass over events instead of four (guide §1.2 step 1 "don't
+    # compute things you throw away": a loop would run 4
+    # filter+coalesce+write jobs, each rescanning the table).
     # coalesce(1) + partitionBy writes one file per chunk value from a
     # single task; the partition column stays OUT of the file schema,
     # so each chunk file holds exactly the same rows/columns as the
@@ -1656,8 +1608,7 @@ def _stage_events_multibatch(spark: SparkSession, sf_dir: str) -> str:
     "watermark advances per batch, append emission is genuinely "
     "incremental, and sessions straddling chunk boundaries merge from "
     "carried state — same closed-region oracle as the single-batch "
-    "twin, so a cross-batch state bug breaks the hash (late r8; "
-    "SURVEY §2.11)",
+    "twin, so a cross-batch state bug breaks the hash (SURVEY §2.11)",
 )
 def q_streaming_sessions_multibatch(
     spark: SparkSession, sf_dir: str
@@ -1691,7 +1642,7 @@ def q_streaming_sessions_multibatch(
 
 
 # ---------------------------------------------------------------------------
-# Streaming twin of the indicator family's VWAP (late r8): daily
+# Streaming twin of the indicator family's VWAP: daily
 # per-symbol VWAP computed ON THE STREAM — tumbling 1-day event-time
 # windows over a lineitem file-stream, exact integer num/den
 # fractions, complete mode so the oracle is the plain batch rollup
@@ -1724,7 +1675,7 @@ GROUP BY d, symbol
     doc="daily per-symbol VWAP on a lineitem file-stream: tumbling "
     "1-day event-time windows, exact BIGINT num/den fractions, "
     "complete mode == batch rollup bit-for-bit — the indicator "
-    "family's streaming deployment shape (late r8)",
+    "family's streaming deployment shape",
 )
 def q_streaming_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_table_dir(sf_dir, "lineitem")
@@ -1741,7 +1692,7 @@ def q_streaming_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("qty").alias("den"),
     )
     # cores_floor: ~596k state rows (symbol x day) behind a ~15 MB
-    # staged source — see _stream_shuffle_partitions (r15 A/B).
+    # staged source — see _stream_shuffle_partitions (A/B there).
     out = _run_to_table(
         spark, agg, "complete", src_dir=path, cores_floor=True
     )
@@ -1754,7 +1705,7 @@ def q_streaming_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming CDC apply (late r8): the change-data-capture production
+# Streaming CDC apply: the change-data-capture production
 # shape the suite didn't yet have END TO END on a stream — each
 # microbatch MERGE-upserts the keyed state store (last-write-wins per
 # user), so the final store is the net effect of replaying the feed
@@ -1766,7 +1717,7 @@ def q_streaming_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale design: the per-batch merge is one key-shuffle over
 # |store ∪ batch|; the store rewrite-per-batch is the documented
 # test-scale simplification — production buckets the store by key and
-# rewrites only matched buckets (exactly the r7 signature-store
+# rewrites only matched buckets (exactly the dedup signature-store
 # layout, io/writers.py bucketed write), keeping per-batch cost
 # O(batch + touched buckets), not O(store).
 # ---------------------------------------------------------------------------
@@ -1845,9 +1796,9 @@ _LAST_CDC_DATA_BATCHES: int = -1
 
 def _keep_newest(df: DataFrame, key: str = "device_id") -> DataFrame:
     """Last-write-wins resolve: keep the (ts, event_id)-max row per
-    key. r14 optimization (guide §2.3 "aggregate before you shuffle"):
-    a grouped ``max_by`` replaces the old row_number window — partial
-    map-side aggregation shrinks the shuffle to one in-flight row per
+    key (guide §2.3 "aggregate before you shuffle"): a grouped
+    ``max_by`` replaces the old row_number window — partial map-side
+    aggregation shrinks the shuffle to one in-flight row per
     key per map task and drops the per-partition sort; at 100 TB the
     merge shuffle carries keys+payload once instead of every batch
     row. Picks the IDENTICAL row as the window did: (ts, event_id) is
@@ -1876,8 +1827,8 @@ def _cdc_upsert(
     """Shared body of the five CDC plans: stage events as four
     ts-ordered chunks, stream them one microbatch per chunk into
     ``apply(store_dir, batch_df, batch_id)`` (foreachBatch) over a
-    per-invocation store root (no cross-query sharing — the r7
-    _STORE_DIR concurrency lesson), reaped at exit, then project
+    per-invocation store root (no cross-query sharing — the dedup
+    signature-store concurrency lesson), reaped at exit, then project
     ``read_final(store_dir, query)`` to the oracle's columns.
     ``tenant`` adds the tenant column and the packed key
     ck = tenant * 2^32 + device_id."""
@@ -1982,7 +1933,7 @@ def _manifest_cdc(
     "device-keyed parquet store (last-write-wins by ts, event_id); "
     "the final store must equal the batch last-event-per-key rollup "
     "— cross-batch override resolution goes THROUGH the store, so a "
-    "merge bug breaks the hash (late r8; SURVEY §2.11)",
+    "merge bug breaks the hash (SURVEY §2.11)",
 )
 def q_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Whole-store rewrite per batch: each version is a fresh dir under
@@ -2023,7 +1974,7 @@ _CDC_N_BUCKETS = 64
 @register(
     "streaming_cdc_upsert_bucketed",
     _CDC_ORACLE,
-    doc="the CDC apply's PRODUCTION store path (r10; closes the "
+    doc="the CDC apply's PRODUCTION store path (closes the "
     "documented test-scale simplification in the sibling query): the "
     "store is Hive-partitioned by bucket = device_id % 64, and each "
     "microbatch merge rewrites ONLY the buckets the batch touches — "
@@ -2066,8 +2017,7 @@ _LAST_CDC_FILE_STATS: list[dict] = []
 @register(
     "streaming_cdc_upsert_filestats",
     _CDC_ORACLE,
-    doc="the CDC store's FILE-level merge path (r11; r10 verdict item "
-    "2): at a 10^8-10^9-key store the touched buckets themselves get "
+    doc="the CDC store's FILE-level merge path: at a 10^8-10^9-key store the touched buckets themselves get "
     "large, and a partition-overwrite merge must read and rewrite "
     "every row of a touched bucket. Here each bucket holds several "
     "key-range-clustered parquet files; the merge reads each file's "
@@ -2123,8 +2073,8 @@ _LAST_CDC_TENANT_STORE: list[str] = []
 @register(
     "streaming_cdc_upsert_tenant",
     _CDC_TENANT_ORACLE,
-    doc="the MULTI-TENANT CDC store (r11 starter: per-tenant range "
-    "clustering): row identity is the COMPOSITE (tenant, device) — "
+    doc="the MULTI-TENANT CDC store (per-tenant range clustering): "
+    "row identity is the COMPOSITE (tenant, device) — "
     "realized as one long ck = tenant*2^32 + device so the manifest "
     "store's generic key_col range-clusters tenant-FIRST — and the "
     "store is bucketed by tenant. When hot keys cluster per tenant, "
@@ -2162,7 +2112,7 @@ _LAST_CDC_SHARDED_STORE: list[str] = []
 @register(
     "streaming_cdc_upsert_sharded",
     _CDC_ORACLE,
-    doc="the file-level CDC store behind a SHARDED manifest (r12): the "
+    doc="the file-level CDC store behind a SHARDED manifest: the "
     "root _manifest.json is an Iceberg-style manifest LIST of "
     "per-shard descriptors over immutable shard JSONs, buckets hash "
     "to shards, and each micro-batch merge loads and rewrites ONLY "

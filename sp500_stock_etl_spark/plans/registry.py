@@ -36,8 +36,7 @@ def register(name: str, oracle: str | None, doc: str = ""):
         # A duplicate registration would silently REPLACE the earlier
         # query (dict assignment) — the driver would then hash the new
         # body under the old name and the old query would vanish from
-        # the surface without any test failing. Fail loudly instead
-        # (a near-miss in late r8 motivated this guard).
+        # the surface without any test failing. Fail loudly instead.
         if name in _REGISTRY:
             raise ValueError(
                 f"duplicate query registration: {name!r} is already "
@@ -60,109 +59,82 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
-# Explicit driver-facing ordering. The verify driver hash-checks the first
-# 50 registry entries against their DuckDB oracles. The window ROTATES
-# each round (round-2 verdict item 1). Round-10 policy (unchanged from
-# r7/r8/r9): (a) queries BORN this round — and queries whose oracle was
-# UPGRADED — are inserted at the head the moment they land, so
-# after-rotation debt cannot recur; (b) every remaining slot is the
-# stalest-green fill, GENERATED from the CORRECTNESS union by
-# `scripts/coverage_report.py` (stalest_ok, oracle-bearing entries
-# only) — argmin(latest OK round), ties by name. Rotation never
-# un-verifies anything locally: every registry oracle is re-checked on
-# every pytest run by tests/test_oracle_parity.py (full-registry
-# parametrize), and output schemas are swept by
-# tests/test_schema_audit.py.
+# Explicit driver-facing ordering. The verify driver hash-checks the
+# first 50 registry entries against their DuckDB oracles, so the head
+# holds the queries whose code or oracle changed most recently, then the
+# stalest-verified oracle-bearing queries (`scripts/coverage_report.py`
+# generates that fill from the CORRECTNESS files). Every registry oracle
+# is still checked on every pytest run by tests/test_oracle_parity.py,
+# and output schemas are swept by tests/test_schema_audit.py. The
+# history of the window is in BASELINE.md §19.
 _PRIORITY: tuple[str, ...] = (
-    # --- r15 window. Policy unchanged (r7..r14): births and
-    # semantically-rewritten/oracle-upgraded queries at the head the
-    # moment they land; every remaining slot is the stalest-green
-    # fill GENERATED from the CORRECTNESS union by
-    # `scripts/coverage_report.py` (stalest_ok, oracle-bearing only).
-    # Head (r14 verdict item 6): the r14 semantic rewrites the r14
-    # driver sample never exercised — the 5 CDC-upsert stores
-    # (max_by resolve + one-pass staging), both jsonl-sink
-    # round-trips (vectorized serializer), streaming_corpus_dedup
-    # (inclusion-exclusion jaccard) — plus the two families this
-    # round's optimizations touch (PQ trainer, arrow UDTF). Fills
-    # generated 2026-08-18 after CORRECTNESS_r14 (zero debts:
-    # never_checked = [], oracle_upgraded_pending = [],
-    # ever_error = []).
-    "streaming_cdc_upsert_multibatch",  # r14 rewrite (verdict item 6)
-    "streaming_cdc_upsert_bucketed",  # r14 rewrite (verdict item 6)
-    "streaming_cdc_upsert_filestats",  # r14 rewrite (verdict item 6)
-    "streaming_cdc_upsert_tenant",  # r14 rewrite (verdict item 6)
-    "streaming_cdc_upsert_sharded",  # r14 rewrite (verdict item 6)
-    "jsonl_sink_roundtrip_agg",  # r14 rewrite (verdict item 6)
-    "streaming_jsonl_sink_roundtrip",  # r14 rewrite (verdict item 6)
-    "streaming_corpus_dedup",  # r14 rewrite (verdict item 6)
-    "embedding_pq_encode_init",  # r15-touched family
-    "arrow_udtf_installments",  # r15-touched family
-    # r15 continuation: plans whose shingle/winnow map stage gained the
-    # guarded ensure_parallelism repartition — driver-side parity
-    # evidence for the touched plans (same policy as the r14 head).
-    "dedup_exact_substring",  # r15 continuation (scan parallelism)
-    "dedup_minhash_lsh",  # r15 continuation (scan parallelism)
-    "similarity_join_corpus",  # r15 continuation (scan parallelism)
-    "corpus_doc_embedding_hybrid_dedup",  # r15 continuation (scan parallelism)
-    "entity_resolution_customers",  # r15 continuation (scan parallelism)
-    "window_navigation_suite",  # r9
-    "array_functions_suite",  # r10
-    "basket_part_cooccurrence",  # r10
-    "bitwise_agg_suite",  # r10
-    "bucketed_fact_join",  # r10
-    "cohort_retention_weekly",  # r10
-    "corpus_boilerplate_rewrite",  # r10
-    "corpus_decontamination_bloom",  # r10
-    "corpus_reservoir_sample",  # r10
-    "corpus_tfidf_topterms",  # r10
-    "corpus_train_val_test_split",  # r10
-    "corpus_training_build",  # r10
-    "corpus_unigram_stats",  # r10
-    "dedup_connected_components",  # r10
-    "dedup_semantic_clusters",  # r10
-    "event_funnel_conversion",  # r10
-    "feature_outlier_fences",  # r10
-    "max_drawdown_per_symbol",  # r10
-    "ohlc_hourly_resample",  # r10
-    "regex_functions_suite",  # r10
-    "schema_evolution_scan",  # r10
-    "sma_crossover_signals",  # r10
-    "streaming_ohlc_bars",  # r10
-    "streaming_sliding_sums",  # r10
-    "streaming_static_enrich",  # r10
-    "streaming_stream_stream_join",  # r10
-    "streaming_stream_stream_left_join",  # r10
-    "streaming_tumbling_counts",  # r10
-    "streaming_tumbling_counts_rocksdb",  # r10
-    "symbol_validation",  # r10
-    "text_quality_stats",  # r10
-    "text_repetition_stats",  # r10
-    "topk_movers_per_day",  # r10
-    "tpch_q12_shipmode",  # r10
-    "tpch_q14_promo_share",  # r10
-    # (tpch_q15/q16/q17/q18/q20 rotated out to make room for the five
-    # continuation-touched plans above — they stay covered every
-    # pytest run by tests/test_oracle_parity.py's full-registry loop.)
+    "streaming_cdc_upsert_multibatch",
+    "streaming_cdc_upsert_bucketed",
+    "streaming_cdc_upsert_filestats",
+    "streaming_cdc_upsert_tenant",
+    "streaming_cdc_upsert_sharded",
+    "jsonl_sink_roundtrip_agg",
+    "streaming_jsonl_sink_roundtrip",
+    "streaming_corpus_dedup",
+    "embedding_pq_encode_init",
+    "arrow_udtf_installments",
+    "dedup_exact_substring",
+    "dedup_minhash_lsh",
+    "similarity_join_corpus",
+    "corpus_doc_embedding_hybrid_dedup",
+    "entity_resolution_customers",
+    "window_navigation_suite",
+    "array_functions_suite",
+    "basket_part_cooccurrence",
+    "bitwise_agg_suite",
+    "bucketed_fact_join",
+    "cohort_retention_weekly",
+    "corpus_boilerplate_rewrite",
+    "corpus_decontamination_bloom",
+    "corpus_reservoir_sample",
+    "corpus_tfidf_topterms",
+    "corpus_train_val_test_split",
+    "corpus_training_build",
+    "corpus_unigram_stats",
+    "dedup_connected_components",
+    "dedup_semantic_clusters",
+    "event_funnel_conversion",
+    "feature_outlier_fences",
+    "max_drawdown_per_symbol",
+    "ohlc_hourly_resample",
+    "regex_functions_suite",
+    "schema_evolution_scan",
+    "sma_crossover_signals",
+    "streaming_ohlc_bars",
+    "streaming_sliding_sums",
+    "streaming_static_enrich",
+    "streaming_stream_stream_join",
+    "streaming_stream_stream_left_join",
+    "streaming_tumbling_counts",
+    "streaming_tumbling_counts_rocksdb",
+    "symbol_validation",
+    "text_quality_stats",
+    "text_repetition_stats",
+    "topk_movers_per_day",
+    "tpch_q12_shipmode",
+    "tpch_q14_promo_share",
 )
 
 
 def all_queries() -> dict[str, Query]:
     # Import modules for their registration side effects.
     from . import queries_reference  # noqa: F401
-    from . import queries_extensions  # noqa: F401
+    from . import queries_relational  # noqa: F401
     from . import queries_analytics  # noqa: F401
-    from . import queries_sources  # noqa: F401
-    from . import queries_relational2  # noqa: F401
-    from . import queries_northstar  # noqa: F401
+    from . import queries_tpc  # noqa: F401
+    from . import queries_indicators  # noqa: F401
+    from . import queries_dedup  # noqa: F401
+    from . import queries_similarity  # noqa: F401
+    from . import queries_corpus  # noqa: F401
+    from . import queries_graph  # noqa: F401
     from . import queries_streaming  # noqa: F401
     from . import queries_multimodal  # noqa: F401
-    from . import queries_quality  # noqa: F401
-    from . import queries_r6  # noqa: F401
-    from . import queries_r7  # noqa: F401
-    from . import queries_r8  # noqa: F401
-    from . import queries_r9  # noqa: F401
-    from . import queries_indicators  # noqa: F401
+    from . import queries_sources  # noqa: F401
 
     ordered: dict[str, Query] = {}
     for name in _PRIORITY:

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 
@@ -7,7 +9,7 @@ import pytest
 def spark():
     from sp500_stock_etl_spark.session import get_spark
 
-    s = get_spark("sp500-etl-tests", cpus=8)
+    s = get_spark("sp500-etl-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield s
 
 

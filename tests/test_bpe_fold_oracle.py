@@ -1,4 +1,4 @@
-"""The DuckDB-side BPE merge replay (plans/queries_r6.py::
+"""The DuckDB-side BPE merge replay (plans/queries_corpus.py::
 _sql_bpe_fold) must implement the exact greedy left-to-right fold the
 Catalyst encoder uses. A plain string replace is NOT faithful (for a
 run of 5+ identical symbols the non-overlapping scan pairs them
@@ -12,7 +12,7 @@ import random
 
 import duckdb
 
-from sp500_stock_etl_spark.plans.queries_r6 import (
+from sp500_stock_etl_spark.plans.queries_corpus import (
     BPE_PRETRAINED_MERGES,
     _sql_bpe_fold,
 )

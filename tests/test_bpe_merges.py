@@ -132,11 +132,13 @@ def test_bpe_encode_on_documents(spark, sf_dir):
 
 def test_pretrained_merge_table_provenance(spark):
     """The literal BPE_PRETRAINED_MERGES baked into the registry query
-    (plans/queries_r6.py) must be exactly what the trainer learns from
+    (plans/queries_corpus.py) must be exactly what the trainer learns from
     the sf0.001 documents corpus — pins the table's documented
     provenance so a testdata regeneration can't silently desync it."""
     from sp500_stock_etl_spark.io.readers import load_table
-    from sp500_stock_etl_spark.plans.queries_r6 import BPE_PRETRAINED_MERGES
+    from sp500_stock_etl_spark.plans.queries_corpus import (
+        BPE_PRETRAINED_MERGES,
+    )
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text"

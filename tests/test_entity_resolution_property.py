@@ -11,9 +11,7 @@ from __future__ import annotations
 
 from hypothesis import given, settings, strategies as st
 
-from sp500_stock_etl_spark.plans.queries_extensions import (
-    resolve_entities_lev1,
-)
+from sp500_stock_etl_spark.plans.queries_dedup import resolve_entities_lev1
 
 _NAMES = st.text(alphabet="abc", min_size=0, max_size=6)
 

@@ -1,4 +1,4 @@
-"""Incremental signature-store dedup (plans/queries_r7.py): the scale
+"""Incremental signature-store dedup (plans/queries_dedup.py): the scale
 claims behind the r7 capstone are checked here, not assumed —
 
 1. the store side of the candidate join consumes the bucketed layout
@@ -33,7 +33,7 @@ def test_store_side_join_has_no_exchange(spark, sf_dir):
     candidate join without an Exchange; the new-batch side is the only
     one allowed to shuffle."""
     from sp500_stock_etl_spark.io.writers import write_bucketed_table
-    from sp500_stock_etl_spark.plans.queries_r7 import (
+    from sp500_stock_etl_spark.plans.queries_dedup import (
         _INC_BUCKETS,
         _inc_band_key_rows,
         _inc_corpus_and_new,
@@ -89,29 +89,27 @@ def test_incremental_equals_batch_restricted(spark, sf_dir):
     MinHash-LSH dedup of (corpus ∪ new) restricted to pairs with a
     new doc on either side."""
     from sp500_stock_etl_spark.operators.dedup import minhash_lsh_dedup
-    from sp500_stock_etl_spark.plans.queries_northstar import (
-        _NEARDUP_OFFSET,
-        _docs_with_neardups,
-    )
-    from sp500_stock_etl_spark.plans.queries_r7 import (
+    from sp500_stock_etl_spark.plans.queries_dedup import (
+        NEARDUP_OFFSET,
         _INC_BANDS,
         _INC_JT,
         _INC_NGRAM,
         _INC_NUM_HASHES,
+        docs_with_neardups,
     )
 
     inc = all_queries()["dedup_incremental_refresh"].spark_fn(spark, sf_dir)
     got = sorted(tuple(r) for r in inc.collect())
 
     batch = minhash_lsh_dedup(
-        _docs_with_neardups(spark, sf_dir),
+        docs_with_neardups(spark, sf_dir),
         "doc_id",
         "text",
         ngram=_INC_NGRAM,
         num_hashes=_INC_NUM_HASHES,
         bands=_INC_BANDS,
         threshold=_INC_JT,
-    ).where(F.col("doc_b") >= _NEARDUP_OFFSET)
+    ).where(F.col("doc_b") >= NEARDUP_OFFSET)
     want = sorted(tuple(r) for r in batch.collect())
     assert got == want
     assert len(got) > 0
@@ -121,12 +119,12 @@ def test_store_queries_concurrent_invocations_are_isolated(spark, sf_dir):
     """r8 (r7 verdict item 4): two concurrent invocations of the
     signature-store roundtrip must not collide on store paths or
     catalog table names — each invocation gets its own temp dir +
-    table token (queries_r7._inc_store_ctx). Runs the full
+    table token (queries_dedup._inc_store_ctx). Runs the full
     write→append→read cycle from two threads and checks both produce
     the identical (band-level) result."""
     import threading
 
-    from sp500_stock_etl_spark.plans.queries_r7 import (
+    from sp500_stock_etl_spark.plans.queries_dedup import (
         q_dedup_signature_store_roundtrip,
     )
 

@@ -534,6 +534,7 @@ def test_crashed_commit_leaves_no_orphan_shards(spark, tmp_path, monkeypatch):
         for p in glob.glob(os.path.join(store, "_shard-*.json"))
     }
     assert on_disk == live_before  # crash attempt's shards unlinked
+    _assert_no_orphan_data_files(store)
 
     # Hard kill (no in-process cleanup): plant an orphan + tmp, then
     # merge — the sweep reclaims both, referenced shards survive.
@@ -558,6 +559,20 @@ def test_crashed_commit_leaves_no_orphan_shards(spark, tmp_path, monkeypatch):
     assert _rows(spark, store) == sorted(
         (k, 0) for k in range(256)
     )
+    _assert_no_orphan_data_files(store)
+
+
+def _assert_no_orphan_data_files(store):
+    """Every parquet file under a bucket dir is live or dead in the
+    current generation: a crashed commit's published files were
+    unlinked with its shards."""
+    m = MS.read_manifest(store)
+    known = {e["path"] for e in MS._live_entries(store, m)} | set(m["dead"])
+    on_disk = {
+        os.path.relpath(p, store)
+        for p in glob.glob(os.path.join(store, "bucket=*", "*.parquet"))
+    }
+    assert on_disk <= known, sorted(on_disk - known)
 
 
 def test_orphan_sweep_spares_young_shards(spark, tmp_path):

@@ -9,12 +9,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sp500_stock_etl_spark.plans.queries_r8 import (
+from sp500_stock_etl_spark.plans.queries_corpus import (
     _MIX_BUDGET,
     q_domain_mixture,
     q_quality_classifier,
-    q_unpivot_measures,
 )
+from sp500_stock_etl_spark.plans.queries_relational import q_unpivot_measures
 
 SF = "/root/testdata/sf0.001"
 

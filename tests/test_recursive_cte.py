@@ -11,7 +11,7 @@ import math
 import pytest
 from pyspark.sql.utils import AnalysisException
 
-from sp500_stock_etl_spark.plans.queries_r8 import (
+from sp500_stock_etl_spark.plans.queries_graph import (
     q_recursive_bom,
     q_recursive_walk,
 )
@@ -80,7 +80,7 @@ def test_lateral_topk_decorrelates_to_window_group_limit(spark):
     """The correlated LATERAL ... LIMIT 2 must be decorrelated into
     WindowGroupLimit (map-side partial top-k before the shuffle) +
     an equi-join — never a nested-loop or cartesian plan."""
-    from sp500_stock_etl_spark.plans.queries_r8 import q_lateral_topk
+    from sp500_stock_etl_spark.plans.queries_relational import q_lateral_topk
 
     plan = (
         q_lateral_topk(spark, SF)._jdf.queryExecution().executedPlan().toString()
@@ -93,7 +93,7 @@ def test_lateral_topk_decorrelates_to_window_group_limit(spark):
 def test_sql_udf_is_inlined(spark):
     """The SQL-defined UDF must leave NO udf call in the physical
     plan — the body is inlined into the aggregate expression."""
-    from sp500_stock_etl_spark.plans.queries_r8 import q_sql_udf_cents
+    from sp500_stock_etl_spark.plans.queries_relational import q_sql_udf_cents
 
     plan = (
         q_sql_udf_cents(spark, SF)._jdf.queryExecution().executedPlan().toString()

@@ -1,4 +1,4 @@
-"""Exact-substring passage dedup (plans/queries_r7.py::
+"""Exact-substring passage dedup (plans/queries_dedup.py::
 dedup_exact_substring): the winnowed fingerprint selection is checked
 against a brute-force Python reference, with the planted passage at
 DIFFERENT offsets in the two docs — the offset-robustness that killed
@@ -12,7 +12,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from sp500_stock_etl_spark.plans.queries_r7 import (
+from sp500_stock_etl_spark.plans.queries_dedup import (
     _SPAN_W,
     _SPAN_WIN,
     winnowed_fingerprints,

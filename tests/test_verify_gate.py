@@ -99,3 +99,27 @@ def test_jaccard_expr_matches_distinct_concat_union(spark):
     ).collect()
     for r in got:
         assert r["new"] == r["old"]  # bitwise (both exact doubles)
+
+
+def test_gate_sample_independent_of_layout(spark, monkeypatch):
+    """The gate's size sample is chosen by shingle-array hash, not by
+    partition order: one 6,000-row frame (more than the 2,048-row
+    sample) with array sizes that grow with the id gives the same
+    ``est_row`` however its rows are laid out."""
+    rows = [
+        (i, [f"s{i}_{k}" for k in range(1 + i // 200)]) for i in range(6000)
+    ]
+    schema = "doc_id long, shingles array<string>"
+    layouts = {
+        "ascending": spark.createDataFrame(rows, schema).coalesce(1),
+        "descending": spark.createDataFrame(rows[::-1], schema).coalesce(1),
+        "hashed": spark.createDataFrame(rows, schema).repartition(7, "doc_id"),
+    }
+    pairs = spark.createDataFrame([(0, 1)], "doc_a long, doc_b long")
+    monkeypatch.setattr(D, "_verify_budget_bytes", lambda spark: 1e12)
+    est = {}
+    for name, sh in layouts.items():
+        D.LAST_GATE_DECISIONS.clear()
+        D._verify_size_gate(pairs, sh)
+        est[name] = D.LAST_GATE_DECISIONS[-1]["est_row"]
+    assert len(set(est.values())) == 1, est
