@@ -8,7 +8,11 @@ claims can be committed as evidence.
 
 For each query it also prints the number of generated classes Spark
 compiled during the timed reps (CodegenMetrics; near 0 once the plan
-is warm, so a codegen-cache miss shows up here) and a hash of the
+is warm, so a codegen-cache miss shows up here), the number of Spark
+jobs each timed rep started (one job group per rep, counted with the
+status tracker: listing, schema-inference and build jobs show up here
+next to the execution jobs; a streaming query's micro-batches run
+under the stream's own group and are not counted), and a hash of the
 sorted output rows, from one extra untimed collect, in the canonical
 form of tests/parity.py: equal hashes before and after a change are
 its output-identity proof.
@@ -58,7 +62,9 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark("measure")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    tracker = sc.statusTracker()
     registry = all_queries()
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
 
@@ -88,24 +94,28 @@ def main() -> None:
                 f.write(buf.getvalue())
         if args.no_time:
             continue
-        walls = []
+        walls, groups = [], []
         compiles0 = compiles()
-        for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"measure:{name}")
+        for rep in range(args.reps):
+            group = f"measure:{name}:{rep}"
+            sc.setJobGroup(group, f"measure:{name}")
             t0 = time.perf_counter()
             q.spark_fn(spark, args.sf).write.format("noop").mode(
                 "overwrite"
             ).save()
             walls.append(round(time.perf_counter() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
+            sc._jsc.clearJobGroup()
+            groups.append(group)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         out[name] = {
             "best": min(walls),
             "walls": walls,
+            "jobs": [len(tracker.getJobIdsForGroup(g)) for g in groups],
             "compiles": compiles() - compiles0,
             "hash": output_hash(q.spark_fn(spark, args.sf)),
         }
         print(
-            f"{name}: best={min(walls)} walls={walls} "
+            f"{name}: best={min(walls)} walls={walls} jobs={out[name]['jobs']} "
             f"compiles={out[name]['compiles']} hash={out[name]['hash']}",
             flush=True,
         )

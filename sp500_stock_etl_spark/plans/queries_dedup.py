@@ -313,7 +313,7 @@ def sql_cosine(a: str, b: str) -> str:
 # Planted exact vector copies guarantee positives.
 # ---------------------------------------------------------------------------
 
-# Banded SRP layout: BANDS independent hash
+# Banded SRP layout: SRP_BANDS independent hash
 # tables of PLANES sign bits each; band b uses global planes
 # [b*PLANES, (b+1)*PLANES). The oracle reproduces every band
 # signature from the same md5-derived hyperplane literals, and a pair
@@ -323,7 +323,7 @@ def sql_cosine(a: str, b: str) -> str:
 # operators/similarity.srp_params_for(corpus size); here it is pinned
 # so the oracle text is static.
 PLANES = 8
-BANDS = 4
+SRP_BANDS = 4
 _VEC_OFFSET = 1_000_000
 
 
@@ -347,12 +347,12 @@ def _sql_srp_sig(vec: str, band: int = 0) -> str:
 
 def sql_band_cols(vec: str) -> str:
     return ", ".join(
-        f"{_sql_srp_sig(vec, b)} AS s{b}" for b in range(BANDS)
+        f"{_sql_srp_sig(vec, b)} AS s{b}" for b in range(SRP_BANDS)
     )
 
 
 def sql_any_band(a: str, b: str) -> str:
-    return " OR ".join(f"{a}.s{i} = {b}.s{i}" for i in range(BANDS))
+    return " OR ".join(f"{a}.s{i} = {b}.s{i}" for i in range(SRP_BANDS))
 
 
 _COSINE_NEARDUP_ORACLE = f"""
@@ -384,7 +384,7 @@ def q_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = emb.select("vec_id", "embedding").unionByName(copies)
     return S.cosine_neardup_pairs(
-        base, threshold=0.999, planes=PLANES, bands=BANDS
+        base, threshold=0.999, planes=PLANES, bands=SRP_BANDS
     )
 
 
@@ -1054,7 +1054,7 @@ def q_hybrid_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ebase = emb.select("vec_id", "embedding").unionByName(variants)
     epairs = S.cosine_neardup_pairs(
-        ebase, threshold=_HYB_COS, planes=PLANES, bands=BANDS
+        ebase, threshold=_HYB_COS, planes=PLANES, bands=SRP_BANDS
     ).select(
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),

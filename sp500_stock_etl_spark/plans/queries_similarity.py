@@ -21,6 +21,7 @@ from .queries_dedup import (
     NUM_HASHES,
     PLANES,
     ROWS,
+    SRP_BANDS,
     sql_any_band,
     sql_band_cols,
     sql_cosine,
@@ -108,7 +109,7 @@ def q_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return S.lsh_topk(queries, emb, k=10, planes=PLANES, bands=BANDS)
+    return S.lsh_topk(queries, emb, k=10, planes=PLANES, bands=SRP_BANDS)
 
 
 # ---------------------------------------------------------------------------

@@ -18,6 +18,25 @@ that make the same plans work on local[32] for tests and on a
   warm session reuses compiled classes instead of recompiling (and
   re-JITting) them on each run: 5,000 entries against the 3,139
   classes one pass over the registry compiles.
+- input files listed on the driver: Spark lists a read of more than
+  ``parallelPartitionDiscovery.threshold`` (default 32) paths with a
+  Spark job of one task per path. In ``local[N]`` those tasks run in
+  the same JVM as the driver, at about 12 ms CPU each, so the job costs
+  far more than the listing it distributes. ``get_spark`` raises the
+  threshold past any path count, so every multi-path read (a
+  date-partitioned table, a manifest generation's explicit file list)
+  lists serially on the driver. On a 4-vCPU host, local[4]
+  (BASELINE.md §20):
+
+  | read | job listing (32) | driver listing |
+  |---|---|---|
+  | dir with 100 partitions | 0.50 s, 1.41 CPU-s | 0.07 s, 0.12 CPU-s |
+  | dir with 1,000 partitions | 3.71 s, 12.5 CPU-s | 0.15 s, 0.24 CPU-s |
+  | dir with 5,000 partitions | 18.1 s, 61.6 CPU-s | 0.52 s, 0.58 CPU-s |
+  | 300 explicit files | 1.07-1.18 s, 3.4-3.9 CPU-s | 0.06-0.09 s, 0.10-0.17 CPU-s |
+
+  The threshold is build-time only: ``harden`` leaves it alone, so an
+  external (cluster) session keeps Spark's distributed listing.
 """
 
 from __future__ import annotations
@@ -28,7 +47,9 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-# Conf that must be set before the JVM starts.
+# Conf set on the builder of the sessions this module creates, and never
+# applied to a session we're handed (some of it must be set before the
+# JVM starts; the rest is sized for local mode only).
 _BUILD_TIME_CONF = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.sql.shuffle.partitions": None,  # filled from cpus below
@@ -39,6 +60,9 @@ _BUILD_TIME_CONF = {
     # than a session's plan set evicts classes that the next run of the
     # same plan must compile, load and JIT again.
     "spark.sql.codegen.cache.maxEntries": "5000",
+    # Paths a read lists on the driver before Spark starts a listing job
+    # (default 32). Int.MaxValue: a local session never starts one.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
 }
 
 # Conf that is runtime-settable; applied to any session we're handed
@@ -119,15 +143,10 @@ def get_spark(app_name: str = "sp500-stock-etl-spark", cpus: int | None = None) 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.driver.memory", _BUILD_TIME_CONF["spark.driver.memory"])
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            _BUILD_TIME_CONF["spark.sql.codegen.cache.maxEntries"],
-        )
         .config("spark.ui.enabled", "false")
     )
-    for k, v in _RUNTIME_CONF.items():
+    conf = {**_BUILD_TIME_CONF, "spark.sql.shuffle.partitions": str(cpus), **_RUNTIME_CONF}
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _ship_package(spark)
