@@ -13,8 +13,13 @@ rename) is a MANIFEST generation.
 
 Layout. ``_manifest.json`` at the store root is a manifest LIST:
 
-    {generation, key_col, n_shards, shards, dead, dead_since,
+    {generation, key_col, schema, n_shards, shards, dead, dead_since,
      dead_meta, dead_meta_since}
+
+``schema`` is the Spark schema (``StructType.json()``) of the rows a
+read of the store returns, fixed when the store is created: reads
+pass it to ``spark.read.schema`` instead of inferring it from the
+parquet footers, which would start a Spark job per read.
 
 ``shards`` holds ``n_shards`` descriptors ``{path, n_files, bytes}``,
 each pointing at an immutable uuid-named shard JSON whose ``files``
@@ -68,6 +73,7 @@ import warnings
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from .commit_lock import CommitLock
 
@@ -93,6 +99,18 @@ def _write_manifest_atomic(store_dir: str, manifest: dict) -> None:
     os.rename(tmp, os.path.join(store_dir, _MANIFEST))
 
 
+def _read_files(
+    spark: SparkSession, store_dir: str, m: dict, rels: list[str]
+) -> DataFrame:
+    """The store files ``rels`` read with the root's recorded schema."""
+    schema = T.StructType.fromJson(json.loads(m["schema"]))
+    return (
+        spark.read.schema(schema)
+        .option("basePath", store_dir)
+        .parquet(*[os.path.join(store_dir, rel) for rel in rels])
+    )
+
+
 def read_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Manifest-pinned read: exactly the current generation's live
     files (a directory listing would also see retained dead files —
@@ -100,12 +118,10 @@ def read_store(spark: SparkSession, store_dir: str) -> DataFrame:
     m = read_manifest(store_dir)
     if m is None:
         raise FileNotFoundError(f"no manifest at {store_dir!r}")
-    paths = [
-        os.path.join(store_dir, e["path"]) for e in _live_entries(store_dir, m)
-    ]
-    if not paths:
+    rels = [e["path"] for e in _live_entries(store_dir, m)]
+    if not rels:
         raise ValueError(f"empty manifest generation at {store_dir!r}")
-    return spark.read.option("basePath", store_dir).parquet(*paths)
+    return _read_files(spark, store_dir, m, rels)
 
 
 def _safe_size(path: str) -> int:
@@ -172,11 +188,23 @@ def _live_entries(store_dir: str, m: dict) -> list[dict]:
     return [e for es in shards.values() for e in es]
 
 
-def _empty_generation(key_col: str, n_shards: int) -> dict:
+def _store_schema(df: DataFrame, partition_col: str) -> str:
+    """Schema JSON of the rows a read of a store created from ``df``
+    returns: the data columns, then the partition column, all
+    nullable, as a parquet scan with partition discovery reads them."""
+    fields = [f for f in df.schema.fields if f.name != partition_col]
+    fields.append(df.schema[partition_col])
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, True, f.metadata) for f in fields]
+    ).json()
+
+
+def _empty_generation(key_col: str, schema: str, n_shards: int) -> dict:
     """The base a store's first commit validates against."""
     return {
         "generation": -1,
         "key_col": key_col,
+        "schema": schema,
         "n_shards": max(int(n_shards), 1),
         "shards": [],
         "dead": [],
@@ -456,6 +484,7 @@ def _commit(
         root = {
             "generation": m["generation"] + 1,
             "key_col": base["key_col"],
+            "schema": base["schema"],
             "n_shards": n,
             "shards": shards,
             "dead": dead,
@@ -622,7 +651,10 @@ def merge_manifest_store(
     for attempt in range(_MAX_COMMIT_RETRIES + 1):
         m = read_manifest(store_dir)
         if m is None:
-            base = _empty_generation(key_col, manifest_shards)
+            base = _empty_generation(
+                key_col, _store_schema(batch_latest, partition_col),
+                manifest_shards,
+            )
             base_entries: list[dict] = []
             replaced: list[dict] = []
             merged, how = batch_latest, "none"
@@ -641,8 +673,8 @@ def merge_manifest_store(
             t_ph = time.perf_counter()
             merged_in = batch_latest
             if replaced:
-                old = spark.read.option("basePath", store_dir).parquet(
-                    *[os.path.join(store_dir, e["path"]) for e in replaced]
+                old = _read_files(
+                    spark, store_dir, m, [e["path"] for e in replaced]
                 )
                 merged_in = old.unionByName(batch_latest)
             merged = track_local_checkpoint(

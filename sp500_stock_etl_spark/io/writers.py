@@ -7,6 +7,8 @@
 - K3: warehouse load → a date-partitioned parquet table. At 100 TB
   this is the layout that makes dynamic partition pruning work for
   every date-ranged query (SURVEY.md §7.4).
+- A hash-bucketed, sorted table for exchange-free co-located joins,
+  and a CDC merge that rewrites only the partitions a batch touches.
 """
 
 from __future__ import annotations
@@ -89,206 +91,6 @@ def write_bucketed_table(
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)
-
-
-def write_bucketed_table_atomic(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    path: str | None = None,
-) -> None:
-    """Concurrency-hardened ``write_bucketed_table``: stage, then
-    publish with one atomic rename.
-
-    Motivation (r9 watch item → r9 verdict item 3): one transient
-    ``FileAlreadyExistsException`` was seen in a signature-store delta
-    write under the 8-thread qps mix. FileOutputCommitter stages task
-    attempts under ``$path/_temporary/$appAttemptId`` — appAttemptId
-    is a constant 0 in local/client mode, so any two write jobs that
-    ever share a destination path (retry, replay, or two invocations
-    racing to the same store) share one staging namespace and can
-    collide on attempt files. Rather than waiting for a recurrence:
-
-    1. Data lands in a per-invocation staging directory
-       ``{path}.__stage__{uuid}`` — a committer namespace no other
-       write job can ever share (uuid4 per call).
-    2. One ``os.rename(stage, path)`` publishes it. POSIX rename is
-       atomic, so readers see the old store or the new one, never a
-       half-written directory. If ``path`` exists (overwrite replay),
-       it is first renamed aside and removed after publish — each
-       individual rename stays atomic.
-    3. The catalog entry is re-created OVER the published files
-       (``CREATE TABLE ... CLUSTERED BY ... LOCATION``); bucket ids
-       live in the file names (``..._00007.c000``), so the bucketed
-       no-exchange join layout survives the rename (pinned in
-       tests/test_compaction.py::test_atomic_bucketed_write).
-
-    Cluster note: this is the local-filesystem realization of a
-    commit protocol. On HDFS the same rename is atomic; on S3 the
-    production analogue is a metadata-swap table format — the staged
-    layout maps onto it directly.
-
-    Requires ``path`` (the mechanism IS the path swap); staging is a
-    sibling of ``path`` so the rename never crosses a filesystem.
-    """
-    import os
-    import shutil
-    import uuid
-
-    if path is None:
-        raise ValueError("write_bucketed_table_atomic requires an explicit path")
-    spark = df.sparkSession
-    tok = uuid.uuid4().hex
-    stage_path = f"{path}.__stage__{tok}"
-    stage_table = f"{table}__stage_{tok}"
-    write_bucketed_table(df, stage_table, bucket_col, n_buckets, path=stage_path)
-    # External table: DROP removes only the catalog entry, files stay.
-    spark.sql(f"DROP TABLE IF EXISTS {stage_table}")
-
-    # Publish loop: if a concurrent writer re-creates ``path`` between
-    # our rename-aside and rename-in, the rename-in fails cleanly
-    # (EEXIST/ENOTEMPTY — never a partial mix); take the racer's
-    # publish aside and retry. Last writer wins; every attempt is a
-    # pair of atomic renames, so readers always see a complete store.
-    for attempt in range(50):
-        old_path = None
-        if os.path.exists(path):
-            old_path = f"{path}.__old__{tok}_{attempt}"
-            try:
-                os.rename(path, old_path)
-            except OSError:
-                # A racer moved ``path`` between our exists() check and
-                # the rename-aside (both atomic renames — never a mix).
-                # Nothing of ours changed state; retry from the top.
-                continue
-        try:
-            os.rename(stage_path, path)
-        except OSError:
-            if old_path is not None:
-                # Restore the previous store BEFORE retrying, so a
-                # persistent failure (EACCES, quota) can never end the
-                # loop with ``path`` missing and the old data deleted.
-                try:
-                    os.rename(old_path, path)
-                except OSError:
-                    # Restore lost to a racer that already re-published
-                    # ``path``: our aside copy is superseded under
-                    # last-writer-wins, so dropping it is safe — but
-                    # only once ``path`` demonstrably exists again.
-                    if os.path.exists(path):
-                        shutil.rmtree(old_path, ignore_errors=True)
-                    # else: leave the aside copy on disk for manual
-                    # recovery; the RuntimeError below names the stage.
-            continue
-        if old_path is not None:
-            shutil.rmtree(old_path, ignore_errors=True)
-        break
-    else:
-        raise RuntimeError(
-            f"atomic publish to {path!r} lost 50 straight races; "
-            f"staged data left at {stage_path!r} (any prior store is "
-            f"restored at {path!r} or preserved at a .__old__ sibling)"
-        )
-
-    # Catalog publish is NOT atomic (DROP then CREATE): Spark's session
-    # catalog has no v1 CREATE OR REPLACE, so a concurrent reader of
-    # ``table`` between the two statements can see TABLE_NOT_FOUND, and
-    # two writers to the SAME table name can collide on CREATE. The
-    # FILE publish above is what is atomic; concurrent callers must use
-    # distinct table names (current callers do, via the per-invocation
-    # tok) and share only the path.
-    schema_ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(
-        f"CREATE TABLE {table} ({schema_ddl}) USING parquet "
-        f"CLUSTERED BY (`{bucket_col}`) SORTED BY (`{bucket_col}`) "
-        f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-    )
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Small-file compaction: rewrite a parquet directory into
-    ``ceil(total_bytes / target_file_bytes)`` files.
-
-    The operational tool every streaming/incremental sink eventually
-    needs — availableNow micro-batches and per-partition overwrites
-    accumulate files far smaller than a scan-efficient split, and scan
-    cost at 100 TB is dominated by file-open overhead once files drop
-    below ~tens of MB. Sizing uses the filesystem's own byte count
-    (works for any Hadoop scheme, s3a included), not a row-count
-    heuristic.
-
-    Rewrites via a temp directory then swaps. The swap is NOT atomic
-    for concurrent readers (plain parquet has no snapshot protocol —
-    a table format's transactional rewrite is the production answer);
-    run it in the maintenance window that owns the table.
-
-    Returns {files_before, files_after, bytes}.
-    """
-    import math
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    src = jvm.org.apache.hadoop.fs.Path(path)
-    fs = src.getFileSystem(hconf)
-
-    def _parquet_files(p) -> int:
-        n = 0
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if st.isDirectory():
-                n += _parquet_files(st.getPath())
-            elif name.endswith(".parquet"):
-                n += 1
-        return n
-
-    # A flat coalesce rewrite would silently flatten a Hive partition
-    # layout — refuse rather than corrupt; partitioned tables compact
-    # per-partition (or via a table format's rewrite action).
-    for st in fs.listStatus(src):
-        if st.isDirectory() and "=" in st.getPath().getName():
-            raise ValueError(
-                f"compact_parquet: {path} is Hive-partitioned "
-                f"({st.getPath().getName()}); compact each partition "
-                "directory individually"
-            )
-
-    total = fs.getContentSummary(src).getLength()
-    files_before = _parquet_files(src)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    if files_before <= n_out:
-        return {
-            "files_before": files_before,
-            "files_after": files_before,
-            "bytes": total,
-        }
-
-    tmp = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compact_tmp")
-    # coalesce, not repartition: narrowing to n_out needs no shuffle.
-    spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(
-        str(tmp)
-    )
-    # Swap via rename-aside so a crash at any point leaves a complete
-    # copy under either the table path or <path>__compact_old — never
-    # an empty table path (the old delete-then-rename had that hole).
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compact_old")
-    if fs.exists(old):
-        fs.delete(old, True)
-    fs.rename(src, old)
-    fs.rename(tmp, src)
-    fs.delete(old, True)
-    return {
-        "files_before": files_before,
-        "files_after": _parquet_files(src),
-        "bytes": total,
-    }
 
 
 def merge_touched_partitions(

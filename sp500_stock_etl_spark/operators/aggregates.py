@@ -46,33 +46,3 @@ def qa_summary(
         for c in null_check_cols
     ]
     return df.agg(*aggs)
-
-
-def attach_qa_observation(
-    df: DataFrame,
-    distinct_col: str,
-    null_check_cols: list[str],
-):
-    """The reference's per-run QA printout (dags/sp500_dag.py.py:219-227)
-    as ZERO-extra-pass observability: an Observation rides the next
-    action on ``df`` (accumulator-style, computed during the write
-    itself — no second scan of the input). Distinct counts must be
-    sketch-based here (exact distinct needs a shuffle, which
-    observations don't get) — the same HLL++ trade the 100 TB
-    monitoring path makes anyway.
-
-    Returns (observed_df, observation); read ``observation.get`` after
-    the first action on observed_df.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation("qa")
-    metrics = [
-        F.count(F.lit(1)).alias("row_count"),
-        F.approx_count_distinct(distinct_col).alias("approx_distinct_keys"),
-    ]
-    metrics += [
-        F.count(F.when(F.col(c).isNull(), F.lit(1))).alias(f"nulls_{c}")
-        for c in null_check_cols
-    ]
-    return df.observe(obs, *metrics), obs

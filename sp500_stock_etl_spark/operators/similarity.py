@@ -112,28 +112,6 @@ def srp_signature(
     return sum((bit(i) for i in range(1, planes)), bit(0))
 
 
-def srp_params_for(
-    n_vectors: int,
-    target_bucket: int = 64,
-    min_planes: int = 8,
-    max_planes: int = 24,
-) -> int:
-    """Planes-per-band sizing rule for a corpus of ``n_vectors``:
-    2^r buckets per band should hold ~``target_bucket`` vectors each,
-    so r = ceil(log2(n / target_bucket)). With r fixed (the round-2
-    flaw) every bucket holds ~N/2^r vectors and the bucket self-join
-    degenerates to N²/2^r pairs; with r scaling in log N, expected
-    bucket population — and therefore candidate count per vector —
-    stays CONSTANT as the corpus grows. Recall lost to the longer
-    signature is recovered by OR-ing ``bands`` independent bands
-    (same layout as the MinHash path, operators/dedup.py)."""
-    import math
-
-    if n_vectors <= target_bucket:
-        return min_planes
-    return max(min_planes, min(max_planes, math.ceil(math.log2(n_vectors / target_bucket))))
-
-
 def srp_band_rows(
     df: DataFrame,
     id_alias: str,
@@ -249,13 +227,13 @@ def lsh_topk(
     (``planes`` sign bits each, band b on global planes [b*r,(b+1)*r)),
     then exact cosine rank within candidates.
 
-    Banded layout (round-2 verdict item 2): one fixed table caps the
-    bucket count at 2^r forever — at billions of vectors every bucket
-    holds N/2^r and the bucket join degenerates quadratically. Here r
-    scales with corpus size (``srp_params_for``) so expected bucket
-    population is constant, and the recall the longer signature costs
-    is bought back by OR-ing the b bands — exactly the MinHash-LSH
-    geometry (operators/dedup.py).
+    Banded layout: every registry plan pins ``planes`` (PLANES = 8 in
+    plans/queries_dedup.py, with the rule for sizing it to a corpus)
+    so the oracle text is static. A fixed r caps the bucket count at
+    2^r, so at billions of vectors every bucket holds N/2^r and the
+    bucket join degenerates quadratically; the recall a longer
+    signature costs is bought back by OR-ing the b bands — exactly
+    the MinHash-LSH geometry (operators/dedup.py).
 
     Round-3 verdict #1 restructure: the bucket join ships ONLY
     (id, band, sig) rows — never the vectors — candidate pairs are
@@ -303,8 +281,7 @@ def cosine_neardup_pairs(
     via banded SRP buckets (near-identical vectors share all sign bits
     of at least one band with overwhelming probability — and OR-ing
     bands makes that probability 1-(1-p^r)^b instead of p^r). Same
-    scale rationale as lsh_topk: r from srp_params_for keeps bucket
-    population constant in N, bands keep recall.
+    plane-count rationale as lsh_topk; bands keep recall.
 
     Same round-3 restructure as lsh_topk: the signature frame is
     computed ONCE (tracked persist — both sides of the self-join read
@@ -466,27 +443,6 @@ def ivf_topk_nprobe(
         .where(F.col("rank") <= k)
         .select(query_id, "neighbor_id", "rank", "cosine")
     )
-
-
-def pandas_cosine(vec_a: Column, vec_b: Column) -> Column:
-    """Arrow-batched cosine via a Pandas UDF — the documented escape
-    hatch for embedding math the built-in HOFs can't express (matrix
-    ops, quantized distance, learned metrics). NOTE: numpy's dot uses
-    SIMD/pairwise summation, so results differ from the sequential
-    Catalyst fold in the last ulp — fine for ranking, NOT for
-    bitwise-oracle queries (tests/test_similarity_udf.py asserts
-    rank-equivalence, not bit-equality)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a, b):
-            xa, ya = np.asarray(x, dtype="float64"), np.asarray(y, dtype="float64")
-            out.append(float(np.dot(xa, ya) / (np.linalg.norm(xa) * np.linalg.norm(ya))))
-        return pd.Series(out)
-
-    return _cos(vec_a, vec_b)
 
 
 def quantize_embeddings_int8(

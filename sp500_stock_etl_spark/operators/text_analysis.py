@@ -151,59 +151,6 @@ def chunk_documents(
     )
 
 
-def boilerplate_line_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_df: int = 3,
-    min_line_chars: int = 10,
-) -> DataFrame:
-    """C4-style boilerplate detection: a LINE appearing (normalized)
-    in >= min_df distinct documents is boilerplate (nav bars, cookie
-    banners, license footers); each doc reports how much of it is
-    boilerplate. Two shuffles, both on md5(line) — the line text never
-    shuffles: (1) distinct (doc, line-hash) -> line document
-    frequency; (2) per-doc roll-up. At 100 TB the line-frequency table
-    is the only global state and it is pruned by min_line_chars before
-    the exchange.
-
-    Output: (doc_id, n_lines, n_boiler_lines, boiler_ratio)."""
-    lines = (
-        df.select(
-            F.col(id_col),
-            F.explode(F.split(F.col(text_col), r"\n")).alias("__line__"),
-        )
-        .select(
-            id_col,
-            F.trim(F.regexp_replace(F.lower("__line__"), r"\s+", " ")).alias(
-                "__line__"
-            ),
-        )
-        .where(F.length("__line__") >= min_line_chars)
-        .select(id_col, F.md5("__line__").alias("line_hash"))
-    )
-    per_doc_line = lines.distinct()
-    line_df = per_doc_line.groupBy("line_hash").agg(
-        F.count(F.lit(1)).alias("line_doc_freq")
-    )
-    return (
-        lines.join(line_df, "line_hash")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_lines"),
-            F.sum(
-                F.when(F.col("line_doc_freq") >= min_df, F.lit(1)).otherwise(F.lit(0))
-            )
-            .cast("bigint")
-            .alias("n_boiler_lines"),
-        )
-        .withColumn(
-            "boiler_ratio",
-            F.col("n_boiler_lines").cast("double") / F.col("n_lines").cast("double"),
-        )
-    )
-
-
 def pack_sequences(
     df: DataFrame,
     group_col: str = "lang",

@@ -82,25 +82,6 @@ def with_lag_metrics(
     )
 
 
-def rolling_avg(
-    df: DataFrame,
-    partition_col: str,
-    order_cols: Sequence[str],
-    value_col: str,
-    window_rows: int = 7,
-    out_col: str = "rolling_avg",
-    decimals: int = 4,
-) -> DataFrame:
-    """Frame-spec extension (SURVEY.md §2.5 note): trailing N-row moving
-    average per partition — the natural '7-day SMA' on this data model."""
-    w = (
-        Window.partitionBy(partition_col)
-        .orderBy(*order_cols)
-        .rowsBetween(-(window_rows - 1), Window.currentRow)
-    )
-    return df.withColumn(out_col, round_half_up(F.avg(value_col).over(w), decimals))
-
-
 def top_k_per_group(
     df: DataFrame,
     partition_col: str,

@@ -673,9 +673,8 @@ def q_corpus_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Boilerplate segments: a non-overlapping 32-token
 # segment recurring in >= 3 DISTINCT documents is boilerplate (the C4
 # line-frequency rule, applied to token segments because the synthetic
-# docs are single-line; operators/text_analysis.boilerplate_line_stats
-# is the newline-corpus variant, unit-tested on fabricated multi-line
-# docs). Two md5-keyed shuffles; segment text never shuffles.
+# docs are single-line). Two md5-keyed shuffles; segment text never
+# shuffles.
 # ---------------------------------------------------------------------------
 
 _BOILER_ORACLE = f"""

@@ -319,9 +319,8 @@ def sql_cosine(a: str, b: str) -> str:
 # signature from the same md5-derived hyperplane literals, and a pair
 # is a candidate when ANY band matches — OR-join in SQL (fine for
 # DuckDB at oracle scale), exploded (band, sig) equi-join in Spark
-# (the scale shape). At 100 TB PLANES comes from
-# operators/similarity.srp_params_for(corpus size); here it is pinned
-# so the oracle text is static.
+# (the scale shape). PLANES is pinned so the oracle text is static.
+# Scale rule: r = ceil(log2(n / 64)) planes, clamped to [8, 24].
 PLANES = 8
 SRP_BANDS = 4
 _VEC_OFFSET = 1_000_000
@@ -679,8 +678,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and once per refresh for the Jaccard verify of CANDIDATE docs only
 # (a semi-join-pruned fetch, not a corpus scan). Survivor signatures
 # append as a DELTA table (own path, overwrite mode → replay-
-# idempotent; compact_parquet is the maintenance story for delta
-# buildup). This is the batch twin of streaming_corpus_dedup and the
+# idempotent). This is the batch twin of streaming_corpus_dedup and the
 # capstone use of the §7.4 bucketed layout.
 #
 # Test-scale note: the driver query rebuilds the store each run so it
@@ -743,8 +741,8 @@ def _inc_corpus_and_new(spark: SparkSession, sf_dir: str):
 # would leave its mkdtemp behind, accumulating corpus-sized parquet
 # stores in /tmp). Each invocation gets a fresh dir with an atexit
 # rmtree, so (a) nothing outlives the process, and (b) two
-# concurrent invocations — the qps-probe serving mix runs these from
-# 8 threads — never overwrite each other's files or catalog entries
+# concurrent invocations — tests/test_incremental_dedup.py runs these
+# from two threads — never overwrite each other's files or catalog entries
 # (table names carry the same per-invocation token).
 _STORE_SEQ = __import__("itertools").count()
 
@@ -940,7 +938,7 @@ def q_dedup_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_signature_store_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..io.writers import write_bucketed_table_atomic
+    from ..io.writers import write_bucketed_table
 
     verified, new_bands, offset, base_dir, tok = _inc_refresh_frames(
         spark, sf_dir
@@ -954,11 +952,9 @@ def q_dedup_signature_store_roundtrip(
 
     # Delta append: own table + path, overwrite mode — replaying the
     # same batch overwrites the same delta (idempotent), never dupes.
-    # Atomic variant: the delta lands in a
-    # per-invocation staging dir and publishes via one rename, so no
-    # two write jobs — not even a replay of this one — ever share a
-    # FileOutputCommitter namespace.
-    write_bucketed_table_atomic(
+    # The path and table name are per-invocation (_inc_store_ctx), so
+    # no other write job shares the FileOutputCommitter namespace.
+    write_bucketed_table(
         survivors,
         f"sg_sigstore_delta_{tok}",
         "band_key",

@@ -104,7 +104,7 @@ def _stream_shuffle_partitions(
     of plan take it:
 
     - plans whose hot path is a Python stateful operator
-      (applyInPandasWithState / transformWithStateInPandas): the
+      (applyInPandasWithState): the
       partition count is ALSO the Python-worker parallelism, and the
       floor of 4 that is right for JVM state-store machinery starves
       the Python side. Interleaved A/B on
@@ -157,47 +157,39 @@ def _snapshot_and_drop(spark: SparkSession, name: str) -> DataFrame:
     continuation-close [170:251] sweep chunk crashed after ~80
     streaming/store queries (BASELINE.md). Parquet round-trips the
     schema bitwise (timestamps under the UTC session pin, structs,
-    doubles), so oracle hashes are unaffected."""
-    import atexit
-    import shutil
-
+    doubles), so oracle hashes are unaffected. The read-back takes the
+    sink's schema instead of inferring it from the parquet footers,
+    which would start a Spark job."""
     out_dir = tempfile.mkdtemp(prefix="sg_streamout_")
     atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-    spark.table(name).write.mode("overwrite").parquet(out_dir)
+    table = spark.table(name)
+    schema = table.schema
+    table.write.mode("overwrite").parquet(out_dir)
     spark.catalog.dropTempView(name)
-    return spark.read.parquet(out_dir)
+    return spark.read.schema(schema).parquet(out_dir)
 
 
 def _run_to_table(
     spark: SparkSession,
     stream_df: DataFrame,
     mode: str,
-    src_dir: str | None = None,
+    src_dir: str,
     cores_floor: bool = False,
 ) -> DataFrame:
     name = f"sg_stream_{next(_SEQ)}_{os.getpid()}"
-    if src_dir is None:
+    # Stateful-plan partitioning sized to the staged source
+    # (see _stream_shuffle_partitions); save/restore so batch
+    # plans after this query keep the session default.
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(
+        key,
+        str(_stream_shuffle_partitions(spark, src_dir, cores_floor=cores_floor)),
+    )
+    try:
         SE.run_available_now(stream_df, _tmp_ckpt(), name, output_mode=mode)
-    else:
-        # Stateful-plan partitioning sized to the staged source
-        # (see _stream_shuffle_partitions); save/restore so batch
-        # plans after this query keep the session default.
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(
-            key,
-            str(
-                _stream_shuffle_partitions(
-                    spark, src_dir, cores_floor=cores_floor
-                )
-            ),
-        )
-        try:
-            SE.run_available_now(
-                stream_df, _tmp_ckpt(), name, output_mode=mode
-            )
-        finally:
-            spark.conf.set(key, prev)
+    finally:
+        spark.conf.set(key, prev)
     return _snapshot_and_drop(spark, name)
 
 
@@ -410,16 +402,6 @@ def q_streaming_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_dir=staged,
         cores_floor=True,
     )
-
-
-# NOTE: streaming/events.py also implements the Spark 4
-# transformWithStateInPandas successor (running_user_totals_tws —
-# typed ValueState, first-class TTL, RocksDB-backed). It is NOT
-# registered as a driver query: the TWS Python<->JVM state protocol
-# needs google.protobuf, which this container lacks (pip installs are
-# out of scope), so the operator is environment-gated —
-# tests/test_streaming.py skips it cleanly when the import is broken
-# and verifies batch-equality where it works.
 
 
 # Stream-static join: the streaming fact enriched with a static

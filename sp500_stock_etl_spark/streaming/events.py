@@ -8,14 +8,15 @@ each run processes only files not yet in the checkpoint — the
 exactly-once version of the reference's PURGE=TRUE bookkeeping (:378).
 
 On top of that (deliberate extension, SURVEY.md §7.3): event-time
-windowed aggregation with watermarks (tumbling / sliding / session),
-and a custom stateful operator via applyInPandasWithState.
+windowed aggregation with watermarks (tumbling / session; the sliding
+plan builds its window in plans/queries_streaming.py), and custom
+stateful operators via applyInPandasWithState.
 
 Scale notes: state store size is bounded by the watermark horizon ×
 key cardinality; the shuffle key is the window/user key, same
-partitioning rules as batch groupBy. All sinks here are append/update
-memory or parquet sinks for tests; production would write
-date-partitioned parquet (io/writers.py) for DPP.
+partitioning rules as batch groupBy. The one sink here is
+``run_available_now``'s memory sink; the plans in
+plans/queries_streaming.py snapshot it to parquet and read it back.
 """
 
 from __future__ import annotations
@@ -230,90 +231,6 @@ def run_available_now(
         stream_df.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def running_user_totals_tws(events: DataFrame, ttl_ms: int | None = None) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` version of the running
-    totals: the successor API to applyInPandasWithState — typed state
-    handles (ValueState here; List/MapState for bigger shapes), state
-    TTL as a first-class argument instead of hand-rolled timeout
-    bookkeeping, and RocksDB-only state storage (the session conf is
-    set by the caller; queries_streaming wires it with save/restore).
-    Same output contract as running_user_totals, so the two APIs are
-    directly comparable in tests."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n BIGINT, total DOUBLE", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                n, total = self._state.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_Totals(),
-        outputStructType=_RUNNING_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def upsert_partition_sink(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_col: str = "event_date",
-) -> None:
-    """Idempotent warehouse sink for streams without a transactional
-    table format: each micro-batch overwrites exactly the partitions
-    it touches (dynamic partitionOverwriteMode inside foreachBatch) —
-    the streaming twin of the batch overwrite-by-partition reload
-    (io/writers.py, the reference's replace=True/PURGE semantics).
-
-    Effectively-once without sink transactions: a replayed batch
-    (failure before checkpoint commit, or a checkpoint wiped and the
-    whole history re-run) rewrites the same partitions to the same
-    content instead of appending duplicates. The guarantee needs the
-    batch->partition mapping to be deterministic, which file-stream
-    sources + event-time partitions give. The dynamic mode is a
-    per-write option, so the session conf is never changed."""
-
-    def _write(df: DataFrame, _batch_id: int) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(_write)
-        .outputMode("append")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

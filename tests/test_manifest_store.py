@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sp500_stock_etl_spark.io import manifest_store as MS
+from tests.test_file_listing import _jobs
 
 
 def _keep_newest(df):
@@ -40,6 +41,27 @@ def _batch(spark, ver, n=64):
         f"id AS k", f"CAST({ver} AS INT) AS ver",
         "CAST(id % 4 AS INT) AS bucket",
     )
+
+
+def test_read_store_uses_recorded_schema(spark, tmp_path):
+    """The root records the store's schema at creation, so
+    ``read_store`` on a multi-file store starts no Spark job (no
+    parquet footer inference) and returns the schema and rows that an
+    inferring read of the same live files returns."""
+    store = str(tmp_path / "mstore")
+    MS.merge_manifest_store(store, _base(spark), "k", "bucket", _keep_newest)
+    MS.merge_manifest_store(
+        store, _batch(spark, 1), "k", "bucket", _keep_newest
+    )
+    m = MS.read_manifest(store)
+    live = [os.path.join(store, e["path"]) for e in MS._live_entries(store, m)]
+    assert len(live) > 1
+
+    df, n_jobs = _jobs(spark, lambda: MS.read_store(spark, store))
+    assert n_jobs == 0
+    inferred = spark.read.option("basePath", store).parquet(*live)
+    assert df.schema == inferred.schema
+    assert sorted(df.collect()) == sorted(inferred.collect())
 
 
 def test_generations_prune_and_retain(spark, tmp_path):

@@ -1,8 +1,13 @@
-"""Static layout guards for the plan modules in ``plans/*.py``.
+"""Static layout guards for the package modules.
 
-A module-level name bound twice is a silent override: every function
-body that reads the name gets the last binding, whichever constant it
-meant. Two families that share a module keep distinct names instead.
+A module-level name bound twice in a plan module (``plans/*.py``) is a
+silent override: every function body that reads the name gets the last
+binding, whichever constant it meant. Two families that share a module
+keep distinct names instead.
+
+A top-level function, class or constant that no code outside
+``tests/`` refers to is an API only tests run; it goes, unless the
+allowlist below says why a test needs it.
 """
 
 from __future__ import annotations
@@ -13,17 +18,38 @@ from pathlib import Path
 
 import pytest
 
-PLANS = Path(__file__).resolve().parent.parent / "sp500_stock_etl_spark" / "plans"
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "sp500_stock_etl_spark"
+PLANS = PACKAGE / "plans"
+
+# Top-level names with no caller outside tests/ that stay, and why.
+TEST_ONLY_ALLOWED = {
+    "srp_band_rows": "reference layout tests/test_similarity_lsh.py checks "
+    "the SRP query path against",
+    "jpeg_corpus_pixel": "pixel oracle of tests/test_jpeg_codec.py",
+    "EVENTS_RAW": "raw landing schema tests/test_streaming.py writes files with",
+    "inertia": "k-means invariant tests/test_clustering.py checks",
+    "validate_symbols": "the reference's extract_symbols stage "
+    "(dags/sp500_dag.py.py:51-60)",
+    "ObjectStoreSimBackend": "fake object store the commit-lock protocol "
+    "tests run against",
+    "__version__": "package version",
+}
+
+
+def _target_nodes(node: ast.AST):
+    """The ``ast.Name`` nodes an assignment target binds."""
+    if isinstance(node, ast.Name):
+        yield node
+    elif isinstance(node, (ast.Tuple, ast.List)):
+        for elt in node.elts:
+            yield from _target_nodes(elt)
+    elif isinstance(node, ast.Starred):
+        yield from _target_nodes(node.value)
 
 
 def _target_names(node: ast.AST):
-    if isinstance(node, ast.Name):
-        yield node.id
-    elif isinstance(node, (ast.Tuple, ast.List)):
-        for elt in node.elts:
-            yield from _target_names(elt)
-    elif isinstance(node, ast.Starred):
-        yield from _target_names(node.value)
+    return [n.id for n in _target_nodes(node)]
 
 
 def module_bindings(tree: ast.Module) -> list[str]:
@@ -48,3 +74,78 @@ def test_no_module_level_name_bound_twice(path):
     counts = Counter(module_bindings(ast.parse(path.read_text())))
     twice = sorted(name for name, n in counts.items() if n > 1)
     assert not twice, f"{path.name} binds {twice} more than once"
+
+
+def _non_test_sources() -> list[Path]:
+    """The package, the entry points, scripts/ and perfbench/'s
+    non-test files."""
+    files = sorted(PACKAGE.rglob("*.py"))
+    files += [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    files += sorted((ROOT / "scripts").glob("*.py"))
+    files += sorted(
+        p for p in (ROOT / "perfbench").glob("*.py")
+        if not p.name.startswith("test_")
+    )
+    return files
+
+
+def _is_register(dec: ast.expr) -> bool:
+    f = dec.func if isinstance(dec, ast.Call) else dec
+    name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+    return name == "register"
+
+
+def _definitions(tree: ast.Module):
+    """(name, defining node) of each top-level function, class and
+    constant, except functions registered with ``@register``."""
+    for stmt in tree.body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if not any(_is_register(d) for d in stmt.decorator_list):
+                yield stmt.name, stmt
+        elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+            targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+            for target in targets:
+                for node in _target_nodes(target):
+                    yield node.id, node
+
+
+def _references(tree: ast.AST, skip: set[int]) -> Counter:
+    """Names, attribute names and imported names used in ``tree``,
+    leaving out the nodes in ``skip`` (the definitions themselves)."""
+    refs: Counter = Counter()
+    for node in ast.walk(tree):
+        if id(node) in skip:
+            continue
+        if isinstance(node, ast.Name):
+            refs[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            refs[node.attr] += 1
+        elif isinstance(node, ast.alias):
+            refs[node.name.split(".")[-1]] += 1
+    return refs
+
+
+def test_no_top_level_name_only_tests_use():
+    trees = {p: ast.parse(p.read_text()) for p in _non_test_sources()}
+    defined: dict[str, list[str]] = {}
+    refs: Counter = Counter()
+    for path, tree in trees.items():
+        skip = set()
+        own: Counter = Counter()
+        if path.is_relative_to(PACKAGE):
+            for name, node in _definitions(tree):
+                skip.add(id(node))
+                defined.setdefault(name, []).append(str(path.relative_to(ROOT)))
+                if not isinstance(node, ast.Name):
+                    # A recursive call is part of the definition.
+                    own[name] += _references(node, set())[name]
+        refs += _references(tree, skip)
+        refs -= own
+    unused = sorted(
+        f"{name} ({', '.join(where)})"
+        for name, where in defined.items()
+        if not refs[name] and name not in TEST_ONLY_ALLOWED
+    )
+    assert not unused, f"top-level names no non-test code refers to: {unused}"
+    stale = sorted(name for name in TEST_ONLY_ALLOWED if refs[name])
+    assert not stale, f"allowlisted names that now have callers: {stale}"

@@ -1,9 +1,8 @@
-"""Chunking + boilerplate operators (round-4 north-star extensions).
+"""Chunking operator (operators/text_analysis.chunk_documents).
 
-The oracle-checked registry queries cover the token-segment variants
-on the synthetic corpus (single-line docs); these tests cover the
-geometry edge cases and the newline-corpus line-frequency operator on
-fabricated multi-line documents.
+The oracle-checked registry queries cover chunking and the
+token-segment boilerplate plans on the synthetic corpus; these tests
+cover the chunk geometry edge cases on fabricated documents.
 """
 
 from __future__ import annotations
@@ -44,34 +43,3 @@ def test_chunk_rejects_bad_geometry(spark):
         TA.chunk_documents(_docs(spark, [(1, "a b")]), chunk_tokens=0, stride=4)
     with pytest.raises(ValueError):
         TA.chunk_documents(_docs(spark, [(1, "a b")]), chunk_tokens=4, stride=0)
-
-
-def test_boilerplate_line_stats_multiline(spark):
-    footer = "this footer appears everywhere in the corpus"
-    rows = [
-        (1, f"unique alpha content line one\n{footer}"),
-        (2, f"unique beta content line two\n{footer}"),
-        (3, f"unique gamma content line three\n{footer}"),
-        (4, "a document with no shared lines at all"),
-        (5, "short\nx"),  # every line under min_line_chars → no rows
-    ]
-    out = {
-        r.doc_id: (r.n_lines, r.n_boiler_lines, r.boiler_ratio)
-        for r in TA.boilerplate_line_stats(
-            _docs(spark, rows), min_df=3, min_line_chars=10
-        ).collect()
-    }
-    assert out[1] == (2, 1, 0.5)
-    assert out[2] == (2, 1, 0.5)
-    assert out[3] == (2, 1, 0.5)
-    assert out[4] == (1, 0, 0.0)
-    assert 5 not in out
-
-
-def test_boilerplate_duplicate_line_within_one_doc_not_boiler(spark):
-    # Same line twice in ONE doc: document frequency is 1, not 2.
-    line = "repeated inside a single document only"
-    out = TA.boilerplate_line_stats(
-        _docs(spark, [(1, f"{line}\n{line}")]), min_df=2, min_line_chars=10
-    ).collect()
-    assert [(r.n_lines, r.n_boiler_lines) for r in out] == [(2, 0)]
