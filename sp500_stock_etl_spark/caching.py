@@ -20,15 +20,32 @@ Release points:
 - the registry wrapper calls it before building each query, so even a
   caller that never tears down (the external verify driver) holds at
   most one query's caches at a time.
+
+Scratch directories (stream landing dirs and checkpoints, sink
+snapshots, round-trip outputs, CDC and signature stores, the shipped
+package zip) come from ``temp_dir``, which removes each one when the
+process exits.
 """
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 import threading
 
 from pyspark.sql import DataFrame
 
 _TL = threading.local()
+
+
+def temp_dir(prefix: str) -> str:
+    """A fresh directory under the system temp dir, removed with its
+    contents at process exit. Symlinks inside are unlinked, never
+    followed."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def _live() -> list[DataFrame]:

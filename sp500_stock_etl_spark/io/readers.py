@@ -16,12 +16,14 @@ columns the plan doesn't need — verify with
 ``df.explain('formatted')`` → ``ReadSchema`` / ``PushedFilters``.
 
 Inferring a parquet schema runs a footer-reading Spark job, so
-``load_table`` memoizes the schema Spark inferred for a table file for
-the life of the process and hands it back through
-``spark.read.schema(...)`` on later scans. The key is the file's Hadoop
-``FileStatus`` (qualified path, modification time, length) plus the
-confs that change parquet inference, so a rewritten file or a flipped
-conf is inferred again. Only regular files are memoized: a directory's
+``table_schema`` memoizes the schema Spark inferred for a table file
+for the life of the process. Every read of a table takes its schema
+from there: ``load_table`` hands it to ``spark.read.schema(...)``, and
+the streaming plans hand it to ``read_stream``, which starts no job
+because a file stream is given its schema rather than inferring one.
+The memo key is the file's Hadoop ``FileStatus`` (qualified path,
+modification time, length) plus the confs that change parquet
+inference, so a rewritten file or a flipped conf is inferred again. Only regular files are memoized: a directory's
 status does not change when a file inside it is rewritten, so a
 directory dataset is inferred on every scan.
 """
@@ -54,29 +56,44 @@ _INFERENCE_CONFS = (
 _SCHEMA_MEMO: dict[tuple, T.StructType] = {}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one testdata table. Lazy; filters/pruning push into the scan.
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The schema a testdata table is read with, batch or stream.
 
-    The first scan of a table file infers its schema (one Spark job);
-    later scans of the same unchanged file, under the same inference
-    confs, reuse that schema and start no job. See the module docstring
-    for the memo key and why directories are not memoized.
+    The first lookup of a table file infers it from the footers (one
+    Spark job); later lookups of the same unchanged file, under the
+    same inference confs, return the memoized schema and start no job.
+    See the module docstring for the memo key and why directories are
+    not memoized.
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TESTDATA_TABLES}")
     path = f"{sf_dir}/{name}.parquet"
     key = _schema_key(spark, path)
     schema = _SCHEMA_MEMO.get(key)
-    if schema is not None:
-        df = spark.read.schema(schema).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        schema = df.schema
+    if schema is None:
+        schema = spark.read.parquet(path).schema
         if key is not None:
             _SCHEMA_MEMO[key] = _check_columns(name, path, schema)
-    if name == "events":
-        df = df.withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
-    return df
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one testdata table with its ``table_schema``. Lazy;
+    filters/pruning push into the scan."""
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+    return _with_event_ts(df, schema)
+
+
+def read_stream(
+    spark: SparkSession, landing_dir: str, schema: T.StructType, **options: str
+) -> DataFrame:
+    """File-stream source over the parquet files in ``landing_dir``,
+    read with ``schema`` (a stream cannot infer one) and reader
+    ``options`` such as ``maxFilesPerTrigger``. A stream of events
+    gets the same ``ts`` normalization as ``load_table``."""
+    df = spark.readStream.schema(schema).options(**options).parquet(landing_dir)
+    return _with_event_ts(df, schema)
 
 
 def _schema_key(spark: SparkSession, path: str) -> tuple | None:
@@ -105,6 +122,14 @@ def _check_columns(name: str, path: str, schema: T.StructType) -> T.StructType:
             f"{name!r} table schema {expected}"
         )
     return schema
+
+
+def _with_event_ts(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Normalize ``ts`` of an events frame read with ``schema``; other
+    tables pass through."""
+    if "ts" not in schema.fieldNames():
+        return df
+    return df.withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
 
 
 def _normalize_event_ts(dtype: T.DataType) -> F.Column:

@@ -739,8 +739,8 @@ def _inc_corpus_and_new(spark: SparkSession, sf_dir: str):
 # One store directory per INVOCATION (a process-wide singleton only
 # deduped within one process — every new bench/sweep/driver process
 # would leave its mkdtemp behind, accumulating corpus-sized parquet
-# stores in /tmp). Each invocation gets a fresh dir with an atexit
-# rmtree, so (a) nothing outlives the process, and (b) two
+# stores in /tmp). Each invocation gets a fresh ``temp_dir``, removed
+# at exit, so (a) nothing outlives the process, and (b) two
 # concurrent invocations — tests/test_incremental_dedup.py runs these
 # from two threads — never overwrite each other's files or catalog entries
 # (table names carry the same per-invocation token).
@@ -749,14 +749,10 @@ _STORE_SEQ = __import__("itertools").count()
 
 def _inc_store_ctx() -> tuple[str, str]:
     """(store_dir, per-invocation table-name token)."""
-    import atexit
-    import shutil
-    import tempfile
+    from ..caching import temp_dir
 
     k = next(_STORE_SEQ)
-    d = tempfile.mkdtemp(prefix=f"sg_sigstore_{k}_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d, str(k)
+    return temp_dir(f"sg_sigstore_{k}_"), str(k)
 
 
 def _inc_build_store(

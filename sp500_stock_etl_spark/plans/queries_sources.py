@@ -10,11 +10,10 @@ the whole write→read cycle for losslessness.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from ..caching import temp_dir
 from ..functions.text import sql_tokens, tokens
 from ..io.readers import load_table
 from ..operators.aggregates import dec
@@ -89,7 +88,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity"
     )
-    path = tempfile.mkdtemp(prefix="sg_orc_") + "/lineitem_orc"
+    path = temp_dir("sg_orc_") + "/lineitem_orc"
     li.write.mode("overwrite").orc(path)
     schema = T.StructType(
         [
@@ -139,7 +138,7 @@ def q_jsonl_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    path = tempfile.mkdtemp(prefix="sg_jsonl_") + "/events_json"
+    path = temp_dir("sg_jsonl_") + "/events_json"
     ev.write.mode("overwrite").json(path)
     schema = T.StructType(
         [
@@ -232,7 +231,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice",
         F.to_date("l_shipdate").alias("l_shipdate"),
     )
-    path = tempfile.mkdtemp(prefix="sg_csv_") + "/lineitem_csv"
+    path = temp_dir("sg_csv_") + "/lineitem_csv"
     write_quoted_csv(li, path)
     schema = T.StructType(
         [
@@ -371,7 +370,7 @@ def q_bucketed_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    base = tempfile.mkdtemp(prefix="sg_bkt_")
+    base = temp_dir("sg_bkt_")
     write_bucketed_table(
         li, "sg_bkt_lineitem", "l_orderkey", n_buckets=8, path=base + "/li"
     )
@@ -423,7 +422,7 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     na = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_regionkey", "n_name"
     )
-    path = tempfile.mkdtemp(prefix="sg_xml_") + "/nation_xml"
+    path = temp_dir("sg_xml_") + "/nation_xml"
     na.write.mode("overwrite").option("rowTag", "nation").format("xml").save(
         path
     )
@@ -492,7 +491,7 @@ GROUP BY 1
 )
 def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    base = tempfile.mkdtemp(prefix="sg_evo_") + "/lineitem_evo"
+    base = temp_dir("sg_evo_") + "/lineitem_evo"
     v1 = li.where(F.col("l_orderkey") % 2 == 0).select(
         "l_orderkey", F.col("l_extendedprice").cast("double").alias("price")
     )
@@ -553,7 +552,7 @@ def q_jsonl_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    path = tempfile.mkdtemp(prefix="sg_jsink_") + "/events"
+    path = temp_dir("sg_jsink_") + "/events"
     import os
 
     os.makedirs(path, exist_ok=True)

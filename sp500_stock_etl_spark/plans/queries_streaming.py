@@ -23,14 +23,15 @@ date-partitioned parquet (io/writers.py) for partition pruning.
 
 from __future__ import annotations
 
-import atexit
 import itertools
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
+from ..caching import temp_dir
+from ..io.readers import load_table, read_stream, table_schema
 from ..streaming import events as SE
 from .queries_corpus import (
     QUALITY_CLASSIFIER_ORACLE,
@@ -48,27 +49,16 @@ _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 _SQL_TS_FMT = "%Y-%m-%d %H:%M:%S"
 
 
-def _tmp_ckpt() -> str:
-    """Checkpoint tempdir with atexit cleanup — availableNow runs are
-    one-shot, so the checkpoint has no value past the process (a bare
-    mkdtemp here leaked one directory per run)."""
-    d = tempfile.mkdtemp(prefix="sg_ckpt_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
-
-
-def _stage_table_dir(sf_dir: str, table: str) -> str:
-    """File-stream sources want a landing directory; stage one with a
-    symlink to the read-only testdata parquet (one helper for every
-    streamed table — symlinks cost nothing, so no reaper needed,
-    unlike the real-copy multibatch stager below)."""
-    d = tempfile.mkdtemp(prefix=f"sg_{table}_")
+def _stage_stream(
+    spark: SparkSession, sf_dir: str, table: str
+) -> tuple[str, DataFrame]:
+    """(landing dir, file stream) for one testdata table: file-stream
+    sources want a landing directory, so stage one with a symlink to
+    the read-only table file and read it with the table's memoized
+    schema (no footer job)."""
+    d = temp_dir(f"sg_{table}_")
     os.symlink(f"{sf_dir}/{table}.parquet", f"{d}/{table}.parquet")
-    return d
-
-
-def _stage_events_dir(sf_dir: str) -> str:
-    return _stage_table_dir(sf_dir, "events")
+    return d, read_stream(spark, d, table_schema(spark, sf_dir, table))
 
 
 def _stream_shuffle_partitions(
@@ -148,8 +138,8 @@ def _stream_shuffle_partitions(
 
 
 def _snapshot_and_drop(spark: SparkSession, name: str) -> DataFrame:
-    """Snapshot a memory-sink table to a temp parquet dir (atexit-
-    reaped) and DROP the catalog view, returning the parquet-backed
+    """Snapshot a memory-sink table to a temp parquet dir (removed at
+    exit) and DROP the catalog view, returning the parquet-backed
     frame. Without this every streaming query leaves its full result
     set pinned on the driver heap for the session's lifetime — a
     long-lived session (full sf0.1 sweep, serving loop) accumulates
@@ -160,8 +150,7 @@ def _snapshot_and_drop(spark: SparkSession, name: str) -> DataFrame:
     doubles), so oracle hashes are unaffected. The read-back takes the
     sink's schema instead of inferring it from the parquet footers,
     which would start a Spark job."""
-    out_dir = tempfile.mkdtemp(prefix="sg_streamout_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    out_dir = temp_dir("sg_streamout_")
     table = spark.table(name)
     schema = table.schema
     table.write.mode("overwrite").parquet(out_dir)
@@ -187,7 +176,7 @@ def _run_to_table(
         str(_stream_shuffle_partitions(spark, src_dir, cores_floor=cores_floor)),
     )
     try:
-        SE.run_available_now(stream_df, _tmp_ckpt(), name, output_mode=mode)
+        SE.run_available_now(stream_df, temp_dir("sg_ckpt_"), name, output_mode=mode)
     finally:
         spark.conf.set(key, prev)
     return _snapshot_and_drop(spark, name)
@@ -211,8 +200,13 @@ GROUP BY 1, 2, 3
     "== batch agg (SURVEY §2.11)",
 )
 def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged)
+    return _tumbling(spark, sf_dir)
+
+
+def _tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Body of both tumbling plans: the hourly counts in complete mode,
+    windows rendered as oracle strings."""
+    staged, stream = _stage_stream(spark, sf_dir, "events")
     out = _run_to_table(spark, SE.tumbling_counts(stream), "complete", src_dir=staged)
     return out.select(
         F.date_format("window_start", _TS_FMT).alias("window_start"),
@@ -249,23 +243,12 @@ def q_streaming_tumbling_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = None
     spark.conf.set(_PROVIDER_KEY, _ROCKSDB_PROVIDER)
     try:
-        staged = _stage_events_dir(sf_dir)
-        stream = SE.read_event_stream(spark, staged)
-        out = _run_to_table(
-            spark, SE.tumbling_counts(stream), "complete", src_dir=staged
-        )
+        return _tumbling(spark, sf_dir)
     finally:
         if prev is None:
             spark.conf.unset(_PROVIDER_KEY)
         else:
             spark.conf.set(_PROVIDER_KEY, prev)
-    return out.select(
-        F.date_format("window_start", _TS_FMT).alias("window_start"),
-        F.date_format("window_end", _TS_FMT).alias("window_end"),
-        "event_type",
-        "n",
-        F.col("sum_value").cast("double").alias("sum_value"),
-    )
 
 
 # Each event lands in ceil(window/slide)=2 buckets: trunc(ts) and
@@ -292,8 +275,7 @@ GROUP BY 1
     "(SURVEY §2.11 ext)",
 )
 def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged)
+    staged, stream = _stage_stream(spark, sf_dir, "events")
     windowed = (
         stream.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
@@ -347,8 +329,6 @@ GROUP BY user_id, session_id
     "the gaps-and-islands SQL rewrite (SURVEY §2.11 ext)",
 )
 def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..io.readers import load_table
-
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -369,8 +349,7 @@ def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows-only driver check by design (SURVEY §2.11/2.12)",
 )
 def q_streaming_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged)
+    staged, stream = _stage_stream(spark, sf_dir, "events")
     return _run_to_table(
         spark,
         SE.running_user_totals(stream),
@@ -393,11 +372,10 @@ def q_streaming_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # watermark only advances between micro-batches), so the emitted
     # totals equal the unbounded twin — tests/test_streaming.py drives
     # the multi-run eviction path explicitly.
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged)
+    staged, stream = _stage_stream(spark, sf_dir, "events")
     return _run_to_table(
         spark,
-        SE.running_user_totals_ttl(stream, ttl_ms=3_600_000),
+        SE.running_user_totals_ttl(stream),
         "update",
         src_dir=staged,
         cores_floor=True,
@@ -426,10 +404,7 @@ JOIN customer c ON e.user_id % 1000 = c.c_custkey
     "(SURVEY §2.11 ext)",
 )
 def q_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..io.readers import load_table
-
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged)
+    staged, stream = _stage_stream(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
@@ -464,8 +439,7 @@ SELECT DISTINCT user_id, event_type FROM events
     "it deterministic (SURVEY §2.11 ext)",
 )
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged)
+    staged, stream = _stage_stream(spark, sf_dir, "events")
     deduped = stream.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
@@ -495,8 +469,7 @@ FROM events
     "(SURVEY §2.11 ext)",
 )
 def q_streaming_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged)
+    staged, stream = _stage_stream(spark, sf_dir, "events")
     deduped = (
         stream.withColumn("hour_start", F.date_trunc("hour", "ts"))
         .withWatermark("hour_start", "2 hours")
@@ -518,6 +491,42 @@ def q_streaming_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # agg). Under availableNow both sides are complete, so the emitted
 # matches equal the batch band join, which is the oracle
 # (range_interval_join's streaming twin, purchases x clicks).
+def _interval_join(
+    spark: SparkSession, sf_dir: str, how: str
+) -> tuple[str, DataFrame]:
+    """(landing dir, purchases ``how``-joined to the clicks that follow
+    within the hour) for the four stream-stream joins. Each side is its
+    own file stream over the one landing dir, watermarked 2 hours."""
+    staged, purchases = _stage_stream(spark, sf_dir, "events")
+    clicks = read_stream(spark, staged, table_schema(spark, sf_dir, "events"))
+    purchases = (
+        purchases.where(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
+        )
+        .withWatermark("p_ts", "2 hours")
+    )
+    clicks = (
+        clicks.where(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
+        )
+        .withWatermark("c_ts", "2 hours")
+    )
+    joined = purchases.join(
+        clicks,
+        (F.col("p_user") == F.col("c_user"))
+        & (F.col("c_ts") > F.col("p_ts"))
+        & (F.col("c_ts") <= F.col("p_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
+    )
+    return staged, joined
+
+
 _STREAM_STREAM_ORACLE = """
 SELECT p.event_id AS purchase_id,
        c.event_id AS click_id
@@ -538,33 +547,8 @@ WHERE p.event_type = 'purchase' AND c.event_type = 'click'
     "(SURVEY §2.11 ext)",
 )
 def q_stream_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events_dir(sf_dir)
-    purchases = (
-        SE.read_event_stream(spark, staged)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    clicks = (
-        SE.read_event_stream(spark, staged)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") > F.col("p_ts"))
-        & (F.col("c_ts") <= F.col("p_ts") + F.expr("INTERVAL 1 HOUR")),
-    ).select("purchase_id", "click_id")
+    staged, joined = _interval_join(spark, sf_dir, "inner")
+    joined = joined.select("purchase_id", "click_id")
     return _run_to_table(spark, joined, "append", src_dir=staged)
 
 
@@ -578,27 +562,6 @@ def q_stream_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _stage_documents_dir(sf_dir: str) -> str:
-    d = tempfile.mkdtemp(prefix="sg_docs_")
-    os.symlink(f"{sf_dir}/documents.parquet", f"{d}/documents.parquet")
-    return d
-
-
-def _read_document_stream(spark: SparkSession, path: str) -> DataFrame:
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    return spark.readStream.schema(schema).parquet(path)
-
-
 @register(
     "streaming_corpus_dedup",
     sql_simjoin_oracle(),  # the batch similarity join: identical semantics
@@ -609,12 +572,10 @@ def _read_document_stream(spark: SparkSession, path: str) -> DataFrame:
     "(SURVEY §2.11 × north star)",
 )
 def q_streaming_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..io.readers import load_table
     from ..operators import dedup as D
     from ..functions.text import tokens
 
-    staged = _stage_documents_dir(sf_dir)
-    stream = _read_document_stream(spark, staged)
+    staged, stream = _stage_stream(spark, sf_dir, "documents")
     tk = tokens(F.col("text"))
     keep_n = F.greatest(F.lit(3), F.floor(F.size(tk) * 0.7).cast("int"))
     probes = stream.where(F.col("doc_id") % 7 == 0).select(
@@ -654,8 +615,8 @@ def q_streaming_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import norm_text
     from ..operators import text_analysis as TA
 
-    staged = _stage_documents_dir(sf_dir)
-    stream = _read_document_stream(spark, staged).select("doc_id", "text")
+    staged, stream = _stage_stream(spark, sf_dir, "documents")
+    stream = stream.select("doc_id", "text")
     scored = TA.with_text_stats(stream, "text")
     with_lang = scored.withColumn("lang_guess", TA.lang_id(F.col("text")))
     kept = with_lang.where(
@@ -747,7 +708,7 @@ def q_streaming_quote_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", _tmp_ckpt())
+        .option("checkpointLocation", temp_dir("sg_ckpt_"))
         .trigger(processingTime="0 seconds")
         .start()
     )
@@ -778,8 +739,7 @@ def q_streaming_quote_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.aggregates import dec as _dec
 
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged)
+    staged, stream = _stage_stream(spark, sf_dir, "events")
     key = F.struct("ts", "event_id")
     bars = (
         stream.withWatermark("ts", "2 hours")
@@ -842,8 +802,7 @@ GROUP BY 1, 2
 def q_streaming_ohlc_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.aggregates import dec as _dec
 
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged)
+    staged, stream = _stage_stream(spark, sf_dir, "events")
     key = F.struct("ts", "event_id")
     bars = (
         stream.withWatermark("ts", "2 hours")
@@ -931,41 +890,13 @@ WHERE p.event_type = 'purchase'
     "(SURVEY §2.11 ext)",
 )
 def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events_dir(sf_dir)
-    purchases = (
-        SE.read_event_stream(spark, staged)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    clicks = (
-        SE.read_event_stream(spark, staged)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") > F.col("p_ts"))
-        & (F.col("c_ts") <= F.col("p_ts") + F.expr("INTERVAL 1 HOUR")),
-        "leftOuter",
-    ).select("purchase_id", "click_id", "p_ts")
+    staged, joined = _interval_join(spark, sf_dir, "leftOuter")
+    joined = joined.select("purchase_id", "click_id", "p_ts")
     out = _run_to_table(spark, joined, "append", src_dir=staged)
     # Static cutoff = least(per-stream max ts) - 4h, computed in-plan
     # (broadcast scalar), NOT collected on the driver. least() of the
     # per-type maxima mirrors the global-watermark rule (min over the
     # per-stream watermark nodes).
-    from ..io.readers import load_table
-
     cutoff = _stream_cutoff(load_table(spark, sf_dir, "events"))
     return (
         out.join(F.broadcast(cutoff))
@@ -1006,13 +937,11 @@ def q_streaming_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.jsonl_sink import register_jsonl_sink
 
     register_jsonl_sink(spark)
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    out_dir = tempfile.mkdtemp(prefix="sg_sjsink_") + "/events"
+    _staged, stream = _stage_stream(spark, sf_dir, "events")
+    stream = stream.select("event_id", "ts", "user_id", "event_type", "value")
+    out_dir = temp_dir("sg_sjsink_") + "/events"
     os.makedirs(out_dir, exist_ok=True)
-    ckpt = tempfile.mkdtemp(prefix="sg_sjsink_ckpt_")
+    ckpt = temp_dir("sg_sjsink_ckpt_")
     q = (
         stream.writeStream.format("jsonl_sink")
         .option("path", out_dir)
@@ -1090,37 +1019,9 @@ WHERE (p_ts IS NULL OR p_ts <= cutoff)
     "availableNow equal to the batch full join (SURVEY §2.11 ext)",
 )
 def q_stream_stream_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events_dir(sf_dir)
-    purchases = (
-        SE.read_event_stream(spark, staged)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    clicks = (
-        SE.read_event_stream(spark, staged)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") > F.col("p_ts"))
-        & (F.col("c_ts") <= F.col("p_ts") + F.expr("INTERVAL 1 HOUR")),
-        "fullOuter",
-    ).select("purchase_id", "click_id", "p_ts", "c_ts")
+    staged, joined = _interval_join(spark, sf_dir, "fullOuter")
+    joined = joined.select("purchase_id", "click_id", "p_ts", "c_ts")
     out = _run_to_table(spark, joined, "append", src_dir=staged)
-    from ..io.readers import load_table
-
     cutoff = _stream_cutoff(load_table(spark, sf_dir, "events"))
     return (
         out.join(F.broadcast(cutoff))
@@ -1171,37 +1072,9 @@ WHERE c.event_type = 'click'
     "(SURVEY §2.11 ext)",
 )
 def q_stream_stream_right(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events_dir(sf_dir)
-    purchases = (
-        SE.read_event_stream(spark, staged)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    clicks = (
-        SE.read_event_stream(spark, staged)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") > F.col("p_ts"))
-        & (F.col("c_ts") <= F.col("p_ts") + F.expr("INTERVAL 1 HOUR")),
-        "rightOuter",
-    ).select("purchase_id", "click_id", "c_ts")
+    staged, joined = _interval_join(spark, sf_dir, "rightOuter")
+    joined = joined.select("purchase_id", "click_id", "c_ts")
     out = _run_to_table(spark, joined, "append", src_dir=staged)
-    from ..io.readers import load_table
-
     cutoff = _stream_cutoff(load_table(spark, sf_dir, "events"))
     return (
         out.join(F.broadcast(cutoff))
@@ -1242,8 +1115,7 @@ GROUP BY user_id
     "twins remain the emission exhibits (SURVEY §2.11/2.12 ext)",
 )
 def q_streaming_running_final(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged)
+    staged, stream = _stage_stream(spark, sf_dir, "events")
     out = _run_to_table(
         spark,
         SE.running_user_totals_cents(stream),
@@ -1278,8 +1150,8 @@ def q_streaming_running_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     "to end (SURVEY §2.11 x quality classifier)",
 )
 def q_streaming_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_documents_dir(sf_dir)
-    stream = _read_document_stream(spark, staged).select("doc_id", "text")
+    staged, stream = _stage_stream(spark, sf_dir, "documents")
+    stream = stream.select("doc_id", "text")
     return _run_to_table(
         spark, classifier_scores(stream), "append", src_dir=staged
     )
@@ -1341,8 +1213,6 @@ FROM sess GROUP BY user_id, sid
     "§2.11 ext)",
 )
 def q_session_windows_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..io.readers import load_table
-
     ev = load_table(spark, sf_dir, "events")
     gap = F.when(F.col("event_type") == "purchase", F.lit("40 minutes")).otherwise(
         F.lit("15 minutes")
@@ -1371,6 +1241,18 @@ def q_session_windows_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # flushed or withheld near the boundary is excluded on both sides —
 # the same determinism device as the stream-stream join cutoffs.
 # ---------------------------------------------------------------------------
+
+def _session_cutoff(spark: SparkSession, sf_dir: str) -> F.Column:
+    """The closed-region frontier max(ts) - 2h 1min of the append-mode
+    session plans, collected to the driver (one scalar, k-bounded like
+    the kmeans seeds) and returned as a literal."""
+    cutoff = (
+        load_table(spark, sf_dir, "events")
+        .agg((F.max("ts") - F.expr("INTERVAL 2 HOURS 1 MINUTE")).alias("c"))
+        .collect()[0]["c"]
+    )
+    return F.lit(cutoff)
+
 
 _STREAM_SESSION_ORACLE = """
 WITH gapped AS (
@@ -1414,19 +1296,11 @@ WHERE session_end <= (SELECT max(ts) - INTERVAL 2 HOUR - INTERVAL 1 MINUTE
     "(SURVEY §2.11)",
 )
 def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..io.readers import load_table
-
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged)
+    staged, stream = _stage_stream(spark, sf_dir, "events")
     out = _run_to_table(
-        spark, SE.session_counts(stream, "30 minutes"), "append", src_dir=staged
+        spark, SE.session_counts(stream), "append", src_dir=staged
     )
-    cutoff = (
-        load_table(spark, sf_dir, "events")
-        .agg((F.max("ts") - F.expr("INTERVAL 2 HOURS 1 MINUTE")).alias("c"))
-        .collect()[0]["c"]
-    )  # one scalar, k-bounded driver collect like the kmeans seeds
-    return out.where(F.col("session_end") <= F.lit(cutoff)).select(
+    return out.where(F.col("session_end") <= _session_cutoff(spark, sf_dir)).select(
         "user_id",
         "session_start",
         "session_end",
@@ -1491,10 +1365,7 @@ WHERE session_end <= (SELECT max(ts) - INTERVAL 2 HOUR - INTERVAL 1 MINUTE
     "(SURVEY §2.11)",
 )
 def q_streaming_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..io.readers import load_table
-
-    staged = _stage_events_dir(sf_dir)
-    stream = SE.read_event_stream(spark, staged)
+    staged, stream = _stage_stream(spark, sf_dir, "events")
     gap = F.when(F.col("event_type") == "purchase", F.lit("40 minutes")).otherwise(
         F.lit("15 minutes")
     )
@@ -1510,12 +1381,7 @@ def q_streaming_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = _run_to_table(spark, windowed, "append", src_dir=staged)
-    cutoff = (
-        load_table(spark, sf_dir, "events")
-        .agg((F.max("ts") - F.expr("INTERVAL 2 HOURS 1 MINUTE")).alias("c"))
-        .collect()[0]["c"]
-    )
-    return out.where(F.col("session_end") <= F.lit(cutoff))
+    return out.where(F.col("session_end") <= _session_cutoff(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1534,21 +1400,16 @@ def q_streaming_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _stage_events_multibatch(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events as ts-ordered weekly chunk files (0.parquet..),
-    oldest mtime first so FileStreamSource processes them in order.
-    Unlike the symlink staging these are REAL copies, so the dir is
-    atexit-reaped — repeated bench/sweep runs must not accumulate
-    corpus-sized chunk sets in /tmp (same rule as the dedup signature
-    stores)."""
-    import atexit
-    import shutil
+def _stage_events_multibatch(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, T.StructType]:
+    """(landing dir, file schema): events staged as ts-ordered weekly
+    chunk files (000.parquet..), oldest mtime first so FileStreamSource
+    processes them in order. The schema is the one of the frame written,
+    so reading the chunks back starts no footer job."""
     import glob as _glob
 
-    from ..io.readers import load_table
-
-    d = tempfile.mkdtemp(prefix="sg_events_mb_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    d = temp_dir("sg_events_mb_")
     ev = load_table(spark, sf_dir, "events")
     cuts = ["2024-01-08", "2024-01-15", "2024-01-22"]
     # ONE pass over events instead of four (guide §1.2 step 1 "don't
@@ -1579,7 +1440,7 @@ def _stage_events_multibatch(spark: SparkSession, sf_dir: str) -> str:
             shutil.move(part[0], f"{d}/{i:03d}.parquet")
             os.utime(f"{d}/{i:03d}.parquet", (1700000000 + i, 1700000000 + i))
     shutil.rmtree(tmp)
-    return d
+    return d, ev.schema
 
 
 @register(
@@ -1595,27 +1456,12 @@ def _stage_events_multibatch(spark: SparkSession, sf_dir: str) -> str:
 def q_streaming_sessions_multibatch(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..io.readers import load_table
-
-    from ..io.readers import _normalize_event_ts
-
-    staged = _stage_events_multibatch(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
-    )
+    staged, schema = _stage_events_multibatch(spark, sf_dir)
+    stream = read_stream(spark, staged, schema, maxFilesPerTrigger="1")
     out = _run_to_table(
-        spark, SE.session_counts(stream, "30 minutes"), "append", src_dir=staged
+        spark, SE.session_counts(stream), "append", src_dir=staged
     )
-    cutoff = (
-        load_table(spark, sf_dir, "events")
-        .agg((F.max("ts") - F.expr("INTERVAL 2 HOURS 1 MINUTE")).alias("c"))
-        .collect()[0]["c"]
-    )
-    return out.where(F.col("session_end") <= F.lit(cutoff)).select(
+    return out.where(F.col("session_end") <= _session_cutoff(spark, sf_dir)).select(
         "user_id",
         "session_start",
         "session_end",
@@ -1660,9 +1506,7 @@ GROUP BY d, symbol
     "family's streaming deployment shape",
 )
 def q_streaming_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _stage_table_dir(sf_dir, "lineitem")
-    schema = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(schema).parquet(path)
+    path, raw = _stage_stream(spark, sf_dir, "lineitem")
     px = raw.select(
         F.col("l_partkey").alias("symbol"),
         F.col("l_shipdate").cast("timestamp").alias("ts"),
@@ -1814,20 +1658,14 @@ def _cdc_upsert(
     ``read_final(store_dir, query)`` to the oracle's columns.
     ``tenant`` adds the tenant column and the packed key
     ck = tenant * 2^32 + device_id."""
-    from ..io.readers import _normalize_event_ts
-
-    staged = _stage_events_multibatch(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
+    staged, schema = _stage_events_multibatch(spark, sf_dir)
     tenant_col = (
         [F.pmod("user_id", F.lit(_CDC_N_TENANTS)).alias("tenant")]
         if tenant
         else []
     )
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
+        read_stream(spark, staged, schema, maxFilesPerTrigger="1")
         .select(
             *tenant_col,
             F.expr(_CDC_DEVICE_SPARK).alias("device_id"),
@@ -1841,15 +1679,12 @@ def _cdc_upsert(
             "ck", F.col("tenant") * F.lit(1 << 32) + F.col("device_id")
         )
 
-    store_dir = tempfile.mkdtemp(prefix=store_prefix) + "/store"
-    atexit.register(
-        shutil.rmtree, os.path.dirname(store_dir), ignore_errors=True
-    )
+    store_dir = temp_dir(store_prefix) + "/store"
     q = (
         stream.writeStream.foreachBatch(
             lambda batch_df, batch_id: apply(store_dir, batch_df, batch_id)
         )
-        .option("checkpointLocation", _tmp_ckpt())
+        .option("checkpointLocation", temp_dir("sg_ckpt_"))
         .trigger(availableNow=True)
         .start()
     )

@@ -42,10 +42,11 @@ that make the same plans work on local[32] for tests and on a
 from __future__ import annotations
 
 import os
-import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+from .caching import temp_dir
 
 # Conf set on the builder of the sessions this module creates, and never
 # applied to a session we're handed (some of it must be set before the
@@ -125,7 +126,7 @@ def _ship_package(spark: SparkSession) -> None:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zpath = os.path.join(
-        tempfile.mkdtemp(prefix="sg_pkg_"), "sp500_stock_etl_spark.zip"
+        temp_dir("sg_pkg_"), "sp500_stock_etl_spark.zip"
     )
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg_dir):

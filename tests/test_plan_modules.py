@@ -149,3 +149,54 @@ def test_no_top_level_name_only_tests_use():
     assert not unused, f"top-level names no non-test code refers to: {unused}"
     stale = sorted(name for name in TEST_ONLY_ALLOWED if refs[name])
     assert not stale, f"allowlisted names that now have callers: {stale}"
+
+
+def _calls_named(tree: ast.AST, name: str):
+    """Calls of ``name`` or ``<anything>.name`` in ``tree``."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            if getattr(f, "attr", None) == name or getattr(f, "id", None) == name:
+                yield node
+
+
+def test_one_temp_dir_helper():
+    """Every scratch directory comes from ``caching.temp_dir``, which
+    removes it at exit; a bare ``mkdtemp`` elsewhere leaks one
+    directory per call."""
+    calls = [
+        str(path.relative_to(ROOT))
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for _ in _calls_named(ast.parse(path.read_text()), "mkdtemp")
+    ]
+    assert calls == ["sp500_stock_etl_spark/caching.py"], calls
+
+
+def _reads_parquet(call: ast.Call) -> bool:
+    """Whether ``call`` is ``<…>.read<…>.parquet(…)``."""
+    if getattr(call.func, "attr", None) != "parquet":
+        return False
+    node = call.func.value
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute) and node.attr == "read":
+            return True
+        node = node.value if isinstance(node, ast.Attribute) else node.func
+    return False
+
+
+def test_parquet_schema_inferred_only_in_readers():
+    """A table's read schema is decided in ``io/readers.py``: taking
+    ``.schema`` of a ``spark.read…parquet(…)`` anywhere else is a
+    second inference, one footer-reading Spark job per call."""
+    readers = PACKAGE / "io" / "readers.py"
+    peeks = [
+        f"{path.relative_to(ROOT)}:{node.lineno}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != readers
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute)
+        and node.attr == "schema"
+        and isinstance(node.value, ast.Call)
+        and _reads_parquet(node.value)
+    ]
+    assert not peeks, f"parquet schema inferred outside io/readers.py: {peeks}"

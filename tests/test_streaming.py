@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sp500_stock_etl_spark.io.readers import read_stream, table_schema
 from sp500_stock_etl_spark.streaming import events as SE
 
 
@@ -20,8 +21,8 @@ def events_dir(sf_dir, tmp_path_factory):
 
 
 @pytest.fixture()
-def event_stream(spark, events_dir):
-    return SE.read_event_stream(spark, events_dir)
+def event_stream(spark, sf_dir, events_dir):
+    return read_stream(spark, events_dir, table_schema(spark, sf_dir, "events"))
 
 
 def _batch_events(spark, sf_dir):
@@ -69,7 +70,7 @@ def test_tumbling_counts_match_batch(spark, sf_dir, event_stream, tmp_path):
     ), f"non-final windows missing: {missing}"
 
 
-def test_available_now_is_incremental(spark, events_dir, event_stream, tmp_path):
+def test_available_now_is_incremental(spark, sf_dir, events_dir, event_stream, tmp_path):
     # Memory sink can't recover a checkpoint; use the real file sink
     # (which is also the production layout).
     ckpt, out = str(tmp_path / "ckpt2"), str(tmp_path / "out")
@@ -90,7 +91,9 @@ def test_available_now_is_incremental(spark, events_dir, event_stream, tmp_path)
     n1 = run_once(event_stream)
     assert n1 > 0
     # Second run, same checkpoint: no new files → no new rows appended.
-    n2 = run_once(SE.read_event_stream(spark, events_dir))
+    n2 = run_once(
+        read_stream(spark, events_dir, table_schema(spark, sf_dir, "events"))
+    )
     assert n2 == n1, "availableNow must be exactly-once over already-seen files"
 
 
@@ -165,9 +168,9 @@ def test_watermark_drops_late_data_across_restarts(spark, tmp_path):
     out = str(tmp_path / "out")
 
     def run():
-        stream = SE.read_event_stream(spark, str(landing))
+        stream = read_stream(spark, str(landing), SE.EVENTS_RAW)
         q = (
-            SE.tumbling_counts(stream, window="1 hour", watermark="2 hours")
+            SE.tumbling_counts(stream)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -235,9 +238,9 @@ def test_running_totals_ttl_evicts_idle_keys(spark, tmp_path):
         shutil.copy(src, str(landing / f"{name}.parquet"))
 
     def run():
-        stream = SE.read_event_stream(spark, str(landing))
+        stream = read_stream(spark, str(landing), SE.EVENTS_RAW)
         q = (
-            SE.running_user_totals_ttl(stream, ttl_ms=3_600_000)
+            SE.running_user_totals_ttl(stream)
             .writeStream.foreachBatch(
                 lambda df, _bid: df.write.mode("append").parquet(out)
             )
@@ -282,7 +285,7 @@ def test_running_totals_ttl_matches_unbounded_single_run(spark, sf_dir, event_st
     """Under one availableNow replay nothing times out, so the TTL twin
     emits exactly what the unbounded operator emits."""
     SE.run_available_now(
-        SE.running_user_totals_ttl(event_stream, ttl_ms=3_600_000),
+        SE.running_user_totals_ttl(event_stream),
         str(tmp_path / "ckpt_ttl"),
         "t_state_ttl",
         output_mode="update",
@@ -303,6 +306,36 @@ def test_running_totals_ttl_matches_unbounded_single_run(spark, sf_dir, event_st
     assert got == want
 
 
+@pytest.mark.parametrize(
+    "name", ["streaming_running_user_totals", "streaming_running_user_totals_ttl"]
+)
+def test_running_totals_plan_final_row_equals_batch(spark, sf_dir, name):
+    """The two rows-only running-totals plans: each user's final
+    emission (max n_events) counts every event of the user, and its
+    total_value is the batch sum(value) up to float reassociation."""
+    from sp500_stock_etl_spark.plans.registry import all_queries
+
+    out = all_queries()[name].spark_fn(spark, sf_dir)
+    got = {
+        r.user_id: (r.n_events, r.total_value)
+        for r in out.groupBy("user_id")
+        .agg(F.max_by(F.struct("n_events", "total_value"), "n_events").alias("f"))
+        .select("user_id", "f.*")
+        .collect()
+    }
+    want = {
+        r.user_id: (r.n, r.total)
+        for r in _batch_events(spark, sf_dir)
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
+        .collect()
+    }
+    assert got.keys() == want.keys()
+    for user, (n, total) in want.items():
+        assert got[user][0] == n, user
+        assert got[user][1] == pytest.approx(total, rel=1e-9), user
+
+
 def test_streaming_corpus_dedup_exactly_once(spark, tmp_path):
     """Re-running the streaming LSH corpus dedup against the SAME
     checkpoint re-processes nothing: the reference's PURGE=TRUE
@@ -316,9 +349,6 @@ def test_streaming_corpus_dedup_exactly_once(spark, tmp_path):
     from sp500_stock_etl_spark.operators.dedup import (
         minhash_similarity_join_stream,
     )
-    from sp500_stock_etl_spark.plans.queries_streaming import (
-        _read_document_stream,
-    )
 
     sf_dir = "/root/testdata/sf0.001"
     staged = str(tmp_path / "docs")
@@ -329,7 +359,9 @@ def test_streaming_corpus_dedup_exactly_once(spark, tmp_path):
     out = str(tmp_path / "out")
 
     def run() -> int:
-        stream = _read_document_stream(spark, staged).select("doc_id", "text")
+        stream = read_stream(
+            spark, staged, table_schema(spark, sf_dir, "documents")
+        ).select("doc_id", "text")
         probes = stream.select(
             (F.col("doc_id") + 500_000).alias("doc_id"), "text"
         )

@@ -38,18 +38,12 @@ def test_multibatch_sessions_really_run_multiple_batches(spark):
         _stage_events_multibatch,
     )
     from sp500_stock_etl_spark.streaming import events as SE
-    from sp500_stock_etl_spark.io.readers import _normalize_event_ts, load_table
+    from sp500_stock_etl_spark.io.readers import load_table, read_stream
 
     sf = "/root/testdata/sf0.001"
-    staged = _stage_events_multibatch(spark, sf)
-    schema = spark.read.parquet(staged).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .withColumn("ts", _normalize_event_ts(schema["ts"].dataType))
-    )
-    sess = SE.session_counts(stream, "30 minutes")
+    staged, schema = _stage_events_multibatch(spark, sf)
+    stream = read_stream(spark, staged, schema, maxFilesPerTrigger="1")
+    sess = SE.session_counts(stream)
     ck = tempfile.mkdtemp(prefix="sg_ck_mb_")
     q = (
         sess.writeStream.format("memory")
